@@ -181,3 +181,31 @@ def test_ivfpq_residual_scan_shape(spark, sf_dir):
     # fan-out + shortlist window + rerank window + two broadcast builds
     assert n_exchanges(plan) <= 4
     spark.catalog.clearCache()
+
+
+def test_small_upsert_submits_at_most_four_jobs(spark, tmp_path):
+    """A reference-sized batch (API_FETCH_LIMIT = 20 rows) MERGEs on the
+    driver: one bounded collect of the batch plus its bucket ids, then
+    pyarrow; the Spark MERGE of the same batch ran ~10 jobs (touched
+    collect, emptiness probe, journal and data writes, AQE stages)."""
+    from pyspark.sql import types as T
+
+    from tv_event_streaming_spark.streaming.storage import KeyedTable
+
+    schema = T.StructType(
+        [T.StructField("k", T.LongType(), False), T.StructField("v", T.StringType())]
+    )
+    table = KeyedTable(spark, str(tmp_path / "t"), ["k"], schema)
+    table.upsert(spark.createDataFrame([(k, "a") for k in range(200)], schema))
+    sc = spark.sparkContext
+    group = "pin-small-upsert"
+    sc.setJobGroup(group, group)
+    try:
+        out = table.upsert(
+            spark.createDataFrame([(k, "b") for k in range(190, 210)], schema)
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert out == {"version": 1, "inserts": 10, "modifies": 10}
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert 1 <= len(jobs) <= 4, len(jobs)

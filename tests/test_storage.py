@@ -1,5 +1,10 @@
 """KeyedTable storage-layer tests: bucket-granular MERGE rewrites and
-crash-restart from a streaming checkpoint (ST9)."""
+crash-restart from a streaming checkpoint (ST9).
+
+Small batches take the driver-local MERGE; every example test also runs
+on the Spark path (``test_spark_path_passes_every_case``, which sets the
+size cap to 0), and the remaining tests pin the size rule and the
+pyarrow-written files' round trip through Spark."""
 
 from __future__ import annotations
 
@@ -10,6 +15,12 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from tv_event_streaming_spark.schemas import (
+    TITLE_INDEX_SCHEMA,
+    TITLE_RECORD_SCHEMA,
+    USER_PREF_SCHEMA,
+)
+from tv_event_streaming_spark.streaming import storage
 from tv_event_streaming_spark.streaming.storage import BUCKET_COL, KeyedTable
 
 KV_SCHEMA = T.StructType(
@@ -264,3 +275,142 @@ def test_journal_false_update_delete_on_empty_table(spark, tmp_path):
     assert table.update_fields(_kv(spark, [(1, "x")]), ["v"])["modifies"] == 0
     assert table.delete(_kv(spark, [(1, "x")]).select("k"))["deletes"] == 0
     assert table.read().count() == 0
+
+
+@pytest.mark.parametrize(
+    "case",
+    [
+        test_single_key_upsert_rewrites_one_bucket,
+        test_delete_emptying_bucket_drops_it,
+        test_crash_restart_from_checkpoint,
+        test_delete_and_update_of_nonexistent_keys,
+        test_journal_false_twin_equivalence,
+        test_journal_false_merges_inside_foreachbatch,
+        test_journal_false_update_delete_on_empty_table,
+    ],
+    ids=lambda f: f.__name__,
+)
+def test_spark_path_passes_every_case(spark, tmp_path, monkeypatch, case):
+    monkeypatch.setattr(storage, "LOCAL_MERGE_MAX_ROWS", 0)
+    case(spark, tmp_path)
+
+
+def _local_calls(monkeypatch) -> list[str]:
+    calls: list[str] = []
+    real = KeyedTable._merge_local
+
+    def spy(self, kind, *args):
+        calls.append(kind)
+        return real(self, kind, *args)
+
+    monkeypatch.setattr(KeyedTable, "_merge_local", spy)
+    return calls
+
+
+def test_size_rule_boundary(spark, tmp_path, monkeypatch):
+    """A MERGE whose batch plus touched live rows is exactly the cap runs
+    locally; one row more runs on Spark. Both bounds are checked: the
+    live rows (from footers) and the batch itself (the bounded collect)."""
+    calls = _local_calls(monkeypatch)
+    monkeypatch.setattr(storage, "LOCAL_MERGE_MAX_ROWS", 5)
+    table = KeyedTable(spark, str(tmp_path / "t"), ["k"], KV_SCHEMA, n_buckets=1)
+    table.upsert(_kv(spark, [(i, "a") for i in range(5)]))  # batch == cap
+    assert calls == ["upsert"]
+    table.upsert(_kv(spark, [(9, "b")]))  # 5 live + 1 > cap
+    assert calls == ["upsert"]
+    monkeypatch.setattr(storage, "LOCAL_MERGE_MAX_ROWS", 7)
+    table.update_fields(_kv(spark, [(0, "u")]), ["v"])  # 6 live + 1 == cap
+    assert calls == ["upsert", "update"]
+    table.delete(_kv(spark, [(0, None), (1, None)]).select("k"))  # 6 + 2 > cap
+    assert calls == ["upsert", "update"]
+    fresh = KeyedTable(spark, str(tmp_path / "f"), ["k"], KV_SCHEMA, n_buckets=1)
+    r = fresh.upsert(_kv(spark, [(i, "c") for i in range(8)]))  # batch > cap
+    assert calls == ["upsert", "update"] and r["inserts"] == 8
+    assert {(r.k, r.v) for r in table.read().collect()} == {
+        (2, "a"), (3, "a"), (4, "a"), (9, "b")
+    }
+
+
+def _sample_rows(schema: T.StructType) -> list[tuple]:
+    """Rows covering every column's type: NULLs in every nullable
+    column, empty arrays, arrays holding NULL, unicode and extreme
+    doubles."""
+    if schema == TITLE_RECORD_SCHEMA:
+        return [
+            (1, "Tïtle ✓", 1999, "tt1", 2, "tv", "movie", ["203", "26"], ["1"], "plot", "p.jpg", 7.25),
+            (2, None, None, None, None, None, None, None, None, None, None, None),
+            (3, "", -1, "", -(2**62), "", "", [], [None, "x"], "", "", -1e300),
+            (4, "t", 2**31 - 1, "a", 2**62, "b", "c", ["a"] * 50, [], "N/A", "N/A", 0.0),
+        ]
+    if schema == USER_PREF_SCHEMA:
+        return [("u1", "source", "203"), ("u1", "genre", "26"), ("ü", "genre", "")]
+    return [("203", "26", 1), ("203", "26", 2**62), ("", "x", -5)]
+
+
+@pytest.mark.parametrize(
+    "schema,keys",
+    [
+        (TITLE_RECORD_SCHEMA, ["title_id"]),
+        (USER_PREF_SCHEMA, ["user_id", "kind", "pref_id"]),
+        (TITLE_INDEX_SCHEMA, ["source_id", "genre_id", "title_id"]),
+    ],
+    ids=["titles", "prefs", "index"],
+)
+def test_pyarrow_written_buckets_round_trip(spark, tmp_path, monkeypatch, schema, keys):
+    """Bucket and journal files written by pyarrow read back through
+    Spark with every value intact, and a later Spark-path MERGE over
+    those buckets (and a local MERGE over Spark-written ones) keeps
+    them intact too."""
+    calls = _local_calls(monkeypatch)
+    rows = _sample_rows(schema)
+    table = KeyedTable(spark, str(tmp_path / "t"), keys, schema, n_buckets=2)
+    assert table.upsert(spark.createDataFrame(rows, schema))["inserts"] == len(rows)
+    assert calls == ["upsert"]
+    assert sorted(map(tuple, table.read().collect()), key=repr) == sorted(rows, key=repr)
+    journal = table.read_changes().collect()
+    assert sorted((tuple(r)[2:] for r in journal), key=repr) == sorted(rows, key=repr)
+    assert {(r.event_name, r.version) for r in journal} == {("INSERT", 0)}
+
+    monkeypatch.setattr(storage, "LOCAL_MERGE_MAX_ROWS", 0)
+    assert table.upsert(spark.createDataFrame(rows[:1], schema))["modifies"] == 1
+    monkeypatch.undo()
+    calls = _local_calls(monkeypatch)
+    assert table.upsert(spark.createDataFrame(rows[1:2], schema))["modifies"] == 1
+    assert calls == ["upsert"]
+    assert sorted(map(tuple, table.read().collect()), key=repr) == sorted(rows, key=repr)
+
+
+def test_stream_changes_reads_local_journal_files_once(spark, tmp_path):
+    """The change stream picks up each journal file the local MERGE
+    renames into ``_changes/`` exactly once, and never a hidden file —
+    the name a journal file has while it is being written."""
+    table = KeyedTable(spark, str(tmp_path / "t"), ["k"], KV_SCHEMA, n_buckets=4)
+    seen: list[tuple] = []
+
+    def drain():
+        q = (
+            table.stream_changes()
+            .writeStream.foreachBatch(
+                lambda df, _: seen.extend(tuple(r) for r in df.collect())
+            )
+            .option("checkpointLocation", str(tmp_path / "ck"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        assert q.awaitTermination(120)
+
+    table.upsert(_kv(spark, [(1, "a"), (2, "b")]))
+    # a journal file caught mid-write: same rows, still under its hidden name
+    name = next(f for f in os.listdir(table.changes_dir) if f.endswith(".parquet"))
+    with open(os.path.join(table.changes_dir, name), "rb") as src, open(
+        os.path.join(table.changes_dir, f".{name}"), "wb"
+    ) as dst:
+        dst.write(src.read())
+    drain()
+    assert sorted(seen) == [("INSERT", 0, 1, "a"), ("INSERT", 0, 2, "b")]
+    table.update_fields(_kv(spark, [(2, "B")]), ["v"])
+    drain()
+    drain()
+    assert sorted(seen) == [
+        ("INSERT", 0, 1, "a"), ("INSERT", 0, 2, "b"), ("MODIFY", 1, 2, "B")
+    ]

@@ -160,6 +160,32 @@ def test_preferences_mutation_roundtrip(spark, tmp_path):
     assert ch.filter(F.col("event_name") == "REMOVE").count() == 1
 
 
+@pytest.mark.parametrize("path", ["local", "spark"])
+def test_preferences_put_counts_come_from_the_merges(spark, tmp_path, monkeypatch, path):
+    """PUT /preferences takes its counts from the upsert and delete
+    MERGEs (no separate count jobs), on either MERGE path and on a
+    journal-free table like the API's; a PUT with only adds or only
+    deletes writes one version, the empty side none."""
+    from tv_event_streaming_spark.streaming import storage
+
+    if path == "spark":
+        monkeypatch.setattr(storage, "LOCAL_MERGE_MAX_ROWS", 0)
+    table = KeyedTable(
+        spark, str(tmp_path / "prefs"), ["user_id", "kind", "pref_id"], USER_PREF_SCHEMA,
+        journal=False,
+    )
+    table.upsert(spark.createDataFrame([("u2", "source", "1"), ("u2", "genre", "4")], USER_PREF_SCHEMA))
+    assert set_user_preferences(table, "u1", ["1", "2"], ["4"]) == {"adds": 3, "deletes": 0}
+    assert table.current_version() == 1
+    assert set_user_preferences(table, "u1", ["1"], ["4"]) == {"adds": 0, "deletes": 1}
+    assert table.current_version() == 2
+    assert set_user_preferences(table, "u1", ["1", "5"], []) == {"adds": 1, "deletes": 1}
+    assert table.current_version() == 4
+    assert sorted(tuple(r) for r in table.read().collect()) == [
+        ("u1", "source", "1"), ("u1", "source", "5"), ("u2", "genre", "4"), ("u2", "source", "1")
+    ]
+
+
 def test_quality_gate_runs_on_streams(spark, sf_dir, tmp_path):
     """The curation gate is stream-safe AS-IS: quality_filter is a
     map-side projection (no shuffle, no window), so the SAME function

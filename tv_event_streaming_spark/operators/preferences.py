@@ -55,9 +55,10 @@ def set_user_preferences(
 ) -> dict[str, int]:
     """The full PUT /preferences mutation against a KeyedTable
     (preferences.py:128-175): read current, compute the delta, apply adds
-    as MERGE-inserts and removals as keyed deletes. Returns the counts;
-    ``{adds: 0, deletes: 0}`` is the reference's no-op 204 early-exit
-    (preferences.py:148-150) — no table version is written."""
+    as MERGE-inserts and removals as keyed deletes. Returns the counts,
+    taken from the MERGEs themselves; ``{adds: 0, deletes: 0}`` is the
+    reference's no-op 204 early-exit (preferences.py:148-150) — an empty
+    MERGE writes no table version."""
     spark = prefs_table.spark
     rows = [(user_id, "source", s) for s in sources] + [
         (user_id, "genre", g) for g in genres
@@ -66,18 +67,13 @@ def set_user_preferences(
 
     new = spark.createDataFrame(rows, USER_PREF_SCHEMA)
     old = prefs_table.read().filter(F.col("user_id") == user_id)
-    delta = prefs_delta(old, new).cache()
-    try:
-        adds = delta.filter(F.col("op") == "add").select(*PREF_KEY)
-        dels = delta.filter(F.col("op") == "delete").select(*PREF_KEY)
-        n_add, n_del = adds.count(), dels.count()
-        if n_add:
-            prefs_table.upsert(adds)
-        if n_del:
-            prefs_table.delete(dels)
-        return {"adds": n_add, "deletes": n_del}
-    finally:
-        delta.unpersist()
+    delta = prefs_delta(old, new)
+    adds = delta.filter(F.col("op") == "add").select(*PREF_KEY)
+    dels = delta.filter(F.col("op") == "delete").select(*PREF_KEY)
+    return {
+        "adds": prefs_table.upsert(adds)["inserts"],
+        "deletes": prefs_table.delete(dels)["deletes"],
+    }
 
 
 def apply_prefs_delta(old: DataFrame, new: DataFrame) -> DataFrame:

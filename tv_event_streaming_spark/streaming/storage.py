@@ -9,16 +9,33 @@ idempotent keyed puts (consumer.py:58-89), nested-field updates
 - the key space is hash-partitioned into ``n_buckets`` stable buckets
   (``pmod(xxhash64(keys), n)``); a MERGE rewrites ONLY the buckets its
   batch touches — O(batch ∪ touched buckets), never O(table);
-- each MERGE writes new immutable bucket directories under
-  ``data/v=N/`` and publishes a version MANIFEST mapping every bucket to
-  the version directory that last wrote it, then flips the ``_CURRENT``
-  pointer (atomic rename) — readers always see a consistent snapshot
-  stitched from per-bucket paths;
 - every MERGE appends INSERT/MODIFY/REMOVE rows (full new image +
   version) to ``_changes/``, which Structured Streaming can tail as a
-  file source — the Delta CDF stand-in;
-- merge counts come from ``DataFrame.observe`` metrics collected during
-  the journal write itself — no extra count jobs per merge.
+  file source — the Delta CDF stand-in.
+
+**Two paths, one commit protocol.** Every MERGE starts with one bounded
+collect: the batch, at most ``LOCAL_MERGE_MAX_ROWS + 1`` rows, comes
+back as Arrow with its bucket ids computed by Spark in the same job (an
+empty batch returns here and writes no version). Then the size rule: if
+the batch plus the live rows of the buckets it touches (summed from
+parquet footers, no job) number at most ``LOCAL_MERGE_MAX_ROWS``, the
+driver does the MERGE in pyarrow — dedup the batch on the key, read the
+touched buckets' files, match keys, write one file per touched bucket
+and at most one journal file. Otherwise the MERGE runs as Spark
+joins and a ``partitionBy`` write, its counts taken by
+``DataFrame.observe`` during the journal write (or the data write, for a
+``journal=False`` table) — no extra count jobs. The small path exists
+because a Spark MERGE of a 20-row batch is almost all per-action
+planning, scheduling and commit overhead. Both paths return the same
+counts, leave the same ``read()`` state and write the same journal rows.
+
+Both paths commit the same way: new immutable bucket directories under
+``data/v=N/`` (a crashed attempt's directory is replaced), then the
+journal rows, then a version MANIFEST mapping every bucket to the
+version directory that last wrote it, then an atomic rename of the
+``_CURRENT`` pointer. Readers always see a consistent snapshot stitched
+from per-bucket paths; a crash before the flip leaves version N-1
+current, and the replayed batch rewrites version N.
 
 On a real deployment this class is replaced wholesale by Delta/Iceberg
 ``MERGE INTO`` + change data feed; the pipeline code above it doesn't
@@ -31,12 +48,46 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
+import uuid
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 BUCKET_COL = "bucket__"
+
+#: A MERGE runs on the driver in pyarrow when its batch plus the live rows
+#: of the buckets it touches number at most this many; larger ones run as
+#: Spark jobs. Measured on 4 cores (local[2], 3-column index rows, 16
+#: buckets, a 200-row batch touching all of them, median of 5), local vs
+#: Spark: 5 k rows 0.25 vs 1.58 s, 20 k 0.27 vs 1.49 s, 50 k 0.28 vs
+#: 1.42 s, 100 k 0.35 vs 1.95 s, 200 k 0.40 vs 2.10 s — no crossover up
+#: to 200 k, so the cap bounds the driver's memory instead: it holds at
+#: most this many rows, and a bulk load such as seeding the 60 k-row
+#: preferences table stays on Spark.
+LOCAL_MERGE_MAX_ROWS = 50_000
+
+_COUNTS = {
+    "upsert": ("inserts", "modifies"),
+    "update": ("modifies",),
+    "delete": ("deletes",),
+}
+
+
+def _parquet_files(bucket_dir: str) -> list[str]:
+    """A bucket directory's data files (Spark also leaves ``.crc``
+    checksums beside them)."""
+    return sorted(
+        os.path.join(bucket_dir, f)
+        for f in os.listdir(bucket_dir)
+        if f.endswith(".parquet") and not f.startswith((".", "_"))
+    )
 
 
 class KeyedTable:
@@ -54,9 +105,9 @@ class KeyedTable:
         INDEX table has no stream_changes reader — only ``titles``
         feeds the enrichment cascade — and at a 50 M-row merge the
         journal's full-image parquet append was ~half the remaining
-        merge wall). Merge counts then ride the DATA write via a
-        marker-column Observation instead of the journal write, so the
-        return contract is unchanged; :meth:`stream_changes` /
+        merge wall). On the Spark path, merge counts then ride the DATA
+        write via a marker-column Observation instead of the journal
+        write, so the return contract is unchanged; :meth:`stream_changes` /
         :meth:`read_changes` raise, keeping a silent no-op journal from
         masquerading as an empty-but-live one."""
         self.spark = spark
@@ -159,10 +210,187 @@ class KeyedTable:
 
     # -- merge --------------------------------------------------------------
 
+    def upsert(self, batch: DataFrame) -> dict[str, int]:
+        """MERGE: insert new keys, overwrite existing ones (the
+        reference's idempotent put). Appends the change journal.
+
+        The batch is deduplicated on the key first (last-writer-wins is
+        unnecessary — reference batches carry identical payloads per key,
+        consumer.py:57). Only the buckets containing batch keys are read
+        and rewritten."""
+        return self._merge("upsert", batch, self.schema.names)
+
+    def update_fields(self, updates: DataFrame, fields: list[str]) -> dict[str, int]:
+        """Field-level MERGE (the reference's UpdateItem on nested paths,
+        enrichment.py:114-125): for keys present in ``updates``, set only
+        ``fields``; all other columns and rows unchanged. Rows in
+        ``updates`` whose key doesn't exist are ignored (fetch-then-update
+        semantics). Only touched buckets are rewritten."""
+        return self._merge("update", updates, [*self.key_cols, *fields])
+
+    def delete(self, keys: DataFrame) -> dict[str, int]:
+        """Keyed delete (the preference-removal path, preferences.py:153-161).
+        Only touched buckets are rewritten; a bucket left empty drops out
+        of the manifest."""
+        return self._merge("delete", keys, self.key_cols)
+
+    def _merge(self, kind: str, batch: DataFrame, cols: list[str]) -> dict[str, int]:
+        """Pick the path for one MERGE and run it.
+
+        The bounded collect reads the batch as given, not deduplicated:
+        a key-dedup shuffle would cost the collect a second job, and
+        without one the limit stops after the first input partitions
+        that hold enough rows, so a batch too big for the local path
+        costs little more than a probe. The local path dedups on the
+        driver."""
+        head = (
+            batch.select(*cols, self._bucket().alias(BUCKET_COL))
+            .limit(LOCAL_MERGE_MAX_ROWS + 1)
+            .toArrow()
+        )
+        if head.num_rows == 0:  # empty micro-batches must not write versions
+            return {"version": self.current_version(), **dict.fromkeys(_COUNTS[kind], 0)}
+        touched = None
+        if head.num_rows <= LOCAL_MERGE_MAX_ROWS:
+            touched = sorted(pc.unique(head.column(BUCKET_COL)).to_pylist())
+            manifest = self._read_manifest(self.current_version())
+            files = [
+                (b, f)
+                for b in touched
+                if b in manifest
+                for f in _parquet_files(os.path.join(self.path, manifest[b]))
+            ]
+            live = sum(pq.read_metadata(f).num_rows for _, f in files)
+            if head.num_rows + live <= LOCAL_MERGE_MAX_ROWS:
+                return self._merge_local(kind, head, manifest, touched, files)
+        # The Spark path persists the batch for the MERGE's duration:
+        # three actions read it (touched-bucket collect, journal write,
+        # data write), and without the barrier each re-ran the batch's
+        # upstream lineage — for the consumer's index leg a double
+        # explode + key-dedup shuffle of the full exploded set, which
+        # dominated the cascade (measured 2.7×: 279 s → 104 s on the
+        # 50 M-row merge, SCALE.md §6e).
+        if kind != "delete":
+            batch = batch.dropDuplicates(self.key_cols)
+        batch = batch.persist()
+        try:
+            if touched is None:
+                touched = self._touched_buckets(batch)
+            if kind == "upsert":
+                out = self._upsert_spark(batch, touched)
+            elif kind == "update":
+                out = self._update_spark(batch, cols[len(self.key_cols) :], touched)
+            else:
+                out = self._delete_spark(batch, touched)
+        finally:
+            batch.unpersist()
+        return {"version": out["version"], **{k: out[k] for k in _COUNTS[kind]}}
+
+    # -- driver-local path ----------------------------------------------------
+
+    def _merge_local(
+        self,
+        kind: str,
+        head: pa.Table,
+        manifest: dict[int, str],
+        touched: list[int],
+        files: list[tuple[int, str]],
+    ) -> dict[str, int]:
+        """The whole MERGE in pyarrow on the driver. ``head`` is the
+        collected batch with its Spark-computed bucket ids, ``files`` the
+        (bucket, data file) pairs of the touched buckets."""
+        # every field nullable: Spark reads every parquet column as
+        # nullable, whatever the file says
+        arrow = pa.schema([f.with_nullable(True) for f in to_arrow_schema(self.schema)])
+        bucket = pa.field(BUCKET_COL, pa.int32())
+        parts = [arrow.empty_table().append_column(bucket, pa.array([], pa.int32()))]
+        for b, f in files:
+            t = pq.read_table(f).select(self.schema.names).cast(arrow)
+            parts.append(t.append_column(bucket, pa.array(np.full(len(t), b, np.int32))))
+        cur = pa.concat_tables(parts)
+        head = head.cast(pa.schema([*(arrow.field(c) for c in head.column_names[:-1]), bucket]))
+        if kind != "delete":  # dedup on the key, keeping each key's first row
+            first = (
+                head.select(self.key_cols)
+                .append_column("_i", pa.array(np.arange(len(head))))
+                .group_by(self.key_cols)
+                .aggregate([("_i", "min")])
+            )
+            head = head.take(np.sort(np.asarray(first.column("_i_min"))))
+        # key-equal (current row, batch row) pairs; SQL equality, so a
+        # NULL key matches nothing, as in the Spark path's joins
+        pairs = (
+            cur.select(self.key_cols)
+            .append_column("_c", pa.array(np.arange(len(cur))))
+            .join(
+                head.select(self.key_cols).append_column("_h", pa.array(np.arange(len(head)))),
+                self.key_cols,
+                join_type="inner",
+            )
+        )
+        ci, hi = (np.asarray(pairs.column(c), np.int64) for c in ("_c", "_h"))
+        hit = np.zeros(len(cur), bool)
+        hit[ci] = True
+        kept = cur.filter(pa.array(~hit))
+        if kind == "upsert":
+            modified = np.zeros(len(head), bool)
+            modified[hi] = True
+            state = pa.concat_tables([kept, head])
+            changes = {
+                "INSERT": head.filter(pa.array(~modified)),
+                "MODIFY": head.filter(pa.array(modified)),
+            }
+            counts = {"inserts": len(changes["INSERT"]), "modifies": len(changes["MODIFY"])}
+        elif kind == "update":
+            images = cur.take(ci)
+            for f in head.column_names[len(self.key_cols) : -1]:
+                images = images.set_column(images.schema.get_field_index(f), f, head.column(f).take(hi))
+            state = pa.concat_tables([kept, images])
+            changes = {"MODIFY": images}
+            counts = {"modifies": len(images)}
+        else:
+            state = kept
+            changes = {"REMOVE": cur.filter(pa.array(hit))}
+            counts = {"deletes": len(changes["REMOVE"])}
+
+        v = self.current_version() + 1
+        data_dir = os.path.join(self.path, "data", f"v={v}")
+        shutil.rmtree(data_dir, ignore_errors=True)  # a crashed attempt at v
+        buckets = state.column(BUCKET_COL)
+        for b in touched:
+            rows = state.filter(pc.equal(buckets, b)).drop_columns([BUCKET_COL])
+            if rows.num_rows:
+                bdir = os.path.join(data_dir, f"{BUCKET_COL}={b}")
+                os.makedirs(bdir)
+                pq.write_table(rows, os.path.join(bdir, f"part-{uuid.uuid4()}.parquet"))
+                manifest[b] = os.path.relpath(bdir, self.path)
+            else:
+                manifest.pop(b, None)  # bucket emptied (all rows deleted)
+        journal = [
+            rows.drop_columns([BUCKET_COL])
+            .add_column(0, "event_name", pa.array([event] * len(rows), pa.string()))
+            .add_column(1, "version", pa.array([v] * len(rows), pa.int64()))
+            for event, rows in changes.items()
+            if len(rows)
+        ]
+        if self.journal and journal:
+            # written under a hidden name, then renamed: the change
+            # stream's file listing skips dot-files, so it never sees a
+            # half-written journal file
+            os.makedirs(self.changes_dir, exist_ok=True)
+            name = f"part-{uuid.uuid4()}.parquet"
+            tmp = os.path.join(self.changes_dir, f".{name}")
+            pq.write_table(pa.concat_tables(journal), tmp)
+            os.replace(tmp, os.path.join(self.changes_dir, name))
+        self._write_manifest(v, manifest)
+        self._flip(v)
+        return {"version": v, **counts}
+
+    # -- Spark path -----------------------------------------------------------
+
     def _touched_buckets(self, batch: DataFrame) -> list[int]:
         """Distinct bucket ids of a batch — bounded by ``n_buckets``
-        (this is the one driver-side collect in the merge path; it
-        returns at most n_buckets ints)."""
+        (it returns at most n_buckets ints)."""
         rows = batch.select(self._bucket().alias("b")).distinct().collect()
         return sorted(r.b for r in rows)
 
@@ -173,7 +401,6 @@ class KeyedTable:
         touched: list[int],
         changes: DataFrame | None,
         obs: Observation,
-        keys: tuple[str, ...] = ("inserts", "modifies", "deletes"),
     ) -> dict[str, int]:
         """Write touched buckets + journal, update the manifest, flip the
         pointer, and return the observed merge counts. ``changes=None``
@@ -201,7 +428,7 @@ class KeyedTable:
         # update_fields() where no update key exists (the reference's
         # preference-removal path tolerates removing a non-existent key).
         got = obs.get
-        return {"version": v, **{k: int(got[k] or 0) for k in keys if k in got}}
+        return {"version": v, **{k: int(got[k] or 0) for k in got}}
 
     @staticmethod
     def _observed(changes: DataFrame, obs: Observation) -> DataFrame:
@@ -212,234 +439,143 @@ class KeyedTable:
             F.sum(F.when(F.col("event_name") == "REMOVE", 1).otherwise(0)).alias("deletes"),
         )
 
-    def upsert(
-        self, batch: DataFrame, timings: dict | None = None
-    ) -> dict[str, int]:
-        """MERGE: insert new keys, overwrite existing ones (the
-        reference's idempotent put). Appends the change journal.
-
-        The batch is deduplicated on the key first (last-writer-wins is
-        unnecessary — reference batches carry identical payloads per key,
-        consumer.py:57). Only the buckets containing batch keys are read
-        and rewritten.
-
-        The deduped batch is persisted for the MERGE's duration: four
-        actions read it (emptiness probe, touched-bucket collect, the
-        journal write, the data write), and without the barrier each
-        re-ran the batch's upstream lineage — for the consumer's index
-        leg that lineage is a double explode + key-dedup shuffle of the
-        full exploded set, and re-running it dominated the cascade
-        (measured 2.7×: 279 s → 104 s on the 50 M-row merge, SCALE.md
-        §6e).
-
-        ``timings``: pass a dict to accumulate per-phase wall seconds
-        (profiling, tools/profile_consumer.py): ``probe_sec`` —
-        persist + emptiness probe (the dedup shuffle's map side);
-        ``touched_sec`` — dedup completion into the cache + the
-        bucket-id collect; ``publish_sec`` — touched-bucket read,
-        merge joins, data (+journal) write, manifest flip."""
-        import time  # noqa: PLC0415
-
-        t = time.perf_counter if timings is not None else None
-        batch = batch.dropDuplicates(self.key_cols).persist()
-        try:
-            t0 = t() if t else 0.0
-            if batch.isEmpty():  # empty micro-batches must not write versions
-                return {"version": self.current_version(), "inserts": 0, "modifies": 0}
-            t1 = t() if t else 0.0
-            touched = self._touched_buckets(batch)
-            if timings is not None:
-                t2 = t()
-                timings["probe_sec"] = timings.get("probe_sec", 0.0) + (t1 - t0)
-                timings["touched_sec"] = timings.get("touched_sec", 0.0) + (
-                    t2 - t1
-                )
-            current = self._read_buckets(
-                self._read_manifest(self.current_version()), touched
+    def _upsert_spark(self, batch: DataFrame, touched: list[int]) -> dict[str, int]:
+        current = self._read_buckets(
+            self._read_manifest(self.current_version()), touched
+        )
+        untouched = current.join(batch, self.key_cols, "left_anti")
+        v = self.current_version() + 1
+        obs = Observation()
+        if not self.journal:
+            # counts ride the DATA write: one marker left-join vs
+            # the touched buckets' keys classifies insert/modify
+            # without materializing a change frame at all. The
+            # observe node sits ABOVE the union: a CollectMetrics
+            # inside a union child whose sibling is an empty
+            # relation never delivers its metrics under foreachBatch
+            # (measured: Observation.get blocks forever on the first
+            # micro-batch, when `current` is the empty v=-1 frame).
+            marked = batch.join(
+                current.select(*self.key_cols).withColumn(
+                    "_existing__", F.lit(True)
+                ),
+                self.key_cols,
+                "left",
             )
-            untouched = current.join(batch, self.key_cols, "left_anti")
-            v = self.current_version() + 1
-            obs = Observation()
-            if not self.journal:
-                # counts ride the DATA write: one marker left-join vs
-                # the touched buckets' keys classifies insert/modify
-                # without materializing a change frame at all. The
-                # observe node sits ABOVE the union: a CollectMetrics
-                # inside a union child whose sibling is an empty
-                # relation never delivers its metrics under foreachBatch
-                # (measured: Observation.get blocks forever on the first
-                # micro-batch, when `current` is the empty v=-1 frame).
-                marked = batch.join(
-                    current.select(*self.key_cols).withColumn(
-                        "_existing__", F.lit(True)
-                    ),
-                    self.key_cols,
-                    "left",
-                )
-                cols = [c for c in batch.columns]
-                tagged = untouched.withColumn("_m__", F.lit(1)).unionByName(
-                    marked.select(
-                        *cols,
-                        F.when(F.col("_existing__").isNotNull(), F.lit(2))
-                        .otherwise(F.lit(3))
-                        .alias("_m__"),
-                    )
-                )
-                new_state = tagged.observe(
-                    obs,
-                    F.sum(F.when(F.col("_m__") == 3, 1).otherwise(0)).alias(
-                        "inserts"
-                    ),
-                    F.sum(F.when(F.col("_m__") == 2, 1).otherwise(0)).alias(
-                        "modifies"
-                    ),
-                ).drop("_m__")
-                tp = t() if t else 0.0
-                out = self._publish(v, new_state, touched, None, obs)
-                if timings is not None:
-                    timings["publish_sec"] = timings.get("publish_sec", 0.0) + (
-                        t() - tp
-                    )
-                out.pop("deletes", None)
-                return out
-            new_state = untouched.unionByName(batch)
-            # journal classification: new key -> INSERT, existing -> MODIFY
-            inserts = batch.join(current, self.key_cols, "left_anti")
-            modifies = batch.join(
-                current.select(*self.key_cols), self.key_cols, "left_semi"
-            )
-            changes = inserts.select(
-                F.lit("INSERT").alias("event_name"), F.lit(v).cast("long").alias("version"), "*"
-            ).unionByName(
-                modifies.select(
-                    F.lit("MODIFY").alias("event_name"), F.lit(v).cast("long").alias("version"), "*"
+            tagged = untouched.withColumn("_m__", F.lit(1)).unionByName(
+                marked.select(
+                    *batch.columns,
+                    F.when(F.col("_existing__").isNotNull(), F.lit(2))
+                    .otherwise(F.lit(3))
+                    .alias("_m__"),
                 )
             )
-            tp = t() if t else 0.0
-            out = self._publish(v, new_state, touched, self._observed(changes, obs), obs)
-            if timings is not None:
-                timings["publish_sec"] = timings.get("publish_sec", 0.0) + (
-                    t() - tp
-                )
-            out.pop("deletes", None)
-            return out
-        finally:
-            batch.unpersist()
-
-    def update_fields(self, updates: DataFrame, fields: list[str]) -> dict[str, int]:
-        """Field-level MERGE (the reference's UpdateItem on nested paths,
-        enrichment.py:114-125): for keys present in ``updates``, set only
-        ``fields``; all other columns and rows unchanged. Rows in
-        ``updates`` whose key doesn't exist are ignored (fetch-then-update
-        semantics). Only touched buckets are rewritten.
-
-        The deduped batch is persisted for the MERGE's duration, same as
-        :meth:`upsert`: the enrichment leg's updates carry a
-        stream-static join in their lineage, and the four actions here
-        (emptiness probe, touched-bucket collect, data write, journal
-        write) would each re-run it."""
-        upd_base = updates.dropDuplicates(self.key_cols).persist()
-        upd = upd_base.alias("u")
-        try:
-            if upd.isEmpty():
-                return {"version": self.current_version(), "modifies": 0}
-            touched = self._touched_buckets(upd)
-            current = self._read_buckets(
-                self._read_manifest(self.current_version()), touched
-            )
-            cur = current.alias("c")
-            # one left-outer join + ONE field-merge projection list,
-            # shared by both publish paths (ADVICE r8: the journaled and
-            # no-journal branches carried byte-identical 25-line copies)
-            joined = cur.join(upd, self.key_cols, "left_outer")
-            hit = F.col(f"u.{self.key_cols[0]}").isNotNull()
-            key_sel = [F.col(f"c.{k}").alias(k) for k in self.key_cols]
-            merge_sel = [
-                (
-                    F.when(hit, F.col(f"u.{f}")).otherwise(F.col(f"c.{f}")).alias(f)
-                    if f in fields
-                    else F.col(f"c.{f}").alias(f)
-                )
-                for f in current.columns
-                if f not in self.key_cols
-            ]
-            merged = joined.select(*key_sel, *merge_sel)
-            v = self.current_version() + 1
-            obs = Observation()
-            if not self.journal:
-                # modifies = |cur ∩ upd|, observed on the data write via
-                # a marker column on the same left-outer join
-                marked = joined.select(
-                    *key_sel, *merge_sel, hit.alias("_upd__")
-                ).observe(
-                    obs,
-                    F.sum(F.when(F.col("_upd__"), 1).otherwise(0)).alias(
-                        "modifies"
-                    ),
-                )
-                out = self._publish(
-                    v, marked.drop("_upd__"), touched, None, obs
-                )
-                return {"version": out["version"], "modifies": out["modifies"]}
-            touched_keys = upd.join(cur, self.key_cols, "left_semi")
-            new_images = merged.join(
-                touched_keys.select(*self.key_cols), self.key_cols, "left_semi"
-            )
-            changes = new_images.select(
+            new_state = tagged.observe(
+                obs,
+                F.sum(F.when(F.col("_m__") == 3, 1).otherwise(0)).alias(
+                    "inserts"
+                ),
+                F.sum(F.when(F.col("_m__") == 2, 1).otherwise(0)).alias(
+                    "modifies"
+                ),
+            ).drop("_m__")
+            return self._publish(v, new_state, touched, None, obs)
+        new_state = untouched.unionByName(batch)
+        # journal classification: new key -> INSERT, existing -> MODIFY
+        inserts = batch.join(current, self.key_cols, "left_anti")
+        modifies = batch.join(
+            current.select(*self.key_cols), self.key_cols, "left_semi"
+        )
+        changes = inserts.select(
+            F.lit("INSERT").alias("event_name"), F.lit(v).cast("long").alias("version"), "*"
+        ).unionByName(
+            modifies.select(
                 F.lit("MODIFY").alias("event_name"), F.lit(v).cast("long").alias("version"), "*"
             )
-            out = self._publish(v, merged, touched, self._observed(changes, obs), obs)
-            return {"version": out["version"], "modifies": out["modifies"]}
-        finally:
-            upd_base.unpersist()
+        )
+        return self._publish(v, new_state, touched, self._observed(changes, obs), obs)
 
-    def delete(self, keys: DataFrame) -> dict[str, int]:
-        """Keyed delete (the preference-removal path, preferences.py:153-161).
-        Only touched buckets are rewritten; a bucket left empty drops out
-        of the manifest. The key batch is persisted for the delete's
-        duration (same multi-action lineage re-run as :meth:`upsert`)."""
-        keys = keys.persist()
-        try:
-            if keys.isEmpty():
-                return {"version": self.current_version(), "deletes": 0}
-            touched = self._touched_buckets(keys)
-            current = self._read_buckets(
-                self._read_manifest(self.current_version()), touched
+    def _update_spark(
+        self, updates: DataFrame, fields: list[str], touched: list[int]
+    ) -> dict[str, int]:
+        upd = updates.alias("u")
+        current = self._read_buckets(
+            self._read_manifest(self.current_version()), touched
+        )
+        cur = current.alias("c")
+        # one left-outer join + ONE field-merge projection list,
+        # shared by both publish paths (ADVICE r8: the journaled and
+        # no-journal branches carried byte-identical 25-line copies)
+        joined = cur.join(upd, self.key_cols, "left_outer")
+        hit = F.col(f"u.{self.key_cols[0]}").isNotNull()
+        key_sel = [F.col(f"c.{k}").alias(k) for k in self.key_cols]
+        merge_sel = [
+            (
+                F.when(hit, F.col(f"u.{f}")).otherwise(F.col(f"c.{f}")).alias(f)
+                if f in fields
+                else F.col(f"c.{f}").alias(f)
             )
-            v = self.current_version() + 1
-            obs = Observation()
-            if not self.journal:
-                # deletes = |cur ∩ keys|, observed upstream of the
-                # surviving-row filter on one marker left-join
-                marked = current.join(
-                    # distinct(): a duplicated delete key must not fan
-                    # out current rows through the left join (the
-                    # journaled path's semi/anti joins are dupe-safe)
-                    keys.select(*self.key_cols)
-                    .distinct()
-                    .withColumn("_del__", F.lit(True)),
-                    self.key_cols,
-                    "left",
-                ).observe(
-                    obs,
-                    F.sum(
-                        F.when(F.col("_del__").isNotNull(), 1).otherwise(0)
-                    ).alias("deletes"),
-                )
-                remaining = marked.filter(F.col("_del__").isNull()).drop(
-                    "_del__"
-                )
-                out = self._publish(v, remaining, touched, None, obs)
-                return {"version": out["version"], "deletes": out["deletes"]}
-            removed = current.join(keys, self.key_cols, "left_semi")
-            remaining = current.join(keys, self.key_cols, "left_anti")
-            changes = removed.select(
-                F.lit("REMOVE").alias("event_name"), F.lit(v).cast("long").alias("version"), "*"
+            for f in current.columns
+            if f not in self.key_cols
+        ]
+        merged = joined.select(*key_sel, *merge_sel)
+        v = self.current_version() + 1
+        obs = Observation()
+        if not self.journal:
+            # modifies = |cur ∩ upd|, observed on the data write via
+            # a marker column on the same left-outer join
+            marked = joined.select(
+                *key_sel, *merge_sel, hit.alias("_upd__")
+            ).observe(
+                obs,
+                F.sum(F.when(F.col("_upd__"), 1).otherwise(0)).alias(
+                    "modifies"
+                ),
             )
-            out = self._publish(v, remaining, touched, self._observed(changes, obs), obs)
-            return {"version": out["version"], "deletes": out["deletes"]}
-        finally:
-            keys.unpersist()
+            return self._publish(v, marked.drop("_upd__"), touched, None, obs)
+        touched_keys = upd.join(cur, self.key_cols, "left_semi")
+        new_images = merged.join(
+            touched_keys.select(*self.key_cols), self.key_cols, "left_semi"
+        )
+        changes = new_images.select(
+            F.lit("MODIFY").alias("event_name"), F.lit(v).cast("long").alias("version"), "*"
+        )
+        return self._publish(v, merged, touched, self._observed(changes, obs), obs)
+
+    def _delete_spark(self, keys: DataFrame, touched: list[int]) -> dict[str, int]:
+        current = self._read_buckets(
+            self._read_manifest(self.current_version()), touched
+        )
+        v = self.current_version() + 1
+        obs = Observation()
+        if not self.journal:
+            # deletes = |cur ∩ keys|, observed upstream of the
+            # surviving-row filter on one marker left-join
+            marked = current.join(
+                # distinct(): a duplicated delete key must not fan
+                # out current rows through the left join (the
+                # journaled path's semi/anti joins are dupe-safe)
+                keys.select(*self.key_cols)
+                .distinct()
+                .withColumn("_del__", F.lit(True)),
+                self.key_cols,
+                "left",
+            ).observe(
+                obs,
+                F.sum(
+                    F.when(F.col("_del__").isNotNull(), 1).otherwise(0)
+                ).alias("deletes"),
+            )
+            remaining = marked.filter(F.col("_del__").isNull()).drop(
+                "_del__"
+            )
+            return self._publish(v, remaining, touched, None, obs)
+        removed = current.join(keys, self.key_cols, "left_semi")
+        remaining = current.join(keys, self.key_cols, "left_anti")
+        changes = removed.select(
+            F.lit("REMOVE").alias("event_name"), F.lit(v).cast("long").alias("version"), "*"
+        )
+        return self._publish(v, remaining, touched, self._observed(changes, obs), obs)
 
     def _flip(self, v: int) -> None:
         tmp = self._pointer + ".tmp"
