@@ -59,3 +59,23 @@ def compare_entry(spark, entry, sf_dir: str) -> tuple[bool, str]:
         diff = [f"  spark={x}\n  duck ={y}" for x, y in zip(a, b) if x != y][:5]
         return False, "value mismatch (first diffs):\n" + "\n".join(diff)
     return True, f"ok ({len(spark_pdf)} rows)"
+
+
+def duckdb_cell_ranks(
+    con: duckdb.DuckDBPyConnection, n_centroids: int, nprobe: int = 1
+) -> dict[int, list[int]]:
+    """vec_id → its ``nprobe`` nearest seed-centroid ids, best first, from
+    the oracles' ranked CTE over the ``embeddings`` view in ``con`` — the
+    reference the Spark cell assignment and probe order are checked
+    against."""
+    from tv_event_streaming_spark.plans.datapipe import _NZ_CTE, _ranked_cte
+
+    rows = con.execute(
+        f"WITH {_NZ_CTE}, {_ranked_cte(n_centroids)} "
+        f"SELECT vec_id, cent_id FROM ranked WHERE rn <= {nprobe} "
+        "ORDER BY vec_id, rn"
+    ).fetchall()
+    ranks: dict[int, list[int]] = {}
+    for vec_id, cent_id in rows:
+        ranks.setdefault(vec_id, []).append(cent_id)
+    return ranks

@@ -376,39 +376,56 @@ def test_similarity_entries_match_oracle_on_random_vectors(
 def test_seed_cell_assignment_paths_agree_on_random_vectors(
     spark, tmp_path_factory, vecs, dup_of, n_zero, n_centroids
 ):
-    """Path-differential (not oracle) fuzz: the Arrow/numpy assignment
-    path must equal the Catalyst HOF expression path on every (vec_id,
-    cell) — including planted exact-duplicate centroids (score ties →
-    lowest centroid id) and sub-quantization-grid vectors (filtered by
-    the same nonzero_norm on both paths). This is the bit-identity
-    claim the auto switch at n_centroids >= 64 rests on, probed beyond
-    the real-corpus pin in test_similarity.py."""
+    """Kernel-vs-DuckDB fuzz: the Arrow cell assignment must equal the
+    oracles' ranked CTE at rn = 1 on every (vec_id, cell), and the
+    driver-side probe order must equal its ``rn <= nprobe`` — including
+    a planted duplicate centroid (score ties → lowest centroid id) and
+    sub-quantization-grid vectors (excluded by nonzero_norm on both
+    engines). Probes beyond the real-corpus pins in test_similarity.py."""
+    import duckdb  # noqa: PLC0415
+
     from tv_event_streaming_spark.operators import similarity as S  # noqa: PLC0415
 
-    vecs = list(vecs) + [list(vecs[dup_of])]
+    from .oracle import duckdb_cell_ranks  # noqa: PLC0415
+
+    # the last seed duplicates an earlier one: every vector ties on them
+    vecs = list(vecs)
+    vecs[n_centroids - 1] = list(vecs[dup_of % (n_centroids - 1)])
+    vecs.append(list(vecs[dup_of]))
     for i in range(n_zero):
         vecs.append([0.0] * 64 if i % 2 == 0 else [4.9e-7] * 64)
-    emb = spark.createDataFrame(
-        [(i, [float(x) for x in v]) for i, v in enumerate(vecs)],
-        "vec_id bigint, embedding array<float>",
+    path = f"{tmp_path_factory.mktemp('assignfuzz')}/embeddings.parquet"
+    pq.write_table(
+        pa.table(
+            {
+                "vec_id": pa.array(range(len(vecs)), pa.int64()),
+                "embedding": pa.array(
+                    [[float(x) for x in v] for v in vecs], pa.list_(pa.float32())
+                ),
+            }
+        ),
+        path,
     )
-    expr = {
+    emb = spark.read.parquet(path)
+    nprobe = 4
+    con = duckdb.connect()
+    try:
+        con.execute(f"CREATE VIEW embeddings AS SELECT * FROM read_parquet('{path}')")
+        want = duckdb_cell_ranks(con, n_centroids, nprobe)
+    finally:
+        con.close()
+    got = {
         (r[0], r[1])
-        for r in S._seed_cell_assignment(
-            emb, n_centroids, "vec_id", "embedding", vectorized=False
-        )
+        for r in S._seed_cell_assignment(emb, n_centroids, "vec_id", "embedding")
         .select("vec_id", "cell")
         .collect()
     }
-    vec = {
-        (r[0], r[1])
-        for r in S._seed_cell_assignment(
-            emb, n_centroids, "vec_id", "embedding", vectorized=True
-        )
-        .select("vec_id", "cell")
-        .collect()
-    }
-    assert expr == vec and len(expr) > 0
+    assert got == {(v, cs[0]) for v, cs in want.items()} and len(got) > 0
+    nz = S.nonzero_norm(emb)
+    kernel = S._centroid_kernel(S._seed_rows(nz, n_centroids, "vec_id", "embedding"))
+    rows = nz.select("vec_id", "embedding").collect()
+    probes = S._probe_cells(kernel, [r[1] for r in rows], nprobe)
+    assert {r[0]: p for r, p in zip(rows, probes)} == want
 
 
 # second embeddings tier: the index-backed retrieval entries. Their

@@ -48,29 +48,54 @@ def test_pq_encode_is_single_pass_map_side(spark, sf_dir):
     }, m and m.group(1)
 
 
-def test_seed_cell_assignment_auto_switch_plan_shape(spark, sf_dir):
-    """The centroid-assignment auto switch is a PLAN property: at the
-    catalog's n_centroids=16 the plan must stay the pure-expression
-    form (no Python worker round-trip — every oracle-green entry's
-    shape), and at >= 64 it must be the Arrow mapInPandas form (the
-    interpreted-HOF argmin measured as a 10-CPU-minute straggler at
-    sqrt(N) centroid counts, SCALE.md §6e)."""
+#: entries whose cells come from the nearest-seed-centroid assignment
+CELL_ENTRIES = [
+    "ann_cosine_ivf",
+    "kmeans_update",
+    "semantic_dedup",
+    "knn_graph",
+    "knn_pagerank",
+    "ann_ivfpq_residual",
+]
+
+
+def test_cell_assignment_runs_the_arrow_kernel(spark, sf_dir, monkeypatch):
+    """Every cell assignment is one Arrow mapInPandas pass of the exact
+    kernel: no entry's plan builds the broadcast ``_cents`` row the
+    interpreted higher-order-function argmin scored against (measured
+    as a 10-CPU-minute straggler at sqrt(N) centroid counts, SCALE.md
+    §6e, and slower than the Arrow pass even at C=16). The assignment
+    frame itself stays at one exchange, the scan fan-out (a no-op on
+    inputs whose scan parallelizes, pinned by test_fanout.py), on
+    both sides of the two-level switch."""
     from tv_event_streaming_spark.domain import load_table
     from tv_event_streaming_spark.operators import similarity as S
 
-    emb = load_table(spark, sf_dir, "embeddings")
-
-    def plan(n):
-        df = S._seed_cell_assignment(emb, n, "vec_id", "embedding")
+    def executed(df):
         return df._jdf.queryExecution().executedPlan().toString()
 
-    small, large = plan(16), plan(64)
-    assert "MapInPandas" not in small and "EvalPython" not in small
-    assert "MapInPandas" in large
-    # r12: the corpus pass fans out across cores when the scan is one
-    # unsplittable file (the ONLY exchange — scale-adaptive: no-op on
-    # inputs whose scan parallelizes, pinned by test_fanout.py)
-    assert n_exchanges(small) <= 1 and n_exchanges(large) <= 1
+    assign_cells, passes = S._assign_cells, []
+
+    def recording(*args, **kwargs):
+        passes.append(assign_cells(*args, **kwargs))
+        return passes[-1]
+
+    monkeypatch.setattr(S, "_assign_cells", recording)
+    for name in CELL_ENTRIES:
+        passes.clear()
+        final = plan_of(spark, name, sf_dir)
+        plans = [executed(df) for df in passes]
+        # knn_pagerank's final plan starts at its checkpoint, past the
+        # cells: its assignment shows in the frames the build ran
+        checked = plans if name == "knn_pagerank" else [final, *plans]
+        assert checked and all("MapInPandas" in p for p in checked), name
+        assert all("_cents" not in p for p in [final, *plans]), name
+        spark.catalog.clearCache()
+    emb = load_table(spark, sf_dir, "embeddings")
+    for n in (16, S._TWO_LEVEL_MIN_CENTROIDS):
+        plan = executed(S._seed_cell_assignment(emb, n, "vec_id", "embedding"))
+        assert "MapInPandas" in plan and "_cents" not in plan, n
+        assert n_exchanges(plan) <= 1, n
 
 
 def test_pq_adc_is_one_fused_arrow_pass(spark, sf_dir):

@@ -3,11 +3,15 @@ injected near-identical vectors, and agree with brute force on them."""
 
 from __future__ import annotations
 
+import math
+
 import pytest
 from pyspark.sql import functions as F
 
 from tv_event_streaming_spark.domain import load_table
 from tv_event_streaming_spark.operators import similarity as S
+
+from .oracle import duck_connection, duckdb_cell_ranks
 
 OFFSET = 1_000_000
 
@@ -303,35 +307,44 @@ def test_knn_graph_twin_is_rank1(spark, emb_with_twins):
     assert twin_rank1 >= 45
 
 
+def _duckdb_ranks(sf_dir, n_centroids, nprobe=1):
+    con = duck_connection(sf_dir)
+    try:
+        return duckdb_cell_ranks(con, n_centroids, nprobe)
+    finally:
+        con.close()
+
+
 def test_seed_cell_assignment_vectorized_identical(spark, sf_dir):
-    """The Arrow/numpy assignment path is bit-identical to the Catalyst
-    HOF expression path — every (vec_id, cell) agrees on the real corpus
-    at an odd centroid count (the auto switch at n_centroids >= 64 must
-    not perturb any downstream result)."""
+    """The Arrow kernel's cells equal the DuckDB reference — the
+    oracles' ranked CTE at rn = 1 — on every (vec_id, cell) of the real
+    corpus at an odd centroid count."""
     emb = load_table(spark, sf_dir, "embeddings")
-    expr = {
+    got = {
         (r[0], r[1])
-        for r in S._seed_cell_assignment(
-            emb, 23, "vec_id", "embedding", vectorized=False
-        )
-        .select("vec_id", "cell")
-        .collect()
+        for r in S._seed_cell_assignment(emb, 23).select("vec_id", "cell").collect()
     }
-    vec = {
-        (r[0], r[1])
-        for r in S._seed_cell_assignment(
-            emb, 23, "vec_id", "embedding", vectorized=True
-        )
-        .select("vec_id", "cell")
-        .collect()
-    }
-    assert expr == vec and len(expr) > 0
+    want = {(v, cs[0]) for v, cs in _duckdb_ranks(sf_dir, 23).items()}
+    assert got == want and len(got) > 0
+
+
+def test_driver_probe_order_matches_duckdb_rank(spark, sf_dir):
+    """Driver-side probes rank centroids exactly like the oracles'
+    ``rn <= nprobe``: same ids in the same order. A zero-norm query
+    scores 0.0 against every centroid, so it probes the lowest ids."""
+    nz = S.nonzero_norm(load_table(spark, sf_dir, "embeddings"))
+    kernel = S._centroid_kernel(S._seed_rows(nz, 16, "vec_id", "embedding"))
+    rows = nz.filter(F.col("vec_id") < 60).select("vec_id", "embedding").collect()
+    got = S._probe_cells(kernel, [r[1] for r in rows], 6)
+    want = _duckdb_ranks(sf_dir, 16, nprobe=6)
+    assert {r[0]: cs for r, cs in zip(rows, got)} == {r[0]: want[r[0]] for r in rows}
+    assert S._probe_cells(kernel, [[0.0] * 64], 4) == [kernel[0][:4].tolist()]
 
 
 def test_seed_cell_assignment_vectorized_tie_break(spark):
-    """Exact score ties resolve to the LOWEST centroid id on both
-    paths: centroids 1 and 3 are identical vectors, so every query tied
-    between them must land in cell 1."""
+    """Exact score ties resolve to the LOWEST centroid id: centroids 1
+    and 3 are identical vectors, so every query tied between them must
+    land in cell 1."""
     rows = [
         (0, [1.0, 0.0, 0.0, 0.0]),
         (1, [0.5, 0.5, 0.0, 0.0]),
@@ -341,44 +354,34 @@ def test_seed_cell_assignment_vectorized_tie_break(spark):
         (11, [0.51, 0.49, 0.0, 0.0]),
     ]
     emb = spark.createDataFrame(rows, "vec_id bigint, embedding array<float>")
-    for vectorized in (False, True):
-        cells = {
-            r.vec_id: r.cell
-            for r in S._seed_cell_assignment(
-                emb, 4, "vec_id", "embedding", vectorized=vectorized
-            ).collect()
-        }
-        assert cells[10] == 1, (vectorized, cells)
-        assert cells[3] == 1, (vectorized, cells)
+    cells = {
+        r.vec_id: r.cell
+        for r in S._seed_cell_assignment(emb, 4, "vec_id", "embedding").collect()
+    }
+    assert cells[10] == 1, cells
+    assert cells[3] == 1, cells
 
 
 def test_seed_cell_assignment_vectorized_rejects_ragged(spark):
-    """The vectorized path's uniform-dims contract is enforced, not
-    silently mis-scored."""
+    """The kernel's uniform-dims contract is enforced, not silently
+    mis-scored."""
     emb = spark.createDataFrame(
         [(0, [1.0, 0.0]), (1, [0.0, 1.0]), (5, [1.0, 0.0, 0.5])],
         "vec_id bigint, embedding array<float>",
     )
     with pytest.raises(Exception, match="centroid dims|stack"):
-        S._seed_cell_assignment(
-            emb, 2, "vec_id", "embedding", vectorized=True
-        ).collect()
+        S._seed_cell_assignment(emb, 2, "vec_id", "embedding").collect()
 
 
 def test_seed_cell_assignment_empty_seeds_raise_on_both_paths(spark):
-    """Path identity on a seedless corpus (ADVICE r7 #2): the auto-switch
-    must not change the failure mode — both paths raise the same
-    ValueError instead of the expression path silently emitting NULL
-    cells."""
+    """A seedless corpus raises a ValueError (ADVICE r7 #2) instead of
+    silently emitting NULL cells."""
     emb = spark.createDataFrame(
         [(100, [1.0, 0.0]), (101, [0.0, 1.0])],
         "vec_id bigint, embedding array<float>",
     )
-    for vectorized in (False, True):
-        with pytest.raises(ValueError, match="no nonzero-norm centroid seeds"):
-            S._seed_cell_assignment(
-                emb, 2, "vec_id", "embedding", vectorized=vectorized
-            )
+    with pytest.raises(ValueError, match="no nonzero-norm centroid seeds"):
+        S._seed_cell_assignment(emb, 2, "vec_id", "embedding")
 
 
 def test_auto_n_centroids_default_is_sqrt_n(spark, sf_dir):
@@ -445,50 +448,25 @@ def test_two_level_assignment_dispatch_and_exact_degenerate(spark, sf_dir):
     """The two-level coarse-then-fine search (the r8/r9-ordered
     O(N^1.5) fix) dispatches at n_centroids ≥ 256 — and NOT below, so
     the catalog pins (C=16) and the sf-scale √N auto values stay on the
-    byte-pinned exact path. When every fine centroid is its own coarse
-    group (C ≤ 16 forced two-level), the search degenerates to the
-    exact scan and must be bit-identical to the one-level path."""
+    exact one-level kernel. When every fine centroid is its own coarse
+    group (C ≤ 16), the search degenerates to the exact scan and must
+    be bit-identical to the one-level path."""
     emb = load_table(spark, sf_dir, "embeddings")
-    # dispatch: C=300 through the public dispatcher == direct two-level
-    via_dispatch = {
-        (r[0], r[1])
-        for r in S._seed_cell_assignment(emb, 300).select("vec_id", "cell").collect()
-    }
-    direct = {
-        (r[0], r[1])
-        for r in S._seed_cell_assignment_two_level(
-            S.nonzero_norm(emb), 300, "vec_id", "embedding"
-        )
-        .select("vec_id", "cell")
-        .collect()
-    }
-    assert via_dispatch == direct and len(direct) > 0
-    # below the threshold the dispatcher stays one-level-exact
-    below = {
-        (r[0], r[1])
-        for r in S._seed_cell_assignment(emb, 255).select("vec_id", "cell").collect()
-    }
-    exact_255 = {
-        (r[0], r[1])
-        for r in S._seed_cell_assignment(emb, 255, two_level=False)
-        .select("vec_id", "cell")
-        .collect()
-    }
-    assert below == exact_255
-    # degenerate two-level (every fine is coarse) == exact one-level
-    forced = {
-        (r[0], r[1])
-        for r in S._seed_cell_assignment(emb, 16, vectorized=True, two_level=True)
-        .select("vec_id", "cell")
-        .collect()
-    }
-    exact_16 = {
-        (r[0], r[1])
-        for r in S._seed_cell_assignment(emb, 16, vectorized=True, two_level=False)
-        .select("vec_id", "cell")
-        .collect()
-    }
-    assert forced == exact_16
+    nz = S.nonzero_norm(emb)
+
+    def cells(df):
+        return {(r[0], r[1]) for r in df.select("vec_id", "cell").collect()}
+
+    one_level = lambda c: S._seed_cell_assignment_one_level(  # noqa: E731
+        nz, c, "vec_id", "embedding"
+    )
+    two_level = lambda c: S._seed_cell_assignment_two_level(  # noqa: E731
+        nz, c, "vec_id", "embedding"
+    )
+    direct = cells(two_level(300))
+    assert cells(S._seed_cell_assignment(emb, 300)) == direct and direct
+    assert cells(S._seed_cell_assignment(emb, 255)) == cells(one_level(255))
+    assert cells(two_level(16)) == cells(one_level(16))
     spark.catalog.clearCache()
 
 
@@ -497,7 +475,7 @@ def test_two_level_assignment_cocolates_duplicates_and_ties(spark):
     input vectors get identical cells (same scores → same coarse group
     → same fine argmax), and exact ties resolve to the lowest centroid
     id at both levels — plus the empty-seed failure mode stays a
-    ValueError, same as both one-level paths."""
+    ValueError, same as the one-level path."""
     import random
 
     random.seed(7)
@@ -1076,6 +1054,28 @@ def test_residual_training_does_not_hurt_recall(spark, sf_dir):
     spark.catalog.clearCache()
 
 
+def _ref_qvec(vec):
+    return [math.floor(float(x) * S.QUANT) for x in vec]
+
+
+def _ref_centroids(nz):
+    rows = nz.filter(F.col("vec_id") < 16).select("vec_id", "embedding").collect()
+    return sorted((r[0], _ref_qvec(r[1])) for r in rows)
+
+
+def _ref_nearest_cell(qq, qcents):
+    """Exact-integer reference cell: integer dot/normsq, ONE double
+    division per score, ties to the lowest centroid id."""
+    qn = sum(x * x for x in qq)
+
+    def key(c):
+        cid, cq = c
+        dot = sum(a * b for a, b in zip(qq, cq))
+        return (-(dot / math.sqrt(qn * sum(x * x for x in cq))), cid)
+
+    return min(qcents, key=key)[0]
+
+
 def _ref_argmin_codes(qv, cb, sub):
     """Exact-integer reference PQ assignment: per-subspace argmin of
     quantized squared L2 over the ACTUAL codebook width, ties to the
@@ -1115,15 +1115,15 @@ def test_shrunk_codebook_codes_match_reference_argmin(spark, sf_dir):
     cb = S.pq_residual_seed_codebook(one_zero, allow_missing=True)
     assert len(cb[0]) == 15  # the shrink actually happened
     sub = len(cb[0][0])
-    qcents = S._collect_centroids(nz, 16, "vec_id", "embedding")
+    qcents = _ref_centroids(nz)
     cent_by_id = dict(qcents)
     got = {
         r.vec_id: (r.cell, list(r.codes))
         for r in S.ivfpq_residual_index(one_zero).collect()
     }
     for r in nz.select("vec_id", "embedding").collect():
-        qq = S._qvec(r[1])
-        cell = S._nearest_cell(qq, qcents)
+        qq = _ref_qvec(r[1])
+        cell = _ref_nearest_cell(qq, qcents)
         qv = [a - b for a, b in zip(qq, cent_by_id[cell])]
         assert got[r[0]] == (cell, _ref_argmin_codes(qv, cb, sub)), r[0]
     spark.catalog.clearCache()
@@ -1144,7 +1144,7 @@ def test_shrunk_codebook_codes_match_reference_argmin(spark, sf_dir):
         for r in S.pq_codes(nz3, codebook=cb3).collect()
     }
     for r in nz3.select("vec_id", "embedding").collect():
-        qv = S._qvec(r[1])
+        qv = _ref_qvec(r[1])
         assert got3[r[0]] == _ref_argmin_codes(qv, cb3, sub), r[0]
     spark.catalog.clearCache()
 
@@ -1165,13 +1165,13 @@ def test_shrunk_codebook_lloyd_iteration_matches_reference(spark, sf_dir):
     nz = S.nonzero_norm(one_zero)
     cb0 = S.pq_residual_seed_codebook(one_zero, allow_missing=True)
     sub = len(cb0[0][0])
-    qcents = S._collect_centroids(nz, 16, "vec_id", "embedding")
+    qcents = _ref_centroids(nz)
     cent_by_id = dict(qcents)
     # exact-integer reference: one assignment + mean-update pass
     sums = {}
     for r in nz.select("vec_id", "embedding").collect():
-        qq = S._qvec(r[1])
-        qv = [a - b for a, b in zip(qq, cent_by_id[S._nearest_cell(qq, qcents)])]
+        qq = _ref_qvec(r[1])
+        qv = [a - b for a, b in zip(qq, cent_by_id[_ref_nearest_cell(qq, qcents)])]
         for m, j in enumerate(_ref_argmin_codes(qv, cb0, sub)):
             for d in range(sub):
                 s, n = sums.get((m, j, d), (0, 0))

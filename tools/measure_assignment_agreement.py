@@ -5,7 +5,7 @@ coarse-then-fine search, what fraction of vectors land in the same
 cell as the exact one-level scan — and what that does to the one
 result-shaped consumer, `semantic_dedup`'s dropped set.
 
-The approximation contract (similarity.py:_seed_cell_assignment_two_level)
+The approximation contract (similarity.py:_two_level_kernel)
 says boundary vectors may move to an adjacent cell; this measures how
 many actually do, on the real embedding corpora, at the C values the
 auto rules pick. Cell agreement is the strict metric; the dedup-set
@@ -14,9 +14,8 @@ output if its near-duplicate neighborhood straddles the cell change).
 
 Run: `python tools/measure_assignment_agreement.py [sf_dir ...]`
 (defaults to /tmp/scale_corpus/d10 and d100, where C = √N crosses the
-vectorized (64) and two-level (256) dispatch thresholds so both paths
-are real; at the shipped sf dirs C ≤ 44 and the auto dispatch never
-reaches two-level). Prints one JSON line per (corpus, C).
+two-level (256) dispatch threshold so both paths are real; at the
+shipped sf dirs C ≤ 44 and the auto dispatch never reaches two-level). Prints one JSON line per (corpus, C).
 """
 
 from __future__ import annotations
@@ -38,14 +37,15 @@ def measure(spark, sf_dir: str) -> dict:
     emb = load_table(spark, sf_dir, "embeddings").persist()
     n = emb.count()
     c = max(16, math.isqrt(n))
-    # force the dispatch both ways on the SAME vectorized kernel so the
-    # delta is purely the coarse-group restriction, not path noise
-    one = S._seed_cell_assignment(
-        emb, c, vectorized=True, two_level=False
-    ).select("vec_id", F.col("cell").alias("cell_one"))
-    two = S._seed_cell_assignment(
-        emb, c, vectorized=True, two_level=True
-    ).select("vec_id", F.col("cell").alias("cell_two"))
+    # both searches on the same kernel, so the delta is purely the
+    # coarse-group restriction
+    nz = S.nonzero_norm(emb)
+    one = S._seed_cell_assignment_one_level(nz, c, "vec_id", "embedding").select(
+        "vec_id", F.col("cell").alias("cell_one")
+    )
+    two = S._seed_cell_assignment_two_level(nz, c, "vec_id", "embedding").select(
+        "vec_id", F.col("cell").alias("cell_two")
+    )
     joined = one.join(two, "vec_id").persist()
     agree = joined.filter(F.col("cell_one") == F.col("cell_two")).count()
     total = joined.count()

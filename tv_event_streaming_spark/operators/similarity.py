@@ -294,6 +294,183 @@ def cosine_topk_lsh(
     )
 
 
+# ---------------------------------------------------------------------------
+# The exact nearest-centroid kernel: every quantized cell assignment and
+# cell probe below (IVF, k-means update, semantic dedup / kNN cells,
+# IVF-PQ) runs it — corpus cells in one Arrow pass, query probes on the
+# Spark driver.
+# ---------------------------------------------------------------------------
+
+
+def _seed_rows(
+    embeddings: DataFrame, hi: int, id_col: str, vec_col: str, lo: int = 0
+) -> list[tuple[int, list[float]]]:
+    """The deterministic seed vectors ``lo <= id < hi`` as (id, vector)
+    pairs sorted by id — the seeding rule the IVF, k-means and PQ tiers
+    share (reproducible in any engine, no RNG), and the one driver
+    collect they all go through."""
+    pred = F.col(id_col) < hi
+    if lo:
+        pred = pred & (F.col(id_col) >= lo)
+    rows = embeddings.filter(pred).select(id_col, vec_col).collect()
+    return sorted(((int(r[0]), r[1]) for r in rows), key=lambda r: r[0])
+
+
+def _centroid_kernel(cents: list[tuple[int, list[float]]]):
+    """The exact nearest-centroid kernel over ``cents`` ((id, float
+    vector) pairs). Its contract, stated once for every caller:
+
+    - quantize each component as floor(float64(x)·1e6) → int64
+      (float32→float64 widening is exact);
+    - exact int64 dot product and squared norm (|q| ≤ ~4e6 per
+      component, so sums stay far below 2^63);
+    - ONE IEEE division per score, ``dot / sqrt(nv·cnormsq)`` — the
+      same correctly-rounded double sequence as the DuckDB oracles'
+      ``_DOT / sqrt(_NORMSQ·_NORMSQ)`` (plans/datapipe.py); a zero norm
+      scores 0.0 against every centroid;
+    - rank centroids by score descending, ties to the lowest id:
+      argmax-first for the top 1, a stable sort for the top ``nprobe``.
+
+    Returns ``(ids, qc, quantize, nearest)``: centroid ids ascending,
+    their quantized rows, the quantizer (a sequence of equal-length
+    vectors → int64 matrix) and ``nearest(qv, nprobe=None)`` → row
+    indices into ``ids``/``qc`` (1-D best, or ``(n, nprobe)`` best
+    first). The functions close over numpy only, so cloudpickle ships
+    them into task closures by value — Python workers never import
+    this package."""
+    import numpy as np  # noqa: PLC0415
+
+    if not cents:
+        raise ValueError("no nonzero-norm centroid seeds to assign to")
+    quant = QUANT
+
+    def quantize(vecs):
+        return np.floor(np.stack(vecs).astype(np.float64) * quant).astype(np.int64)
+
+    cents = sorted(cents, key=lambda c: c[0])
+    ids = np.array([c[0] for c in cents], dtype=np.int64)
+    qc = quantize([c[1] for c in cents])
+    cnormsq = (qc * qc).sum(axis=1).astype(np.float64)
+
+    def nearest(qv, nprobe=None):
+        if qv.shape[1] != qc.shape[1]:
+            raise ValueError(
+                f"vector length {qv.shape[1]} != centroid dims {qc.shape[1]}"
+            )
+        nv = (qv * qv).sum(axis=1).astype(np.float64)
+        dots = (qv @ qc.T).astype(np.float64)
+        denom = np.sqrt(nv[:, None] * cnormsq[None, :])
+        scores = np.divide(dots, denom, out=np.zeros_like(dots), where=denom > 0)
+        if nprobe is None:
+            return scores.argmax(axis=1)
+        return np.argsort(-scores, axis=1, kind="stable")[:, :nprobe]
+
+    return ids, qc, quantize, nearest
+
+
+def _two_level_kernel(cents: list[tuple[int, list[float]]]):
+    """Coarse-then-fine variant of :func:`_centroid_kernel` (same
+    return shape; ``nearest(qv)`` is top-1 only) — the sub-O(N·C)
+    search the r8/r9 verdicts ordered for the cell-confined operators.
+
+    - FINE centroids: ``cents``, C of them. COARSE centroids: the first
+      G = max(16, isqrt(C)) fine ones by id.
+    - Each fine centroid joins the group of its nearest coarse one
+      (scored by the kernel on the Spark driver); each coarse centroid is a
+      member of its own group, so no group is empty.
+    - Per vector: nearest coarse centroid (G dots), then nearest fine
+      centroid within that group (~C/G dots) — ~2√C dots instead of C,
+      which at the √N auto rule turns the N·√N·d assignment term into
+      N·N^¼·d.
+
+    APPROXIMATION CONTRACT: the result is the nearest fine centroid of
+    the vector's coarse group, which for vectors near a coarse boundary
+    may differ from the global nearest. The cell operators (semantic
+    dedup / kNN graph / cell histograms) treat cells as heuristic
+    locality partitions, so a boundary vector moving to an adjacent cell
+    changes *which* near-pairs are visible, never the correctness of
+    emitted pairs — the trade the SemDeDup / IVF literature makes at the
+    cluster level. Both levels run the exact kernel (lowest-id ties), so
+    outputs stay engine-independent and oracle-hashable."""
+    import math  # noqa: PLC0415
+
+    import numpy as np  # noqa: PLC0415
+
+    cents = sorted(cents, key=lambda c: c[0])
+    ids, qc, quantize, _ = _centroid_kernel(cents)
+    n_coarse = min(len(cents), max(16, math.isqrt(len(cents))))
+    coarse = _centroid_kernel(cents[:n_coarse])[3]
+    group = coarse(qc)
+    group[:n_coarse] = np.arange(n_coarse)  # own-group membership
+    # ascending member index = ascending id ⇒ fine ties still break low
+    members = [np.nonzero(group == g)[0] for g in range(n_coarse)]
+    fine = [_centroid_kernel([cents[i] for i in ix])[3] for ix in members]
+
+    def nearest(qv):
+        top = coarse(qv)
+        best = np.empty(len(qv), dtype=np.int64)
+        for g in np.unique(top):
+            rows = np.nonzero(top == g)[0]
+            best[rows] = members[g][fine[g](qv[rows])]
+        return best
+
+    return ids, qc, quantize, nearest
+
+
+def _assign_cells(
+    embeddings: DataFrame,
+    kernel,
+    id_col: str,
+    vec_col: str,
+    residual: bool = False,
+) -> DataFrame:
+    """ONE Arrow ``mapInPandas`` pass over the (fanned-out) scan that
+    runs ``kernel`` on every batch: ``(id, vec, cell)``, or with
+    ``residual`` ``(id, cell, _qv)`` where ``_qv`` is the quantized
+    residual against the cell's centroid — what the residual PQ tier
+    encodes. ``embeddings`` must already be nonzero-norm filtered."""
+    ids, qc, quantize, nearest = kernel
+    cell = T.StructField("cell", T.IntegerType(), False)
+    if residual:
+        out_schema = T.StructType(
+            [
+                embeddings.schema[id_col],
+                cell,
+                T.StructField("_qv", T.ArrayType(T.LongType(), False), False),
+            ]
+        )
+    else:
+        fields = embeddings.select(id_col, vec_col).schema.fields
+        out_schema = T.StructType([*fields, cell])
+
+    def assign(batches):
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            qv = quantize(pdf[vec_col].to_numpy())
+            best = nearest(qv)
+            out = pdf[[id_col] if residual else [id_col, vec_col]].copy()
+            out["cell"] = ids[best].astype("int32")
+            if residual:
+                out["_qv"] = list(qv - qc[best])
+            yield out
+
+    # r12: one scan partition = one Python worker for the whole batch
+    # matmul; fan out first (scale-adaptive no-op on real clusters)
+    return fan_out_scan(embeddings.select(id_col, vec_col), id_col).mapInPandas(
+        assign, schema=out_schema
+    )
+
+
+def _probe_cells(kernel, vecs: list, nprobe: int) -> list[list[int]]:
+    """Driver side of the kernel: the ``nprobe`` nearest centroid ids of
+    each query vector, best first."""
+    ids, _, quantize, nearest = kernel
+    if not vecs:
+        return []
+    return ids[nearest(quantize(vecs), nprobe)].tolist()
+
+
 def kmeans_centroids(
     embeddings: DataFrame,
     k: int = 16,
@@ -319,10 +496,7 @@ def kmeans_centroids(
     """
     embeddings = nonzero_norm(embeddings, vec_col)
     spark = embeddings.sparkSession
-    seeds = sorted(
-        embeddings.filter(F.col(id_col) < k).select(id_col, vec_col).collect(),
-        key=lambda r: r[0],
-    )
+    seeds = _seed_rows(embeddings, k, id_col, vec_col)
     if len(seeds) != k:
         raise ValueError(
             f"k-means seeding expects ids 0..{k - 1} to exist; "
@@ -397,86 +571,25 @@ def kmeans_update_stats(
 ) -> DataFrame:
     """ONE Lloyd iteration of spherical k-means as a driver-checkable
     DataFrame: assign every vector to its nearest seed centroid (the
-    same quantized assignment :func:`cosine_topk_ivf` uses — int64
-    component quantization, exact integer dot/norm sums, one double
-    division per score, ties to the lowest centroid id), then emit the
-    per-(cell, dim) sufficient statistics of the centroid update —
-    exact int64 component sums + member counts — and the updated
-    centroid mean as ONE final double division. This is exactly the
-    arithmetic :func:`kmeans_centroids` iterates (assignment + mean
-    update), in a cross-engine-deterministic form, so the IVF
-    refinement math carries a DuckDB-oracle hash.
+    exact kernel, :func:`_centroid_kernel`), then emit the per-(cell,
+    dim) sufficient statistics of the centroid update — exact int64
+    component sums + member counts — and the updated centroid mean as
+    ONE final double division. This is exactly the arithmetic
+    :func:`kmeans_centroids` iterates (assignment + mean update), in a
+    cross-engine-deterministic form, so the IVF refinement math carries
+    a DuckDB-oracle hash.
 
-    Scale shape per the kmeans_centroids docstring: assignment is pure
-    map-side against a single broadcast centroid row; the update is
-    posexplode → groupBy(cell, dim) with map-side partial aggregation —
-    the shuffle carries ≤ #partitions·k·dims partial rows, never the
-    corpus."""
-    import math  # noqa: PLC0415
-
+    Scale shape: assignment is one map-side Arrow pass with the
+    centroids in the task closure; the update is posexplode →
+    groupBy(cell, dim) with map-side partial aggregation — the shuffle
+    carries ≤ #partitions·k·dims partial rows, never the corpus."""
     embeddings = nonzero_norm(embeddings, vec_col)
-    cent_rows = sorted(
-        embeddings.filter(F.col(id_col) < n_centroids)
-        .select(id_col, vec_col)
-        .collect(),
-        key=lambda r: r[0],
+    kernel = _centroid_kernel(
+        _seed_rows(embeddings, n_centroids, id_col, vec_col)
     )
-    spark = embeddings.sparkSession
-    # single broadcast row, quantized driver-side (see cosine_topk_ivf
-    # for why data beats plan literals here)
-    cents_row = spark.createDataFrame(
-        [
-            (
-                [
-                    (int(r[0]), qc, sum(q * q for q in qc))
-                    for r in cent_rows
-                    for qc in [[int(math.floor(float(x) * QUANT)) for x in r[1]]]
-                ],
-            )
-        ],
-        "_cents array<struct<cent_id:bigint,qcvec:array<bigint>,cnormsq:bigint>>",
-    )
-    staged = embeddings.select(
-        F.transform(F.col(vec_col), _q).alias("_qv")
-    ).withColumn(
-        "_nv",
-        F.aggregate(
-            F.transform(F.col("_qv"), lambda x: x * x),
-            F.lit(0).cast("long"),
-            lambda acc, v: acc + v,
-        ),
-    )
-
-    def cent_cos(c: Column) -> Column:
-        return F.aggregate(
-            F.zip_with(F.col("_qv"), c["qcvec"], lambda x, y: x * y),
-            F.lit(0).cast("long"),
-            lambda acc, v: acc + v,
-        ).cast("double") / F.sqrt(
-            F.col("_nv").cast("double") * c["cnormsq"].cast("double")
-        )
-
-    # argmin over (-score, cent_id) via default lexicographic array_sort
-    # — evaluates the 16 centroid scores exactly ONCE per row and ties
-    # break to the lowest cent_id, matching the oracle's row_number
-    # (ORDER BY score DESC, cent_id). named_struct keeps real field
-    # names (.alias() inside transform lambdas silently becomes col1).
-    ordered = F.array_sort(
-        F.transform(
-            F.col("_cents"),
-            lambda c: F.named_struct(
-                F.lit("nscore"), -cent_cos(c), F.lit("cent_id"), c["cent_id"]
-            ),
-        )
-    )
-    # cell is computed BEFORE the posexplode: an expression alongside a
-    # generator lands in the post-Generate Project and would re-evaluate
-    # the 16-centroid scoring once per exploded dim (measured 15s vs 1s
-    # at sf0.1)
-    assigned = (
-        staged.crossJoin(F.broadcast(cents_row))
-        .select(F.element_at(ordered, 1)["cent_id"].alias("cell"), "_qv")
-        .select("cell", F.posexplode("_qv").alias("dim", "qval"))
+    assigned = _assign_cells(embeddings, kernel, id_col, vec_col).select(
+        F.col("cell").cast("long").alias("cell"),
+        F.posexplode(F.transform(F.col(vec_col), _q)).alias("dim", "qval"),
     )
     return (
         assigned.groupBy("cell", "dim")
@@ -510,99 +623,35 @@ def cosine_topk_ivf(
     Centroids are the vectors with id < ``n_centroids`` — a deterministic
     seed assignment (production would refine with k-means rounds; the
     cell/probe/re-rank machinery is identical and this keeps the operator
-    oracle-checkable). Cell assignment is a per-row sort of the
-    n_centroids cosine scores against a SINGLE-ROW broadcast holding all
-    centroids as one array column — pure map-side (broadcast
-    nested-loop join adds a column, not rows), NO shuffle and NO ×16 row
-    blowup before the cell join; at scale the one-time
-    ``repartition(cell)`` of the assigned corpus IS the IVF index build,
-    and queries touch only nprobe/n_centroids of the data.
+    oracle-checkable). Cell assignment is one map-side Arrow pass of the
+    exact kernel (:func:`_assign_cells`) — NO shuffle and NO ×16 row
+    blowup before the cell join; the queries' probe cells are ranked on
+    the Spark driver by the same kernel and travel as a broadcast frame. At
+    scale the one-time ``repartition(cell)`` of the assigned corpus IS
+    the IVF index build, and queries touch only nprobe/n_centroids of
+    the data.
     """
-    import math  # noqa: PLC0415
-
     embeddings = nonzero_norm(embeddings, vec_col)
-    if centroids is not None:
-        # refined centroids (e.g. from kmeans_centroids) — same machinery
-        cent_rows: list = list(centroids)
-    else:
-        cent_rows = sorted(
-            embeddings.filter(F.col(id_col) < n_centroids)
-            .select(id_col, vec_col)
-            .collect(),
-            key=lambda r: r[0],
-        )
-    # centroids travel as ONE broadcast row of array<struct> (data), NOT
-    # as literal arrays in the plan — a 16×64-literal expression tree
-    # costs seconds of analyzer time on every fresh plan. Components
-    # quantize driver-side with the same floor(x·1e6) the column path
-    # uses, norms precomputed exactly.
-    spark = embeddings.sparkSession
-    cents_row = spark.createDataFrame(
-        [
-            (
-                [
-                    (int(r[0]), qc, sum(q * q for q in qc))
-                    for r in cent_rows
-                    for qc in [[int(math.floor(float(x) * QUANT)) for x in r[1]]]
-                ],
-            )
-        ],
-        "_cents array<struct<cent_id:bigint,qcvec:array<bigint>,cnormsq:bigint>>",
+    kernel = _centroid_kernel(
+        centroids
+        if centroids is not None  # refined centroids, e.g. kmeans_centroids
+        else _seed_rows(embeddings, n_centroids, id_col, vec_col)
     )
-
-    staged = embeddings.select(
-        F.col(id_col),
-        F.col(vec_col),
-        F.transform(F.col(vec_col), _q).alias("_qv"),
-    ).withColumn(
-        "_nv",
-        F.aggregate(
-            F.transform(F.col("_qv"), lambda x: x * x),
-            F.lit(0).cast("long"),
-            lambda acc, v: acc + v,
-        ),
-    )
-
-    def cent_cos(c: Column) -> Column:
-        return F.aggregate(
-            F.zip_with(F.col("_qv"), c["qcvec"], lambda x, y: x * y),
-            F.lit(0).cast("long"),
-            lambda acc, v: acc + v,
-        ).cast("double") / F.sqrt(
-            F.col("_nv").cast("double") * c["cnormsq"].cast("double")
-        )
-
-    # per-row: score all centroids, sort (cos desc, cent_id asc) map-side
-    ordered = F.array_sort(
-        F.transform(
-            F.col("_cents"),
-            lambda c: F.struct(
-                cent_cos(c).alias("ccos"), c["cent_id"].alias("cent_id")
-            ),
-        ),
-        lambda a, b: F.when(a["ccos"] > b["ccos"], F.lit(-1))
-        .when(a["ccos"] < b["ccos"], F.lit(1))
-        .otherwise((a["cent_id"] - b["cent_id"]).cast("int")),
-    )
-    ranked = staged.crossJoin(F.broadcast(cents_row)).select(
-        id_col, vec_col, "_nv", ordered.alias("_ordered")
-    )
-    assign = ranked.select(
+    assign = _assign_cells(embeddings, kernel, id_col, vec_col).select(
         F.col(id_col).alias("neighbor_id"),
         F.col(vec_col).alias("cvec"),
-        F.element_at("_ordered", 1)["cent_id"].alias("cell"),
-        F.col("_nv").alias("cnorm"),
+        "cell",
+        quantized_norm_sq(F.col(vec_col)).alias("cnorm"),
     )
-    probes = (
-        ranked.filter(query_filter)
-        .select(
-            F.col(id_col).alias("query_id"),
-            F.col(vec_col).alias("qvec"),
-            F.col("_nv").alias("qnorm"),
-            F.explode(F.slice("_ordered", 1, nprobe)).alias("_probe"),
-        )
-        .select("query_id", "qvec", F.col("_probe")["cent_id"].alias("cell"), "qnorm")
+    q_rows = embeddings.filter(query_filter).select(id_col, vec_col).collect()
+    cells = _probe_cells(kernel, [r[1] for r in q_rows], nprobe)
+    id_type, vec_type = (
+        embeddings.schema[c].dataType.simpleString() for c in (id_col, vec_col)
     )
+    probes = embeddings.sparkSession.createDataFrame(
+        [(r[0], r[1], c) for r, cs in zip(q_rows, cells) for c in cs],
+        f"query_id {id_type}, qvec {vec_type}, cell int",
+    ).withColumn("qnorm", quantized_norm_sq(F.col("qvec")))
     cands = F.broadcast(probes).join(assign, "cell").filter(
         F.col("query_id") != F.col("neighbor_id")
     )
@@ -637,72 +686,22 @@ def build_ivf_index(
     partition pruning (the scan's PartitionFilters, verified in
     tests/test_similarity.py), i.e. nprobe/n_centroids of the data.
 
-    Cell assignment reuses the map-side argmax (one broadcast row of
-    centroids, no corpus shuffle besides the partitioned write itself).
+    Cell assignment is the map-side kernel pass (no corpus shuffle
+    besides the partitioned write itself).
     """
-    import math  # noqa: PLC0415
-
     embeddings = nonzero_norm(embeddings, vec_col)
-    spark = embeddings.sparkSession
-    if centroids is None:
-        cent_rows: list = sorted(
-            embeddings.filter(F.col(id_col) < n_centroids)
-            .select(id_col, vec_col)
-            .collect(),
-            key=lambda r: r[0],
-        )
-    else:
-        cent_rows = list(centroids)
-    cents_row = spark.createDataFrame(
-        [
-            (
-                [
-                    (int(r[0]), qc, sum(q * q for q in qc))
-                    for r in cent_rows
-                    for qc in [[int(math.floor(float(x) * QUANT)) for x in r[1]]]
-                ],
-            )
-        ],
-        "_cents array<struct<cent_id:bigint,qcvec:array<bigint>,cnormsq:bigint>>",
-    )
-    staged = embeddings.select(
-        F.col(id_col),
-        F.col(vec_col),
-        F.transform(F.col(vec_col), _q).alias("_qv"),
-    ).withColumn(
-        "_nv",
-        F.aggregate(
-            F.transform(F.col("_qv"), lambda x: x * x),
-            F.lit(0).cast("long"),
-            lambda acc, v: acc + v,
-        ),
-    )
-
-    def cent_cos(c: Column) -> Column:
-        return F.aggregate(
-            F.zip_with(F.col("_qv"), c["qcvec"], lambda x, y: x * y),
-            F.lit(0).cast("long"),
-            lambda acc, v: acc + v,
-        ).cast("double") / F.sqrt(
-            F.col("_nv").cast("double") * c["cnormsq"].cast("double")
-        )
-
-    ordered = F.array_sort(
-        F.transform(
-            F.col("_cents"),
-            lambda c: F.struct(cent_cos(c).alias("ccos"), c["cent_id"].alias("cent_id")),
-        ),
-        lambda a, b: F.when(a["ccos"] > b["ccos"], F.lit(-1))
-        .when(a["ccos"] < b["ccos"], F.lit(1))
-        .otherwise((a["cent_id"] - b["cent_id"]).cast("int")),
+    kernel = _centroid_kernel(
+        centroids
+        if centroids is not None
+        else _seed_rows(embeddings, n_centroids, id_col, vec_col)
     )
     (
-        staged.crossJoin(F.broadcast(cents_row))
+        _assign_cells(embeddings, kernel, id_col, vec_col)
         .select(
             F.col(id_col),
             F.col(vec_col),
-            F.col("_nv").alias("cnorm"),
-            F.element_at(ordered, 1)["cent_id"].alias("cell"),
+            quantized_norm_sq(F.col(vec_col)).alias("cnorm"),
+            "cell",
         )
         .write.mode("overwrite")
         .partitionBy("cell")
@@ -719,37 +718,21 @@ def query_ivf_index(
     nprobe: int = 4,
 ) -> DataFrame:
     """Top-k cosine neighbors from a materialized IVF index: probe cells
-    are chosen driver-side from the (small) centroid list, so the cell
-    predicate reaches the scan as a PARTITION FILTER — only
-    nprobe/n_centroids of the index files are read. The scored candidate
-    set is |queries|·(probed cells), never the corpus."""
-    import math  # noqa: PLC0415
-
-    qcents = [
-        (cid, [int(math.floor(float(x) * QUANT)) for x in vec])
-        for cid, vec in centroids
-    ]
-
-    def probe_cells(qvec: list[float]) -> list[int]:
-        qq = [int(math.floor(float(x) * QUANT)) for x in qvec]
-        qn = sum(x * x for x in qq)
-        scored = []
-        for cid, cq in qcents:
-            dot = sum(a * b for a, b in zip(qq, cq))
-            cn = sum(x * x for x in cq)
-            scored.append((-(dot / math.sqrt(qn * cn)) if qn and cn else 0.0, cid))
-        return [cid for _, cid in sorted(scored)[:nprobe]]
-
-    rows = [
-        (int(qid), qvec, probe_cells(qvec))
-        for qid, qvec in query_vecs
-    ]
+    are chosen driver-side from the (small) centroid list by the exact
+    kernel (a zero-norm query scores 0.0 everywhere and so probes the
+    lowest ids), so the cell predicate reaches the scan as a PARTITION
+    FILTER — only nprobe/n_centroids of the index files are read. The
+    scored candidate set is |queries|·(probed cells), never the
+    corpus."""
+    cells = _probe_cells(
+        _centroid_kernel(centroids), [v for _, v in query_vecs], nprobe
+    )
     qdf = spark.createDataFrame(
-        [(qid, qvec, c) for qid, qvec, cells in rows for c in cells],
+        [(int(qid), qvec, c) for (qid, qvec), cs in zip(query_vecs, cells) for c in cs],
         "query_id long, qvec array<float>, cell int",
     )
     index = spark.read.parquet(path)
-    cells_needed = sorted({c for _, _, cs in rows for c in cs})
+    cells_needed = sorted({c for cs in cells for c in cs})
     cands = (
         index.filter(F.col("cell").isin(cells_needed))
         .join(F.broadcast(qdf), "cell")
@@ -1010,13 +993,13 @@ def embedding_near_duplicates(
 
 
 #: Centroid count at which :func:`_seed_cell_assignment` switches from
-#: exact one-level (every vector scored against every centroid, N·C·d)
-#: to the two-level coarse-then-fine search (N·~2√C·d). Below the
-#: threshold the exact scan is both cheap and the historically pinned
-#: semantics (every catalog entry pins C=16; the auto rule stays under
-#: 256 up to N=65 536); above it the assignment term is what made
-#: the cell-confined operators O(N^1.5) (VERDICT r8/r9 — knn_pagerank
-#: d1000 slope 1.07), and two-level is the ordered fix.
+#: the exact one-level kernel (every vector scored against every
+#: centroid, N·C·d) to the two-level coarse-then-fine search
+#: (N·~2√C·d). Every catalog entry pins C=16 and the auto rule stays
+#: under 256 up to N=65 536, so those outputs are exact; above it the
+#: assignment term is what made the cell-confined operators O(N^1.5)
+#: (VERDICT r8/r9 — knn_pagerank d1000 slope 1.07), and two-level is
+#: the ordered fix.
 _TWO_LEVEL_MIN_CENTROIDS = 256
 
 
@@ -1025,317 +1008,45 @@ def _seed_cell_assignment(
     n_centroids: int,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    vectorized: bool | None = None,
-    two_level: bool | None = None,
 ) -> DataFrame:
-    """(id, vec, cell): nearest-seed-centroid assignment, cross-engine
-    exact — the same quantized arithmetic :func:`kmeans_update_stats`
-    uses (int64 component quantization, exact integer dot/norm, ONE
-    double division per score, ties to the lowest centroid id), kept as
-    a reusable frame so set-shaped consumers (semantic dedup, cell
-    histograms) can share it. Pure map-side: the centroids travel as a
-    single broadcast row (expression path) or inside the Arrow UDF
-    closure (vectorized path); the corpus never shuffles.
+    """(id, vec, cell): nearest-seed-centroid assignment of the
+    nonzero-norm corpus, kept as a reusable frame so set-shaped
+    consumers (semantic dedup, kNN cells, cell histograms) can share
+    it. One map-side Arrow pass (:func:`_assign_cells`) with the
+    centroids in the task closure; the corpus never shuffles.
 
-    Two physically different, bitwise-identical paths (pinned by
-    test_seed_cell_assignment_vectorized_identical):
-
-    - ``vectorized=False`` — the Catalyst higher-order-function
-      expression (array_sort over per-centroid aggregate dots). HOFs
-      run INTERPRETED (no whole-stage codegen), so per-row cost is
-      ~n_centroids·dims interpreted arithmetic evals: right for the
-      catalog-pinned n_centroids=16, and measured pathological at the
-      √N scale rule (jstack: one task 10+ CPU-minutes inside
-      ArraySort.eval at n_centroids=707 over 500 k rows — the r7 slope
-      sweep's straggler).
-    - ``vectorized=True`` — one Arrow ``mapInPandas`` pass whose batch
-      work is an int64 numpy matmul (Qv @ Qc.T) + IEEE-identical score
-      division; ~n_centroids·dims·rows FLOP-rate work instead of
-      interpreted-eval rate. Exactness holds because every step mirrors
-      the expression path bit-for-bit: float32→float64 widening is
-      exact, floor(x·1e6) int64 quantization identical, int64 dots
-      exact (no overflow at |q| ≤ ~1e6·dims), and the final
-      dot/sqrt(nv·cnormsq) is the same correctly-rounded IEEE double
-      op sequence; argmax-first-index = lowest-centroid-id tie-break.
-      Requires uniform vector length == centroid dims (the corpus
-      contract; the expression path's zip_with-null semantics for
-      ragged rows are not replicated).
-
-    Default (``vectorized=None``): auto — the UDF path at
-    n_centroids ≥ 64, where the interpreted-eval term dominates.
-
-    ``two_level`` (default auto: on at n_centroids ≥
-    :data:`_TWO_LEVEL_MIN_CENTROIDS`) switches the vectorized path to
-    the coarse-then-fine search of
-    :func:`_seed_cell_assignment_two_level` — per-vector cost ~2√C dots
-    instead of C, the fix for the O(N^1.5) assignment law the r8/r9
-    verdicts measured on the √N-auto cell operators. Two-level is a
-    bounded APPROXIMATION (a vector lands on the nearest fine centroid
-    within its coarse group, which for borderline vectors may differ
-    from the global nearest); every explicit catalog pin sits at C=16,
-    far below the threshold, so pinned outputs are byte-identical."""
-    import math  # noqa: PLC0415
-
+    The arithmetic is the exact kernel (:func:`_centroid_kernel` states
+    the contract: int64 quantization, exact integer dot/norm, one IEEE
+    division per score, ties to the lowest centroid id), so cells
+    hash-equal the DuckDB ``row_number() … rn = 1`` twin. At
+    ``n_centroids`` ≥ :data:`_TWO_LEVEL_MIN_CENTROIDS` the search is the
+    coarse-then-fine :func:`_two_level_kernel` instead — ~2√C dots per
+    vector, a bounded approximation (see its contract). Input vectors
+    must all have the centroids' length; a ragged row raises."""
     embeddings = nonzero_norm(embeddings, vec_col)
-    if vectorized is None:
-        vectorized = n_centroids >= 64
-    if two_level is None:
-        two_level = n_centroids >= _TWO_LEVEL_MIN_CENTROIDS
-    if two_level and vectorized:
+    if n_centroids >= _TWO_LEVEL_MIN_CENTROIDS:
         return _seed_cell_assignment_two_level(
             embeddings, n_centroids, id_col, vec_col
         )
-    if vectorized:
-        return _seed_cell_assignment_vectorized(
-            embeddings, n_centroids, id_col, vec_col
-        )
-    cent_rows = sorted(
-        embeddings.filter(F.col(id_col) < n_centroids)
-        .select(id_col, vec_col)
-        .collect(),
-        key=lambda r: r[0],
-    )
-    if not cent_rows:
-        # path identity (ADVICE r7 #2): the vectorized path raises on a
-        # seedless corpus; silently emitting NULL cells here would make
-        # the auto-switch change the FAILURE MODE, not just the plan
-        raise ValueError(
-            f"no nonzero-norm centroid seeds with {id_col} < {n_centroids}"
-        )
-    spark = embeddings.sparkSession
-    cents_row = spark.createDataFrame(
-        [
-            (
-                [
-                    (int(r[0]), qc, sum(q * q for q in qc))
-                    for r in cent_rows
-                    for qc in [[int(math.floor(float(x) * QUANT)) for x in r[1]]]
-                ],
-            )
-        ],
-        "_cents array<struct<cent_id:bigint,qcvec:array<bigint>,cnormsq:bigint>>",
-    )
-    # r12: the corpus pass is ~n_centroids·dims interpreted-HOF evals per
-    # row on whatever parallelism the scan gives — which for the
-    # unsplittable test files is ONE task. Fan out (scale-adaptive
-    # no-op on real clusters) so the per-row argmin spreads across the
-    # cores; the centroid collect above pushes its id-filter into the
-    # raw scan either way.
-    embeddings = fan_out_scan(embeddings, id_col)
-    staged = embeddings.select(
-        id_col,
-        vec_col,
-        F.transform(F.col(vec_col), _q).alias("_qv"),
-    ).withColumn(
-        "_nv",
-        F.aggregate(
-            F.transform(F.col("_qv"), lambda x: x * x),
-            F.lit(0).cast("long"),
-            lambda acc, v: acc + v,
-        ),
-    )
-
-    def cent_cos(c: Column) -> Column:
-        return F.aggregate(
-            F.zip_with(F.col("_qv"), c["qcvec"], lambda x, y: x * y),
-            F.lit(0).cast("long"),
-            lambda acc, v: acc + v,
-        ).cast("double") / F.sqrt(
-            F.col("_nv").cast("double") * c["cnormsq"].cast("double")
-        )
-
-    ordered = F.array_sort(
-        F.transform(
-            F.col("_cents"),
-            lambda c: F.named_struct(
-                F.lit("nscore"), -cent_cos(c), F.lit("cent_id"), c["cent_id"]
-            ),
-        )
-    )
-    return staged.crossJoin(F.broadcast(cents_row)).select(
-        id_col,
-        vec_col,
-        F.element_at(ordered, 1)["cent_id"].cast("int").alias("cell"),
-    )
+    return _seed_cell_assignment_one_level(embeddings, n_centroids, id_col, vec_col)
 
 
-def _seed_cell_assignment_vectorized(
-    embeddings: DataFrame,
-    n_centroids: int,
-    id_col: str,
-    vec_col: str,
+def _seed_cell_assignment_one_level(
+    embeddings: DataFrame, n_centroids: int, id_col: str, vec_col: str
 ) -> DataFrame:
-    """Arrow/numpy twin of the :func:`_seed_cell_assignment` expression
-    path (see its docstring for the bit-identity argument). ``embeddings``
-    must already be nonzero-norm filtered. The closure is self-contained
-    (numpy only) so cloudpickle ships it by value — no package import on
-    the Python workers."""
-    import math  # noqa: PLC0415
-
-    import numpy as np  # noqa: PLC0415
-
-    cent_rows = sorted(
-        embeddings.filter(F.col(id_col) < n_centroids)
-        .select(id_col, vec_col)
-        .collect(),
-        key=lambda r: r[0],
-    )
-    if not cent_rows:
-        raise ValueError(
-            f"no nonzero-norm centroid seeds with {id_col} < {n_centroids}"
-        )
-    cent_ids = np.array([int(r[0]) for r in cent_rows], dtype=np.int64)
-    qc = np.array(
-        [[int(math.floor(float(x) * QUANT)) for x in r[1]] for r in cent_rows],
-        dtype=np.int64,
-    )
-    cnormsq = (qc * qc).sum(axis=1).astype(np.float64)
-    dims, quant = qc.shape[1], QUANT
-
-    out_fields = embeddings.select(id_col, vec_col).schema.fields
-    out_schema = T.StructType(
-        [*out_fields, T.StructField("cell", T.IntegerType(), False)]
-    )
-
-    def assign_batches(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            v = np.stack(pdf[vec_col].to_numpy())
-            if v.shape[1] != dims:
-                raise ValueError(
-                    f"vector length {v.shape[1]} != centroid dims {dims}"
-                )
-            # floor(double(x)·QUANT): float32→float64 widening is exact,
-            # so this is bit-identical to the expression path's _q
-            qv = np.floor(v.astype(np.float64) * quant).astype(np.int64)
-            nv = (qv * qv).sum(axis=1).astype(np.float64)
-            dots = qv @ qc.T  # exact int64
-            scores = dots.astype(np.float64) / np.sqrt(nv[:, None] * cnormsq)
-            # first max index over ascending cent_id = lowest-id tie-break
-            pdf = pdf[[id_col, vec_col]].copy()
-            pdf["cell"] = cent_ids[scores.argmax(axis=1)].astype(np.int32)
-            yield pdf
-
-    # r12: one scan partition = one Python worker for the whole batch
-    # matmul; fan out first (scale-adaptive no-op on real clusters)
-    return fan_out_scan(embeddings.select(id_col, vec_col), id_col).mapInPandas(
-        assign_batches, schema=out_schema
-    )
+    """Exact one-level :func:`_seed_cell_assignment` at any C;
+    ``embeddings`` must already be nonzero-norm filtered."""
+    cents = _seed_rows(embeddings, n_centroids, id_col, vec_col)
+    return _assign_cells(embeddings, _centroid_kernel(cents), id_col, vec_col)
 
 
 def _seed_cell_assignment_two_level(
-    embeddings: DataFrame,
-    n_centroids: int,
-    id_col: str,
-    vec_col: str,
+    embeddings: DataFrame, n_centroids: int, id_col: str, vec_col: str
 ) -> DataFrame:
-    """Coarse-then-fine nearest-centroid assignment — the sub-O(N·C)
-    search the r8/r9 verdicts ordered for the cell-confined operators
-    (the same coarse/fine decomposition :func:`ivfpq_index` owns on the
-    query side, applied to the corpus-assignment side).
-
-    Search structure, all in the engine's quantized arithmetic:
-
-    - FINE centroids: the usual deterministic seeds (nonzero-norm rows
-      with ``id < n_centroids``), C of them.
-    - COARSE centroids: the first G = max(16, isqrt(C)) fine centroids.
-      Driver-side numpy groups every fine centroid under its nearest
-      coarse one (C·G·d flops on C rows — trivia next to the corpus
-      pass); each coarse centroid is additionally a member of its own
-      group, so no group is ever empty.
-    - Per corpus vector (one Arrow ``mapInPandas`` pass, same batch
-      matmul kernel as the one-level path): nearest coarse centroid
-      (G dots), then nearest fine centroid *within that coarse group*
-      (~C/G dots) — ~2√C dots/vector instead of C, which at the √N auto
-      rule turns the N·√N·d assignment term into N·N^¼·d.
-
-    APPROXIMATION CONTRACT: the result is the nearest fine centroid of
-    the vector's coarse group — for vectors near a coarse boundary this
-    may differ from the global nearest fine centroid. The cell operators
-    (semantic_dedup / knn_graph / cell histograms) treat cells as
-    heuristic locality partitions, so a boundary vector moving to an
-    adjacent cell changes *which* near-pairs are visible, never the
-    correctness of emitted pairs — the identical trade the SemDeDup /
-    IVF literature already makes at the cluster level. Everything below
-    the argmax is still exact int64/IEEE-double and deterministic
-    (argmax-first-index = lowest-id tie-break at BOTH levels), so
-    outputs remain engine-independent and oracle-hashable.
+    """Two-level :func:`_seed_cell_assignment` at any C;
     ``embeddings`` must already be nonzero-norm filtered."""
-    import math  # noqa: PLC0415
-
-    import numpy as np  # noqa: PLC0415
-
-    cent_rows = sorted(
-        embeddings.filter(F.col(id_col) < n_centroids)
-        .select(id_col, vec_col)
-        .collect(),
-        key=lambda r: r[0],
-    )
-    if not cent_rows:
-        raise ValueError(
-            f"no nonzero-norm centroid seeds with {id_col} < {n_centroids}"
-        )
-    cent_ids = np.array([int(r[0]) for r in cent_rows], dtype=np.int64)
-    qc = np.array(
-        [[int(math.floor(float(x) * QUANT)) for x in r[1]] for r in cent_rows],
-        dtype=np.int64,
-    )
-    cnormsq = (qc * qc).sum(axis=1).astype(np.float64)
-    n_fine = len(cent_rows)
-    n_coarse = min(n_fine, max(16, math.isqrt(n_fine)))
-    qg = qc[:n_coarse]
-    gnormsq = cnormsq[:n_coarse]
-    # fine→coarse grouping, driver-side: same score formula and
-    # lowest-id (= first-index) tie-break as every assignment path
-    fine_scores = (qc @ qg.T).astype(np.float64) / np.sqrt(
-        cnormsq[:, None] * gnormsq[None, :]
-    )
-    fine_group = fine_scores.argmax(axis=1)
-    fine_group[:n_coarse] = np.arange(n_coarse)  # own-group membership
-    group_idx = [
-        np.nonzero(fine_group == g)[0] for g in range(n_coarse)
-    ]  # ascending fine index = ascending cent_id ⇒ argmax ties break low
-    group_qc = [qc[ix] for ix in group_idx]
-    group_norm = [cnormsq[ix] for ix in group_idx]
-    group_ids = [cent_ids[ix] for ix in group_idx]
-    dims, quant = qc.shape[1], QUANT
-
-    out_fields = embeddings.select(id_col, vec_col).schema.fields
-    out_schema = T.StructType(
-        [*out_fields, T.StructField("cell", T.IntegerType(), False)]
-    )
-
-    def assign_batches(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            v = np.stack(pdf[vec_col].to_numpy())
-            if v.shape[1] != dims:
-                raise ValueError(
-                    f"vector length {v.shape[1]} != centroid dims {dims}"
-                )
-            qv = np.floor(v.astype(np.float64) * quant).astype(np.int64)
-            nv = (qv * qv).sum(axis=1).astype(np.float64)
-            coarse = (
-                (qv @ qg.T).astype(np.float64)
-                / np.sqrt(nv[:, None] * gnormsq[None, :])
-            ).argmax(axis=1)
-            cell = np.empty(len(pdf), dtype=np.int64)
-            for g in np.unique(coarse):
-                rows = np.nonzero(coarse == g)[0]
-                scores = (qv[rows] @ group_qc[g].T).astype(np.float64) / np.sqrt(
-                    nv[rows, None] * group_norm[g][None, :]
-                )
-                cell[rows] = group_ids[g][scores.argmax(axis=1)]
-            pdf = pdf[[id_col, vec_col]].copy()
-            pdf["cell"] = cell.astype(np.int32)
-            yield pdf
-
-    # r12: same fan-out rationale as the one-level vectorized path
-    return fan_out_scan(embeddings.select(id_col, vec_col), id_col).mapInPandas(
-        assign_batches, schema=out_schema
-    )
+    cents = _seed_rows(embeddings, n_centroids, id_col, vec_col)
+    return _assign_cells(embeddings, _two_level_kernel(cents), id_col, vec_col)
 
 
 #: Bounded-cell divisor for the scale regime of the auto-C rule:
@@ -1428,8 +1139,8 @@ def semantic_dedup(
     the surviving pairs with :func:`~..operators.dedup.neardup_clusters`
     instead). Output: (vec_id, cell, kept) for EVERY input vector.
 
-    Scale shape: assignment is map-side against one broadcast centroid
-    row (:func:`_seed_cell_assignment`); scoring reuses the blocked
+    Scale shape: assignment is one map-side Arrow pass
+    (:func:`_seed_cell_assignment`); scoring reuses the blocked
     int64 matmul of :func:`allpairs_cosine_lsh` keyed on the cell — a
     cell larger than ``max_cell_size`` is sub-split into hash blocks and
     every block pair becomes its own O(cap²)-bounded task, so a
@@ -1455,8 +1166,7 @@ def semantic_dedup(
     count over a persisted input — the scale behavior without reading
     this docstring; pass an explicit value to pin cells (the catalog
     pins 16). Above C=256 assignment runs the two-level
-    coarse-then-fine search (see
-    :func:`_seed_cell_assignment_two_level` for the
+    coarse-then-fine search (see :func:`_two_level_kernel` for the
     bounded-approximation contract)."""
     embeddings, n_centroids = _resolve_n_centroids(
         embeddings, n_centroids, approx_rows
@@ -1546,8 +1256,7 @@ def knn_graph(
     :func:`ann_recall_at_k`-style evaluation to measure it).
 
     Choosing ``n_centroids`` at scale: two-level assignment costs
-    ~N·2√C·d (numpy FLOP-rate — the interpreted HOF expression was the
-    r7 slope sweep's 10-CPU-minute straggler at C=707) and in-cell
+    ~N·2√C·d (numpy FLOP-rate) and in-cell
     scoring ~N²·d/C. C ≈ √N balances them at O(N^1.5·d) total and wins
     while linear scan/shuffle terms dominate; C = N/512 (bounded
     cells) makes the pair term strictly linear and wins above the
@@ -1555,8 +1264,8 @@ def knn_graph(
     §6h). The auto default (:func:`_auto_n_centroids`) picks
     ``max(16, √N, N/512)``, switching where the formulas cross.
 
-    Scale shape: map-side assignment (one broadcast centroid row);
-    within-cell pairs via the blocked int64 matmul with the hot-cell
+    Scale shape: map-side assignment (one Arrow pass); within-cell
+    pairs via the blocked int64 matmul with the hot-cell
     guard (:func:`_cell_pairs`); each undirected pair is emitted once
     and mirrored by a union (no second scoring pass); the final rank is
     a per-source window over in-cell candidates — partitioned by
@@ -1572,7 +1281,7 @@ def knn_graph(
     free) or one count over a persisted input — the scale behavior is
     the default; pass an explicit value to pin cells (the catalog pins
     16). Above C=256 assignment runs the two-level coarse-then-fine
-    search (see :func:`_seed_cell_assignment_two_level` — per-vector
+    search (see :func:`_two_level_kernel` — per-vector
     ~2√C dots, the fix that makes the bounded-cell regime affordable:
     one-level assignment at C=N/512 would itself be quadratic)."""
     from pyspark.sql import Window  # noqa: PLC0415
@@ -1695,10 +1404,7 @@ def pq_seed_codebook(
     code=id oracle either way."""
     import math  # noqa: PLC0415
 
-    seed_rows = sorted(
-        embeddings.filter(F.col(id_col) < k_codes).select(id_col, vec_col).collect(),
-        key=lambda r: r[0],
-    )
+    seed_rows = _seed_rows(embeddings, k_codes, id_col, vec_col)
     if len(seed_rows) != k_codes and not allow_missing:
         raise ValueError(
             f"PQ seeding expects ids 0..{k_codes - 1} to exist; "
@@ -1900,6 +1606,17 @@ def _pq_firsts(sub: int, n_words: int) -> Column:
     return F.filter(F.array_sort(scored), lambda e, i: i % n_words == 0)
 
 
+def _adc_luts(codebook: list[list[list[int]]], targets) -> list:
+    """ADC lookup tables of quantized target rows (an int64 matrix):
+    ``luts[i][m][j]`` is the exact squared L2 between subspace m of
+    target i and codeword j of ``codebook`` ``[m][code][dim]``."""
+    import numpy as np  # noqa: PLC0415
+
+    cb = np.asarray(codebook, dtype=np.int64)
+    t = targets.reshape(len(targets), cb.shape[0], 1, cb.shape[2])
+    return ((t - cb[None]) ** 2).sum(axis=3).tolist()
+
+
 def _fused_adc_shortlist(
     embeddings: DataFrame,
     codebook: list[list[list[int]]],
@@ -1907,15 +1624,14 @@ def _fused_adc_shortlist(
     shortlist: int,
     id_col: str,
     vec_col: str,
-    qcents: list[tuple[int, list[int]]] | None = None,
+    kernel=None,
 ) -> DataFrame:
     """ONE Arrow pass over the corpus for the PQ query entries (r13,
     guide §4.2 "hand whole batches to vectorized native libraries" and
     the VERDICT r12 directive "fewer Python crossings per row"): per
     batch, quantize, (residual mode: assign the nearest seed cell with
-    the SAME int64-matmul + IEEE-division kernel the pinned
-    :func:`_seed_cell_assignment_vectorized` uses, then subtract that
-    cell's centroid), PQ-encode against the broadcast codebook, gather
+    the exact :func:`_centroid_kernel`, then subtract that cell's
+    centroid), PQ-encode against the broadcast codebook, gather
     each query's ADC distance from its LUT, and emit the batch's
     top-``shortlist`` (query_id, neighbor_id, adist) rows.
 
@@ -1927,10 +1643,8 @@ def _fused_adc_shortlist(
     barrier. Exactness is preserved end-to-end: quantization is the
     identical floor(float64(x)·1e6) (float32→float64 widening exact),
     encode/ADC arithmetic is exact int64 (max |component| ≤ ~4e6,
-    squared-sums ≤ ~1.3e14 ≪ 2^63), the assignment score division is
-    the same correctly-rounded IEEE sequence as the expression path,
-    and every argmin/argmax tie breaks to the lowest id exactly like
-    the (qdist, code) / (-score, cent_id) sorts it replaces.
+    squared-sums ≤ ~1.3e14 ≪ 2^63), and every argmin tie breaks to the
+    lowest code exactly like the (qdist, code) sort it replaces.
 
     Per-batch partial top-k is the §2.3 "aggregate before you shuffle"
     move: top-k under the strict total order (adist, neighbor_id) is
@@ -1941,7 +1655,7 @@ def _fused_adc_shortlist(
     frame-based scan.
 
     ``luts``: ``(query_id, lut[n_sub][n_words])`` triples-less plain
-    mode, or ``(query_id, probed_cell, lut)`` residual mode (``qcents``
+    mode, or ``(query_id, probed_cell, lut)`` residual mode (``kernel``
     set) — a query scores a corpus row iff the row's assigned cell is
     one the query probes. The closure is self-contained (numpy/pandas
     only), safe to pickle by value into sessions that can't import
@@ -1951,11 +1665,9 @@ def _fused_adc_shortlist(
     n_sub = len(codebook)
     sub = len(codebook[0][0])
     cb = np.array(codebook, dtype=np.int64)  # [n_sub, n_words, sub]
-    residual = qcents is not None
+    residual = kernel is not None
     if residual:
-        cent_ids = np.array([c for c, _ in qcents], dtype=np.int64)
-        qc = np.array([v for _, v in qcents], dtype=np.int64)
-        cnormsq = (qc * qc).sum(axis=1).astype(np.float64)
+        cent_ids, qc, _, nearest = kernel
         by_cell = {}
         for cell in sorted({c for _, c, _ in luts}):
             by_cell[int(cell)] = (
@@ -2002,13 +1714,9 @@ def _fused_adc_shortlist(
             ).astype(_np.int64)
             oq, on, od = [], [], []
             if residual:
-                nv = (qv * qv).sum(axis=1).astype(_np.float64)
-                scores = (qv @ qc.T).astype(_np.float64) / _np.sqrt(
-                    nv[:, None] * cnormsq[None, :]
-                )
-                nearest = scores.argmax(axis=1)  # first max = lowest cent_id
-                codes = encode(qv - qc[nearest])
-                row_cells = cent_ids[nearest]
+                best = nearest(qv)
+                codes = encode(qv - qc[best])
+                row_cells = cent_ids[best]
                 for cell, (q_arr, lt) in by_cell.items():
                     mask = row_cells == cell
                     if mask.any():
@@ -2367,8 +2075,8 @@ def ivfpq_index(
     its columns feed nested ADC lambdas (SCALE.md §6c — staged arrays
     under nested lambdas need a materialization point).
 
-    Build cost: the assignment and encode passes each stream the corpus
-    once against one broadcast row; the only shuffle is the
+    Build cost: the assignment (kernel pass) and encode (one broadcast
+    codebook row) each stream the corpus once; the only shuffle is the
     codes-groupBy inherited from :func:`pq_encode`. At 100 TB write it
     ``partitionBy("cell")`` like the IVF index and the index is
     ~n_sub bytes/vector on disk."""
@@ -2393,8 +2101,8 @@ def cosine_topk_ivfpq(
     index: DataFrame | None = None,
 ) -> DataFrame:
     """The full production ANN query (faiss IndexIVFPQ): per query,
-    (1) the ``nprobe`` nearest cells are chosen against the broadcast
-    centroid row — the scan then touches only nprobe/n_centroids of
+    (1) the ``nprobe`` nearest cells are chosen on the Spark driver by the
+    exact kernel — the scan then touches only nprobe/n_centroids of
     the index; (2) ADC over the PQ codes of the probed cells
     shortlists candidates reading ~n_sub bytes/vector; (3) only the
     shortlist's full vectors are fetched and exactly re-ranked by
@@ -2404,52 +2112,25 @@ def cosine_topk_ivfpq(
     Deterministic end-to-end (quantized-integer cell choice, integer
     ADC, quantized-cosine rerank, id tie-breaks); recall vs the exact
     scan is pinned in tests/test_similarity.py."""
-    import math  # noqa: PLC0415
-
     embeddings = nonzero_norm(embeddings, vec_col)
     spark = embeddings.sparkSession
     if index is None:
         index = ivfpq_index(
             embeddings, n_centroids, n_sub, k_codes, id_col, vec_col
         )
-
-    cent_rows = sorted(
-        embeddings.filter(F.col(id_col) < n_centroids)
-        .select(id_col, vec_col)
-        .collect(),
-        key=lambda r: r[0],
+    ids, _, quantize, nearest = _centroid_kernel(
+        _seed_rows(embeddings, n_centroids, id_col, vec_col)
     )
-    qcents = [
-        (int(r[0]), [int(math.floor(float(x) * QUANT)) for x in r[1]])
-        for r in cent_rows
-    ]
-    cbq = (
-        pq_seed_codebook(embeddings, n_sub, k_codes, id_col, vec_col)
-    )
-    sub = len(cbq[0][0])
-
+    cbq = pq_seed_codebook(embeddings, n_sub, k_codes, id_col, vec_col)
     q_rows = embeddings.filter(query_filter).select(id_col, vec_col).collect()
     luts = []
-    for qr in q_rows:
-        qq = [int(math.floor(float(x) * QUANT)) for x in qr[1]]
-        qn = sum(x * x for x in qq)
-        scored = []
-        for cid, cq in qcents:
-            dot = sum(a * b for a, b in zip(qq, cq))
-            cn = sum(x * x for x in cq)
-            scored.append((-(dot / math.sqrt(qn * cn)) if cn else 0.0, cid))
-        probes = [cid for _, cid in sorted(scored)[:nprobe]]
-        lut = [
-            [
-                sum(
-                    (qq[m * sub + d] - cw[d]) * (qq[m * sub + d] - cw[d])
-                    for d in range(sub)
-                )
-                for cw in cbq[m]
-            ]
-            for m in range(n_sub)
+    if q_rows:
+        qv = quantize([r[1] for r in q_rows])
+        probes = ids[nearest(qv, nprobe)].tolist()
+        luts = [
+            (int(r[0]), p, lut)
+            for r, p, lut in zip(q_rows, probes, _adc_luts(cbq, qv))
         ]
-        luts.append((int(qr[0]), probes, lut))
     lut_row = spark.createDataFrame(
         [(luts,)],
         "_lut array<struct<query_id:bigint,probes:array<int>,l:array<array<bigint>>>>",
@@ -2547,7 +2228,6 @@ def opq_permutation(
     embeddings: DataFrame,
     n_sub: int = 8,
     vec_col: str = "embedding",
-    id_col: str = "vec_id",
 ) -> list[int]:
     """Variance-balancing dimension permutation: ``perm[new_pos] =
     old_dim``. Per-dim variance is computed EXACTLY — quantized int64
@@ -2616,9 +2296,7 @@ def cosine_topk_pq_opq(
     query cost. The permutation itself is 64 ints; everything else is
     the audited PQ plan."""
     if perm is None:
-        perm = opq_permutation(
-            nonzero_norm(embeddings, vec_col), n_sub, vec_col, id_col
-        )
+        perm = opq_permutation(nonzero_norm(embeddings, vec_col), n_sub, vec_col)
     rotated = apply_permutation(embeddings, perm, vec_col)
     return cosine_topk_pq_rerank(
         rotated, query_filter, k, shortlist, n_sub, k_codes, id_col, vec_col
@@ -2637,41 +2315,41 @@ def cosine_topk_pq_opq(
 # ---------------------------------------------------------------------------
 
 
-def _qvec(vec) -> list[int]:
-    import math  # noqa: PLC0415
-
-    return [int(math.floor(float(x) * QUANT)) for x in vec]
-
-
-def _collect_centroids(
-    embeddings: DataFrame, n_centroids: int, id_col: str, vec_col: str
-) -> list[tuple[int, list[int]]]:
-    """Quantized seed centroids (id < n_centroids) sorted by id — the
-    deterministic seeding rule shared by the IVF/k-means/PQ tiers."""
-    rows = sorted(
-        embeddings.filter(F.col(id_col) < n_centroids)
-        .select(id_col, vec_col)
-        .collect(),
-        key=lambda r: r[0],
-    )
-    return [(int(r[0]), _qvec(r[1])) for r in rows]
-
-
-def _nearest_cell(qq: list[int], qcents: list[tuple[int, list[int]]]) -> int:
-    """Driver-side twin of _seed_cell_assignment's per-row argmax
-    (exact integer dot/normsq, ONE double division, ties to lowest
-    centroid id)."""
-    import math  # noqa: PLC0415
-
-    qn = sum(x * x for x in qq)
-    best = None
-    for cid, cq in qcents:
-        cn = sum(x * x for x in cq)
-        score = (sum(a * b for a, b in zip(qq, cq)) / math.sqrt(qn * cn)) if cn else 0.0
-        key = (-score, cid)
-        if best is None or key < best[0]:
-            best = (key, cid)
-    return best[1]
+def _residual_setup(
+    embeddings: DataFrame,
+    n_centroids: int,
+    n_sub: int,
+    k_codes: int,
+    codebook: list[list[list[int]]] | None,
+    id_col: str,
+    vec_col: str,
+):
+    """``(kernel, codebook)`` of the residual tier from ONE seed collect
+    (r13 folded three centroid collects and a seed collect into it):
+    ids < ``n_centroids`` are the centroids and, when ``codebook`` is
+    None, the ids in ``[n_centroids, n_centroids + k_codes)`` seed it
+    with their residuals against their own nearest centroid, sub-sliced
+    per subspace. A seed id lost to the nonzero-norm gate shrinks the
+    codebook (codebook positions stay monotone in seed id); none left
+    gives ``(None, [])``. ``embeddings`` must already be nonzero-norm
+    filtered."""
+    hi = n_centroids + (k_codes if codebook is None else 0)
+    rows = _seed_rows(embeddings, hi, id_col, vec_col)
+    seeds = [r[1] for r in rows if r[0] >= n_centroids]
+    if codebook is None and not seeds:
+        return None, []
+    kernel = _centroid_kernel([r for r in rows if r[0] < n_centroids])
+    if codebook is None:
+        _, qc, quantize, nearest = kernel
+        qs = quantize(seeds)
+        if qs.shape[1] % n_sub:
+            raise ValueError(f"dims={qs.shape[1]} not divisible by n_sub={n_sub}")
+        sub = qs.shape[1] // n_sub
+        residuals = (qs - qc[nearest(qs)]).tolist()
+        codebook = [
+            [rv[m * sub : (m + 1) * sub] for rv in residuals] for m in range(n_sub)
+        ]
+    return kernel, codebook
 
 
 def pq_residual_seed_codebook(
@@ -2706,81 +2384,16 @@ def pq_residual_seed_codebook(
     degenerate form even matched its oracle, which is why a hash check
     alone couldn't catch it)."""
     embeddings = nonzero_norm(embeddings, vec_col)
-    qcents = _collect_centroids(embeddings, n_centroids, id_col, vec_col)
-    cent_by_id = dict(qcents)
-    lo, hi = n_centroids, n_centroids + k_codes
-    seed_rows = sorted(
-        embeddings.filter((F.col(id_col) >= lo) & (F.col(id_col) < hi))
-        .select(id_col, vec_col)
-        .collect(),
-        key=lambda r: r[0],
-    )
-    if len(seed_rows) != k_codes and not allow_missing:
+    codebook = _residual_setup(
+        embeddings, n_centroids, n_sub, k_codes, None, id_col, vec_col
+    )[1]
+    found = len(codebook[0]) if codebook else 0
+    if found != k_codes and not allow_missing:
         raise ValueError(
-            f"residual PQ seeding expects ids {lo}..{hi - 1}; found {len(seed_rows)}"
+            f"residual PQ seeding expects ids {n_centroids}.."
+            f"{n_centroids + k_codes - 1}; found {found}"
         )
-    return _residual_codebook_from_rows(qcents, seed_rows, n_sub)
-
-
-def _residual_codebook_from_rows(
-    qcents: list[tuple[int, list[int]]],
-    seed_rows,
-    n_sub: int,
-) -> list[list[list[int]]]:
-    """Driver-side core of :func:`pq_residual_seed_codebook`, split out
-    (r13) so callers that already hold the collected seed rows (the
-    fused query path folds centroids + seeds into ONE collect) build
-    the identical codebook without a second scan."""
-    if not seed_rows:
-        return []
-    cent_by_id = dict(qcents)
-    dims = len(seed_rows[0][1])
-    if dims % n_sub:
-        raise ValueError(f"dims={dims} not divisible by n_sub={n_sub}")
-    sub = dims // n_sub
-    residuals = []
-    for r in seed_rows:
-        qq = _qvec(r[1])
-        cq = cent_by_id[_nearest_cell(qq, qcents)]
-        residuals.append([a - b for a, b in zip(qq, cq)])
-    return [
-        [rv[m * sub : (m + 1) * sub] for rv in residuals] for m in range(n_sub)
-    ]
-
-
-def _residual_staged(
-    embeddings: DataFrame,
-    n_centroids: int,
-    qcents: list[tuple[int, list[int]]],
-    id_col: str,
-    vec_col: str,
-) -> DataFrame:
-    """(id, cell, _qv): per-vector quantized RESIDUAL against its
-    assigned cell's centroid — the shared staging frame of the residual
-    index build and residual codebook training. Pure map-side (the
-    centroids travel as one broadcast row; the per-row centroid pick is
-    a 16-element array filter)."""
-    spark = embeddings.sparkSession
-    cents_row = spark.createDataFrame(
-        [([(cid, cq) for cid, cq in qcents],)],
-        "_cents array<struct<cent_id:bigint,qcvec:array<bigint>>>",
-    )
-    assign = _seed_cell_assignment(embeddings, n_centroids, id_col, vec_col)
-    return assign.crossJoin(F.broadcast(cents_row)).select(
-        id_col,
-        "cell",
-        F.zip_with(
-            F.transform(F.col(vec_col), _q),
-            F.element_at(
-                F.filter(
-                    F.col("_cents"),
-                    lambda c: c["cent_id"] == F.col("cell").cast("bigint"),
-                ),
-                1,
-            )["qcvec"],
-            lambda x, y: x - y,
-        ).alias("_qv"),
-    )
+    return codebook
 
 
 def pq_train_residual(
@@ -2794,19 +2407,17 @@ def pq_train_residual(
 ) -> list[list[list[int]]]:
     """Train the RESIDUAL codebook (faiss IndexIVFPQ trains its PQ on
     residuals): the same all-integer per-subspace Lloyd loop as
-    :func:`pq_train`, run over the residual staging frame and seeded
-    from :func:`pq_residual_seed_codebook`. Pass the result as
+    :func:`pq_train`, run over the residual staging pass and seeded
+    like :func:`pq_residual_seed_codebook`. Pass the result as
     ``codebook`` to :func:`ivfpq_residual_index` /
     :func:`cosine_topk_ivfpq_residual`."""
     embeddings = nonzero_norm(embeddings, vec_col)
-    qcents = _collect_centroids(embeddings, n_centroids, id_col, vec_col)
-    codebook = pq_residual_seed_codebook(
-        embeddings, n_centroids, n_sub, k_codes, id_col, vec_col,
-        allow_missing=True,
+    kernel, codebook = _residual_setup(
+        embeddings, n_centroids, n_sub, k_codes, None, id_col, vec_col
     )
     if not codebook:
         return []
-    staged = _residual_staged(embeddings, n_centroids, qcents, id_col, vec_col)
+    staged = _assign_cells(embeddings, kernel, id_col, vec_col, residual=True)
     return _pq_lloyd(staged, codebook, iters)
 
 
@@ -2819,39 +2430,27 @@ def ivfpq_residual_index(
     vec_col: str = "embedding",
     codebook: list[list[list[int]]] | None = None,
 ) -> DataFrame:
-    """(id, cell, codes): cell from the broadcast-centroid map-side
-    assignment, codes encoding the QUANTIZED RESIDUAL against that
-    cell's centroid. One corpus pass, no shuffle (the residual
-    subtraction and per-subspace argmin both ride the scan projection);
-    PERSISTED for the same §6c reason as :func:`pq_index`."""
+    """(id, cell, codes): cell and QUANTIZED RESIDUAL against that
+    cell's centroid from one kernel pass (:func:`_assign_cells`), codes
+    from the per-subspace argmin over the broadcast codebook row. No
+    shuffle beyond the scan fan-out; PERSISTED for the same §6c reason
+    as :func:`pq_index`."""
     embeddings = nonzero_norm(embeddings, vec_col)
-    spark = embeddings.sparkSession
-    qcents = _collect_centroids(embeddings, n_centroids, id_col, vec_col)
-    if codebook is None:
-        codebook = pq_residual_seed_codebook(
-            embeddings, n_centroids, n_sub, k_codes, id_col, vec_col,
-            allow_missing=True,
-        )
+    kernel, codebook = _residual_setup(
+        embeddings, n_centroids, n_sub, k_codes, codebook, id_col, vec_col
+    )
     if not codebook:
         # No surviving seed ⇒ no codeword ⇒ no encodable row, like the
         # oracle's renc CTE over an empty rcb.
         id_type = embeddings.schema[id_col].dataType.simpleString()
-        return spark.createDataFrame(
+        return embeddings.sparkSession.createDataFrame(
             [], f"{id_col} {id_type}, cell int, codes array<int>"
         )
-    sub = len(codebook[0][0])
-
-    entries = [
-        (m, j, qsub)
-        for m, words in enumerate(codebook)
-        for j, qsub in enumerate(words)
-    ]
-    cb_row = spark.createDataFrame(
-        [(entries,)], "_cb array<struct<m:int,code:int,qc:array<bigint>>>"
+    cb_row, sub, n_words = _pq_codebook_row(
+        embeddings, n_sub, k_codes, id_col, vec_col, codebook
     )
-
-    staged = _residual_staged(embeddings, n_centroids, qcents, id_col, vec_col)
-    firsts = _pq_firsts(sub, len(codebook[0]))
+    staged = _assign_cells(embeddings, kernel, id_col, vec_col, residual=True)
+    firsts = _pq_firsts(sub, n_words)
     return (
         staged.crossJoin(F.broadcast(cb_row))
         .select(
@@ -2885,6 +2484,8 @@ def cosine_topk_ivfpq_residual(
     |Q|*nprobe entries; the scan touches the probed cells' code rows
     only), with finer quantization because residual magnitudes are
     small relative to raw vectors."""
+    import numpy as np  # noqa: PLC0415
+
     if index is not None and codebook is None:
         # The codes in a prebuilt index are meaningless without the
         # codebook that built them; silently re-seeding here would
@@ -2892,70 +2493,26 @@ def cosine_topk_ivfpq_residual(
         raise ValueError("passing a prebuilt index requires its codebook")
     embeddings = nonzero_norm(embeddings, vec_col)
     spark = embeddings.sparkSession
-    fused = index is None
-    if fused:
-        # r13: ONE collect serves the centroids (id < n_centroids) AND —
-        # when the codebook is being seeded — the disjoint seed range
-        # right above them; the old path paid three identical centroid
-        # collects (here, in pq_residual_seed_codebook, and inside the
-        # index build's cell assignment) plus a separate seed collect,
-        # each a full driver job barrier. Same rows, same codebook
-        # (allow_missing semantics: however many seeds survive the
-        # nonzero-norm gate).
-        hi = n_centroids + (k_codes if codebook is None else 0)
-        rows = sorted(
-            embeddings.filter(F.col(id_col) < hi)
-            .select(id_col, vec_col)
-            .collect(),
-            key=lambda r: r[0],
-        )
-        qcents = [
-            (int(r[0]), _qvec(r[1])) for r in rows if int(r[0]) < n_centroids
-        ]
-        if not qcents:
-            raise ValueError(
-                f"no nonzero-norm centroid seeds with {id_col} < {n_centroids}"
-            )
-        if codebook is None:
-            codebook = _residual_codebook_from_rows(
-                qcents,
-                [r for r in rows if int(r[0]) >= n_centroids],
-                n_sub,
-            )
-    else:
-        qcents = _collect_centroids(embeddings, n_centroids, id_col, vec_col)
-    cent_by_id = dict(qcents)
+    kernel, codebook = _residual_setup(
+        embeddings, n_centroids, n_sub, k_codes, codebook, id_col, vec_col
+    )
     if not codebook:
         return _empty_topk(embeddings, id_col, "cos_sim double")
-    sub = len(codebook[0][0])
-
-    import math  # noqa: PLC0415
-
+    ids, qc, quantize, nearest = kernel
     q_rows = embeddings.filter(query_filter).select(id_col, vec_col).collect()
     luts = []
-    for qr in q_rows:
-        qq = _qvec(qr[1])
-        qn = sum(x * x for x in qq)
-        scored = []
-        for cid, cq in qcents:
-            cn = sum(x * x for x in cq)
-            dot = sum(a * b for a, b in zip(qq, cq))
-            scored.append(((-(dot / math.sqrt(qn * cn)) if cn else 0.0), cid))
-        probes = [cid for _, cid in sorted(scored)[:nprobe]]
-        for cell in probes:
-            tv = [a - b for a, b in zip(qq, cent_by_id[cell])]
-            lut = [
-                [
-                    sum(
-                        (tv[m * sub + d] - cw[d]) * (tv[m * sub + d] - cw[d])
-                        for d in range(sub)
-                    )
-                    for cw in codebook[m]
-                ]
-                for m in range(n_sub)
-            ]
-            luts.append((int(qr[0]), int(cell), lut))
-    if fused:
+    if q_rows:
+        qv = quantize([r[1] for r in q_rows])
+        best = nearest(qv, nprobe)  # (|Q|, nprobe) centroid rows
+        targets = (qv[:, None, :] - qc[best]).reshape(-1, qv.shape[1])
+        qids = np.repeat([r[0] for r in q_rows], best.shape[1])
+        luts = [
+            (int(q), int(c), lut)
+            for q, c, lut in zip(
+                qids, ids[best].reshape(-1), _adc_luts(codebook, targets)
+            )
+        ]
+    if index is None:
         # r13: assignment + residual + encode + probed-ADC + per-batch
         # top-k fuse into ONE Arrow pass over the corpus (see
         # _fused_adc_shortlist) — no persisted code table, no
@@ -2963,7 +2520,7 @@ def cosine_topk_ivfpq_residual(
         # keeps the frame-based scan over the caller's code table.
         cand = _fused_adc_shortlist(
             embeddings, codebook, luts, shortlist, id_col, vec_col,
-            qcents=qcents,
+            kernel=kernel,
         )
     else:
         lut_row = spark.createDataFrame(

@@ -54,10 +54,6 @@ def punct_count(text: Column) -> Column:
     return F.length(text) - F.length(F.regexp_replace(text, "[^a-zA-Z0-9 ]", ""))
 
 
-def stopword_count(text: Column, stopwords: tuple[str, ...] = EN_STOPWORDS) -> Column:
-    return F.size(F.filter(tokens(text), lambda t: t.isin(*stopwords)))
-
-
 def staged_tokens(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """Stage normalization and tokenization as bound columns.
 

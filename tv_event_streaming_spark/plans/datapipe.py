@@ -55,6 +55,26 @@ _NZ_CTE = (
     f"WHERE {_NORMSQ.format(v='embedding')} > 0)"
 )
 
+
+def _ranked_cte(n_centroids: int) -> str:
+    """cents + ranked CTEs: every nz vector against every seed centroid
+    (id < n_centroids) by quantized cosine DESC, ties to the lowest
+    cent_id — the SQL twin of similarity._centroid_kernel: rn = 1 is a
+    vector's cell, rn <= nprobe its probe order."""
+    return f"""cents AS (
+  SELECT vec_id AS cent_id, embedding AS cvec FROM nz WHERE vec_id < {n_centroids}
+),
+ranked AS (
+  SELECT e.vec_id, e.embedding, c.cent_id,
+         row_number() OVER (
+           PARTITION BY e.vec_id
+           ORDER BY {_DOT.format(a='e.embedding', b='c.cvec')}
+                    / sqrt({_NORMSQ.format(v='e.embedding')} * {_NORMSQ.format(v='c.cvec')}) DESC,
+                    c.cent_id
+         ) AS rn
+  FROM nz e, cents c
+)"""
+
 # SQL twins of the repetition gates (text._repetition_rules): trimmed
 # non-empty lines of the RAW text; ALL (non-distinct) word 2-grams; the
 # top-2-gram char mass as the quadratic max over distinct grams of
@@ -476,19 +496,7 @@ def q_ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     "ann_cosine_ivf",
     f"""
 WITH {_NZ_CTE},
-cents AS (
-  SELECT vec_id AS cent_id, embedding AS cvec FROM nz WHERE vec_id < 16
-),
-ranked AS (
-  SELECT e.vec_id, e.embedding, c.cent_id,
-         row_number() OVER (
-           PARTITION BY e.vec_id
-           ORDER BY {_DOT.format(a='e.embedding', b='c.cvec')}
-                    / sqrt({_NORMSQ.format(v='e.embedding')} * {_NORMSQ.format(v='c.cvec')}) DESC,
-                    c.cent_id
-         ) AS rn
-  FROM nz e, cents c
-),
+{_ranked_cte(16)},
 assign AS (
   SELECT vec_id AS neighbor_id, embedding AS nvec, cent_id AS cell
   FROM ranked WHERE rn = 1
@@ -522,19 +530,7 @@ def q_ann_cosine_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     "kmeans_update",
     f"""
 WITH {_NZ_CTE},
-cents AS (
-  SELECT vec_id AS cent_id, embedding AS cvec FROM nz WHERE vec_id < 16
-),
-ranked AS (
-  SELECT e.vec_id, e.embedding, c.cent_id,
-         row_number() OVER (
-           PARTITION BY e.vec_id
-           ORDER BY {_DOT.format(a='e.embedding', b='c.cvec')}
-                    / sqrt({_NORMSQ.format(v='e.embedding')} * {_NORMSQ.format(v='c.cvec')}) DESC,
-                    c.cent_id
-         ) AS rn
-  FROM nz e, cents c
-),
+{_ranked_cte(16)},
 assign AS (SELECT vec_id, embedding, cent_id AS cell FROM ranked WHERE rn = 1),
 ex AS (
   SELECT cell,
@@ -1864,19 +1860,7 @@ def q_bpe_merge_step(spark: SparkSession, sf_dir: str) -> DataFrame:
 # shared nearest-seed-centroid assignment CTE (the deterministic id<16
 # seed convention every IVF-family entry uses; ties to lowest cent_id)
 _ASSIGN_CTE = f"""{_NZ_CTE},
-cents AS (
-  SELECT vec_id AS cent_id, embedding AS cvec FROM nz WHERE vec_id < 16
-),
-ranked AS (
-  SELECT e.vec_id, e.embedding, c.cent_id,
-         row_number() OVER (
-           PARTITION BY e.vec_id
-           ORDER BY {_DOT.format(a='e.embedding', b='c.cvec')}
-                    / sqrt({_NORMSQ.format(v='e.embedding')} * {_NORMSQ.format(v='c.cvec')}) DESC,
-                    c.cent_id
-         ) AS rn
-  FROM nz e, cents c
-),
+{_ranked_cte(16)},
 assign AS (
   SELECT vec_id, embedding, CAST(cent_id AS INTEGER) AS cell FROM ranked WHERE rn = 1
 )"""
