@@ -33,19 +33,56 @@ def n_exchanges(plan: str) -> int:
     return len(re.findall(r"\bExchange\b", plan))
 
 
+#: the broadcast codebook / lookup-table rows the interpreted PQ argmin
+#: and ADC scans scored against
+PQ_HOF_ROW = re.compile(r"\b_(cb|lut)\b")
+
+
 def test_pq_encode_is_single_pass_map_side(spark, sf_dir):
+    """PQ encode is one Arrow pass of the numpy PQ kernel with the
+    codebook in the task closure: no broadcast ``_cb`` codebook row
+    (the interpreted argmin it fed was 2-3x slower at sf0.1)."""
     plan = plan_of(spark, "pq_encode", sf_dir)
+    assert "MapInPandas" in plan
+    assert not PQ_HOF_ROW.search(plan)
     # r12: ≤1 — the scan fan-out (scale-adaptive no-op on splittable
     # inputs, tests/test_fanout.py); the encode itself still never
     # shuffles the corpus
     assert n_exchanges(plan) <= 1
-    assert "BroadcastNestedLoopJoin" in plan  # the 1-row codebook
     # column pruning reaches the scan: only the two needed columns
     m = re.search(r"ReadSchema: struct<([^>]*)", plan)
     assert m and set(m.group(1).split(",")) <= {
         "vec_id:bigint",
         "embedding:array<float",
     }, m and m.group(1)
+
+
+def test_pq_paths_run_the_pq_kernel(spark, sf_dir):
+    """Every PQ encode, index build and ADC query runs the numpy PQ
+    kernel: no executed plan carries a ``_cb``/``_lut`` row or the
+    ``array_sort`` argmin of the interpreted twins."""
+    from pyspark.sql import functions as F
+
+    from tv_event_streaming_spark.domain import load_table
+    from tv_event_streaming_spark.operators import similarity as S
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    qf = F.col("vec_id") < 5
+    cb = S.pq_seed_codebook(emb, 8, 16)
+    idx = S.pq_index(emb, codebook=cb)
+    frames = {
+        "pq_codes": S.pq_codes(emb),
+        "ivfpq_index": S.ivfpq_index(emb),
+        "ivfpq_residual_index": S.ivfpq_residual_index(emb),
+        "pq_adc(index=)": S.cosine_topk_pq_adc(emb, qf, codebook=cb, index=idx),
+        "ivfpq": S.cosine_topk_ivfpq(emb, qf),
+    }
+    for name, df in frames.items():
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "MapInPandas" in plan, name
+        assert not PQ_HOF_ROW.search(plan), name
+        assert "array_sort" not in plan, name
+    spark.catalog.clearCache()
 
 
 #: entries whose cells come from the nearest-seed-centroid assignment

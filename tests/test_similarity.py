@@ -97,21 +97,38 @@ def test_near_duplicate_threshold(spark, emb_with_twins):
     assert expected <= got
 
 
-def test_vectorized_signatures_match_jvm_form(spark, emb_with_twins):
-    """The Arrow-vectorized signature (int64 matmul per batch) and the
-    JVM expression form compute identical buckets bit-for-bit — the
+def test_vectorized_signatures_match_jvm_form(spark, emb_with_twins, tmp_path):
+    """The Arrow-vectorized signature (int64 matmul per batch) computes
+    the buckets of the DuckDB oracle expression
+    (plans.datapipe._lsh_bucket_sql) bit-for-bit, band by band — the
     equivalence every LSH oracle relies on."""
+    import duckdb  # noqa: PLC0415
+
+    from tv_event_streaming_spark.plans.datapipe import _lsh_bucket_sql
+
     sig_udf = S.banded_signatures_vectorized(dims=64, bands=2, bits_per_band=8)
-    both = emb_with_twins.select(
-        "vec_id",
-        sig_udf(F.col("embedding")).alias("vec_sig"),
-        F.array(
-            S.hyperplane_signature(F.col("embedding"), 64, 8, plane_offset=0),
-            S.hyperplane_signature(F.col("embedding"), 64, 8, plane_offset=8),
-        ).alias("jvm_sig"),
-    )
-    bad = both.filter(F.col("vec_sig") != F.col("jvm_sig"))
-    assert bad.count() == 0, bad.limit(3).collect()
+    vec_sig = {
+        r.vec_id: list(r.sig)
+        for r in emb_with_twins.select(
+            "vec_id", sig_udf(F.col("embedding")).alias("sig")
+        ).collect()
+    }
+    path = str(tmp_path / "emb")
+    emb_with_twins.select("vec_id", "embedding").write.parquet(path)
+    con = duckdb.connect()
+    try:
+        sql_sig = {
+            vec_id: [b0, b1]
+            for vec_id, b0, b1 in con.execute(
+                f"SELECT vec_id, {_lsh_bucket_sql(64, 8, plane_offset=0)}, "
+                f"{_lsh_bucket_sql(64, 8, plane_offset=8)} "
+                f"FROM read_parquet('{path}/*.parquet')"
+            ).fetchall()
+        }
+    finally:
+        con.close()
+    assert len(vec_sig) == 100
+    assert vec_sig == sql_sig
 
 
 def test_ivf_index_partition_pruning(spark, emb_with_twins, tmp_path):
@@ -716,6 +733,10 @@ def test_pq_rerank_tolerates_zero_norm_seed(spark, sf_dir):
     rows = topk.collect()
     assert {r.query_id for r in rows} == {0, 1, 2, 4}
     assert all(r.neighbor_id != 3 for r in rows)
+    # IVF-PQ probing every cell is the same query (the zeroed id also
+    # drops out of its centroids and codebook seeds)
+    ivf = S.cosine_topk_ivfpq(zeroed, F.col("vec_id") < 5, k=3, nprobe=16)
+    assert sorted(map(tuple, ivf.collect())) == sorted(map(tuple, rows))
     spark.catalog.clearCache()
 
 

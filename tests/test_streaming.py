@@ -227,8 +227,8 @@ def test_quality_gate_runs_on_streams(spark, sf_dir, tmp_path):
 
 def test_pq_encode_runs_on_streams(spark, sf_dir, tmp_path):
     """Index-apply-on-stream: with a pretrained codebook passed in, the
-    PQ encode chain is a stateless map-side projection (one broadcast
-    codebook row, no shuffle), so the SAME function that encodes the
+    PQ encode is a stateless map-side Arrow pass (codebook in the task
+    closure, no shuffle), so the SAME function that encodes the
     batch corpus encodes a readStream frame — live vectors join the
     compressed index with no second code path. Codes must be
     byte-identical to the batch run."""
@@ -275,8 +275,9 @@ def test_semantic_dedup_stream_drops_code_twins(spark, sf_dir, tmp_path):
     """Streaming SemDeDup approximation: vectors whose every subspace
     quantizes to the same codeword deduplicate ACROSS micro-batches
     (first arrival wins); distinct-code vectors survive. The codebook
-    is pretrained batch-side and attaches as a stream-static broadcast
-    — the encode itself is stateless, pinned equal to batch encoding."""
+    is pretrained batch-side and rides in the encode pass's task
+    closure — the encode itself is stateless, pinned equal to batch
+    encoding."""
     import datetime
 
     from pyspark.sql import functions as F

@@ -1,20 +1,31 @@
 """Similarity search over embedding columns (``array<float>``).
 
-Two paths:
+Determinism contract: every score is exact integer arithmetic. Each
+component quantizes to int64 as floor(float64(x)·1e6); dots, norms and
+squared distances are exact int64 sums; a cosine is ONE final double
+division. Results are therefore bit-identical in any engine and any
+summation order, and each catalog entry hash-equals its DuckDB oracle
+(plans/datapipe.py).
 
-- **Brute-force cosine top-k** — the correctness baseline: query set ×
-  corpus, JVM-side ``zip_with``/``aggregate`` dot products, per-query
-  ``row_number`` top-k. O(|Q|·N); right when |Q| is small or as the
-  re-rank stage.
-- **Random-hyperplane LSH buckets** — the scale path: 16-bit signatures
-  from deterministic (xxhash64-derived) hyperplanes; candidates share a
-  bucket, then exact re-rank. Sub-linear candidate generation; recall
-  tunable with bands/bits.
+Tiers:
 
-Determinism contract: dot products quantize each component to an int64
-(floor(x·1e6)) so sums are exact integer arithmetic — bit-identical in
-any engine and any summation order. Cosines derived from those integers
-in double are then deterministic too (see plans/datapipe.py oracles).
+- **Brute-force cosine top-k**: the correctness baseline (JVM
+  ``zip_with``/``aggregate`` dots, per-query ``row_number`` top-k) and
+  the exact re-rank stage of every approximate tier.
+- **Random-hyperplane LSH**: banded signatures from a fixed ±1 plane
+  pattern, one int64 matmul per Arrow batch; candidates share a bucket,
+  then exact re-rank.
+- **IVF cells**: nearest-seed-centroid assignment by one exact numpy
+  kernel (:func:`_centroid_kernel`), corpus cells in one Arrow pass and
+  query probes on the driver. k-means, semantic dedup and the kNN graph
+  reuse the cells.
+- **Product quantization**: encode, Lloyd training and ADC scans run
+  one exact numpy kernel (:func:`_pq_kernel`), one Arrow pass per
+  corpus scan. IVF-PQ composes cells and codes, raw or residual.
+
+The kernels run inside ``mapInPandas``/``pandas_udf`` closures that
+close over numpy only, so they ship to Python workers by value and the
+workers never import this package.
 """
 
 from __future__ import annotations
@@ -33,6 +44,22 @@ QUANT = 1_000_000
 def _q(x: Column) -> Column:
     """Quantize a float component to int64: floor(double(x)·1e6)."""
     return F.floor(x.cast("double") * QUANT).cast("long")
+
+
+def _quantizer():
+    """The numpy twin of :func:`_q`: a sequence of equal-length vectors
+    → int64 matrix, floor(float64(x)·1e6) (float32→float64 widening is
+    exact). A factory, not a module-level function: cloudpickle ships a
+    closure by value, but a module-level function by reference, which
+    would make Python workers import this package."""
+    import numpy as np  # noqa: PLC0415
+
+    quant = QUANT
+
+    def quantize(vecs):
+        return np.floor(np.stack(vecs).astype(np.float64) * quant).astype(np.int64)
+
+    return quantize
 
 
 def quantized_dot(a: Column, b: Column) -> Column:
@@ -130,49 +157,15 @@ def plane_sign(p: int, d: int) -> int:
     return 1 if ((p * 2654435761 + d * 40503 + 12345) >> 7) % 2 == 0 else -1
 
 
-def hyperplane_signature(
-    vec: Column, dims: int, bits: int = 16, plane_offset: int = 0
-) -> Column:
-    """Random-hyperplane LSH signature as an integer bucket id.
-
-    The signature bit is sign(Σ_d q(vec[d])·plane[p][d]) over the
-    int64-quantized components — exact integer sums, so the sign decision
-    (and therefore the bucket) is bit-identical in any engine and any
-    summation order. ``plane_offset`` selects a disjoint plane set so
-    several independent band signatures can be derived (LSH
-    OR-construction)."""
-    qv = F.transform(vec, _q)
-
-    def bit(i: int) -> Column:
-        p = plane_offset + i
-        signs = F.array(*[F.lit(plane_sign(p, d)).cast("long") for d in range(dims)])
-        dot = F.aggregate(
-            F.zip_with(qv, signs, lambda x, s: x * s),
-            F.lit(0).cast("long"),
-            lambda acc, v: acc + v,
-        )
-        return F.when(dot > 0, F.shiftleft(F.lit(1).cast("long"), i)).otherwise(
-            F.lit(0).cast("long")
-        )
-
-    out = F.lit(0).cast("long")
-    for i in range(bits):
-        out = out + bit(i)
-    return out
-
-
 def banded_signatures_vectorized(
     dims: int, bands: int, bits_per_band: int
 ):
     """Arrow-batched hyperplane signatures: a ``pandas_udf`` mapping an
     ``array<float>`` column to ``array<bigint>`` band buckets with ONE
-    int64 matmul per batch against the ±1 plane matrix — ~1000× fewer
-    interpreter steps than evaluating
-    bands·bits higher-order-function
-    dots per row (HOF lambdas don't enter whole-stage codegen). Exact:
-    quantization floor(double(x)·1e6)→int64 and the integer matmul
-    reproduce :func:`hyperplane_signature` bit-for-bit, so the DuckDB
-    oracle (plans.datapipe._lsh_bucket_sql) is unchanged."""
+    int64 matmul per batch against the ±1 plane matrix. Bit p of band b
+    is sign(Σ_d q(vec[d])·plane_sign(b·bits + p, d)) > 0 over the
+    quantized components: exact integer sums, so the bucket equals the
+    DuckDB oracle's (plans.datapipe._lsh_bucket_sql) bit-for-bit."""
     import numpy as np  # noqa: PLC0415
 
     from pyspark.sql.functions import pandas_udf  # noqa: PLC0415
@@ -185,7 +178,7 @@ def banded_signatures_vectorized(
         ],
         dtype=np.int64,
     ).T  # dims × (bands·bits)
-    quant = QUANT
+    quantize = _quantizer()
     n_bands, n_bits = bands, bits_per_band
     weights = np.array([1 << i for i in range(bits_per_band)], dtype=np.int64)
 
@@ -196,9 +189,7 @@ def banded_signatures_vectorized(
 
         if len(vecs) == 0:  # np.stack raises on an empty Arrow batch
             return _pd.Series([], dtype=object)
-        mat = _np.floor(
-            _np.stack(vecs.to_numpy()).astype(_np.float64) * quant
-        ).astype(_np.int64)
+        mat = quantize(vecs.to_numpy())
         bits = (mat @ planes) > 0  # exact int64 dots, sign per plane
         buckets = bits.reshape(-1, n_bands, n_bits).astype(_np.int64) @ weights
         return _pd.Series(buckets.tolist())
@@ -219,9 +210,7 @@ def cosine_topk_lsh(
     """LSH-bucketed ANN: signature equi-join generates candidates, exact
     quantized cosine re-ranks. Approximate — recall depends on bits.
     Signatures are Arrow-vectorized (one int64 matmul per batch — see
-    :func:`banded_signatures_vectorized`); the JVM expression form
-    :func:`hyperplane_signature` computes the same buckets bit-for-bit
-    and remains for pure-JVM callers.
+    :func:`banded_signatures_vectorized`).
 
     ``probe_hamming`` is the multi-probe recall lever (the standard
     scale trade: more probes beat more tables because the corpus side
@@ -295,10 +284,11 @@ def cosine_topk_lsh(
 
 
 # ---------------------------------------------------------------------------
-# The exact nearest-centroid kernel: every quantized cell assignment and
-# cell probe below (IVF, k-means update, semantic dedup / kNN cells,
-# IVF-PQ) runs it — corpus cells in one Arrow pass, query probes on the
-# Spark driver.
+# The exact kernels: every quantized cell assignment and cell probe
+# below (IVF, k-means update, semantic dedup / kNN cells, IVF-PQ) runs
+# the nearest-centroid kernel, and every PQ encode, Lloyd step and ADC
+# scan the PQ kernel — over the corpus in one Arrow pass
+# (:func:`_kernel_pass`), for queries on the Spark driver.
 # ---------------------------------------------------------------------------
 
 
@@ -320,8 +310,7 @@ def _centroid_kernel(cents: list[tuple[int, list[float]]]):
     """The exact nearest-centroid kernel over ``cents`` ((id, float
     vector) pairs). Its contract, stated once for every caller:
 
-    - quantize each component as floor(float64(x)·1e6) → int64
-      (float32→float64 widening is exact);
+    - quantize each component with :func:`_quantizer`;
     - exact int64 dot product and squared norm (|q| ≤ ~4e6 per
       component, so sums stay far below 2^63);
     - ONE IEEE division per score, ``dot / sqrt(nv·cnormsq)`` — the
@@ -342,11 +331,7 @@ def _centroid_kernel(cents: list[tuple[int, list[float]]]):
 
     if not cents:
         raise ValueError("no nonzero-norm centroid seeds to assign to")
-    quant = QUANT
-
-    def quantize(vecs):
-        return np.floor(np.stack(vecs).astype(np.float64) * quant).astype(np.int64)
-
+    quantize = _quantizer()
     cents = sorted(cents, key=lambda c: c[0])
     ids = np.array([c[0] for c in cents], dtype=np.int64)
     qc = quantize([c[1] for c in cents])
@@ -417,49 +402,145 @@ def _two_level_kernel(cents: list[tuple[int, list[float]]]):
     return ids, qc, quantize, nearest
 
 
-def _assign_cells(
-    embeddings: DataFrame,
-    kernel,
+def _pq_kernel(codebook: list[list[list[int]]]):
+    """The exact product-quantization kernel over a quantized
+    ``[m][code][dim]`` codebook. Its contract, stated once for every
+    PQ caller (encode, Lloyd training, ADC scans, the stream key):
+
+    - squared L2 per subspace in exact int64 (|component| ≤ ~4e6, so
+      sums stay far below 2^63);
+    - a subspace's code is its first-min argmin: ties go to the lowest
+      code, the ``(qdist, code)`` order of the DuckDB oracles;
+    - the width is the codebook's ACTUAL one: an ``allow_missing``
+      seeding can hold fewer words than the requested ``k_codes``.
+
+    Returns ``(encode, luts, adc_topk)``:
+
+    - ``encode(qv)`` → ``(codes, qdist)``, both ``(n, n_sub)`` int64;
+    - ``luts(targets)`` → ``(n, n_sub, n_words)`` ADC tables: entry
+      ``[i][m][j]`` is the squared L2 between subspace m of quantized
+      target i and codeword j;
+    - ``adc_topk(qids, tables, ids, codes, k)`` → the ``k`` smallest
+      ``(query_id, neighbor_id, adist)`` per query under (adist,
+      neighbor_id), self-pairs excluded, as three arrays. That order
+      is total, so per-batch top-k sets contain the global top-k.
+
+    Like :func:`_centroid_kernel`, the functions close over numpy only."""
+    import numpy as np  # noqa: PLC0415
+
+    if not codebook or not codebook[0]:
+        # an allow_missing seeding over a corpus with no usable seed
+        # returns [] — encoding against zero codewords has no meaning
+        raise ValueError(
+            "PQ codebook is empty (allow_missing seeding over a corpus "
+            "with no usable seed vectors?) — nothing to encode against"
+        )
+    cb = np.asarray(codebook, dtype=np.int64)
+    n_sub, _, sub = cb.shape
+
+    def encode(qv):
+        if qv.shape[1] != n_sub * sub:
+            raise ValueError(
+                f"vector length {qv.shape[1]} != codebook dims {n_sub * sub}"
+            )
+        codes = np.empty((len(qv), n_sub), dtype=np.int64)
+        qdist = np.empty_like(codes)
+        rows = np.arange(len(qv))
+        for m in range(n_sub):
+            d = qv[:, m * sub : (m + 1) * sub]
+            dist = ((d[:, None, :] - cb[m][None]) ** 2).sum(axis=2)
+            codes[:, m] = dist.argmin(axis=1)
+            qdist[:, m] = dist[rows, codes[:, m]]
+        return codes, qdist
+
+    def luts(targets):
+        t = targets.reshape(len(targets), n_sub, 1, sub)
+        return ((t - cb[None]) ** 2).sum(axis=3)
+
+    def adc_topk(qids, tables, ids, codes, k):
+        ad = np.zeros((len(qids), len(ids)), dtype=np.int64)
+        for m in range(n_sub):
+            ad += tables[:, m, :][:, codes[:, m]]
+        oq, on, od = [], [], []
+        for q, row in zip(qids, ad):
+            sel = ids != q
+            ci, cd = ids[sel], row[sel]
+            order = np.lexsort((ci, cd))[:k]
+            oq.append(np.full(len(order), q))
+            on.append(ci[order])
+            od.append(cd[order])
+        return np.concatenate(oq), np.concatenate(on), np.concatenate(od)
+
+    return encode, luts, adc_topk
+
+
+def _kernel_pass(
+    frame: DataFrame,
     id_col: str,
-    vec_col: str,
+    vec_col: str | None,
+    schema,
+    emit,
+    kernel=None,
+    pq=None,
     residual: bool = False,
 ) -> DataFrame:
-    """ONE Arrow ``mapInPandas`` pass over the (fanned-out) scan that
-    runs ``kernel`` on every batch: ``(id, vec, cell)``, or with
-    ``residual`` ``(id, cell, _qv)`` where ``_qv`` is the quantized
-    residual against the cell's centroid — what the residual PQ tier
-    encodes. ``embeddings`` must already be nonzero-norm filtered."""
-    ids, qc, quantize, nearest = kernel
-    cell = T.StructField("cell", T.IntegerType(), False)
-    if residual:
-        out_schema = T.StructType(
-            [
-                embeddings.schema[id_col],
-                cell,
-                T.StructField("_qv", T.ArrayType(T.LongType(), False), False),
-            ]
-        )
-    else:
-        fields = embeddings.select(id_col, vec_col).schema.fields
-        out_schema = T.StructType([*fields, cell])
+    """ONE Arrow ``mapInPandas`` pass of the kernels over the
+    (fanned-out) scan of ``frame``. Per batch: quantize ``vec_col``;
+    with ``kernel`` (:func:`_centroid_kernel`) take each row's nearest
+    cell, and with ``residual`` subtract that cell's centroid; with
+    ``pq`` (:func:`_pq_kernel`) encode. ``vec_col=None`` scans a
+    prebuilt code table instead: its ``codes`` (and ``cell``, when
+    present) are read, not computed. Then ``emit(pdf, qv, cells,
+    codes, qdist)`` returns the batch's output frame in ``schema``, or
+    None. ``emit`` must close over numpy/pandas only, like the
+    kernels, so the pass ships to Python workers by value."""
+    quantize = _quantizer()
 
-    def assign(batches):
+    def run(batches):
+        import numpy as np  # noqa: PLC0415
+
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            qv = quantize(pdf[vec_col].to_numpy())
-            best = nearest(qv)
-            out = pdf[[id_col] if residual else [id_col, vec_col]].copy()
-            out["cell"] = ids[best].astype("int32")
-            if residual:
-                out["_qv"] = list(qv - qc[best])
-            yield out
+            qv = cells = codes = qdist = None
+            if vec_col is None:
+                codes = np.stack(pdf["codes"].to_numpy())
+                if "cell" in pdf:
+                    cells = pdf["cell"].to_numpy()
+            else:
+                qv = quantize(pdf[vec_col].to_numpy())
+                if kernel is not None:
+                    ids, qc, _, nearest = kernel
+                    best = nearest(qv)
+                    cells = ids[best]
+                    if residual:
+                        qv = qv - qc[best]
+                if pq is not None:
+                    codes, qdist = pq[0](qv)
+            out = emit(pdf, qv, cells, codes, qdist)
+            if out is not None:
+                yield out
 
     # r12: one scan partition = one Python worker for the whole batch
     # matmul; fan out first (scale-adaptive no-op on real clusters)
-    return fan_out_scan(embeddings.select(id_col, vec_col), id_col).mapInPandas(
-        assign, schema=out_schema
+    return fan_out_scan(frame, id_col).mapInPandas(run, schema=schema)
+
+
+def _assign_cells(
+    embeddings: DataFrame, kernel, id_col: str, vec_col: str
+) -> DataFrame:
+    """``(id, vec, cell)``: ``kernel``'s nearest cell of every row in
+    one :func:`_kernel_pass`. ``embeddings`` must already be
+    nonzero-norm filtered."""
+    frame = embeddings.select(id_col, vec_col)
+    schema = T.StructType(
+        [*frame.schema.fields, T.StructField("cell", T.IntegerType(), False)]
     )
+
+    def emit(pdf, qv, cells, codes, qdist):
+        return pdf.assign(cell=cells.astype("int32"))
+
+    return _kernel_pass(frame, id_col, vec_col, schema, emit, kernel=kernel)
 
 
 def _probe_cells(kernel, vecs: list, nprobe: int) -> list[list[int]]:
@@ -855,14 +936,14 @@ def allpairs_cosine_lsh(
         .repartition(n_par, "band", "bucket", "_gi", "_gj")
     )
 
-    score_group = _make_block_scorer(id_col, vec_col, QUANT, threshold)
+    score_group = _make_block_scorer(id_col, vec_col, threshold)
     pairs = blocked.groupBy("band", "bucket", "_gi", "_gj").applyInPandas(
         score_group, schema="id_a bigint, id_b bigint, cos_sim double"
     )
     return pairs.distinct()
 
 
-def _make_block_scorer(idc: str, vecc: str, quant: int, thr: float | None):
+def _make_block_scorer(idc: str, vecc: str, thr: float | None):
     """Per-group exact block-matmul pair scorer for ``applyInPandas``.
 
     Expects ``_gi``/``_gj`` (block-pair group keys) and ``_blk`` (the
@@ -871,15 +952,14 @@ def _make_block_scorer(idc: str, vecc: str, quant: int, thr: float | None):
     to the (b,b) groups, so each pair is scored exactly once per bucket.
     The closure is self-contained (numpy/pandas only): safe to pickle by
     value into sessions that can't import this package on workers."""
+    quantize = _quantizer()
 
     def score_group(pdf):
         import numpy as _np  # noqa: PLC0415
         import pandas as _pd  # noqa: PLC0415
 
         ids = pdf[idc].to_numpy()
-        mat = _np.floor(
-            _np.stack(pdf[vecc].to_numpy()).astype(_np.float64) * quant
-        ).astype(_np.int64)
+        mat = quantize(pdf[vecc].to_numpy())
         norms = (mat * mat).sum(axis=1)
         dots = mat @ mat.T  # exact int64
         cos = dots.astype(_np.float64) / _np.sqrt(
@@ -946,7 +1026,7 @@ def allpairs_cosine_exact(
         )
     )
     n_par = embeddings.sparkSession.sparkContext.defaultParallelism
-    score_group = _make_block_scorer(id_col, vec_col, QUANT, threshold)
+    score_group = _make_block_scorer(id_col, vec_col, threshold)
     return (
         blocked.repartition(n_par, "_gi", "_gj")
         .groupBy("_gi", "_gj")
@@ -1227,7 +1307,7 @@ def _cell_pairs(
         )
         .repartition(n_par, "cell", "_gi", "_gj")
     )
-    score_group = _make_block_scorer(id_col, vec_col, QUANT, threshold)
+    score_group = _make_block_scorer(id_col, vec_col, threshold)
     return blocked.groupBy("cell", "_gi", "_gj").applyInPandas(
         score_group, schema="id_a bigint, id_b bigint, cos_sim double"
     )
@@ -1382,6 +1462,14 @@ def ann_recall_at_k(
 # ---------------------------------------------------------------------------
 
 
+def _subspace_codebook(qs, n_sub: int) -> list[list[list[int]]]:
+    """Quantized seed rows (an int64 matrix) → ``[m][code][dim]``:
+    codeword i of subspace m is row i's subspace-m slice."""
+    if qs.shape[1] % n_sub:
+        raise ValueError(f"dims={qs.shape[1]} not divisible by n_sub={n_sub}")
+    return qs.reshape(len(qs), n_sub, -1).transpose(1, 0, 2).tolist()
+
+
 def pq_seed_codebook(
     embeddings: DataFrame,
     n_sub: int,
@@ -1402,8 +1490,6 @@ def pq_seed_codebook(
     where a zero-norm seed simply shrinks the codebook). Codebook
     positions stay monotone in seed id, so argmin tie-breaks match a
     code=id oracle either way."""
-    import math  # noqa: PLC0415
-
     seed_rows = _seed_rows(embeddings, k_codes, id_col, vec_col)
     if len(seed_rows) != k_codes and not allow_missing:
         raise ValueError(
@@ -1412,62 +1498,7 @@ def pq_seed_codebook(
         )
     if not seed_rows:
         return []
-    dims = len(seed_rows[0][1])
-    if dims % n_sub:
-        raise ValueError(f"dims={dims} not divisible by n_sub={n_sub}")
-    sub = dims // n_sub
-    return [
-        [
-            [
-                int(math.floor(float(x) * QUANT))
-                for x in r[1][m * sub : (m + 1) * sub]
-            ]
-            for r in seed_rows
-        ]
-        for m in range(n_sub)
-    ]
-
-
-def _pq_codebook_row(
-    embeddings: DataFrame,
-    n_sub: int,
-    k_codes: int,
-    id_col: str,
-    vec_col: str,
-    codebook: list[list[list[int]]] | None = None,
-):
-    """One broadcastable row holding the full PQ codebook (seeded by
-    default, or a trained ``pq_train`` codebook — both quantized-int
-    ``[m][code][dim]``). Returns (codebook_df, sub_dim, n_words) —
-    ``n_words`` is the ACTUAL per-subspace word count, which can be
-    smaller than ``k_codes`` when the codebook came from an
-    ``allow_missing=True`` seeding (a missing seed drops that codeword
-    from every subspace uniformly); the argmin extraction in
-    :func:`_pq_firsts` must index by the actual width, not the
-    requested one."""
-    spark = embeddings.sparkSession
-    if codebook is None:
-        codebook = pq_seed_codebook(embeddings, n_sub, k_codes, id_col, vec_col)
-    if not codebook or not codebook[0]:
-        # an allow_missing=True seeding over a fully-filtered corpus
-        # returns [] — encoding against zero codewords has no meaning,
-        # so fail descriptively instead of IndexError (ADVICE r7 #3);
-        # the SEARCH entry points (cosine_topk_pq_adc, ivfpq) instead
-        # degrade to their documented empty-result frames upstream.
-        raise ValueError(
-            "PQ codebook is empty (allow_missing seeding over a corpus "
-            "with no usable seed vectors?) — nothing to encode against"
-        )
-    sub = len(codebook[0][0])
-    entries = [
-        (m, j, qsub)
-        for m, words in enumerate(codebook)
-        for j, qsub in enumerate(words)
-    ]
-    cb = spark.createDataFrame(
-        [(entries,)], "_cb array<struct<m:int,code:int,qc:array<bigint>>>"
-    )
-    return cb, sub, len(codebook[0])
+    return _subspace_codebook(_quantizer()([r[1] for r in seed_rows]), n_sub)
 
 
 def pq_train(
@@ -1479,262 +1510,76 @@ def pq_train(
     vec_col: str = "embedding",
 ) -> list[list[list[int]]]:
     """Train the PQ codebook: per-subspace Lloyd iterations from the
-    deterministic seeds, ALL-INTEGER (assignment by exact int64 squared
-    L2 — the same argmin :func:`pq_encode` runs — and the mean update
-    as ``floor(sum_q / count)`` per (subspace, code, dim), entirely in
-    quantized space). Deterministic under any partitioning, like
+    deterministic seeds, ALL-INTEGER (assignment by the exact argmin
+    :func:`pq_encode` runs, and the mean update as ``floor(sum_q /
+    count)`` per (subspace, code, dim), entirely in quantized space).
+    Deterministic under any partitioning, like
     :func:`kmeans_update_stats`; empty codes keep their previous
     codeword.
 
-    Scale shape per iteration: assignment + per-subspace argmin is the
-    single-pass encode expression chain (one broadcast codebook row, no
-    corpus shuffle); the update is one explode to (m, code, dim, qval)
-    and a groupBy whose map-side partials collapse each partition to
-    ≤ n_sub·k·sub_dim rows — only those aggregates reach the driver.
+    Scale shape per iteration: one Arrow pass encodes each batch and
+    emits its per-(subspace, code) partial sums and counts (≤
+    n_sub·k rows per batch); only those reach the driver.
 
     Returns the trained ``[m][code][dim]`` quantized codebook for
     :func:`pq_encode` / :func:`cosine_topk_pq_adc`'s ``codebook``
     parameter. Train on a SAMPLE at 100 TB — codebook quality converges
     long before the corpus is exhausted (the standard faiss practice)."""
     codebook = pq_seed_codebook(embeddings, n_sub, k_codes, id_col, vec_col)
-    staged = embeddings.select(F.transform(F.col(vec_col), _q).alias("_qv"))
-    return _pq_lloyd(staged, codebook, iters)
+    return _pq_lloyd(embeddings, codebook, iters, id_col, vec_col)
 
 
 def _pq_lloyd(
-    staged: DataFrame,
-    codebook: list[list[list[int]]],
-    iters: int,
-) -> list[list[list[int]]]:
-    """The shared Lloyd loop over a staged quantized-vector frame
-    (``_qv`` int64 arrays) — raw vectors for :func:`pq_train`,
-    residuals for :func:`pq_train_residual`. Assignment indexes by the
-    codebook's ACTUAL per-subspace width (an ``allow_missing`` seeding
-    can be narrower than the requested ``k_codes``)."""
-    spark = staged.sparkSession
-    n_sub = len(codebook)
-    sub = len(codebook[0][0])
-    n_words = len(codebook[0])
-    for _ in range(iters):
-        entries = [
-            (m, j, qsub)
-            for m, words in enumerate(codebook)
-            for j, qsub in enumerate(words)
-        ]
-        cb = spark.createDataFrame(
-            [(entries,)], "_cb array<struct<m:int,code:int,qc:array<bigint>>>"
-        )
-        scored = F.transform(
-            F.col("_cb"),
-            lambda e: F.named_struct(
-                F.lit("m"),
-                e["m"],
-                F.lit("qdist"),
-                F.aggregate(
-                    F.zip_with(
-                        F.slice(F.col("_qv"), e["m"] * sub + 1, sub),
-                        e["qc"],
-                        lambda x, y: (x - y) * (x - y),
-                    ),
-                    F.lit(0).cast("long"),
-                    lambda acc, v: acc + v,
-                ),
-                F.lit("code"),
-                e["code"],
-            ),
-        )
-        firsts = F.filter(F.array_sort(scored), lambda e, i: i % n_words == 0)
-        assigned = F.transform(
-            firsts,
-            lambda e: F.named_struct(
-                F.lit("m"),
-                e["m"],
-                F.lit("code"),
-                e["code"],
-                F.lit("qsub"),
-                F.slice(F.col("_qv"), e["m"] * sub + 1, sub),
-            ),
-        )
-        stats = (
-            staged.crossJoin(F.broadcast(cb))
-            .select(F.explode(assigned).alias("_a"))
-            .select(
-                F.col("_a")["m"].alias("m"),
-                F.col("_a")["code"].alias("code"),
-                F.posexplode(F.col("_a")["qsub"]).alias("dim", "qval"),
-            )
-            .groupBy("m", "code", "dim")
-            .agg(F.sum("qval").alias("s"), F.count("*").alias("n"))
-            .collect()
-        )
-        new_cb = [[list(w) for w in words] for words in codebook]
-        for r in stats:
-            new_cb[r.m][r.code][r.dim] = int(r.s) // int(r.n)
-        codebook = new_cb
-    return codebook
-
-
-def _pq_firsts(sub: int, n_words: int) -> Column:
-    """Per-row PQ argmin chain over staged ``_qv`` and broadcast
-    ``_cb`` columns: score every (subspace, codeword), sort
-    lexicographically by (m, qdist, code) — subspace m's best codeword
-    then sits exactly at index m·n_words — and extract all argmins
-    with ONE indexed filter pass (no re-references to the scored
-    array; SCALE.md §6c inlining family). ``n_words`` must be the
-    codebook's ACTUAL per-subspace width, not the requested k_codes —
-    an ``allow_missing`` seeding can shrink it, and indexing by the
-    wrong stride silently extracts the wrong codewords."""
-    scored = F.transform(
-        F.col("_cb"),
-        lambda e: F.named_struct(
-            F.lit("m"),
-            e["m"],
-            F.lit("qdist"),
-            F.aggregate(
-                F.zip_with(
-                    F.slice(F.col("_qv"), e["m"] * sub + 1, sub),
-                    e["qc"],
-                    lambda x, y: (x - y) * (x - y),
-                ),
-                F.lit(0).cast("long"),
-                lambda acc, v: acc + v,
-            ),
-            F.lit("code"),
-            e["code"],
-        ),
-    )
-    return F.filter(F.array_sort(scored), lambda e, i: i % n_words == 0)
-
-
-def _adc_luts(codebook: list[list[list[int]]], targets) -> list:
-    """ADC lookup tables of quantized target rows (an int64 matrix):
-    ``luts[i][m][j]`` is the exact squared L2 between subspace m of
-    target i and codeword j of ``codebook`` ``[m][code][dim]``."""
-    import numpy as np  # noqa: PLC0415
-
-    cb = np.asarray(codebook, dtype=np.int64)
-    t = targets.reshape(len(targets), cb.shape[0], 1, cb.shape[2])
-    return ((t - cb[None]) ** 2).sum(axis=3).tolist()
-
-
-def _fused_adc_shortlist(
     embeddings: DataFrame,
     codebook: list[list[list[int]]],
-    luts: list[tuple],
-    shortlist: int,
+    iters: int,
     id_col: str,
     vec_col: str,
     kernel=None,
-) -> DataFrame:
-    """ONE Arrow pass over the corpus for the PQ query entries (r13,
-    guide §4.2 "hand whole batches to vectorized native libraries" and
-    the VERDICT r12 directive "fewer Python crossings per row"): per
-    batch, quantize, (residual mode: assign the nearest seed cell with
-    the exact :func:`_centroid_kernel`, then subtract that cell's
-    centroid), PQ-encode against the broadcast codebook, gather
-    each query's ADC distance from its LUT, and emit the batch's
-    top-``shortlist`` (query_id, neighbor_id, adist) rows.
-
-    This replaces, for the build-from-embeddings query paths, the
-    interpreted-HOF cascade (per-row ``transform``/``zip_with``/
-    ``aggregate`` argmin chains — which Catalyst evaluates WITHOUT
-    whole-stage codegen at ~µs per element op) AND the persisted
-    intermediate code table those chains needed as a materialization
-    barrier. Exactness is preserved end-to-end: quantization is the
-    identical floor(float64(x)·1e6) (float32→float64 widening exact),
-    encode/ADC arithmetic is exact int64 (max |component| ≤ ~4e6,
-    squared-sums ≤ ~1.3e14 ≪ 2^63), and every argmin tie breaks to the
-    lowest code exactly like the (qdist, code) sort it replaces.
-
-    Per-batch partial top-k is the §2.3 "aggregate before you shuffle"
-    move: top-k under the strict total order (adist, neighbor_id) is
-    associative, so the union of per-batch top-k sets contains the
-    global top-k and the downstream window selects exactly the same
-    rows while shuffling ≤ |batches|·|Q|·shortlist rows instead of
-    |Q|·N. Rows equal to their query id are excluded here, as in the
-    frame-based scan.
-
-    ``luts``: ``(query_id, lut[n_sub][n_words])`` triples-less plain
-    mode, or ``(query_id, probed_cell, lut)`` residual mode (``kernel``
-    set) — a query scores a corpus row iff the row's assigned cell is
-    one the query probes. The closure is self-contained (numpy/pandas
-    only), safe to pickle by value into sessions that can't import
-    this package on workers."""
+) -> list[list[list[int]]]:
+    """The shared Lloyd loop, over raw vectors (:func:`pq_train`) or,
+    with ``kernel``, over residuals against each vector's nearest
+    centroid (:func:`pq_train_residual`). Each iteration is ONE
+    :func:`_kernel_pass` whose batches emit ``(m, code, Σ, n)``: the
+    component sums and count of the sub-vectors that encode to each
+    code. The driver sets every non-empty code to ``floor(Σ/n)``."""
     import numpy as np  # noqa: PLC0415
+    import pandas as pd  # noqa: PLC0415
 
-    n_sub = len(codebook)
-    sub = len(codebook[0][0])
-    cb = np.array(codebook, dtype=np.int64)  # [n_sub, n_words, sub]
-    residual = kernel is not None
-    if residual:
-        cent_ids, qc, _, nearest = kernel
-        by_cell = {}
-        for cell in sorted({c for _, c, _ in luts}):
-            by_cell[int(cell)] = (
-                np.array([q for q, c, _ in luts if c == cell], dtype=np.int64),
-                np.array([l for q, c, l in luts if c == cell], dtype=np.int64),
-            )
-    else:
-        qids = np.array([q for q, _ in luts], dtype=np.int64)
-        lut_t = np.array([l for _, l in luts], dtype=np.int64)
-    quant = QUANT
-    id_type = embeddings.schema[id_col].dataType.simpleString()
-    out_schema = f"query_id bigint, neighbor_id {id_type}, adist bigint"
+    frame = embeddings.select(id_col, vec_col)
+    schema = "m int, code int, s array<bigint>, n bigint"
+    for _ in range(iters):
+        n_sub, n_words, sub = len(codebook), len(codebook[0]), len(codebook[0][0])
 
-    def scan(batches):
-        import numpy as _np  # noqa: PLC0415
-        import pandas as _pd  # noqa: PLC0415
-
-        def encode(mat):
-            codes = _np.empty((mat.shape[0], n_sub), dtype=_np.int64)
+        def emit(pdf, qv, cells, codes, qdist):
+            out = []
             for m in range(n_sub):
-                d = mat[:, m * sub : (m + 1) * sub]
-                dist = ((d[:, None, :] - cb[m][None, :, :]) ** 2).sum(axis=2)
-                codes[:, m] = dist.argmin(axis=1)  # first min = lowest code
-            return codes
+                n = np.bincount(codes[:, m], minlength=n_words)
+                s = np.zeros((n_words, sub), dtype=np.int64)
+                np.add.at(s, codes[:, m], qv[:, m * sub : (m + 1) * sub])
+                out += [(m, j, s[j], n[j]) for j in np.nonzero(n)[0]]
+            return pd.DataFrame(out, columns=["m", "code", "s", "n"])
 
-        def topk(q_arr, lt, ids, codes, oq, on, od):
-            ad = _np.zeros((len(q_arr), len(ids)), dtype=_np.int64)
-            for m in range(n_sub):
-                ad += lt[:, m, :][:, codes[:, m]]
-            for qi in range(len(q_arr)):
-                sel = ids != q_arr[qi]
-                ci, cd = ids[sel], ad[qi][sel]
-                order = _np.lexsort((ci, cd))[:shortlist]
-                oq.append(_np.full(len(order), q_arr[qi], dtype=_np.int64))
-                on.append(ci[order])
-                od.append(cd[order])
+        parts = _kernel_pass(
+            frame, id_col, vec_col, schema, emit, kernel, _pq_kernel(codebook),
+            residual=kernel is not None,
+        ).collect()
+        totals: dict[tuple[int, int], tuple[list[int], int]] = {}
+        for r in parts:
+            s, n = totals.get((r.m, r.code), ([0] * sub, 0))
+            totals[(r.m, r.code)] = ([a + b for a, b in zip(s, r.s)], n + r.n)
+        codebook = [[list(w) for w in words] for words in codebook]
+        for (m, j), (s, n) in totals.items():
+            codebook[m][j] = [x // n for x in s]
+    return codebook
 
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            ids = pdf[id_col].to_numpy()
-            qv = _np.floor(
-                _np.stack(pdf[vec_col].to_numpy()).astype(_np.float64) * quant
-            ).astype(_np.int64)
-            oq, on, od = [], [], []
-            if residual:
-                best = nearest(qv)
-                codes = encode(qv - qc[best])
-                row_cells = cent_ids[best]
-                for cell, (q_arr, lt) in by_cell.items():
-                    mask = row_cells == cell
-                    if mask.any():
-                        topk(q_arr, lt, ids[mask], codes[mask], oq, on, od)
-            elif len(qids):
-                topk(qids, lut_t, ids, encode(qv), oq, on, od)
-            if oq:
-                yield _pd.DataFrame(
-                    {
-                        "query_id": _np.concatenate(oq),
-                        "neighbor_id": _np.concatenate(on),
-                        "adist": _np.concatenate(od),
-                    }
-                )
 
-    return fan_out_scan(embeddings.select(id_col, vec_col), id_col).mapInPandas(
-        scan, schema=out_schema
-    )
+def _pq_setup(embeddings, n_sub, k_codes, id_col, vec_col, codebook):
+    """``(frame, kernel)`` of the encode entries: the ``(id, vec)``
+    scan and the PQ kernel of ``codebook``, seeded when None."""
+    if codebook is None:
+        codebook = pq_seed_codebook(embeddings, n_sub, k_codes, id_col, vec_col)
+    return embeddings.select(id_col, vec_col), _pq_kernel(codebook)
 
 
 def pq_codes(
@@ -1745,31 +1590,23 @@ def pq_codes(
     vec_col: str = "embedding",
     codebook: list[list[list[int]]] | None = None,
 ) -> DataFrame:
-    """Per-VECTOR code arrays ``(id, codes array<int>)`` in ONE
-    map-side pass — no explode, no shuffle — so the encode chain
-    composes onto STREAMS (streaming.dedup.semantic_dedup_stream) and
-    the index build skips the explode→groupBy reassembly."""
-    cb, sub, n_words = _pq_codebook_row(
-        embeddings, n_sub, k_codes, id_col, vec_col, codebook
+    """Per-VECTOR code arrays ``(id, codes array<int>)`` in ONE Arrow
+    pass of :func:`_pq_kernel` — no explode, no shuffle beyond the scan
+    fan-out."""
+    import numpy as np  # noqa: PLC0415
+    import pandas as pd  # noqa: PLC0415
+
+    frame, pq = _pq_setup(embeddings, n_sub, k_codes, id_col, vec_col, codebook)
+    schema = T.StructType(
+        [frame.schema[id_col], T.StructField("codes", T.ArrayType(T.IntegerType()))]
     )
-    # r12: the per-row argmin chain below is ~n_sub·k_codes·sub
-    # interpreted-HOF evals + one 128-struct array_sort per vector, on
-    # whatever parallelism the scan gives — ONE task for the
-    # unsplittable test files. Fan out (scale-adaptive no-op on real
-    # clusters — fanout.py); the persisted index downstream then also
-    # inherits the parallel partitioning, so every ADC scan of it runs
-    # wide instead of single-task.
-    staged = fan_out_scan(embeddings, id_col).select(
-        F.col(id_col), F.transform(F.col(vec_col), _q).alias("_qv")
-    )
-    firsts = _pq_firsts(sub, n_words)
-    return (
-        staged.crossJoin(F.broadcast(cb))
-        .select(
-            id_col,
-            F.transform(firsts, lambda e: e["code"].cast("int")).alias("codes"),
+
+    def emit(pdf, qv, cells, codes, qdist):
+        return pd.DataFrame(
+            {id_col: pdf[id_col].to_numpy(), "codes": list(codes.astype(np.int32))}
         )
-    )
+
+    return _kernel_pass(frame, id_col, vec_col, schema, emit, pq=pq)
 
 
 def pq_encode(
@@ -1792,34 +1629,34 @@ def pq_encode(
     codeword (the per-subspace reconstruction error, summable per
     vector).
 
-    Scale shape: the whole codebook travels as ONE broadcast row;
-    scoring + per-subspace argmin happen inside a single expression
-    chain per row (one ``transform`` over the codebook array — one
-    evaluation of the staged quantized vector — then one lexicographic
-    ``array_sort`` of (m, qdist, code) structs, in which the rn=1 row
-    of each subspace sits at a compile-time-known index i·k_codes,
-    picked by ONE indexed ``filter`` pass). No corpus shuffle, no
-    per-row Python, no repeated lambda references to staged arrays
-    (SCALE.md §6c inlining family)."""
-    cb, sub, n_words = _pq_codebook_row(
-        embeddings, n_sub, k_codes, id_col, vec_col, codebook
+    Scale shape: ONE Arrow pass of :func:`_pq_kernel` over the
+    (fanned-out) scan, with the codebook in the task closure. No corpus
+    shuffle; the pass is stateless, so it encodes stream frames too."""
+    import numpy as np  # noqa: PLC0415
+    import pandas as pd  # noqa: PLC0415
+
+    frame, pq = _pq_setup(embeddings, n_sub, k_codes, id_col, vec_col, codebook)
+    schema = T.StructType(
+        [
+            frame.schema[id_col],
+            T.StructField("m", T.IntegerType()),
+            T.StructField("code", T.IntegerType()),
+            T.StructField("qdist", T.LongType()),
+        ]
     )
-    # r12: same fan-out rationale as pq_codes — parallelize the per-row
-    # argmin chain when the scan is one unsplittable file
-    staged = fan_out_scan(embeddings, id_col).select(
-        F.col(id_col), F.transform(F.col(vec_col), _q).alias("_qv")
-    )
-    firsts = _pq_firsts(sub, n_words)
-    return (
-        staged.crossJoin(F.broadcast(cb))
-        .select(F.col(id_col), F.explode(firsts).alias("_e"))
-        .select(
-            id_col,
-            F.col("_e")["m"].alias("m"),
-            F.col("_e")["code"].alias("code"),
-            F.col("_e")["qdist"].alias("qdist"),
+
+    def emit(pdf, qv, cells, codes, qdist):
+        n, n_sub = codes.shape
+        return pd.DataFrame(
+            {
+                id_col: np.repeat(pdf[id_col].to_numpy(), n_sub),
+                "m": np.tile(np.arange(n_sub, dtype=np.int32), n),
+                "code": codes.ravel().astype(np.int32),
+                "qdist": qdist.ravel(),
+            }
         )
-    )
+
+    return _kernel_pass(frame, id_col, vec_col, schema, emit, pq=pq)
 
 
 def pq_index(
@@ -1830,17 +1667,150 @@ def pq_index(
     vec_col: str = "embedding",
     codebook: list[list[list[int]]] | None = None,
 ) -> DataFrame:
-    """The PQ code table in per-vector form — ``(id, codes array<int>)``
-    with ``codes[m]`` the subspace-m codeword id — PERSISTED, because
-    the ADC scan references ``codes`` from inside nested lambdas and a
-    staged (non-materialized) array there re-inlines the whole encode
-    pipeline per reference (SCALE.md §6c, the 23× winnowing case:
-    exchange barriers don't stop the collapse; an InMemoryRelation
-    attribute does). Persisting is also semantically the point: this IS
-    the index build, done once, scanned by every query after."""
+    """The PQ code table ``(id, codes array<int>)`` of :func:`pq_codes`,
+    PERSISTED: building the index once and scanning it on every query
+    after (``cosine_topk_pq_adc(index=…)``) is the point of this
+    function. The caller owns its lifetime (``unpersist``)."""
     return pq_codes(
         embeddings, n_sub, k_codes, id_col, vec_col, codebook
     ).persist(StorageLevel.MEMORY_AND_DISK)
+
+
+def _adc_tables(pq, q_rows, kernel=None, nprobe: int = 1, residual: bool = False):
+    """The ADC tables of the query rows ``(id, vector)``, as ``{cell:
+    (query ids, tables)}``. Without ``kernel``: one entry, cell None,
+    scored against every corpus row. With it, each query's table sits
+    under each of its ``nprobe`` nearest cells, built on the target
+    q − centroid[cell] when ``residual``."""
+    import numpy as np  # noqa: PLC0415
+
+    if not q_rows:
+        return {}
+    qids = np.array([r[0] for r in q_rows], dtype=np.int64)
+    qv = _quantizer()([r[1] for r in q_rows])
+    if kernel is None:
+        return {None: (qids, pq[1](qv))}
+    cent_ids, qc, _, nearest = kernel
+    best = nearest(qv, nprobe)  # (|Q|, nprobe) centroid rows, best first
+    rows = best.reshape(-1)
+    targets = np.repeat(qv, best.shape[1], axis=0)
+    if residual:
+        targets = targets - qc[rows]
+    qids, cells, tables = np.repeat(qids, best.shape[1]), cent_ids[rows], pq[1](targets)
+    return {int(c): (qids[cells == c], tables[cells == c]) for c in np.unique(cells)}
+
+
+def _fused_adc_shortlist(
+    frame: DataFrame,
+    pq,
+    tables: dict,
+    shortlist: int,
+    id_col: str,
+    vec_col: str | None,
+    kernel=None,
+    residual: bool = False,
+) -> DataFrame:
+    """ONE Arrow pass over the corpus for every PQ query entry: per
+    batch, quantize and encode (with ``kernel``, after assigning each
+    row its cell, and with ``residual`` subtracting that cell's
+    centroid), or read the codes of a prebuilt index
+    (``vec_col=None``); gather each query's ADC distances from its
+    table (:func:`_adc_tables`; a query scores a row iff it probes the
+    row's cell) and emit the batch's top-``shortlist``
+    ``(query_id, neighbor_id, adist)`` rows, self-pairs excluded.
+
+    Per-batch partial top-k is the "aggregate before you shuffle"
+    move: the union of per-batch top-k sets under the strict total
+    order (adist, neighbor_id) contains the global top-k, so the
+    downstream window selects exactly the rows a full scan would while
+    shuffling ≤ |batches|·|Q|·shortlist rows instead of |Q|·N. The
+    tables travel in the task closure (|Q|·nprobe·n_sub·k ints)."""
+    import numpy as np  # noqa: PLC0415
+    import pandas as pd  # noqa: PLC0415
+
+    adc_topk = pq[2]
+    id_type = frame.schema[id_col].dataType.simpleString()
+    if vec_col is None:
+        cols = [id_col, "codes", *(["cell"] if "cell" in frame.columns else [])]
+    else:
+        cols = [id_col, vec_col]
+
+    def emit(pdf, qv, cells, codes, qdist):
+        ids = pdf[id_col].to_numpy()
+        parts = []
+        for cell, (qids, tabs) in tables.items():
+            sel = slice(None) if cell is None else cells == cell
+            if len(ids[sel]):
+                parts.append(adc_topk(qids, tabs, ids[sel], codes[sel], shortlist))
+        if parts:
+            q, n, d = (np.concatenate(c) for c in zip(*parts))
+            return pd.DataFrame({"query_id": q, "neighbor_id": n, "adist": d})
+        return None
+
+    return _kernel_pass(
+        frame.select(*cols), id_col, vec_col,
+        f"query_id bigint, neighbor_id {id_type}, adist bigint",
+        emit, kernel, pq, residual,
+    )
+
+
+def _adc_rank(cand: DataFrame, k: int) -> DataFrame:
+    """Per-query top ``k`` of ADC candidates under (adist, neighbor_id)."""
+    w = Window.partitionBy("query_id").orderBy("adist", "neighbor_id")
+    return (
+        cand.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "neighbor_id", F.col("rank").cast("int").alias("rank"), "adist")
+    )
+
+
+def _exact_rerank(
+    embeddings: DataFrame,
+    query_filter: Column,
+    cand: DataFrame,
+    k: int,
+    id_col: str,
+    vec_col: str,
+) -> DataFrame:
+    """Exact top-``k`` of a ``(query_id, neighbor_id)`` shortlist by
+    quantized cosine, ties to the lower neighbor id — the faiss
+    ``refine`` stage of every PQ query. The shortlist joined with its
+    query vectors (≤ |Q|·shortlist rows) is the BROADCAST side of the
+    fetch join, so the corpus-sized embeddings never shuffle; scoring
+    and the window run on candidate-sized data."""
+    # No localCheckpoint before the broadcast: r12 added one when the
+    # shortlist's lineage was the multi-stage interpreted ADC plan
+    # running inside the broadcast-build thread (3.9 → 2.8 s). Once the
+    # shortlist became one fused Arrow pass plus one window it re-A/B'd
+    # flat on ann_pq_rerank (1.68 vs 1.72 s) and ~1.2 s SLOWER on the
+    # IVF-PQ query (an extra full materialization pass), so it is gone.
+    qvecs = embeddings.filter(query_filter).select(
+        F.col(id_col).alias("query_id"),
+        F.col(vec_col).alias("qvec"),
+        quantized_norm_sq(F.col(vec_col)).alias("qnorm"),
+    )
+    fetched = F.broadcast(cand.join(qvecs, "query_id")).join(
+        embeddings.select(
+            F.col(id_col).alias("neighbor_id"),
+            F.col(vec_col).alias("cvec"),
+            quantized_norm_sq(F.col(vec_col)).alias("cnorm"),
+        ),
+        "neighbor_id",
+    )
+    scored = fetched.select(
+        "query_id",
+        "neighbor_id",
+        (
+            quantized_dot(F.col("qvec"), F.col("cvec")).cast("double")
+            / F.sqrt(F.col("qnorm").cast("double") * F.col("cnorm").cast("double"))
+        ).alias("cos_sim"),
+    )
+    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), "neighbor_id")
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "neighbor_id", F.col("rank").cast("int").alias("rank"), "cos_sim")
+    )
 
 
 def cosine_topk_pq_adc(
@@ -1866,110 +1836,29 @@ def cosine_topk_pq_adc(
     quantized components), so ranking is deterministic and
     oracle-checkable. Ties break on neighbor id.
 
-    Scale shape (r13): the build-from-embeddings path is ONE fused
-    Arrow pass — encode + LUT gather + per-batch top-k inside
-    :func:`_fused_adc_shortlist` (LUTs travel in the task closure,
-    |Q|·n_sub·k_codes ints) — so the only shuffle is the per-query
-    top-k window over ≤ |batches|·|Q|·k batch-partial candidates
-    instead of |Q|·N scored rows. With a prebuilt ``index`` the
-    frame-based ``zip_with(codes, lut)`` scan over the persisted code
-    table is kept: the caller owns the index's lifetime and its codes
-    are already materialized.
+    Scale shape: ONE Arrow pass (:func:`_fused_adc_shortlist`) encodes
+    the corpus, or reads a prebuilt ``index``'s codes, gathers the LUTs
+    and keeps each batch's top-k; the only shuffle besides the scan
+    fan-out is the per-query top-k window over the batch partials.
 
     Callers that query repeatedly should build :func:`pq_index` once
-    and pass it as ``index``."""
-    import math  # noqa: PLC0415
-
+    and pass it as ``index``, with its codebook."""
     if index is not None and codebook is None:
         # The codes in a prebuilt index are meaningless without the
         # codebook that built them; silently seeding the query LUTs
         # here would yield wrong ADC distances with no error.
         raise ValueError("passing a prebuilt index requires its codebook")
-    spark = embeddings.sparkSession
-    cbq = (
-        codebook
-        if codebook is not None
-        else pq_seed_codebook(embeddings, n_sub, k_codes, id_col, vec_col)
-    )
-    if not cbq:  # empty codebook (allow_missing seeding over a filtered
+    if codebook is None:
+        codebook = pq_seed_codebook(embeddings, n_sub, k_codes, id_col, vec_col)
+    if not codebook:  # empty codebook (allow_missing seeding over a filtered
         # frame found no seeds): no codeword ⇒ no scored pairs, like a
         # SQL plan whose seed CTE is empty.
         return _empty_topk(embeddings, id_col, "adist bigint")
-    sub = len(cbq[0][0])
+    pq = _pq_kernel(codebook)
     q_rows = embeddings.filter(query_filter).select(id_col, vec_col).collect()
-    luts = []
-    for qr in q_rows:
-        qq = [int(math.floor(float(x) * QUANT)) for x in qr[1]]
-        lut = [
-            [
-                sum(
-                    (qq[m * sub + d] - cw[d]) * (qq[m * sub + d] - cw[d])
-                    for d in range(sub)
-                )
-                for cw in cbq[m]
-            ]
-            for m in range(n_sub)
-        ]
-        luts.append((int(qr[0]), lut))
-    if index is None:
-        # r13: build-from-embeddings path — encode + ADC + partial top-k
-        # fuse into ONE Arrow pass (see _fused_adc_shortlist), replacing
-        # the persisted code table and the interpreted per-row HOF
-        # scoring chain. The prebuilt-index path below keeps the
-        # frame-based scan: its codes are already materialized and the
-        # caller owns the index's lifetime.
-        scored = _fused_adc_shortlist(
-            embeddings, cbq, luts, k, id_col, vec_col
-        )
-        w = Window.partitionBy("query_id").orderBy("adist", "neighbor_id")
-        return (
-            scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select(
-                "query_id",
-                "neighbor_id",
-                F.col("rank").cast("int").alias("rank"),
-                "adist",
-            )
-        )
-    codes = index
-    lut_row = spark.createDataFrame(
-        [(luts,)], "_lut array<struct<query_id:bigint,l:array<array<bigint>>>>"
-    )
-
-    per_query = F.transform(
-        F.col("_lut"),
-        lambda u: F.named_struct(
-            F.lit("query_id"),
-            u["query_id"],
-            F.lit("adist"),
-            F.aggregate(
-                F.zip_with(
-                    F.col("codes"),
-                    u["l"],
-                    lambda c, lm: F.element_at(lm, c + 1),
-                ),
-                F.lit(0).cast("long"),
-                lambda acc, v: acc + v,
-            ),
-        ),
-    )
-    scored = (
-        codes.crossJoin(F.broadcast(lut_row))
-        .select(F.col(id_col).alias("neighbor_id"), F.explode(per_query).alias("_s"))
-        .select(
-            F.col("_s")["query_id"].alias("query_id"),
-            "neighbor_id",
-            F.col("_s")["adist"].alias("adist"),
-        )
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-    )
-    w = Window.partitionBy("query_id").orderBy("adist", "neighbor_id")
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", F.col("rank").cast("int").alias("rank"), "adist")
-    )
+    source, vcol = (embeddings, vec_col) if index is None else (index, None)
+    cand = _fused_adc_shortlist(source, pq, _adc_tables(pq, q_rows), k, id_col, vcol)
+    return _adc_rank(cand, k)
 
 
 def cosine_topk_pq_rerank(
@@ -1986,15 +1875,10 @@ def cosine_topk_pq_rerank(
     """The full IVF-PQ query pattern: ADC over the compressed codes
     produces a ``shortlist`` of candidates per query (reading ~n_sub
     bytes/vector), then ONLY those candidates' full vectors are fetched
-    and exactly re-ranked by quantized cosine — the faiss
-    ``search + refine`` composition. Recall is set by the shortlist
-    size, compute by the code scan; the exact tier touches
-    |queries|·shortlist vectors regardless of corpus size.
-
-    Scale shape: the candidate frame (≤ |Q|·shortlist rows) is the
-    BROADCAST side of the fetch join — the corpus-sized embeddings
-    table never shuffles; scoring and the final top-k window run on
-    candidate-sized data."""
+    and exactly re-ranked by quantized cosine (:func:`_exact_rerank`) —
+    the faiss ``search + refine`` composition. Recall is set by the
+    shortlist size, compute by the code scan; the exact tier touches
+    |queries|·shortlist vectors regardless of corpus size."""
     embeddings = nonzero_norm(embeddings, vec_col)
     if codebook is None:
         # Seed over the nz-filtered frame WITHOUT the all-16-ids
@@ -2006,57 +1890,96 @@ def cosine_topk_pq_rerank(
         )
     if not codebook:
         return _empty_topk(embeddings, id_col, "cos_sim double")
-    # r12 added a lazy localCheckpoint here because the shortlist's
-    # lineage was the whole multi-stage ADC plan executing inside the
-    # broadcast-build thread (measured 3.9 s vs 2.8 s). r13's fused
-    # Arrow shortlist (one MapInPandas + one window — see
-    # _fused_adc_shortlist) removed those stages, and the checkpoint
-    # re-A/B'd FLAT (1.68 s with vs 1.72 s without, both ±steal), so
-    # the extra materialization job is dropped.
-    cand = (
-        cosine_topk_pq_adc(
-            embeddings, query_filter, shortlist, n_sub, k_codes, id_col,
-            vec_col, codebook,
-        )
-        .select("query_id", "neighbor_id")
-    )
-    qvecs = embeddings.filter(query_filter).select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("qvec"),
-        quantized_norm_sq(F.col(vec_col)).alias("qnorm"),
-    )
-    cand_q = F.broadcast(cand.join(qvecs, "query_id"))
-    fetched = cand_q.join(
-        embeddings.select(
-            F.col(id_col).alias("neighbor_id"),
-            F.col(vec_col).alias("cvec"),
-            quantized_norm_sq(F.col(vec_col)).alias("cnorm"),
-        ),
-        "neighbor_id",
-    )
-    scored = fetched.select(
-        "query_id",
-        "neighbor_id",
-        (
-            quantized_dot(F.col("qvec"), F.col("cvec")).cast("double")
-            / F.sqrt(F.col("qnorm").cast("double") * F.col("cnorm").cast("double"))
-        ).alias("cos_sim"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), "neighbor_id")
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", F.col("rank").cast("int").alias("rank"), "cos_sim")
-    )
+    cand = cosine_topk_pq_adc(
+        embeddings, query_filter, shortlist, n_sub, k_codes, id_col, vec_col,
+        codebook,
+    ).select("query_id", "neighbor_id")
+    return _exact_rerank(embeddings, query_filter, cand, k, id_col, vec_col)
 
 
 # ---------------------------------------------------------------------------
 # IVF-PQ: the combined production index (cells for pruning, codes for
 # compression) — faiss's IndexIVFPQ shape, composed from the verified
-# tiers above. pytest-verified (tests/test_similarity.py); the separate
-# cell (ann_cosine_ivf) and code (ann_pq_*) tiers carry the driver
-# hashes, so this composition adds no oracle surface.
+# tiers above, over the raw vector or (``residual``) over its residual
+# v − centroid[cell], faiss's default (by_residual=true). Residuals are
+# smaller in magnitude than raw vectors, so the same codebook budget
+# quantizes them finer; the ADC table becomes per-(query, probed cell)
+# on the target q − centroid[cell]. Residuals are q(v) − q(c), so the
+# whole tier stays exact int64 arithmetic.
 # ---------------------------------------------------------------------------
+
+
+def _ivf_setup(
+    embeddings: DataFrame,
+    n_centroids: int,
+    n_sub: int,
+    k_codes: int,
+    codebook: list[list[list[int]]] | None,
+    residual: bool,
+    id_col: str,
+    vec_col: str,
+):
+    """``(kernel, codebook)`` of an IVF-PQ tier from ONE seed collect:
+    ids < ``n_centroids`` are the centroids and, when ``codebook`` is
+    None, ``k_codes`` seed ids quantize into it — ids ``[0, k_codes)``
+    raw, or ids ``[n_centroids, n_centroids + k_codes)`` as residuals
+    against their own nearest centroid (see
+    :func:`pq_residual_seed_codebook` for why the range is disjoint). A
+    seed id lost to the nonzero-norm gate shrinks the codebook
+    (positions stay monotone in seed id); none left gives ``(None,
+    [])``. ``embeddings`` must already be nonzero-norm filtered."""
+    lo = n_centroids if residual else 0
+    hi = n_centroids if codebook is not None else max(n_centroids, lo + k_codes)
+    rows = _seed_rows(embeddings, hi, id_col, vec_col)
+    seeds = [r[1] for r in rows if lo <= r[0] < lo + k_codes]
+    if codebook is None and not seeds:
+        return None, []
+    kernel = _centroid_kernel([r for r in rows if r[0] < n_centroids])
+    if codebook is None:
+        _, qc, quantize, nearest = kernel
+        qs = quantize(seeds)
+        codebook = _subspace_codebook(qs - qc[nearest(qs)] if residual else qs, n_sub)
+    return kernel, codebook
+
+
+def _ivfpq_index(
+    embeddings, n_centroids, n_sub, k_codes, codebook, residual, id_col, vec_col
+) -> DataFrame:
+    """``(id, cell, codes)`` of the nonzero-norm corpus in ONE
+    :func:`_kernel_pass`: each vector's nearest cell, then the codes of
+    the vector or, with ``residual``, of its residual against that
+    cell's centroid. No surviving codebook seed ⇒ an empty index, like
+    the oracle's ``renc`` CTE over an empty ``rcb``."""
+    import numpy as np  # noqa: PLC0415
+    import pandas as pd  # noqa: PLC0415
+
+    embeddings = nonzero_norm(embeddings, vec_col)
+    kernel, codebook = _ivf_setup(
+        embeddings, n_centroids, n_sub, k_codes, codebook, residual, id_col, vec_col
+    )
+    schema = T.StructType(
+        [
+            embeddings.schema[id_col],
+            T.StructField("cell", T.IntegerType()),
+            T.StructField("codes", T.ArrayType(T.IntegerType())),
+        ]
+    )
+    if not codebook:
+        return embeddings.sparkSession.createDataFrame([], schema)
+
+    def emit(pdf, qv, cells, codes, qdist):
+        return pd.DataFrame(
+            {
+                id_col: pdf[id_col].to_numpy(),
+                "cell": cells.astype(np.int32),
+                "codes": list(codes.astype(np.int32)),
+            }
+        )
+
+    return _kernel_pass(
+        embeddings.select(id_col, vec_col), id_col, vec_col, schema, emit,
+        kernel, _pq_kernel(codebook), residual,
+    ).persist(StorageLevel.MEMORY_AND_DISK)
 
 
 def ivfpq_index(
@@ -2071,20 +1994,69 @@ def ivfpq_index(
     CELL (nearest seed centroid — the pruning key a partitioned write
     turns into PartitionFilters, see :func:`build_ivf_index`) and its
     PQ CODES (n_sub bytes — the compression that replaces the raw
-    vector at scan time). PERSISTED: it is scanned by every query and
-    its columns feed nested ADC lambdas (SCALE.md §6c — staged arrays
-    under nested lambdas need a materialization point).
+    vector at scan time), both from one Arrow pass over the
+    nonzero-norm corpus; the codebook seeds over that frame like
+    :func:`cosine_topk_pq_rerank`'s. PERSISTED: an index is built once
+    and scanned by every query after; the caller owns its lifetime. At
+    100 TB write it ``partitionBy("cell")`` like the IVF index and the
+    index is ~n_sub bytes/vector on disk."""
+    return _ivfpq_index(
+        embeddings, n_centroids, n_sub, k_codes, None, False, id_col, vec_col
+    )
 
-    Build cost: the assignment (kernel pass) and encode (one broadcast
-    codebook row) each stream the corpus once; the only shuffle is the
-    codes-groupBy inherited from :func:`pq_encode`. At 100 TB write it
-    ``partitionBy("cell")`` like the IVF index and the index is
-    ~n_sub bytes/vector on disk."""
-    assign = _seed_cell_assignment(
-        embeddings, n_centroids, id_col, vec_col
-    ).select(id_col, "cell")
-    codes = pq_index(embeddings, n_sub, k_codes, id_col, vec_col)
-    return assign.join(codes, id_col).persist(StorageLevel.MEMORY_AND_DISK)
+
+def ivfpq_residual_index(
+    embeddings: DataFrame,
+    n_centroids: int = 16,
+    n_sub: int = 8,
+    k_codes: int = 16,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    codebook: list[list[list[int]]] | None = None,
+) -> DataFrame:
+    """``(id, cell, codes)`` like :func:`ivfpq_index`, with codes of the
+    QUANTIZED RESIDUAL against the cell's centroid, in the same one
+    pass; PERSISTED likewise."""
+    return _ivfpq_index(
+        embeddings, n_centroids, n_sub, k_codes, codebook, True, id_col, vec_col
+    )
+
+
+def _ivfpq_topk(
+    embeddings: DataFrame,
+    query_filter: Column,
+    k: int,
+    n_centroids: int,
+    nprobe: int,
+    n_sub: int,
+    k_codes: int,
+    shortlist: int,
+    id_col: str,
+    vec_col: str,
+    index: DataFrame | None,
+    codebook: list[list[list[int]]] | None,
+    residual: bool,
+) -> DataFrame:
+    """The IVF-PQ query shared by the raw and residual forms: driver
+    probes and ADC tables, ONE fused Arrow pass over the corpus (or
+    the prebuilt ``index``'s codes) that scores only probed cells and
+    keeps per-batch top-``shortlist`` rows, the shortlist window, then
+    :func:`_exact_rerank`."""
+    embeddings = nonzero_norm(embeddings, vec_col)
+    kernel, codebook = _ivf_setup(
+        embeddings, n_centroids, n_sub, k_codes, codebook, residual, id_col, vec_col
+    )
+    if not codebook:
+        return _empty_topk(embeddings, id_col, "cos_sim double")
+    pq = _pq_kernel(codebook)
+    q_rows = embeddings.filter(query_filter).select(id_col, vec_col).collect()
+    tables = _adc_tables(pq, q_rows, kernel, nprobe, residual)
+    source, vcol = (embeddings, vec_col) if index is None else (index, None)
+    cand = _fused_adc_shortlist(
+        source, pq, tables, shortlist, id_col, vcol, kernel, residual
+    )
+    short = _adc_rank(cand, shortlist).select("query_id", "neighbor_id")
+    return _exact_rerank(embeddings, query_filter, short, k, id_col, vec_col)
 
 
 def cosine_topk_ivfpq(
@@ -2109,105 +2081,119 @@ def cosine_topk_ivfpq(
     quantized cosine. Compute scales with the probed slice and the
     shortlist, never the corpus.
 
-    Deterministic end-to-end (quantized-integer cell choice, integer
-    ADC, quantized-cosine rerank, id tie-breaks); recall vs the exact
-    scan is pinned in tests/test_similarity.py."""
-    embeddings = nonzero_norm(embeddings, vec_col)
-    spark = embeddings.sparkSession
-    if index is None:
-        index = ivfpq_index(
-            embeddings, n_centroids, n_sub, k_codes, id_col, vec_col
-        )
-    ids, _, quantize, nearest = _centroid_kernel(
-        _seed_rows(embeddings, n_centroids, id_col, vec_col)
-    )
-    cbq = pq_seed_codebook(embeddings, n_sub, k_codes, id_col, vec_col)
-    q_rows = embeddings.filter(query_filter).select(id_col, vec_col).collect()
-    luts = []
-    if q_rows:
-        qv = quantize([r[1] for r in q_rows])
-        probes = ids[nearest(qv, nprobe)].tolist()
-        luts = [
-            (int(r[0]), p, lut)
-            for r, p, lut in zip(q_rows, probes, _adc_luts(cbq, qv))
-        ]
-    lut_row = spark.createDataFrame(
-        [(luts,)],
-        "_lut array<struct<query_id:bigint,probes:array<int>,l:array<array<bigint>>>>",
+    Without ``index`` the corpus is assigned and encoded inside the
+    query's one Arrow pass; nothing is persisted. The seed codebook
+    comes from the nonzero-norm frame (a zero-norm seed shrinks it),
+    so at ``nprobe = n_centroids`` the result equals
+    :func:`cosine_topk_pq_rerank`'s. Deterministic end-to-end
+    (quantized-integer cell choice, integer ADC, quantized-cosine
+    rerank, id tie-breaks); recall vs the exact scan is pinned in
+    tests/test_similarity.py."""
+    return _ivfpq_topk(
+        embeddings, query_filter, k, n_centroids, nprobe, n_sub, k_codes,
+        shortlist, id_col, vec_col, index, None, residual=False,
     )
 
-    per_query = F.transform(
-        F.col("_lut"),
-        lambda u: F.named_struct(
-            F.lit("query_id"),
-            u["query_id"],
-            F.lit("probed"),
-            F.array_contains(u["probes"], F.col("cell")),
-            F.lit("adist"),
-            F.aggregate(
-                F.zip_with(
-                    F.col("codes"),
-                    u["l"],
-                    lambda c, lm: F.element_at(lm, c + 1),
-                ),
-                F.lit(0).cast("long"),
-                lambda acc, v: acc + v,
-            ),
-        ),
+
+def cosine_topk_ivfpq_residual(
+    embeddings: DataFrame,
+    query_filter: Column,
+    k: int = 5,
+    n_centroids: int = 16,
+    nprobe: int = 4,
+    n_sub: int = 8,
+    k_codes: int = 16,
+    shortlist: int = 50,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    index: DataFrame | None = None,
+    codebook: list[list[list[int]]] | None = None,
+) -> DataFrame:
+    """faiss IndexIVFPQ with by_residual=true: probe the nprobe nearest
+    cells; ADC over RESIDUAL codes with a per-(query, probed cell)
+    lookup table on the target (q - centroid[cell]); exact rerank of
+    the shortlist. Scale shape identical to :func:`cosine_topk_ivfpq`
+    (the |Q|·nprobe tables travel in the scan's task closure; a corpus
+    row is scored only by the queries that probe its cell), with finer
+    quantization because residual magnitudes are small relative to raw
+    vectors."""
+    if index is not None and codebook is None:
+        # The codes in a prebuilt index are meaningless without the
+        # codebook that built them; silently re-seeding here would
+        # produce wrong ADC distances with no error.
+        raise ValueError("passing a prebuilt index requires its codebook")
+    return _ivfpq_topk(
+        embeddings, query_filter, k, n_centroids, nprobe, n_sub, k_codes,
+        shortlist, id_col, vec_col, index, codebook, residual=True,
     )
-    cand = (
-        index.crossJoin(F.broadcast(lut_row))
-        .select(F.col(id_col).alias("neighbor_id"), F.explode(per_query).alias("_s"))
-        .filter(F.col("_s")["probed"])
-        .select(
-            F.col("_s")["query_id"].alias("query_id"),
-            "neighbor_id",
-            F.col("_s")["adist"].alias("adist"),
+
+
+def pq_residual_seed_codebook(
+    embeddings: DataFrame,
+    n_centroids: int = 16,
+    n_sub: int = 8,
+    k_codes: int = 16,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    allow_missing: bool = False,
+) -> list[list[list[int]]]:
+    """Seed codebook in RESIDUAL space: the residuals (against each
+    seed vector's own nearest centroid) of the vectors with id in
+    ``[n_centroids, n_centroids + k_codes)``, sub-sliced per subspace.
+
+    ``allow_missing=True`` builds the codebook from however many seed
+    ids survive the nonzero-norm gate (possibly zero → ``[]``) instead
+    of raising — the semantics of a SQL seed CTE over the filtered
+    frame (the ann_ivfpq_residual oracle's ``rcb`` CTE silently shrinks
+    when a seed id is zero-norm; raising here would be a crash-vs-result
+    cross-engine divergence). Codebook positions stay monotone in seed
+    id, so argmin tie-breaks match a gapped code=id-16 oracle numbering
+    either way — the same argument as :func:`pq_seed_codebook`.
+
+    The seed range is deliberately DISJOINT from the centroid ids: a
+    vector that IS a centroid has residual exactly zero (it is its own
+    nearest cell under cosine, ties to lowest id), so reusing the
+    ``id < k_codes`` rule would build an all-zero codebook — every
+    code ties to 0, ADC distances collapse to the constant
+    ``||q - centroid||²`` per cell, and the shortlist degenerates to
+    id order (found by the two-level synthetic recall probe; the
+    degenerate form even matched its oracle, which is why a hash check
+    alone couldn't catch it)."""
+    embeddings = nonzero_norm(embeddings, vec_col)
+    codebook = _ivf_setup(
+        embeddings, n_centroids, n_sub, k_codes, None, True, id_col, vec_col
+    )[1]
+    found = len(codebook[0]) if codebook else 0
+    if found != k_codes and not allow_missing:
+        raise ValueError(
+            f"residual PQ seeding expects ids {n_centroids}.."
+            f"{n_centroids + k_codes - 1}; found {found}"
         )
-        .filter(F.col("query_id") != F.col("neighbor_id"))
+    return codebook
+
+
+def pq_train_residual(
+    embeddings: DataFrame,
+    n_centroids: int = 16,
+    n_sub: int = 8,
+    k_codes: int = 16,
+    iters: int = 3,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> list[list[list[int]]]:
+    """Train the RESIDUAL codebook (faiss IndexIVFPQ trains its PQ on
+    residuals): the same all-integer per-subspace Lloyd loop as
+    :func:`pq_train`, run over residuals and seeded like
+    :func:`pq_residual_seed_codebook`. Pass the result as
+    ``codebook`` to :func:`ivfpq_residual_index` /
+    :func:`cosine_topk_ivfpq_residual`."""
+    embeddings = nonzero_norm(embeddings, vec_col)
+    kernel, codebook = _ivf_setup(
+        embeddings, n_centroids, n_sub, k_codes, None, True, id_col, vec_col
     )
-    w = Window.partitionBy("query_id").orderBy("adist", "neighbor_id")
-    # r12 note: cosine_topk_pq_rerank truncates its shortlist lineage
-    # with a localCheckpoint before broadcasting (measured −0.7 s); the
-    # same change was A/B'd HERE and measured ~1.2 s SLOWER at sf0.1
-    # (the probed-cell shortlist reads the persisted ivfpq index, whose
-    # InMemoryTableScan already makes the broadcast subtree cheap, while
-    # the checkpoint forces an extra full materialization pass) — so the
-    # ivfpq paths deliberately keep the plain broadcast.
-    short = (
-        cand.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= shortlist)
-        .select("query_id", "neighbor_id")
-    )
-    qvecs = embeddings.filter(query_filter).select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("qvec"),
-        quantized_norm_sq(F.col(vec_col)).alias("qnorm"),
-    )
-    fetched = F.broadcast(short.join(qvecs, "query_id")).join(
-        embeddings.select(
-            F.col(id_col).alias("neighbor_id"),
-            F.col(vec_col).alias("cvec"),
-            quantized_norm_sq(F.col(vec_col)).alias("cnorm"),
-        ),
-        "neighbor_id",
-    )
-    scored = fetched.select(
-        "query_id",
-        "neighbor_id",
-        (
-            quantized_dot(F.col("qvec"), F.col("cvec")).cast("double")
-            / F.sqrt(F.col("qnorm").cast("double") * F.col("cnorm").cast("double"))
-        ).alias("cos_sim"),
-    )
-    w2 = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), "neighbor_id")
-    return (
-        scored.withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id", "neighbor_id", F.col("rank").cast("int").alias("rank"), "cos_sim"
-        )
-    )
+    if not codebook:
+        return []
+    return _pq_lloyd(embeddings, codebook, iters, id_col, vec_col, kernel)
 
 
 # ---------------------------------------------------------------------------
@@ -2300,306 +2286,4 @@ def cosine_topk_pq_opq(
     rotated = apply_permutation(embeddings, perm, vec_col)
     return cosine_topk_pq_rerank(
         rotated, query_filter, k, shortlist, n_sub, k_codes, id_col, vec_col
-    )
-
-
-# ---------------------------------------------------------------------------
-# IVF-residual PQ: encode the residual (v - centroid[cell]) instead of
-# the raw vector — faiss IndexIVFPQ's default (by_residual=true).
-# Residuals are smaller in magnitude than raw vectors, so the same
-# codebook budget quantizes them finer; the ADC lookup table becomes
-# per-(query, probed cell) on the target (q - centroid[cell]).
-# All arithmetic stays in exact quantized int64 space (residual =
-# q(v) - q(c), distances are integer sums), so the whole tier is
-# oracle-checkable like the plain PQ path.
-# ---------------------------------------------------------------------------
-
-
-def _residual_setup(
-    embeddings: DataFrame,
-    n_centroids: int,
-    n_sub: int,
-    k_codes: int,
-    codebook: list[list[list[int]]] | None,
-    id_col: str,
-    vec_col: str,
-):
-    """``(kernel, codebook)`` of the residual tier from ONE seed collect
-    (r13 folded three centroid collects and a seed collect into it):
-    ids < ``n_centroids`` are the centroids and, when ``codebook`` is
-    None, the ids in ``[n_centroids, n_centroids + k_codes)`` seed it
-    with their residuals against their own nearest centroid, sub-sliced
-    per subspace. A seed id lost to the nonzero-norm gate shrinks the
-    codebook (codebook positions stay monotone in seed id); none left
-    gives ``(None, [])``. ``embeddings`` must already be nonzero-norm
-    filtered."""
-    hi = n_centroids + (k_codes if codebook is None else 0)
-    rows = _seed_rows(embeddings, hi, id_col, vec_col)
-    seeds = [r[1] for r in rows if r[0] >= n_centroids]
-    if codebook is None and not seeds:
-        return None, []
-    kernel = _centroid_kernel([r for r in rows if r[0] < n_centroids])
-    if codebook is None:
-        _, qc, quantize, nearest = kernel
-        qs = quantize(seeds)
-        if qs.shape[1] % n_sub:
-            raise ValueError(f"dims={qs.shape[1]} not divisible by n_sub={n_sub}")
-        sub = qs.shape[1] // n_sub
-        residuals = (qs - qc[nearest(qs)]).tolist()
-        codebook = [
-            [rv[m * sub : (m + 1) * sub] for rv in residuals] for m in range(n_sub)
-        ]
-    return kernel, codebook
-
-
-def pq_residual_seed_codebook(
-    embeddings: DataFrame,
-    n_centroids: int = 16,
-    n_sub: int = 8,
-    k_codes: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    allow_missing: bool = False,
-) -> list[list[list[int]]]:
-    """Seed codebook in RESIDUAL space: the residuals (against each
-    seed vector's own nearest centroid) of the vectors with id in
-    ``[n_centroids, n_centroids + k_codes)``, sub-sliced per subspace.
-
-    ``allow_missing=True`` builds the codebook from however many seed
-    ids survive the nonzero-norm gate (possibly zero → ``[]``) instead
-    of raising — the semantics of a SQL seed CTE over the filtered
-    frame (the ann_ivfpq_residual oracle's ``rcb`` CTE silently shrinks
-    when a seed id is zero-norm; raising here would be a crash-vs-result
-    cross-engine divergence). Codebook positions stay monotone in seed
-    id, so argmin tie-breaks match a gapped code=id-16 oracle numbering
-    either way — the same argument as :func:`pq_seed_codebook`.
-
-    The seed range is deliberately DISJOINT from the centroid ids: a
-    vector that IS a centroid has residual exactly zero (it is its own
-    nearest cell under cosine, ties to lowest id), so reusing the
-    ``id < k_codes`` rule would build an all-zero codebook — every
-    code ties to 0, ADC distances collapse to the constant
-    ``||q - centroid||²`` per cell, and the shortlist degenerates to
-    id order (found by the two-level synthetic recall probe; the
-    degenerate form even matched its oracle, which is why a hash check
-    alone couldn't catch it)."""
-    embeddings = nonzero_norm(embeddings, vec_col)
-    codebook = _residual_setup(
-        embeddings, n_centroids, n_sub, k_codes, None, id_col, vec_col
-    )[1]
-    found = len(codebook[0]) if codebook else 0
-    if found != k_codes and not allow_missing:
-        raise ValueError(
-            f"residual PQ seeding expects ids {n_centroids}.."
-            f"{n_centroids + k_codes - 1}; found {found}"
-        )
-    return codebook
-
-
-def pq_train_residual(
-    embeddings: DataFrame,
-    n_centroids: int = 16,
-    n_sub: int = 8,
-    k_codes: int = 16,
-    iters: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> list[list[list[int]]]:
-    """Train the RESIDUAL codebook (faiss IndexIVFPQ trains its PQ on
-    residuals): the same all-integer per-subspace Lloyd loop as
-    :func:`pq_train`, run over the residual staging pass and seeded
-    like :func:`pq_residual_seed_codebook`. Pass the result as
-    ``codebook`` to :func:`ivfpq_residual_index` /
-    :func:`cosine_topk_ivfpq_residual`."""
-    embeddings = nonzero_norm(embeddings, vec_col)
-    kernel, codebook = _residual_setup(
-        embeddings, n_centroids, n_sub, k_codes, None, id_col, vec_col
-    )
-    if not codebook:
-        return []
-    staged = _assign_cells(embeddings, kernel, id_col, vec_col, residual=True)
-    return _pq_lloyd(staged, codebook, iters)
-
-
-def ivfpq_residual_index(
-    embeddings: DataFrame,
-    n_centroids: int = 16,
-    n_sub: int = 8,
-    k_codes: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    codebook: list[list[list[int]]] | None = None,
-) -> DataFrame:
-    """(id, cell, codes): cell and QUANTIZED RESIDUAL against that
-    cell's centroid from one kernel pass (:func:`_assign_cells`), codes
-    from the per-subspace argmin over the broadcast codebook row. No
-    shuffle beyond the scan fan-out; PERSISTED for the same §6c reason
-    as :func:`pq_index`."""
-    embeddings = nonzero_norm(embeddings, vec_col)
-    kernel, codebook = _residual_setup(
-        embeddings, n_centroids, n_sub, k_codes, codebook, id_col, vec_col
-    )
-    if not codebook:
-        # No surviving seed ⇒ no codeword ⇒ no encodable row, like the
-        # oracle's renc CTE over an empty rcb.
-        id_type = embeddings.schema[id_col].dataType.simpleString()
-        return embeddings.sparkSession.createDataFrame(
-            [], f"{id_col} {id_type}, cell int, codes array<int>"
-        )
-    cb_row, sub, n_words = _pq_codebook_row(
-        embeddings, n_sub, k_codes, id_col, vec_col, codebook
-    )
-    staged = _assign_cells(embeddings, kernel, id_col, vec_col, residual=True)
-    firsts = _pq_firsts(sub, n_words)
-    return (
-        staged.crossJoin(F.broadcast(cb_row))
-        .select(
-            id_col,
-            "cell",
-            F.transform(firsts, lambda e: e["code"].cast("int")).alias("codes"),
-        )
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-
-
-def cosine_topk_ivfpq_residual(
-    embeddings: DataFrame,
-    query_filter: Column,
-    k: int = 5,
-    n_centroids: int = 16,
-    nprobe: int = 4,
-    n_sub: int = 8,
-    k_codes: int = 16,
-    shortlist: int = 50,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    index: DataFrame | None = None,
-    codebook: list[list[list[int]]] | None = None,
-) -> DataFrame:
-    """faiss IndexIVFPQ with by_residual=true: probe the nprobe nearest
-    cells; ADC over RESIDUAL codes with a per-(query, probed cell)
-    lookup table on the target (q - centroid[cell]); exact rerank of
-    the shortlist. Scale shape identical to :func:`cosine_topk_ivfpq`
-    (LUTs for all (query, cell) pairs travel as ONE broadcast row of
-    |Q|*nprobe entries; the scan touches the probed cells' code rows
-    only), with finer quantization because residual magnitudes are
-    small relative to raw vectors."""
-    import numpy as np  # noqa: PLC0415
-
-    if index is not None and codebook is None:
-        # The codes in a prebuilt index are meaningless without the
-        # codebook that built them; silently re-seeding here would
-        # produce wrong ADC distances with no error.
-        raise ValueError("passing a prebuilt index requires its codebook")
-    embeddings = nonzero_norm(embeddings, vec_col)
-    spark = embeddings.sparkSession
-    kernel, codebook = _residual_setup(
-        embeddings, n_centroids, n_sub, k_codes, codebook, id_col, vec_col
-    )
-    if not codebook:
-        return _empty_topk(embeddings, id_col, "cos_sim double")
-    ids, qc, quantize, nearest = kernel
-    q_rows = embeddings.filter(query_filter).select(id_col, vec_col).collect()
-    luts = []
-    if q_rows:
-        qv = quantize([r[1] for r in q_rows])
-        best = nearest(qv, nprobe)  # (|Q|, nprobe) centroid rows
-        targets = (qv[:, None, :] - qc[best]).reshape(-1, qv.shape[1])
-        qids = np.repeat([r[0] for r in q_rows], best.shape[1])
-        luts = [
-            (int(q), int(c), lut)
-            for q, c, lut in zip(
-                qids, ids[best].reshape(-1), _adc_luts(codebook, targets)
-            )
-        ]
-    if index is None:
-        # r13: assignment + residual + encode + probed-ADC + per-batch
-        # top-k fuse into ONE Arrow pass over the corpus (see
-        # _fused_adc_shortlist) — no persisted code table, no
-        # interpreted per-row HOF chains. The prebuilt-index path below
-        # keeps the frame-based scan over the caller's code table.
-        cand = _fused_adc_shortlist(
-            embeddings, codebook, luts, shortlist, id_col, vec_col,
-            kernel=kernel,
-        )
-    else:
-        lut_row = spark.createDataFrame(
-            [(luts,)],
-            "_lut array<struct<query_id:bigint,cell:int,l:array<array<bigint>>>>",
-        )
-
-        per_entry = F.transform(
-            F.col("_lut"),
-            lambda u: F.named_struct(
-                F.lit("query_id"),
-                u["query_id"],
-                F.lit("probed"),
-                u["cell"] == F.col("cell"),
-                F.lit("adist"),
-                F.aggregate(
-                    F.zip_with(
-                        F.col("codes"),
-                        u["l"],
-                        lambda c, lm: F.element_at(lm, c + 1),
-                    ),
-                    F.lit(0).cast("long"),
-                    lambda acc, v: acc + v,
-                ),
-            ),
-        )
-        cand = (
-            index.crossJoin(F.broadcast(lut_row))
-            .select(
-                F.col(id_col).alias("neighbor_id"),
-                F.explode(per_entry).alias("_s"),
-            )
-            .filter(F.col("_s")["probed"])
-            .select(
-                F.col("_s")["query_id"].alias("query_id"),
-                "neighbor_id",
-                F.col("_s")["adist"].alias("adist"),
-            )
-            .filter(F.col("query_id") != F.col("neighbor_id"))
-        )
-    w = Window.partitionBy("query_id").orderBy("adist", "neighbor_id")
-    # r12 note: cosine_topk_pq_rerank truncates its shortlist lineage
-    # with a localCheckpoint before broadcasting (measured −0.7 s); the
-    # same change was A/B'd HERE and measured ~1.2 s SLOWER at sf0.1
-    # (the probed-cell shortlist reads the persisted ivfpq index, whose
-    # InMemoryTableScan already makes the broadcast subtree cheap, while
-    # the checkpoint forces an extra full materialization pass) — so the
-    # ivfpq paths deliberately keep the plain broadcast.
-    short = (
-        cand.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= shortlist)
-        .select("query_id", "neighbor_id")
-    )
-    qvecs = embeddings.filter(query_filter).select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("qvec"),
-        quantized_norm_sq(F.col(vec_col)).alias("qnorm"),
-    )
-    fetched = F.broadcast(short.join(qvecs, "query_id")).join(
-        embeddings.select(
-            F.col(id_col).alias("neighbor_id"),
-            F.col(vec_col).alias("cvec"),
-            quantized_norm_sq(F.col(vec_col)).alias("cnorm"),
-        ),
-        "neighbor_id",
-    )
-    scored = fetched.select(
-        "query_id",
-        "neighbor_id",
-        (
-            quantized_dot(F.col("qvec"), F.col("cvec")).cast("double")
-            / F.sqrt(F.col("qnorm").cast("double") * F.col("cnorm").cast("double"))
-        ).alias("cos_sim"),
-    )
-    w2 = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), "neighbor_id")
-    return (
-        scored.withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id", "neighbor_id", F.col("rank").cast("int").alias("rank"), "cos_sim"
-        )
     )

@@ -2261,8 +2261,8 @@ SELECT vec_id, m, code, qdist FROM enc
     "codeword by exact int64 squared-L2, ties to lowest code; qdist is "
     "the per-subspace reconstruction error. The compression half of "
     "IVF-PQ — n_sub bytes/vector instead of float dims "
-    "(operators/similarity.py:pq_encode; codebook travels as one "
-    "broadcast row, argmin via one sorted indexed-filter pass)",
+    "(operators/similarity.py:pq_encode; one Arrow pass of the numpy PQ "
+    "kernel, codebook in the task closure, first-min argmin)",
     tags=("similarity", "index"),
 )
 def q_pq_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2294,10 +2294,10 @@ SELECT query_id, neighbor_id, CAST(rank AS INTEGER) AS rank, adist FROM (
 """,
     doc="Asymmetric-distance (ADC) top-5 over PQ codes: full-precision "
     "queries precompute an 8x16 int64 LUT of partial squared distances "
-    "(one broadcast row for all queries); corpus distance = 8 table "
-    "lookups summed over the PERSISTED (id, codes) index — query-time "
-    "scan touches ~8 bytes/vector and zero vector arithmetic "
-    "(operators/similarity.py:cosine_topk_pq_adc, pq_index)",
+    "(shipped in the task closure); corpus distance = 8 table lookups "
+    "summed over the codes, encoded in the same Arrow pass (or read "
+    "from a prebuilt pq_index), with a per-batch partial top-k before "
+    "the one window (operators/similarity.py:cosine_topk_pq_adc)",
     tags=("similarity",),
 )
 def q_ann_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2655,9 +2655,9 @@ SELECT query_id, neighbor_id, CAST(rank AS INTEGER) AS rank, cos_sim FROM (
     "end-to-end: codes quantize the residual against the assigned "
     "cell's centroid (finer quantization — residual magnitudes are "
     "small); ADC uses a per-(query, probed cell) LUT on the target "
-    "q - centroid[cell], shipped for all queries as ONE broadcast row "
-    "of |Q|*nprobe entries; only the probed cells' code rows are "
-    "scanned, then the 50-candidate shortlist is exactly re-ranked. "
+    "q - centroid[cell], |Q|*nprobe tables in the task closure of one "
+    "Arrow pass; a row is scored only by the queries probing its cell, "
+    "then the 50-candidate shortlist is exactly re-ranked. "
     "Measured recall@5 0.728 vs 0.656 for raw-vector codes at "
     "nprobe=all (seed codebooks; codebook seeds ids 16..31, disjoint "
     "from the centroids — centroid residuals are identically zero) "

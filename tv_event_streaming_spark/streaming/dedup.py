@@ -69,21 +69,22 @@ def semantic_dedup_stream(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """SEMANTIC dedup on a vector stream: encode each arriving vector
-    to its PQ codes with a PRETRAINED codebook (a stateless map-side
-    projection — tests/test_streaming.py pins stream/batch encode
-    parity), then first-arrival-wins on the code tuple. Two vectors
-    deduplicate iff every subspace quantizes to the same codeword —
-    the streaming approximation of SemDeDup at n_sub·log2(k_codes)
-    bits of resolution, with NO pairwise scoring and NO corpus state:
-    the state store keys on the (watermark-bounded) code strings.
+    to its PQ codes with a PRETRAINED codebook (a stateless Arrow pass
+    of the same kernel as the batch ``pq_encode`` —
+    tests/test_streaming.py pins stream/batch encode parity), then
+    first-arrival-wins on the code tuple. Two vectors deduplicate iff
+    every subspace quantizes to the same codeword — the streaming
+    approximation of SemDeDup at n_sub·log2(k_codes) bits of
+    resolution, with NO pairwise scoring and NO corpus state: the state
+    store keys on the (watermark-bounded) code strings.
 
     The resolution/recall trade is the codebook's: a finer codebook
     (more subspaces/codewords) splits near-duplicates apart; coarser
     merges more. Exactly the batch ``pq_encode``'s arithmetic, so
     offline backfill and live ingestion agree on what is a duplicate."""
-    from pyspark.sql import functions as F  # noqa: PLC0415
+    from pyspark.sql import types as T  # noqa: PLC0415
 
-    from ..operators.similarity import _pq_codebook_row, _pq_firsts, _q
+    from ..operators.similarity import _kernel_pass, _pq_kernel
 
     if codebook is None:
         raise ValueError(
@@ -91,25 +92,18 @@ def semantic_dedup_stream(
             "cannot collect its own seeds (train offline with pq_train / "
             "pq_seed_codebook on the batch corpus)"
         )
-    # the key rides the SAME projection as the data (a join back onto
-    # the stream would be a stateful stream-stream join); the codebook
-    # attaches as a stream-static broadcast row. The only stateful
-    # operator is the dedup itself.
-    cb, sub, n_words = _pq_codebook_row(
-        vectors, n_sub, k_codes, id_col, vec_col, codebook
+    # the key rides the SAME pass as the data (a join back onto the
+    # stream would be a stateful stream-stream join): every input column
+    # passes through and the code key is added, with the codebook in the
+    # task closure. The only stateful operator is the dedup itself.
+    schema = T.StructType(
+        [*vectors.schema.fields, T.StructField("_code_key", T.StringType())]
     )
-    staged = vectors.withColumn("_qv", F.transform(F.col(vec_col), _q))
-    with_key = (
-        staged.crossJoin(F.broadcast(cb))
-        .withColumn(
-            "_code_key",
-            F.array_join(
-                F.transform(
-                    _pq_firsts(sub, n_words), lambda e: e["code"].cast("string")
-                ),
-                ",",
-            ),
-        )
-        .drop("_qv", "_cb")
+
+    def emit(pdf, qv, cells, codes, qdist):
+        return pdf.assign(_code_key=[",".join(map(str, c)) for c in codes.tolist()])
+
+    with_key = _kernel_pass(
+        vectors, id_col, vec_col, schema, emit, pq=_pq_kernel(codebook)
     )
     return dedup_stream(with_key, ["_code_key"], ts_col, watermark).drop("_code_key")
