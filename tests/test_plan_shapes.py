@@ -135,6 +135,33 @@ def test_cell_assignment_runs_the_arrow_kernel(spark, sf_dir, monkeypatch):
         assert n_exchanges(plan) <= 1, n
 
 
+#: entries whose query-set cosine top-k runs the numpy cosine scan
+COSINE_SCAN_ENTRIES = [
+    "ann_cosine_topk",
+    "ann_cosine_ivf",
+    "ann_cosine_lsh",
+    "ann_cosine_lsh_multiprobe",
+    "docs_bow_cosine_topk",
+    "ann_pq_rerank",
+]
+
+
+def test_cosine_paths_run_the_cosine_kernel(spark, sf_dir):
+    """Every cosine in the vector family runs the exact numpy scorer: no
+    executed plan of a ``similarity``-tagged entry carries the
+    interpreted ``zip_with``/``aggregate`` dot, and the query-set top-k
+    entries score in one Arrow pass (``MapInPandas``) with the queries
+    in the task closure."""
+    for name, entry in CATALOG.items():
+        if "similarity" not in entry.tags:
+            continue
+        plan = plan_of(spark, name, sf_dir)
+        assert "aggregate(" not in plan and "zip_with(" not in plan, name
+        if name in COSINE_SCAN_ENTRIES:
+            assert "MapInPandas" in plan, name
+        spark.catalog.clearCache()
+
+
 def test_pq_adc_is_one_fused_arrow_pass(spark, sf_dir):
     # r13: the build-from-embeddings ADC query fuses encode + LUT
     # scoring + per-batch top-k into ONE Arrow pass — no persisted code
@@ -218,15 +245,14 @@ def test_map_side_entries_shuffle_at_most_once(spark, sf_dir, name):
 def test_opq_rotate_stays_map_side(spark, sf_dir):
     """The OPQ permutation is 64 getItems inside the scan projection:
     ann_pq_opq must keep the ann_pq_rerank plan shape (no extra
-    exchange for the rotate). r13: the shortlist is the fused Arrow
-    ADC pass (MapInPandas over the fanned scan + one window) feeding
-    the broadcast-candidate rerank directly — the r12 localCheckpoint
-    re-A/B'd flat once the heavy ADC stages were gone and was
-    dropped."""
+    exchange for the rotate). The shortlist (the fused Arrow ADC pass
+    plus one window) is collected while the plan is built, so the plan
+    is the exact rerank: one Arrow cosine scan over the fanned-out
+    corpus plus the final top-k window."""
     plan = plan_of(spark, "ann_pq_opq", sf_dir)
     assert "MapInPandas" in plan
     assert "InMemoryTableScan" not in plan  # no persisted code table
-    # fan-out + shortlist window + final top-k window
+    # the rerank scan's fan-out + its top-k window
     assert n_exchanges(plan) <= 3
     spark.catalog.clearCache()
 
@@ -234,13 +260,14 @@ def test_opq_rotate_stays_map_side(spark, sf_dir):
 def test_ivfpq_residual_scan_shape(spark, sf_dir):
     """r13: the build-from-embeddings residual query is ONE fused Arrow
     pass (assignment + residual + encode + probed-ADC + per-batch
-    top-k) feeding the shortlist window, then the broadcast-candidate
-    exact rerank — no persisted index materialization, no interpreted
-    HOF chains in the corpus stage."""
+    top-k) feeding the shortlist window; the shortlist is collected
+    while the plan is built and the exact rerank is one Arrow cosine
+    scan — no persisted index materialization, no interpreted HOF
+    chains in the corpus stage."""
     plan = plan_of(spark, "ann_ivfpq_residual", sf_dir)
     assert "MapInPandas" in plan
     assert "InMemoryTableScan" not in plan
-    # fan-out + shortlist window + rerank window + two broadcast builds
+    # the rerank scan's fan-out + its top-k window
     assert n_exchanges(plan) <= 4
     spark.catalog.clearCache()
 

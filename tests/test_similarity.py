@@ -245,6 +245,40 @@ def test_exact_allpairs_is_bruteforce_complete(spark, emb_with_twins):
     assert full == set(want)
 
 
+def test_kmeans_iterates_kmeans_update(spark, sf_dir):
+    """One refinement step of kmeans_centroids IS kmeans_update_stats:
+    every centroid component equals the entry's mean_c for its (cell,
+    dim), bit for bit. Vector 1 is made a copy of vector 0, so cell 1
+    ties to the lower id and stays empty: it keeps its seed."""
+    base = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    v0 = base.filter(F.col("vec_id") == 0).first().embedding
+    emb = base.select(
+        "vec_id",
+        F.when(
+            F.col("vec_id") == 1, F.array(*[F.lit(x) for x in v0]).cast("array<float>")
+        ).otherwise(F.col("embedding")).alias("embedding"),
+    )
+    seeds = dict(S._seed_rows(emb, 16, "vec_id", "embedding"))
+    stats = {(r.cell, r.dim): r.mean_c for r in S.kmeans_update_stats(emb, 16).collect()}
+    assert not any(cell == 1 for cell, _ in stats)
+    cents = S.kmeans_centroids(emb, k=16, iters=1)
+    assert [c for c, _ in cents] == list(range(16))
+    for cell, vec in cents:
+        for d, x in enumerate(vec):
+            assert x == stats.get((cell, d), float(seeds[cell][d])), (cell, d)
+
+
+def test_query_rows_are_bounded(spark, sf_dir, monkeypatch):
+    """The query-side collect is bounded: a query set of exactly the
+    cap runs, one row more raises a ValueError naming the cap."""
+    emb = load_table(spark, sf_dir, "embeddings")
+    monkeypatch.setattr(S, "_QUERY_ROWS_MAX", 5)
+    rows = S.cosine_topk_bruteforce(emb, F.col("vec_id") < 5, k=2).collect()
+    assert {r.query_id for r in rows} == set(range(5))
+    with pytest.raises(ValueError, match="more than 5 query-side rows"):
+        S.cosine_topk_bruteforce(emb, F.col("vec_id") < 6, k=2)
+
+
 def test_kmeans_guards(spark, emb_with_twins):
     """Seeding requires ids 0..k-1; a missing seed raises instead of
     silently mis-assigning."""

@@ -9,12 +9,12 @@ summation order, and each catalog entry hash-equals its DuckDB oracle
 
 Tiers:
 
-- **Brute-force cosine top-k**: the correctness baseline (JVM
-  ``zip_with``/``aggregate`` dots, per-query ``row_number`` top-k) and
-  the exact re-rank stage of every approximate tier.
-- **Random-hyperplane LSH**: banded signatures from a fixed ±1 plane
-  pattern, one int64 matmul per Arrow batch; candidates share a bucket,
-  then exact re-rank.
+- **Query-set cosine top-k**: one exact numpy scan
+  (:func:`_cosine_topk`) with the quantized queries in the task
+  closure. Brute force scores every row; the approximate tiers only
+  change which rows a query admits — a shared LSH bucket (one int64
+  matmul per Arrow batch against a fixed ±1 plane pattern), a probed
+  IVF cell, or a PQ shortlist (the exact re-rank stage).
 - **IVF cells**: nearest-seed-centroid assignment by one exact numpy
   kernel (:func:`_centroid_kernel`), corpus cells in one Arrow pass and
   query probes on the driver. k-means, semantic dedup and the kNN graph
@@ -62,22 +62,30 @@ def _quantizer():
     return quantize
 
 
-def quantized_dot(a: Column, b: Column) -> Column:
-    """Exact int64 dot product of two quantized vectors."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: _q(x) * _q(y)),
-        F.lit(0).cast("long"),
-        lambda acc, v: acc + v,
-    )
+def _cosine_scorer():
+    """The exact quantized cosine, stated once for every caller (the
+    top-k scan, the nearest-centroid kernel, the all-pairs block
+    scorer): ``cosine(a, b)`` over two int64 matrices of quantized rows
+    (:func:`_quantizer`) → the ``(len(a), len(b))`` float64 scores.
 
+    - exact int64 dot products and squared norms (|q| ≤ ~4e6 per
+      component, so sums stay far below 2^63);
+    - ONE IEEE division per score, ``dot / sqrt(na·nb)`` — the same
+      correctly-rounded double sequence as the DuckDB oracles'
+      ``_DOT / sqrt(_NORMSQ·_NORMSQ)`` (plans/datapipe.py);
+    - a zero norm scores 0.0.
 
-def quantized_norm_sq(a: Column) -> Column:
-    return F.aggregate(
-        F.transform(a, lambda x: _q(x) * _q(x)),
-        F.lit(0).cast("long"),
-        lambda acc, v: acc + v,
-    )
+    A factory for the same reason as :func:`_quantizer`."""
+    import numpy as np  # noqa: PLC0415
 
+    def cosine(a, b):
+        na = (a * a).sum(axis=1).astype(np.float64)
+        nb = (b * b).sum(axis=1).astype(np.float64)
+        dots = (a @ b.T).astype(np.float64)
+        denom = np.sqrt(na[:, None] * nb[None, :])
+        return np.divide(dots, denom, out=np.zeros_like(dots), where=denom > 0)
+
+    return cosine
 
 
 def _empty_topk(embeddings: DataFrame, id_col: str, score_field: str) -> DataFrame:
@@ -101,8 +109,111 @@ def nonzero_norm(embeddings: DataFrame, vec_col: str = "embedding") -> DataFrame
     every cosine-scoring entry point and mirrored as a WHERE norm > 0
     in the SQL twins; PQ ENCODING keeps zero vectors (squared-L2 needs
     no normalization — they encode to the all-nearest-codeword row).
-    The filter is one quantized-integer comparison, map-side."""
-    return embeddings.filter(quantized_norm_sq(F.col(vec_col)) > 0)
+
+    The quantized norm is positive iff some component quantizes to a
+    nonzero value, so the filter is that predicate, map-side. A NULL
+    vector or a NULL component has no norm and is excluded too."""
+    vec = F.col(vec_col)
+    return embeddings.filter(
+        F.forall(vec, lambda x: x.isNotNull()) & F.exists(vec, lambda x: _q(x) != 0)
+    )
+
+
+#: Bounds on what a query collects to the driver and ships in its
+#: scan's task closure. A query row is its id and its quantized vector
+#: (8 + 8·dims bytes: ~0.5 MB for 1,024 queries at 64 dims); each
+#: batch also scores a |queries| × batch-rows float64 matrix. A rerank
+#: shortlist entry is a (query, neighbor) id pair (16 bytes), so the
+#: same ~0.5 MB holds 32,768 of them. Past a bound the query raises
+#: instead of growing the closure without limit.
+_QUERY_ROWS_MAX = 1_024
+_SHORTLIST_ROWS_MAX = 32_768
+
+
+def _query_rows(frame: DataFrame, cap: int | None = None) -> list:
+    """The rows of ``frame`` — a query set, or a rerank shortlist with
+    ``cap=_SHORTLIST_ROWS_MAX`` — in one bounded driver collect
+    (``limit(cap + 1)``); more than ``cap`` rows raise ``ValueError``."""
+    cap = _QUERY_ROWS_MAX if cap is None else cap
+    rows = frame.limit(cap + 1).collect()
+    if len(rows) > cap:
+        raise ValueError(
+            f"more than {cap} query-side rows to collect (the task-closure "
+            "bound): narrow the query filter or the shortlist"
+        )
+    return rows
+
+
+def _cosine_topk(
+    frame: DataFrame,
+    q_rows: list,
+    k: int,
+    id_col: str,
+    vec_col: str,
+    candidates=None,
+) -> DataFrame:
+    """The one exact cosine top-k scan behind every query-set tier:
+    the top ``k`` ``(query_id, neighbor_id, rank, cos_sim)`` rows of
+    each query row ``(id, vector)`` over the rows of ``frame``, by
+    :func:`_cosine_scorer`, ties to the lower neighbor id, self-pairs
+    excluded.
+
+    ``candidates`` narrows which rows a query scores (None: every row).
+    It is ``(row_key, probe_sets)``: ``row_key(pdf, qv)`` gives one
+    int64 key per batch row (its bucket, cell or id) and query i scores
+    the rows whose key is in ``probe_sets[i]``.
+
+    ONE :func:`_kernel_pass` with the quantized queries in the task
+    closure; per batch it keeps each query's top ``k`` under
+    (cos_sim DESC, neighbor_id). That order is total, so the per-batch
+    sets contain the global top-k, and one window picks it — the
+    filter-then-refine shape of :func:`_fused_adc_shortlist`."""
+    import numpy as np  # noqa: PLC0415
+    import pandas as pd  # noqa: PLC0415
+
+    if not q_rows:
+        return _empty_topk(frame, id_col, "cos_sim double")
+    qids = np.array([r[0] for r in q_rows], dtype=np.int64)
+    qv = _quantizer()([r[1] for r in q_rows])
+    cosine = _cosine_scorer()
+    id_type = frame.schema[id_col].dataType.simpleString()
+
+    def emit(pdf, cv, cells, codes, qdist):
+        ids = pdf[id_col].to_numpy()
+        admit = ids[None, :] != qids[:, None]
+        if candidates is not None:
+            keys = candidates[0](pdf, cv)
+            admit &= np.stack([np.isin(keys, s) for s in candidates[1]])
+        cols = np.nonzero(admit.any(axis=0))[0]
+        if not len(cols):
+            return None
+        ids, admit = ids[cols], admit[:, cols]
+        cos = cosine(qv, cv[cols])
+        out_q, out_n, out_c = [], [], []
+        for i, q in enumerate(qids):
+            sel = np.nonzero(admit[i])[0]
+            top = sel[np.lexsort((ids[sel], -cos[i, sel]))[:k]]
+            out_q.append(np.full(len(top), q))
+            out_n.append(ids[top])
+            out_c.append(cos[i, top])
+        return pd.DataFrame(
+            {
+                "query_id": np.concatenate(out_q),
+                "neighbor_id": np.concatenate(out_n),
+                "cos_sim": np.concatenate(out_c),
+            }
+        )
+
+    cand = _kernel_pass(
+        frame, id_col, vec_col,
+        f"query_id {id_type}, neighbor_id {id_type}, cos_sim double", emit,
+    )
+    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), "neighbor_id")
+    return (
+        cand.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "neighbor_id", F.col("rank").cast("int").alias("rank"), "cos_sim")
+    )
 
 
 def cosine_topk_bruteforce(
@@ -114,39 +225,14 @@ def cosine_topk_bruteforce(
 ) -> DataFrame:
     """Brute-force cosine top-k: queries (filtered subset) × corpus.
 
-    The query side is broadcast (it's small by construction); the corpus
-    never shuffles at scale. r12: when the corpus scan is one
-    unsplittable file, the |corpus|×|queries| dot-product stage fans out
-    across the cores (scale-adaptive no-op on splittable inputs —
-    fanout.py; measured 1.0-1.2 s single-task at sf0.1 inside
-    ann_recall_eval). Ranking ties break on neighbor id for determinism.
+    The query rows are collected once (bounded, :func:`_query_rows`)
+    and scored against every corpus row in one Arrow pass of
+    :func:`_cosine_topk`; the corpus never shuffles beyond the scan
+    fan-out. Ranking ties break on neighbor id for determinism.
     """
     embeddings = nonzero_norm(embeddings, vec_col)
-    q = embeddings.filter(query_filter).select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec")
-    )
-    c = fan_out_scan(embeddings, id_col).select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("cvec"),
-        quantized_norm_sq(F.col(vec_col)).alias("cnorm"),
-    )
-    pairs = F.broadcast(q.withColumn("qnorm", quantized_norm_sq(F.col("qvec")))).join(
-        c, F.col("query_id") != F.col("neighbor_id")
-    )
-    scored = pairs.select(
-        "query_id",
-        "neighbor_id",
-        (
-            quantized_dot(F.col("qvec"), F.col("cvec")).cast("double")
-            / F.sqrt(F.col("qnorm").cast("double") * F.col("cnorm").cast("double"))
-        ).alias("cos_sim"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), "neighbor_id")
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cos_sim")
-    )
+    q_rows = _query_rows(embeddings.filter(query_filter).select(id_col, vec_col))
+    return _cosine_topk(embeddings.select(id_col, vec_col), q_rows, k, id_col, vec_col)
 
 
 def plane_sign(p: int, d: int) -> int:
@@ -157,18 +243,14 @@ def plane_sign(p: int, d: int) -> int:
     return 1 if ((p * 2654435761 + d * 40503 + 12345) >> 7) % 2 == 0 else -1
 
 
-def banded_signatures_vectorized(
-    dims: int, bands: int, bits_per_band: int
-):
-    """Arrow-batched hyperplane signatures: a ``pandas_udf`` mapping an
-    ``array<float>`` column to ``array<bigint>`` band buckets with ONE
-    int64 matmul per batch against the ±1 plane matrix. Bit p of band b
-    is sign(Σ_d q(vec[d])·plane_sign(b·bits + p, d)) > 0 over the
-    quantized components: exact integer sums, so the bucket equals the
-    DuckDB oracle's (plans.datapipe._lsh_bucket_sql) bit-for-bit."""
+def _signer(dims: int, bands: int, bits_per_band: int):
+    """The numpy hyperplane signer: a quantized int64 matrix → its
+    ``(n, bands)`` int64 band buckets, ONE int64 matmul against the ±1
+    plane matrix. Bit p of band b is sign(Σ_d q(vec[d])·plane_sign(b·bits
+    + p, d)) > 0 over the quantized components: exact integer sums, so
+    the bucket equals the DuckDB oracle's (plans.datapipe._lsh_bucket_sql)
+    bit-for-bit. A factory for the same reason as :func:`_quantizer`."""
     import numpy as np  # noqa: PLC0415
-
-    from pyspark.sql.functions import pandas_udf  # noqa: PLC0415
 
     planes = np.array(
         [
@@ -178,21 +260,32 @@ def banded_signatures_vectorized(
         ],
         dtype=np.int64,
     ).T  # dims × (bands·bits)
-    quantize = _quantizer()
-    n_bands, n_bits = bands, bits_per_band
     weights = np.array([1 << i for i in range(bits_per_band)], dtype=np.int64)
+
+    def sign(qv):
+        bits = (qv @ planes) > 0  # exact int64 dots, sign per plane
+        return bits.reshape(-1, bands, bits_per_band).astype(np.int64) @ weights
+
+    return sign
+
+
+def banded_signatures_vectorized(
+    dims: int, bands: int, bits_per_band: int
+):
+    """Arrow-batched hyperplane signatures: a ``pandas_udf`` mapping an
+    ``array<float>`` column to ``array<bigint>`` band buckets by
+    :func:`_signer`."""
+    from pyspark.sql.functions import pandas_udf  # noqa: PLC0415
+
+    quantize, sign = _quantizer(), _signer(dims, bands, bits_per_band)
 
     @pandas_udf("array<bigint>")
     def sig(vecs):
-        import numpy as _np  # noqa: PLC0415
         import pandas as _pd  # noqa: PLC0415
 
         if len(vecs) == 0:  # np.stack raises on an empty Arrow batch
             return _pd.Series([], dtype=object)
-        mat = quantize(vecs.to_numpy())
-        bits = (mat @ planes) > 0  # exact int64 dots, sign per plane
-        buckets = bits.reshape(-1, n_bands, n_bits).astype(_np.int64) @ weights
-        return _pd.Series(buckets.tolist())
+        return _pd.Series(sign(quantize(vecs.to_numpy())).tolist())
 
     return sig
 
@@ -207,79 +300,36 @@ def cosine_topk_lsh(
     vec_col: str = "embedding",
     probe_hamming: int = 0,
 ) -> DataFrame:
-    """LSH-bucketed ANN: signature equi-join generates candidates, exact
-    quantized cosine re-ranks. Approximate — recall depends on bits.
-    Signatures are Arrow-vectorized (one int64 matmul per batch — see
-    :func:`banded_signatures_vectorized`).
+    """LSH-bucketed ANN: a corpus row is a candidate of a query iff
+    their hyperplane buckets match (:func:`_signer`); the exact
+    quantized cosine ranks the candidates inside the one scan of
+    :func:`_cosine_topk`. Approximate — recall depends on bits.
 
     ``probe_hamming`` is the multi-probe recall lever (the standard
     scale trade: more probes beat more tables because the corpus side
-    is built ONCE): with ``probe_hamming=1`` each query ALSO probes the
-    ``bits`` buckets at Hamming distance 1 from its own (a true near
-    neighbor that lands one sign-flip away — the most likely miss —
-    is recovered). Implemented as a QUERY-side explode over the XOR
-    masks, keeping the corpus-side join an equi-join on ``bucket``
-    (never a popcount theta-join — that would defeat the bucket
-    shuffle/broadcast). Query cost multiplies by ``bits+1``; the corpus
-    is scanned and bucketed exactly once either way. A (query,
-    neighbor) pair matches at most one mask (their bucket XOR is
-    fixed), so no candidate dedup is needed."""
+    is bucketed ONCE): with ``probe_hamming=1`` each query ALSO probes
+    the ``bits`` buckets at Hamming distance 1 from its own (a true
+    near neighbor that lands one sign-flip away — the most likely miss
+    — is recovered). A query's probe set is its bucket XOR each mask;
+    the corpus is scanned and bucketed exactly once either way."""
+    import numpy as np  # noqa: PLC0415
+
     if probe_hamming not in (0, 1):
         raise ValueError("probe_hamming supports 0 (exact bucket) or 1")
     embeddings = nonzero_norm(embeddings, vec_col)
-    sig_udf = banded_signatures_vectorized(dims, 1, bits)
-    sig = embeddings.select(
-        F.col(id_col),
-        F.col(vec_col),
-        F.element_at(sig_udf(F.col(vec_col)), 1).alias("bucket"),
-    )
-    # r12 NOTE: fan-out was A/B'd here and REJECTED — fanning the shared
-    # sig frame put the exchange on the broadcast-build path too
-    # (+0.25 s on ann_cosine_lsh at sf0.1), and a corpus-side-only fan
-    # still measured ~+0.12 s: this entry's single-task stages are
-    # broadcast builds that already overlap the main stage, so the
-    # exchange buys nothing. The corpus stays on the plain scan.
-    masks = [0] + ([1 << i for i in range(bits)] if probe_hamming else [])
-    q = (
-        sig.filter(query_filter)
-        .select(
-            F.col(id_col).alias("query_id"),
-            F.col(vec_col).alias("qvec"),
-            F.explode(
-                F.array(*[F.lit(m).cast("long") for m in masks])
-            ).alias("_mask"),
-            F.col("bucket").alias("_qbucket"),
-        )
-        .select(
-            "query_id",
-            "qvec",
-            F.col("_qbucket").bitwiseXOR(F.col("_mask")).alias("bucket"),
-        )
-    )
-    c = sig.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("cvec"),
-        F.col("bucket"),
-    )
-    pairs = F.broadcast(q).join(c, "bucket").filter(
-        F.col("query_id") != F.col("neighbor_id")
-    )
-    scored = pairs.select(
-        "query_id",
-        "neighbor_id",
-        (
-            quantized_dot(F.col("qvec"), F.col("cvec")).cast("double")
-            / F.sqrt(
-                quantized_norm_sq(F.col("qvec")).cast("double")
-                * quantized_norm_sq(F.col("cvec")).cast("double")
-            )
-        ).alias("cos_sim"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), "neighbor_id")
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cos_sim")
+    q_rows = _query_rows(embeddings.filter(query_filter).select(id_col, vec_col))
+    sign = _signer(dims, 1, bits)
+    masks = np.array([0] + ([1 << i for i in range(bits)] if probe_hamming else []))
+    probes = []
+    if q_rows:
+        qb = sign(_quantizer()([r[1] for r in q_rows]))[:, 0]
+        probes = list(qb[:, None] ^ masks[None, :])
+
+    def bucket(pdf, cv):
+        return sign(cv)[:, 0]
+
+    return _cosine_topk(
+        embeddings.select(id_col, vec_col), q_rows, k, id_col, vec_col, (bucket, probes)
     )
 
 
@@ -310,13 +360,9 @@ def _centroid_kernel(cents: list[tuple[int, list[float]]]):
     """The exact nearest-centroid kernel over ``cents`` ((id, float
     vector) pairs). Its contract, stated once for every caller:
 
-    - quantize each component with :func:`_quantizer`;
-    - exact int64 dot product and squared norm (|q| ≤ ~4e6 per
-      component, so sums stay far below 2^63);
-    - ONE IEEE division per score, ``dot / sqrt(nv·cnormsq)`` — the
-      same correctly-rounded double sequence as the DuckDB oracles'
-      ``_DOT / sqrt(_NORMSQ·_NORMSQ)`` (plans/datapipe.py); a zero norm
-      scores 0.0 against every centroid;
+    - quantize each component with :func:`_quantizer` and score by
+      :func:`_cosine_scorer` (a zero norm scores 0.0 against every
+      centroid);
     - rank centroids by score descending, ties to the lowest id:
       argmax-first for the top 1, a stable sort for the top ``nprobe``.
 
@@ -335,17 +381,14 @@ def _centroid_kernel(cents: list[tuple[int, list[float]]]):
     cents = sorted(cents, key=lambda c: c[0])
     ids = np.array([c[0] for c in cents], dtype=np.int64)
     qc = quantize([c[1] for c in cents])
-    cnormsq = (qc * qc).sum(axis=1).astype(np.float64)
+    cosine = _cosine_scorer()
 
     def nearest(qv, nprobe=None):
         if qv.shape[1] != qc.shape[1]:
             raise ValueError(
                 f"vector length {qv.shape[1]} != centroid dims {qc.shape[1]}"
             )
-        nv = (qv * qv).sum(axis=1).astype(np.float64)
-        dots = (qv @ qc.T).astype(np.float64)
-        denom = np.sqrt(nv[:, None] * cnormsq[None, :])
-        scores = np.divide(dots, denom, out=np.zeros_like(dots), where=denom > 0)
+        scores = cosine(qv, qc)
         if nprobe is None:
             return scores.argmax(axis=1)
         return np.argsort(-scores, axis=1, kind="stable")[:, :nprobe]
@@ -552,6 +595,41 @@ def _probe_cells(kernel, vecs: list, nprobe: int) -> list[list[int]]:
     return ids[nearest(quantize(vecs), nprobe)].tolist()
 
 
+def _kmeans_sums(
+    embeddings: DataFrame, kernel, id_col: str, vec_col: str
+) -> DataFrame:
+    """``(cell, dim, n, sum_q)``: each cell's member count and exact
+    int64 sum of quantized components per dim under ``kernel``'s
+    nearest-cell assignment. ONE :func:`_kernel_pass` whose batches emit
+    their per-(cell, dim) partials (the :func:`_pq_lloyd` pattern), then
+    one groupBy over ≤ #batches·k·dims rows — never the corpus.
+    ``embeddings`` must already be nonzero-norm filtered."""
+    import numpy as np  # noqa: PLC0415
+    import pandas as pd  # noqa: PLC0415
+
+    def emit(pdf, qv, cells, codes, qdist):
+        dims = qv.shape[1]
+        cell_ids, member = np.unique(cells, return_inverse=True)
+        sums = np.zeros((len(cell_ids), dims), dtype=np.int64)
+        np.add.at(sums, member, qv)
+        return pd.DataFrame(
+            {
+                "cell": np.repeat(cell_ids, dims),
+                "dim": np.tile(np.arange(dims, dtype=np.int32), len(cell_ids)),
+                "n": np.repeat(np.bincount(member), dims),
+                "sum_q": sums.ravel(),
+            }
+        )
+
+    parts = _kernel_pass(
+        embeddings.select(id_col, vec_col), id_col, vec_col,
+        "cell bigint, dim int, n bigint, sum_q bigint", emit, kernel=kernel,
+    )
+    return parts.groupBy("cell", "dim").agg(
+        F.sum("n").alias("n"), F.sum("sum_q").alias("sum_q")
+    )
+
+
 def kmeans_centroids(
     embeddings: DataFrame,
     k: int = 16,
@@ -562,86 +640,27 @@ def kmeans_centroids(
     """Distributed spherical-k-means refinement of the IVF seed centroids
     (Lloyd's iterations, cosine assignment, mean update).
 
-    Scale shape per iteration:
-    - assignment is pure map-side: all k centroids travel as ONE
-      broadcast row; each vector argmaxes cosine locally (no corpus
-      shuffle, no row blowup);
-    - the update is ``posexplode(dim) → groupBy(cell, dim) → sum/count``
-      — hash aggregation collapses each input partition to k·dims
-      partials map-side, so the shuffle carries #partitions·k·dims tiny
-      rows (the ``treeAggregate`` shape MLlib uses), never the corpus;
-    - only the k·dims aggregated sums reach the driver.
-
-    Internal float math (this is an index-build step, not an
-    oracle-checked query); empty cells keep their previous centroid.
+    Each iteration is :func:`kmeans_update_stats`' arithmetic: the
+    exact kernel assigns every vector (one Arrow pass, centroids in the
+    task closure) and the per-(cell, dim) quantized sums
+    (:func:`_kmeans_sums`) set each centroid component to
+    ``sum_q / (n·1e6)``, ONE double division. Only the k·dims sums
+    reach the driver. Deterministic under any partitioning; empty cells
+    keep their previous centroid.
     """
     embeddings = nonzero_norm(embeddings, vec_col)
-    spark = embeddings.sparkSession
     seeds = _seed_rows(embeddings, k, id_col, vec_col)
     if len(seeds) != k:
         raise ValueError(
             f"k-means seeding expects ids 0..{k - 1} to exist; "
             f"found {len(seeds)} seed vectors"
         )
-    cents: list[list[float]] = [[float(x) for x in r[1]] for r in seeds]
-    dims = len(cents[0])
-
+    cents = [[float(x) for x in r[1]] for r in seeds]
     for _ in range(iters):
-        import math  # noqa: PLC0415
-
-        cents_row = spark.createDataFrame(
-            [
-                (
-                    [
-                        (i, c, math.sqrt(sum(x * x for x in c)))
-                        for i, c in enumerate(cents)
-                    ],
-                )
-            ],
-            "_cents array<struct<cent_id:int,cvec:array<double>,cnorm:double>>",
-        )
-
-        def cent_score(c: Column) -> Column:
-            dot = F.aggregate(
-                F.zip_with(F.col("_dv"), c["cvec"], lambda x, y: x * y),
-                F.lit(0.0),
-                lambda acc, v: acc + v,
-            )
-            # |v| is constant per row ⇒ dot/|c| is argmax-equivalent to
-            # cosine. A zero-norm centroid would make this NULL/NaN and
-            # break array_max/array_position (silent cell -1) — score it
-            # -inf so no row ever assigns to it.
-            return F.when(c["cnorm"] > 0, dot / c["cnorm"]).otherwise(
-                F.lit(float("-inf"))
-            )
-
-        # argmax via array_position(max): first match ⇒ lowest cent_id
-        # tie-break, and cent_id IS the enumeration index
-        scores = F.transform(F.col("_cents"), cent_score)
-        best = (F.array_position(scores, F.array_max(scores)) - 1).cast("int")
-        staged = embeddings.select(
-            F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("_dv")
-        )
-        sums = (
-            staged.crossJoin(F.broadcast(cents_row))
-            .select(best.alias("cell"), F.posexplode("_dv").alias("dim", "val"))
-            .groupBy("cell", "dim")
-            .agg(
-                F.sum(F.col("val").cast("double")).alias("s"),
-                F.count("*").alias("n"),
-            )
-            .collect()
-        )
-        new_cents = [list(c) for c in cents]
-        acc: dict[int, list[tuple[int, float, int]]] = {}
-        for r in sums:
-            acc.setdefault(r.cell, []).append((r.dim, r.s, r.n))
-        for cell, dim_rows in acc.items():
-            for dim, s, n in dim_rows:
-                new_cents[cell][dim] = s / n
-        cents = new_cents
-
-    return [(i, c) for i, c in enumerate(cents)]
+        kernel = _centroid_kernel(list(enumerate(cents)))
+        for r in _kmeans_sums(embeddings, kernel, id_col, vec_col).collect():
+            cents[r.cell][r.dim] = float(r.sum_q) / float(r.n * QUANT)
+    return list(enumerate(cents))
 
 
 def kmeans_update_stats(
@@ -654,37 +673,24 @@ def kmeans_update_stats(
     DataFrame: assign every vector to its nearest seed centroid (the
     exact kernel, :func:`_centroid_kernel`), then emit the per-(cell,
     dim) sufficient statistics of the centroid update — exact int64
-    component sums + member counts — and the updated centroid mean as
-    ONE final double division. This is exactly the arithmetic
-    :func:`kmeans_centroids` iterates (assignment + mean update), in a
+    component sums + member counts (:func:`_kmeans_sums`) — and the
+    updated centroid mean as ONE final double division. This is exactly
+    the arithmetic :func:`kmeans_centroids` iterates, in a
     cross-engine-deterministic form, so the IVF refinement math carries
-    a DuckDB-oracle hash.
-
-    Scale shape: assignment is one map-side Arrow pass with the
-    centroids in the task closure; the update is posexplode →
-    groupBy(cell, dim) with map-side partial aggregation — the shuffle
-    carries ≤ #partitions·k·dims partial rows, never the corpus."""
+    a DuckDB-oracle hash."""
     embeddings = nonzero_norm(embeddings, vec_col)
     kernel = _centroid_kernel(
         _seed_rows(embeddings, n_centroids, id_col, vec_col)
     )
-    assigned = _assign_cells(embeddings, kernel, id_col, vec_col).select(
-        F.col("cell").cast("long").alias("cell"),
-        F.posexplode(F.transform(F.col(vec_col), _q)).alias("dim", "qval"),
-    )
-    return (
-        assigned.groupBy("cell", "dim")
-        .agg(F.count("*").alias("n"), F.sum("qval").alias("sum_q"))
-        .select(
-            "cell",
-            F.col("dim").cast("int").alias("dim"),
-            F.col("n").cast("long").alias("n"),
-            F.col("sum_q").cast("long").alias("sum_q"),
-            (
-                F.col("sum_q").cast("double")
-                / (F.col("n") * F.lit(QUANT)).cast("double")
-            ).alias("mean_c"),
-        )
+    return _kmeans_sums(embeddings, kernel, id_col, vec_col).select(
+        "cell",
+        "dim",
+        "n",
+        "sum_q",
+        (
+            F.col("sum_q").cast("double")
+            / (F.col("n") * F.lit(QUANT)).cast("double")
+        ).alias("mean_c"),
     )
 
 
@@ -704,13 +710,13 @@ def cosine_topk_ivf(
     Centroids are the vectors with id < ``n_centroids`` — a deterministic
     seed assignment (production would refine with k-means rounds; the
     cell/probe/re-rank machinery is identical and this keeps the operator
-    oracle-checkable). Cell assignment is one map-side Arrow pass of the
-    exact kernel (:func:`_assign_cells`) — NO shuffle and NO ×16 row
-    blowup before the cell join; the queries' probe cells are ranked on
-    the Spark driver by the same kernel and travel as a broadcast frame. At
-    scale the one-time ``repartition(cell)`` of the assigned corpus IS
-    the IVF index build, and queries touch only nprobe/n_centroids of
-    the data.
+    oracle-checkable). The queries' probe cells are ranked on the Spark
+    driver by the exact kernel; the one scan of :func:`_cosine_topk`
+    assigns each corpus row its cell with the same kernel and scores it
+    only against the queries that probe that cell — NO shuffle and NO
+    ×nprobe row blowup. At scale the one-time ``partitionBy(cell)``
+    write of :func:`build_ivf_index` IS the index build, and queries
+    read only nprobe/n_centroids of the data.
     """
     embeddings = nonzero_norm(embeddings, vec_col)
     kernel = _centroid_kernel(
@@ -718,37 +724,15 @@ def cosine_topk_ivf(
         if centroids is not None  # refined centroids, e.g. kmeans_centroids
         else _seed_rows(embeddings, n_centroids, id_col, vec_col)
     )
-    assign = _assign_cells(embeddings, kernel, id_col, vec_col).select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("cvec"),
-        "cell",
-        quantized_norm_sq(F.col(vec_col)).alias("cnorm"),
-    )
-    q_rows = embeddings.filter(query_filter).select(id_col, vec_col).collect()
-    cells = _probe_cells(kernel, [r[1] for r in q_rows], nprobe)
-    id_type, vec_type = (
-        embeddings.schema[c].dataType.simpleString() for c in (id_col, vec_col)
-    )
-    probes = embeddings.sparkSession.createDataFrame(
-        [(r[0], r[1], c) for r, cs in zip(q_rows, cells) for c in cs],
-        f"query_id {id_type}, qvec {vec_type}, cell int",
-    ).withColumn("qnorm", quantized_norm_sq(F.col("qvec")))
-    cands = F.broadcast(probes).join(assign, "cell").filter(
-        F.col("query_id") != F.col("neighbor_id")
-    )
-    scored = cands.select(
-        "query_id",
-        "neighbor_id",
-        (
-            quantized_dot(F.col("qvec"), F.col("cvec")).cast("double")
-            / F.sqrt(F.col("qnorm").cast("double") * F.col("cnorm").cast("double"))
-        ).alias("cos_sim"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), "neighbor_id")
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", F.col("rank").cast("int").alias("rank"), "cos_sim")
+    q_rows = _query_rows(embeddings.filter(query_filter).select(id_col, vec_col))
+    probes = _probe_cells(kernel, [r[1] for r in q_rows], nprobe)
+    ids, _, _, nearest = kernel
+
+    def cell(pdf, cv):
+        return ids[nearest(cv)]
+
+    return _cosine_topk(
+        embeddings.select(id_col, vec_col), q_rows, k, id_col, vec_col, (cell, probes)
     )
 
 
@@ -761,11 +745,10 @@ def build_ivf_index(
     vec_col: str = "embedding",
 ) -> None:
     """Materialize the IVF index: the corpus written ONCE partitioned by
-    its assigned cell (``cell=<id>/`` parquet directories). This is the
-    one-time shuffle the in-memory :func:`cosine_topk_ivf` only talks
-    about — after it, every query reads ONLY its probed cells via
-    partition pruning (the scan's PartitionFilters, verified in
-    tests/test_similarity.py), i.e. nprobe/n_centroids of the data.
+    its assigned cell (``cell=<id>/`` parquet directories). After it,
+    every query reads ONLY its probed cells via partition pruning (the
+    scan's PartitionFilters, verified in tests/test_similarity.py),
+    i.e. nprobe/n_centroids of the data.
 
     Cell assignment is the map-side kernel pass (no corpus shuffle
     besides the partitioned write itself).
@@ -778,12 +761,6 @@ def build_ivf_index(
     )
     (
         _assign_cells(embeddings, kernel, id_col, vec_col)
-        .select(
-            F.col(id_col),
-            F.col(vec_col),
-            quantized_norm_sq(F.col(vec_col)).alias("cnorm"),
-            "cell",
-        )
         .write.mode("overwrite")
         .partitionBy("cell")
         .parquet(path)
@@ -803,39 +780,22 @@ def query_ivf_index(
     kernel (a zero-norm query scores 0.0 everywhere and so probes the
     lowest ids), so the cell predicate reaches the scan as a PARTITION
     FILTER — only nprobe/n_centroids of the index files are read. The
-    scored candidate set is |queries|·(probed cells), never the
-    corpus."""
+    scan of :func:`_cosine_topk` scores a row only against the queries
+    that probe its ``cell`` column."""
     cells = _probe_cells(
         _centroid_kernel(centroids), [v for _, v in query_vecs], nprobe
     )
-    qdf = spark.createDataFrame(
-        [(int(qid), qvec, c) for (qid, qvec), cs in zip(query_vecs, cells) for c in cs],
-        "query_id long, qvec array<float>, cell int",
+    index = (
+        spark.read.parquet(path)
+        .filter(F.col("cell").isin(sorted({c for cs in cells for c in cs})))
+        .select("vec_id", "embedding", "cell")
     )
-    index = spark.read.parquet(path)
-    cells_needed = sorted({c for cs in cells for c in cs})
-    cands = (
-        index.filter(F.col("cell").isin(cells_needed))
-        .join(F.broadcast(qdf), "cell")
-        .filter(F.col("query_id") != F.col("vec_id"))
-    )
-    scored = cands.select(
-        "query_id",
-        F.col("vec_id").alias("neighbor_id"),
-        (
-            quantized_dot(F.col("qvec"), F.col("embedding")).cast("double")
-            / F.sqrt(
-                quantized_norm_sq(F.col("qvec")).cast("double")
-                * F.col("cnorm").cast("double")
-            )
-        ).alias("cos_sim"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), "neighbor_id")
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", F.col("rank").cast("int").alias("rank"), "cos_sim")
-    )
+
+    def cell(pdf, cv):
+        return pdf["cell"].to_numpy()
+
+    q_rows = [(int(qid), qvec) for qid, qvec in query_vecs]
+    return _cosine_topk(index, q_rows, k, "vec_id", "embedding", (cell, cells))
 
 
 def allpairs_cosine_lsh(
@@ -952,7 +912,7 @@ def _make_block_scorer(idc: str, vecc: str, thr: float | None):
     to the (b,b) groups, so each pair is scored exactly once per bucket.
     The closure is self-contained (numpy/pandas only): safe to pickle by
     value into sessions that can't import this package on workers."""
-    quantize = _quantizer()
+    quantize, cosine = _quantizer(), _cosine_scorer()
 
     def score_group(pdf):
         import numpy as _np  # noqa: PLC0415
@@ -960,11 +920,7 @@ def _make_block_scorer(idc: str, vecc: str, thr: float | None):
 
         ids = pdf[idc].to_numpy()
         mat = quantize(pdf[vecc].to_numpy())
-        norms = (mat * mat).sum(axis=1)
-        dots = mat @ mat.T  # exact int64
-        cos = dots.astype(_np.float64) / _np.sqrt(
-            norms.astype(_np.float64)[:, None] * norms.astype(_np.float64)[None, :]
-        )
+        cos = cosine(mat, mat)
         mask = ids[:, None] < ids[None, :]  # a < b, no self-pairs
         if pdf["_gi"].iat[0] != pdf["_gj"].iat[0]:
             blks = pdf["_blk"].to_numpy()
@@ -1413,21 +1369,13 @@ def ann_recall_at_k(
     double cast). Queries with zero LSH candidates still appear (recall
     0), so a collapsed bucket cannot silently vanish from the average.
 
-    Scale shape: both rankings are the already-analyzed operators
-    (:func:`cosine_topk_bruteforce` broadcasts only the query side;
-    :func:`cosine_topk_lsh` buckets the corpus once and explodes probes
-    query-side); the intersection is a semi-join between two top-k-sized
-    frames (≤ |queries|·k rows each), and the final groupBy is
-    query-count-sized. Evaluate recall on a SAMPLE of queries at scale —
-    the brute-force side is the O(|queries|·N) term."""
-    # r12 NOTE: the exact ranking feeds two branches (hits semi-join +
-    # per-query universe) and Spark does not share subtrees, so the
-    # brute leg plans twice — but a lazy localCheckpoint here was A/B'd
-    # and REJECTED (2.0 → 3.6 s at sf0.1): the duplicated legs execute
-    # as OVERLAPPING broadcast builds, so the duplication costs ~zero
-    # wall, while the checkpoint serializes them behind a barrier. At
-    # real scale the brute side is already sample-sized by contract
-    # (docstring above), so the duplication stays broadcast-band.
+    Scale shape: both rankings are one scan of :func:`_cosine_topk`
+    with the queries in the task closure (brute force scores every
+    row, LSH only the rows in a query's probed buckets); the
+    intersection is a semi-join between two top-k-sized frames (≤
+    |queries|·k rows each), and the final groupBy is query-count-sized.
+    Evaluate recall on a SAMPLE of queries at scale — the brute-force
+    side is the O(|queries|·N) term."""
     exact = cosine_topk_bruteforce(embeddings, query_pred, k, id_col, vec_col).select(
         "query_id", "neighbor_id"
     )
@@ -1766,7 +1714,7 @@ def _adc_rank(cand: DataFrame, k: int) -> DataFrame:
 
 def _exact_rerank(
     embeddings: DataFrame,
-    query_filter: Column,
+    q_rows: list,
     cand: DataFrame,
     k: int,
     id_col: str,
@@ -1774,42 +1722,21 @@ def _exact_rerank(
 ) -> DataFrame:
     """Exact top-``k`` of a ``(query_id, neighbor_id)`` shortlist by
     quantized cosine, ties to the lower neighbor id — the faiss
-    ``refine`` stage of every PQ query. The shortlist joined with its
-    query vectors (≤ |Q|·shortlist rows) is the BROADCAST side of the
-    fetch join, so the corpus-sized embeddings never shuffle; scoring
-    and the window run on candidate-sized data."""
-    # No localCheckpoint before the broadcast: r12 added one when the
-    # shortlist's lineage was the multi-stage interpreted ADC plan
-    # running inside the broadcast-build thread (3.9 → 2.8 s). Once the
-    # shortlist became one fused Arrow pass plus one window it re-A/B'd
-    # flat on ann_pq_rerank (1.68 vs 1.72 s) and ~1.2 s SLOWER on the
-    # IVF-PQ query (an extra full materialization pass), so it is gone.
-    qvecs = embeddings.filter(query_filter).select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("qvec"),
-        quantized_norm_sq(F.col(vec_col)).alias("qnorm"),
-    )
-    fetched = F.broadcast(cand.join(qvecs, "query_id")).join(
-        embeddings.select(
-            F.col(id_col).alias("neighbor_id"),
-            F.col(vec_col).alias("cvec"),
-            quantized_norm_sq(F.col(vec_col)).alias("cnorm"),
-        ),
-        "neighbor_id",
-    )
-    scored = fetched.select(
-        "query_id",
-        "neighbor_id",
-        (
-            quantized_dot(F.col("qvec"), F.col("cvec")).cast("double")
-            / F.sqrt(F.col("qnorm").cast("double") * F.col("cnorm").cast("double"))
-        ).alias("cos_sim"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), "neighbor_id")
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", F.col("rank").cast("int").alias("rank"), "cos_sim")
+    ``refine`` stage of every PQ query, for the query rows ``q_rows``.
+    The shortlist (≤ |Q|·shortlist rows) is collected once, bounded by
+    :data:`_SHORTLIST_ROWS_MAX`, and the scan of :func:`_cosine_topk`
+    scores a corpus row only against the queries that shortlisted it,
+    so the corpus never shuffles."""
+    short: dict = {}
+    for q, n in _query_rows(cand.select("query_id", "neighbor_id"), _SHORTLIST_ROWS_MAX):
+        short.setdefault(q, []).append(n)
+
+    def row_id(pdf, cv):
+        return pdf[id_col].to_numpy()
+
+    probes = [short.get(r[0], []) for r in q_rows]
+    return _cosine_topk(
+        embeddings.select(id_col, vec_col), q_rows, k, id_col, vec_col, (row_id, probes)
     )
 
 
@@ -1855,7 +1782,7 @@ def cosine_topk_pq_adc(
         # SQL plan whose seed CTE is empty.
         return _empty_topk(embeddings, id_col, "adist bigint")
     pq = _pq_kernel(codebook)
-    q_rows = embeddings.filter(query_filter).select(id_col, vec_col).collect()
+    q_rows = _query_rows(embeddings.filter(query_filter).select(id_col, vec_col))
     source, vcol = (embeddings, vec_col) if index is None else (index, None)
     cand = _fused_adc_shortlist(source, pq, _adc_tables(pq, q_rows), k, id_col, vcol)
     return _adc_rank(cand, k)
@@ -1890,11 +1817,14 @@ def cosine_topk_pq_rerank(
         )
     if not codebook:
         return _empty_topk(embeddings, id_col, "cos_sim double")
-    cand = cosine_topk_pq_adc(
-        embeddings, query_filter, shortlist, n_sub, k_codes, id_col, vec_col,
-        codebook,
-    ).select("query_id", "neighbor_id")
-    return _exact_rerank(embeddings, query_filter, cand, k, id_col, vec_col)
+    pq = _pq_kernel(codebook)
+    q_rows = _query_rows(embeddings.filter(query_filter).select(id_col, vec_col))
+    cand = _fused_adc_shortlist(
+        embeddings, pq, _adc_tables(pq, q_rows), shortlist, id_col, vec_col
+    )
+    return _exact_rerank(
+        embeddings, q_rows, _adc_rank(cand, shortlist), k, id_col, vec_col
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -2049,14 +1979,15 @@ def _ivfpq_topk(
     if not codebook:
         return _empty_topk(embeddings, id_col, "cos_sim double")
     pq = _pq_kernel(codebook)
-    q_rows = embeddings.filter(query_filter).select(id_col, vec_col).collect()
+    q_rows = _query_rows(embeddings.filter(query_filter).select(id_col, vec_col))
     tables = _adc_tables(pq, q_rows, kernel, nprobe, residual)
     source, vcol = (embeddings, vec_col) if index is None else (index, None)
     cand = _fused_adc_shortlist(
         source, pq, tables, shortlist, id_col, vcol, kernel, residual
     )
-    short = _adc_rank(cand, shortlist).select("query_id", "neighbor_id")
-    return _exact_rerank(embeddings, query_filter, short, k, id_col, vec_col)
+    return _exact_rerank(
+        embeddings, q_rows, _adc_rank(cand, shortlist), k, id_col, vec_col
+    )
 
 
 def cosine_topk_ivfpq(

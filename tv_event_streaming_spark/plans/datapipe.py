@@ -483,8 +483,10 @@ SELECT query_id, neighbor_id, CAST(rank AS INTEGER) AS rank, cos_sim FROM (
   FROM scored
 ) WHERE rank <= 5
 """,
-    doc="Brute-force cosine top-5 neighbors for query vectors 0-4 "
-    "(int64-quantized dot products — exact cross-engine)",
+    doc="Brute-force cosine top-5 neighbors for query vectors 0-4: one "
+    "Arrow pass of the numpy cosine scan with the queries in the task "
+    "closure, per-batch top-k, one window (int64-quantized dot products "
+    "— exact cross-engine; operators/similarity.py:cosine_topk_bruteforce)",
     tags=("similarity",),
 )
 def q_ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -547,7 +549,8 @@ FROM ex GROUP BY cell, dim
     doc="One Lloyd iteration of the IVF k-means refinement, "
     "driver-hashable: quantized-integer cell assignment (ties to lowest "
     "centroid id) + per-(cell,dim) exact int64 component sums, counts, "
-    "and the mean update as one final double division "
+    "and the mean update as one final double division; one Arrow pass "
+    "emits per-batch (cell, dim) partials that one groupBy sums "
     "(operators/similarity.py:kmeans_update_stats — the same arithmetic "
     "kmeans_centroids iterates)",
     tags=("similarity", "index"),
@@ -1557,7 +1560,7 @@ SELECT query_id, neighbor_id, CAST(rank AS INTEGER) AS rank, cos_sim FROM (
 """,
     doc="Bag-of-words cosine top-k over the DOCUMENTS table end-to-end: "
     "feature-hash embeddings (map-side, no model) feed the existing "
-    "broadcast brute-force ANN operator unchanged — text-to-vector-to-"
+    "brute-force cosine scan unchanged — text-to-vector-to-"
     "neighbors in one composed plan, quantization-exact because the "
     "vector components are integer counts. The LSH/IVF tiers accept "
     "the same frame for the 100 TB path",

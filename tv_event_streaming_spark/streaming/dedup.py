@@ -63,8 +63,6 @@ def semantic_dedup_stream(
     codebook: list[list[list[int]]],
     ts_col: str = "ts",
     watermark: str = "1 hour",
-    n_sub: int = 8,
-    k_codes: int = 16,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
