@@ -3,9 +3,15 @@ must stay row-for-row identical — every oracle depends on it."""
 
 from __future__ import annotations
 
+import os
+import shutil
+
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 
-from tv_event_streaming_spark.domain import derive_domain, with_domain
+from tv_event_streaming_spark import domain
+from tv_event_streaming_spark.domain import TABLES, derive_domain, with_domain
 
 from .oracle import canonicalize, duck_connection
 
@@ -40,3 +46,68 @@ def test_pivot_value_list_matches_data(spark, sf_dir):
         .collect()
     }
     assert types == set(EVENT_TYPES), types
+
+
+def test_derive_domain_submits_no_jobs(spark, sf_dir, tmp_path):
+    """Schemas and dim counts come from parquet footers, so deriving the
+    domain of a directory the session has never read submits no job
+    (Spark's schema inference and the two dim count()s ran 14)."""
+    fresh = str(tmp_path / "sf")
+    shutil.copytree(sf_dir, fresh)
+    sc = spark.sparkContext
+    group = "pin-derive-domain"
+    sc.setJobGroup(group, group)
+    try:
+        d = derive_domain(spark, fresh)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+    assert d["user_prefs"].count() == derive_domain(spark, sf_dir)["user_prefs"].count()
+
+
+@pytest.mark.parametrize("name", TABLES)
+def test_footer_read_schema_equals_inferred(spark, sf_dir, monkeypatch, name):
+    """The footer schema is the one Spark infers, and the frame
+    ``load_tables`` builds from it (timestamp normalization included)
+    has the schema of ``load_table``'s, whose schema Spark infers."""
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    assert domain.footer_schema(path) == spark.read.parquet(path).schema
+    monkeypatch.setattr(domain, "_TABLE_CACHE", {})
+    footer = domain.load_tables(spark, sf_dir)[name].schema
+    monkeypatch.setattr(domain, "_TABLE_CACHE", {})
+    assert footer == domain.load_table(spark, sf_dir, name).schema
+
+
+@pytest.mark.parametrize("int96", [False, True], ids=["int64", "int96"])
+def test_footer_schema_timestamps_and_arrays(spark, tmp_path, int96):
+    """TIMESTAMP(NANOS) reads as raw longs (``nanosAsLong``), UTC-adjusted
+    micros as ``timestamp``, naive micros as ``timestamp_ntz``, INT96 as
+    ``timestamp``; lists of floats as arrays. Schema and rows equal what
+    Spark's own inference reads."""
+    path = str(tmp_path / "t.parquet")
+    pq.write_table(
+        pa.table(
+            {
+                "ns": pa.array([1_500_000_000_123_456_789, None], pa.timestamp("ns")),
+                "us_tz": pa.array([1_500_000_000_123_456, 7], pa.timestamp("us", tz="UTC")),
+                "us": pa.array([None, 1_500_000_000_123_456], pa.timestamp("us")),
+                "v": pa.array([[1.5, None], []], pa.list_(pa.float32())),
+                "s": pa.array(["a", None], pa.large_string()),
+            }
+        ),
+        path,
+        use_deprecated_int96_timestamps=int96,
+    )
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    inferred = spark.read.parquet(path)
+    schema = domain.footer_schema(path)
+    assert schema == inferred.schema
+    got = spark.read.schema(schema).parquet(path)
+    assert sorted(map(repr, got.collect())) == sorted(map(repr, inferred.collect()))
+
+
+def test_footer_schema_defers_unmapped_types(tmp_path):
+    """A footer type the mapping does not cover leaves inference to Spark."""
+    path = str(tmp_path / "u.parquet")
+    pq.write_table(pa.table({"u": pa.array([1], pa.uint32())}), path)
+    assert domain.footer_schema(path) is None

@@ -298,3 +298,36 @@ def test_small_upsert_submits_at_most_four_jobs(spark, tmp_path):
     assert out == {"version": 1, "inserts": 10, "modifies": 10}
     jobs = sc.statusTracker().getJobIdsForGroup(group)
     assert 1 <= len(jobs) <= 4, len(jobs)
+
+
+@pytest.mark.parametrize("journal", [False, True], ids=["no_journal", "journal"])
+def test_bulk_load_submits_few_jobs(spark, tmp_path, journal):
+    """A first upsert of cap + 1 rows into an empty table (seeding, the
+    initial load) skips the probe-match-classify MERGE: the bounded probe,
+    then one dedup and one bucketed write (two jobs under AQE), plus one
+    copy into the journal when there is one. The Spark MERGE of the same
+    batch ran 9."""
+    from pyspark.sql import functions as F
+    from pyspark.sql import types as T
+
+    from tv_event_streaming_spark.streaming.storage import (
+        LOCAL_MERGE_MAX_ROWS,
+        KeyedTable,
+    )
+
+    schema = T.StructType(
+        [T.StructField("k", T.LongType(), False), T.StructField("v", T.StringType())]
+    )
+    table = KeyedTable(spark, str(tmp_path / "t"), ["k"], schema, journal=journal)
+    n = LOCAL_MERGE_MAX_ROWS + 1
+    batch = spark.range(n).select(F.col("id").alias("k"), F.lit("a").alias("v"))
+    sc = spark.sparkContext
+    group = f"pin-bulk-load-{journal}"
+    sc.setJobGroup(group, group)
+    try:
+        out = table.upsert(batch)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert out == {"version": 0, "inserts": n, "modifies": 0}
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert 1 <= len(jobs) <= 4 + journal, len(jobs)

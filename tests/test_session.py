@@ -58,6 +58,15 @@ def test_gclocker_flag_kept_when_version_unknown(tmp_path):
     assert "-XX:+IgnoreUnrecognizedVMOptions" in opts
 
 
+def test_compiler_pool_left_to_hotspot(tmp_path):
+    # HotSpot sizes the compiler pool from the CPUs the process may use;
+    # a fixed count sized for a wide box starves a small one at start-up
+    for i, release in enumerate(('JAVA_VERSION="17.0.11"\n', 'JAVA_VERSION="24.0.1"\n', None)):
+        home = tmp_path / str(i)
+        home.mkdir()
+        assert "CICompilerCount" not in _opts_for(release, home)
+
+
 def test_env_override_wins(tmp_path):
     with mock.patch.dict(
         os.environ, {"SPARK_GRAFT_DRIVER_JAVA_OPTS": "-Xmx1g"}

@@ -154,6 +154,18 @@ def test_ivf_index_partition_pruning(spark, emb_with_twins, tmp_path):
     pf = re.search(r"PartitionFilters: \[([^\]]*)\]", plan)
     assert pf and "cell" in pf.group(1), f"cell predicate not pushed: {pf}"
 
+    # the index format does not depend on the corpus' column names
+    renamed = str(tmp_path / "ivf_renamed")
+    S.build_ivf_index(
+        emb_with_twins.select(F.col("vec_id").alias("id"), F.col("embedding").alias("v")),
+        renamed,
+        centroids=cents,
+        id_col="id",
+        vec_col="v",
+    )
+    again = S.query_ivf_index(spark, renamed, qs, cents, k=1, nprobe=4)
+    assert sorted(map(tuple, again.collect())) == sorted(map(tuple, topk.collect()))
+
 
 def test_kmeans_refined_ivf_keeps_recall(spark, emb_with_twins):
     """Lloyd's refinement produces k usable centroids, and IVF with the

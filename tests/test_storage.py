@@ -3,7 +3,8 @@ crash-restart from a streaming checkpoint (ST9).
 
 Small batches take the driver-local MERGE; every example test also runs
 on the Spark path (``test_spark_path_passes_every_case``, which sets the
-size cap to 0), and the remaining tests pin the size rule and the
+size cap to 0, so each first upsert into an empty table takes the bulk
+load), and the remaining tests pin the size rule, the bulk load and the
 pyarrow-written files' round trip through Spark."""
 
 from __future__ import annotations
@@ -329,6 +330,67 @@ def test_size_rule_boundary(spark, tmp_path, monkeypatch):
     assert {(r.k, r.v) for r in table.read().collect()} == {
         (2, "a"), (3, "a"), (4, "a"), (9, "b")
     }
+
+
+@pytest.mark.parametrize("journal", [True, False], ids=["journal", "no_journal"])
+def test_bulk_load_into_empty_table(spark, tmp_path, monkeypatch, journal):
+    """An upsert bigger than the cap into an empty table is a bulk load:
+    duplicate keys collapse, every row is an INSERT at version 0, a crash
+    before the pointer flip leaves the table empty and the replay
+    converges, and later local and Spark MERGEs run over the
+    Spark-written buckets."""
+    calls = _local_calls(monkeypatch)
+    bulk: list[int] = []
+    real_bulk, real_flip = KeyedTable._bulk_load, KeyedTable._flip
+
+    def spy(self, batch):
+        bulk.append(self.current_version())
+        return real_bulk(self, batch)
+
+    def crash(self, v):
+        raise RuntimeError("simulated crash before the flip")
+
+    monkeypatch.setattr(KeyedTable, "_bulk_load", spy)
+    monkeypatch.setattr(storage, "LOCAL_MERGE_MAX_ROWS", 4)
+    root = str(tmp_path / "t")
+    table = KeyedTable(spark, root, ["k"], KV_SCHEMA, n_buckets=4, journal=journal)
+    rows = [(i, f"x{i}") for i in range(8)]
+    batch = _kv(spark, rows + rows[2:5])  # 3 keys twice
+
+    monkeypatch.setattr(KeyedTable, "_flip", crash)
+    with pytest.raises(RuntimeError, match="crash before the flip"):
+        table.upsert(batch)
+    assert table.current_version() == -1 and table.read().count() == 0
+    monkeypatch.setattr(KeyedTable, "_flip", real_flip)
+    assert table.upsert(batch) == {"version": 0, "inserts": 8, "modifies": 0}
+    assert bulk == [-1, -1] and calls == []
+    assert sorted(map(tuple, table.read().collect())) == rows
+    if journal:  # the crashed attempt's journal rows replay to the same state
+        assert {tuple(r) for r in table.read_changes().collect()} == {
+            ("INSERT", 0, k, v) for k, v in rows
+        }
+
+    monkeypatch.setattr(storage, "LOCAL_MERGE_MAX_ROWS", 50)
+    assert table.upsert(_kv(spark, [(1, "y"), (20, "n")])) == {
+        "version": 1, "inserts": 1, "modifies": 1
+    }
+    monkeypatch.setattr(storage, "LOCAL_MERGE_MAX_ROWS", 0)
+    assert table.upsert(_kv(spark, [(2, "z"), (21, "m")])) == {
+        "version": 2, "inserts": 1, "modifies": 1
+    }
+    assert calls == ["upsert"] and bulk == [-1, -1]
+    expect = dict(rows) | {1: "y", 20: "n", 2: "z", 21: "m"}
+    assert {r.k: r.v for r in table.read().collect()} == expect
+
+    # emptied by deletes, the table takes the bulk path again
+    assert table.delete(_kv(spark, [(k, None) for k in expect]).select("k"))[
+        "deletes"
+    ] == len(expect)
+    assert table.upsert(_kv(spark, [(7, "w")])) == {"version": 4, "inserts": 1, "modifies": 0}
+    assert bulk == [-1, -1, 3]
+    assert {(r.k, r.v) for r in table.read().collect()} == {(7, "w")}
+    if journal:
+        assert ("INSERT", 4, 7, "w") in {tuple(r) for r in table.read_changes().collect()}
 
 
 def _sample_rows(schema: T.StructType) -> list[tuple]:

@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 from tv_event_streaming_spark.domain import derive_domain
 from tv_event_streaming_spark.operators.titles import (
     recommendations_for_users,
+    titles_by_ids,
     titles_for_users,
 )
 from tv_event_streaming_spark.schemas import USER_PREF_SCHEMA
@@ -65,3 +66,12 @@ def test_unenriched_titles_never_served(spark, sf_dir):
         F.col("poster").isNull() | (F.col("poster") == "")
     )
     assert unenriched.count() > 0
+
+
+def test_titles_by_ids_returns_each_present_title_once(spark, sf_dir):
+    """A repeated id yields its title once and an absent id yields
+    nothing (BatchGetItem semantics, web_api.py:177-192)."""
+    d = derive_domain(spark, sf_dir)
+    ids = spark.createDataFrame([(3,), (5,), (3,), (3,), (-1,)], "title_id long")
+    got = sorted(r.title_id for r in titles_by_ids(d["titles"], ids).collect())
+    assert got == [3, 5]

@@ -25,15 +25,19 @@ row-for-row.
 Scale note: every derivation is a narrow projection (no shuffle except
 the final DISTINCT in index/prefs, which groups on the output key). At
 100 TB the dims (sources/genres) stay broadcast-sized; titles/user_prefs
-scale linearly with part/customer and derive map-side.
+scale linearly with part/customer and derive map-side. Deriving the
+domain submits no Spark job: table schemas and the dim counts come from
+parquet footers (``footer_schema``, ``table_rows``).
 """
 
 from __future__ import annotations
 
+import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 TABLES = (
     "region",
@@ -84,6 +88,90 @@ def _session_key(spark: SparkSession) -> str:
     return spark.sparkContext.applicationId
 
 
+def _data_files(path: str) -> list[str]:
+    """``path`` itself, or the parquet data files of a directory (Spark
+    also leaves ``_SUCCESS`` and ``.crc`` files beside them)."""
+    if not os.path.isdir(path):
+        return [path]
+    return sorted(
+        os.path.join(path, f)
+        for f in os.listdir(path)
+        if f.endswith(".parquet") and not f.startswith((".", "_"))
+    )
+
+
+def _spark_type(t) -> T.DataType:
+    """The Spark type of a nested or non-timestamp parquet column that
+    pyarrow reads as ``t``, every level nullable as Spark reads it;
+    TypeError for a type this mapping does not cover."""
+    import pyarrow as pa  # noqa: PLC0415
+    from pyspark.sql.pandas.types import from_arrow_type  # noqa: PLC0415
+
+    if pa.types.is_list(t) or pa.types.is_large_list(t) or pa.types.is_fixed_size_list(t):
+        return T.ArrayType(_spark_type(t.value_type), True)
+    if pa.types.is_struct(t):
+        return T.StructType([T.StructField(f.name, _spark_type(f.type), True) for f in t])
+    if pa.types.is_map(t):
+        return T.MapType(_spark_type(t.key_type), _spark_type(t.item_type), True)
+    flat = (
+        pa.types.is_boolean(t)
+        or pa.types.is_signed_integer(t)
+        or pa.types.is_float32(t)
+        or pa.types.is_float64(t)
+        or pa.types.is_decimal(t)
+        or pa.types.is_string(t)
+        or pa.types.is_large_string(t)
+        or pa.types.is_binary(t)
+        or pa.types.is_large_binary(t)
+        or pa.types.is_fixed_size_binary(t)
+        or pa.types.is_date32(t)
+    )
+    if not flat:
+        raise TypeError(f"no footer mapping for {t}")
+    return from_arrow_type(t)
+
+
+def footer_schema(path: str) -> T.StructType | None:
+    """The schema ``spark.read.parquet(path)`` infers, from the footer of
+    the file (or a directory's first data file) with no Spark job. Top-
+    level timestamps map as Spark reads them: INT96 and UTC-adjusted ones
+    to ``timestamp``, naive ones to ``timestamp_ntz``, TIMESTAMP(NANOS)
+    to ``bigint`` (the reader runs with ``nanosAsLong``). None when the
+    footer holds a type the mapping does not cover (nested timestamps,
+    unsigned ints, ...) or a directory has no top-level data file — the
+    caller then lets Spark infer."""
+    import pyarrow.parquet as pq  # noqa: PLC0415
+
+    files = _data_files(path)
+    if not files:
+        return None
+    pf = pq.ParquetFile(files[0])
+    leaves = {
+        c.path: c for c in (pf.schema.column(i) for i in range(len(pf.schema)))
+    }
+    fields = []
+    for f in pf.schema_arrow:
+        leaf = leaves.get(f.name)
+        try:
+            if leaf is not None and leaf.physical_type == "INT96":
+                dtype = T.TimestampType()
+            elif leaf is None or leaf.logical_type.type != "TIMESTAMP":
+                dtype = _spark_type(f.type)
+            else:
+                ts = json.loads(leaf.logical_type.to_json())
+                dtype = (
+                    T.LongType()
+                    if ts["timeUnit"] == "nanoseconds"
+                    else T.TimestampType()
+                    if ts["isAdjustedToUTC"]
+                    else T.TimestampNTZType()
+                )
+        except TypeError:
+            return None
+        fields.append(T.StructField(f.name, dtype, True))
+    return T.StructType(fields)
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     key = (_session_key(spark), sf_dir, name)
     cached = _TABLE_CACHE.get(key)
@@ -103,57 +191,67 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
+def _read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """``{sf_dir}/{name}.parquet`` read with its footer schema
+    (:func:`footer_schema`), so building the frame submits no job, with
+    the same timestamp normalization as :func:`load_table`."""
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    path = f"{sf_dir}/{name}.parquet"
+    schema = footer_schema(path)
+    df = (spark.read if schema is None else spark.read.schema(schema)).parquet(path)
+    for c in _NANO_TS_COLUMNS.get(name, ()):
+        if c not in df.columns:
+            continue
+        dtype = dict(df.dtypes)[c]
+        if dtype == "bigint":  # TIMESTAMP(NANOS) read as raw nanos
+            df = df.withColumn(c, F.timestamp_micros(F.expr(f"{c} DIV 1000")))
+        elif dtype == "timestamp_ntz":  # micros, isAdjustedToUTC=false
+            df = df.withColumn(c, F.col(c).cast("timestamp"))
+    return df
+
+
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load_table(spark, sf_dir, t) for t in TABLES}
+    """Every test table, read by :func:`_read_table` (no Spark job) and
+    memoized where :func:`load_table` looks, so both hand out the same
+    frame. ``load_table`` on a table not memoized yet still lets Spark
+    infer the schema (one job): every catalog entry reaches it, and a
+    change there re-fingerprints all of them at once (see
+    ``evidence.py``), so it moves onto ``_read_table`` separately."""
+    out = {}
+    for name in TABLES:
+        key = (_session_key(spark), sf_dir, name)
+        if key not in _TABLE_CACHE:
+            _TABLE_CACHE[key] = _read_table(spark, sf_dir, name)
+        out[name] = _TABLE_CACHE[key]
+    return out
 
 
 # Exact row counts straight from parquet footers — the statistics a real
 # metastore publishes (Iceberg/Delta snapshot row counts). Driver-side
 # pyarrow metadata reads: no Spark job, no scan, O(footer) per file.
 # Feeds the engine's approx_rows hints (simhash n_blocks ladder, ANN
-# centroid counts) so auto-knob selection never pays a count() pass.
+# centroid counts) so auto-knob selection never pays a count() pass, and
+# the dim cardinalities ``derive_domain`` folds into its derivations.
 _ROWS_CACHE: dict[tuple[str, str], int] = {}
 
 
 def table_rows(sf_dir: str, name: str) -> int:
     """Row count of ``{sf_dir}/{name}.parquet`` from file-footer
-    metadata (single file or a directory of part files). Exact, but
-    intended as the ``approx_rows`` hint — auto-knob ladders tolerate
-    2× error, footers give 0."""
+    metadata (single file or a directory of part files). Exact: the
+    ``approx_rows`` hints use it (auto-knob ladders tolerate 2× error,
+    footers give 0), and so do the derivations' dim counts."""
     key = (sf_dir, name)
     hit = _ROWS_CACHE.get(key)
     if hit is not None:
         return hit
     import pyarrow.parquet as pq  # noqa: PLC0415
 
-    path = os.path.join(sf_dir, f"{name}.parquet")
-    if os.path.isdir(path):
-        n = sum(
-            pq.read_metadata(os.path.join(path, f)).num_rows
-            for f in os.listdir(path)
-            if f.endswith(".parquet")
-        )
-    else:
-        n = pq.read_metadata(path).num_rows
+    n = sum(
+        pq.read_metadata(f).num_rows
+        for f in _data_files(os.path.join(sf_dir, f"{name}.parquet"))
+    )
     _ROWS_CACHE[key] = n
     return n
-
-
-# Dim cardinalities fold into the derivation arithmetic as literals —
-# the moral equivalent of reading catalog statistics. Resolving them once
-# per (session, sf_dir) keeps every derived plan free of count-subquery
-# cross joins (which otherwise replicate a broadcast exchange per UNION
-# branch); parquet count() is a metadata read.
-_COUNT_CACHE: dict[tuple[str, str], tuple[int, int]] = {}
-
-
-def _dim_counts(spark: SparkSession, sf_dir: str) -> tuple[int, int]:
-    key = (_session_key(spark), sf_dir)
-    if key not in _COUNT_CACHE:
-        sn = load_table(spark, sf_dir, "supplier").count()
-        gn = load_table(spark, sf_dir, "nation").count()
-        _COUNT_CACHE[key] = (sn, gn)
-    return _COUNT_CACHE[key]
 
 
 def sources(supplier: DataFrame) -> DataFrame:
@@ -215,9 +313,8 @@ def title_index(part: DataFrame, sn: int, gn: int) -> DataFrame:
 
     Each title links to 2 sources and 2 genres; the index is the DISTINCT
     union of the (source, genre) pairings, exactly what the reference's
-    nested put-loop materializes. The count cross-joins are 1-row
-    broadcasts; the DISTINCT is the only shuffle and groups on the
-    index's natural key.
+    nested put-loop materializes. The dim counts are literals; the
+    DISTINCT is the only shuffle and groups on the index's natural key.
     """
     pk = F.col("p_partkey")
     # each title carries 2 sources × 2 genres; the index is the full cross
@@ -305,7 +402,11 @@ def derive_domain(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     if hit is not None:
         return dict(hit)
     t = load_tables(spark, sf_dir)
-    sn, gn = _dim_counts(spark, sf_dir)
+    # dim cardinalities fold into the derivations as literals (no
+    # count-subquery cross joins, which replicate a broadcast exchange
+    # per UNION branch), read from footers: building the domain
+    # submits no job
+    sn, gn = table_rows(sf_dir, "supplier"), table_rows(sf_dir, "nation")
     t["sources"] = sources(t["supplier"])
     t["genres"] = genres(t["nation"])
     t["titles"] = titles(t["part"])

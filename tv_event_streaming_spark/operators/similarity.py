@@ -750,17 +750,23 @@ def build_ivf_index(
     scan's PartitionFilters, verified in tests/test_similarity.py),
     i.e. nprobe/n_centroids of the data.
 
-    Cell assignment is the map-side kernel pass (no corpus shuffle
-    besides the partitioned write itself).
+    The index has one format, ``(vec_id, embedding, cell)``, whatever
+    ``id_col``/``vec_col`` name in the input — the columns
+    :func:`query_ivf_index` reads. Cell assignment is the map-side
+    kernel pass (no corpus shuffle besides the partitioned write itself).
     """
-    embeddings = nonzero_norm(embeddings, vec_col)
+    embeddings = nonzero_norm(
+        embeddings.select(
+            F.col(id_col).alias("vec_id"), F.col(vec_col).alias("embedding")
+        )
+    )
     kernel = _centroid_kernel(
         centroids
         if centroids is not None
-        else _seed_rows(embeddings, n_centroids, id_col, vec_col)
+        else _seed_rows(embeddings, n_centroids, "vec_id", "embedding")
     )
     (
-        _assign_cells(embeddings, kernel, id_col, vec_col)
+        _assign_cells(embeddings, kernel, "vec_id", "embedding")
         .write.mode("overwrite")
         .partitionBy("cell")
         .parquet(path)

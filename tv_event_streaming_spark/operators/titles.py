@@ -122,10 +122,11 @@ def titles_by_ids(titles: DataFrame, ids: DataFrame) -> DataFrame:
     (web_api.py:177-192, BatchGetItem chunked by 100). The id list is
     tiny by construction (one user's result set) → broadcast left-semi
     join; the titles table never shuffles and absent ids drop out exactly
-    like DynamoDB's UnprocessedKeys-free response. Chunking is obsolete.
+    like DynamoDB's UnprocessedKeys-free response. A semi join emits each
+    title at most once however often its id repeats, so the id list is
+    not deduplicated first. Chunking is obsolete.
     """
-    key_list = ids.select("title_id").distinct()
-    return titles.join(F.broadcast(key_list), "title_id", "left_semi")
+    return titles.join(F.broadcast(ids.select("title_id")), "title_id", "left_semi")
 
 
 def display_names(

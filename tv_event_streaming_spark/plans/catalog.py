@@ -657,9 +657,8 @@ def q_scalar_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
         # sessions at sf0.1 — warm 0.38s vs from_json's 0.47s, cold 2.2s
         # vs 2.5s. The 9-37s get_json_object cold cliff seen in round 2
         # was a filled-code-cache artifact of long many-query sessions;
-        # the session factory's ReservedCodeCacheSize=1g +
-        # CICompilerCount=16 removed it, so the faster steady-state path
-        # wins again. Same NULL-on-malformed semantics as the oracle's
+        # the session factory's ReservedCodeCacheSize=1g removed it, so
+        # the faster steady-state path wins again. Same NULL-on-malformed semantics as the oracle's
         # json_extract_string.
         F.get_json_object("props", "$.k").cast("long").alias("k_val"),
         F.date_format("ts", "yyyy-MM-dd'T'HH:mm:ss").alias("ts_iso"),

@@ -56,8 +56,7 @@ def _driver_java_options() -> str:
         return override
     opts = (
         "-XX:+IgnoreUnrecognizedVMOptions "
-        "-XX:ReservedCodeCacheSize=1g -XX:+UseCodeCacheFlushing "
-        "-XX:CICompilerCount=16"
+        "-XX:ReservedCodeCacheSize=1g -XX:+UseCodeCacheFlushing"
     )
     major = _java_major_version()
     if major is None or major < 24:
@@ -97,9 +96,11 @@ def get_spark(
         # A catalog-wide run generates hundreds of whole-stage-codegen
         # classes; the JVM default 240 MB code cache fills, HotSpot starts
         # emergency flushing/recompiling, and identical plans swing
-        # 0.5s→50s. A bigger cache keeps compiled code resident, and more
-        # C2 compiler threads drain the compile queue so fresh plans
-        # don't run interpreted behind a backlog.
+        # 0.5s→50s. A bigger cache keeps compiled code resident. The
+        # compiler thread count is left to HotSpot, which sizes it from
+        # the CPUs the process may use (3 at 4 cores, 15 at 32): a fixed
+        # pool larger than that only competes with the session's own
+        # threads for cores during a cold start.
         #
         # GCLockerRetryAllocationCount: JDK 17 retries an allocation only
         # 2× when a GC is blocked by threads in JNI critical regions

@@ -13,23 +13,31 @@ idempotent keyed puts (consumer.py:58-89), nested-field updates
   version) to ``_changes/``, which Structured Streaming can tail as a
   file source — the Delta CDF stand-in.
 
-**Two paths, one commit protocol.** Every MERGE starts with one bounded
-collect: the batch, at most ``LOCAL_MERGE_MAX_ROWS + 1`` rows, comes
-back as Arrow with its bucket ids computed by Spark in the same job (an
-empty batch returns here and writes no version). Then the size rule: if
-the batch plus the live rows of the buckets it touches (summed from
-parquet footers, no job) number at most ``LOCAL_MERGE_MAX_ROWS``, the
-driver does the MERGE in pyarrow — dedup the batch on the key, read the
-touched buckets' files, match keys, write one file per touched bucket
-and at most one journal file. Otherwise the MERGE runs as Spark
-joins and a ``partitionBy`` write, its counts taken by
-``DataFrame.observe`` during the journal write (or the data write, for a
-``journal=False`` table) — no extra count jobs. The small path exists
-because a Spark MERGE of a 20-row batch is almost all per-action
-planning, scheduling and commit overhead. Both paths return the same
-counts, leave the same ``read()`` state and write the same journal rows.
+**Three paths, one commit protocol.** Every MERGE starts with one
+bounded collect: the batch, at most ``LOCAL_MERGE_MAX_ROWS + 1`` rows,
+comes back as Arrow with its bucket ids computed by Spark in the same
+job (an empty batch returns here and writes no version). Then the size
+rule:
 
-Both paths commit the same way: new immutable bucket directories under
+- if the batch plus the live rows of the buckets it touches (summed from
+  parquet footers, no job) number at most ``LOCAL_MERGE_MAX_ROWS``, the
+  driver does the MERGE in pyarrow — dedup the batch on the key, read
+  the touched buckets' files, match keys, write one file per touched
+  bucket and at most one journal file. A Spark MERGE of a 20-row batch
+  is almost all per-action planning, scheduling and commit overhead;
+- a larger upsert into an empty table (seeding, an initial load) is a
+  bulk load: every key is new, so it is one key-dedup and one
+  ``partitionBy`` write counted by ``DataFrame.observe``, and a journaled
+  table copies the written rows into the journal as INSERTs — no
+  persist, touched-bucket collect or join;
+- any other MERGE runs as Spark joins and a ``partitionBy`` write, its
+  counts taken by ``DataFrame.observe`` during the journal write (or
+  the data write, for a ``journal=False`` table) — no extra count jobs.
+
+All paths return the same counts, leave the same ``read()`` state and
+write the same journal rows.
+
+All paths commit the same way: new immutable bucket directories under
 ``data/v=N/`` (a crashed attempt's directory is replaced), then the
 journal rows, then a version MANIFEST mapping every bucket to the
 version directory that last wrote it, then an atomic rename of the
@@ -69,8 +77,8 @@ BUCKET_COL = "bucket__"
 #: Spark: 5 k rows 0.25 vs 1.58 s, 20 k 0.27 vs 1.49 s, 50 k 0.28 vs
 #: 1.42 s, 100 k 0.35 vs 1.95 s, 200 k 0.40 vs 2.10 s — no crossover up
 #: to 200 k, so the cap bounds the driver's memory instead: it holds at
-#: most this many rows, and a bulk load such as seeding the 60 k-row
-#: preferences table stays on Spark.
+#: most this many rows. A larger upsert into an empty table, such as
+#: seeding the 60 k-row preferences table, is a Spark bulk load.
 LOCAL_MERGE_MAX_ROWS = 50_000
 
 _COUNTS = {
@@ -251,9 +259,9 @@ class KeyedTable:
         if head.num_rows == 0:  # empty micro-batches must not write versions
             return {"version": self.current_version(), **dict.fromkeys(_COUNTS[kind], 0)}
         touched = None
+        manifest = self._read_manifest(self.current_version())
         if head.num_rows <= LOCAL_MERGE_MAX_ROWS:
             touched = sorted(pc.unique(head.column(BUCKET_COL)).to_pylist())
-            manifest = self._read_manifest(self.current_version())
             files = [
                 (b, f)
                 for b in touched
@@ -263,6 +271,8 @@ class KeyedTable:
             live = sum(pq.read_metadata(f).num_rows for _, f in files)
             if head.num_rows + live <= LOCAL_MERGE_MAX_ROWS:
                 return self._merge_local(kind, head, manifest, touched, files)
+        elif kind == "upsert" and not manifest:
+            return self._bulk_load(batch)
         # The Spark path persists the batch for the MERGE's duration:
         # three actions read it (touched-bucket collect, journal write,
         # data write), and without the barrier each re-ran the batch's
@@ -387,6 +397,37 @@ class KeyedTable:
         return {"version": v, **counts}
 
     # -- Spark path -----------------------------------------------------------
+
+    def _bulk_load(self, batch: DataFrame) -> dict[str, int]:
+        """An upsert into an empty table: every key is new, so there is
+        nothing to read, match or classify. One key-dedup and one
+        bucketed write, counted by an ``Observation`` on that write; a
+        journaled table then copies the written rows into the journal as
+        INSERTs."""
+        v = self.current_version() + 1
+        obs = Observation()
+        data_dir = os.path.join(self.path, "data", f"v={v}")
+        (
+            batch.select(*self.schema.names)
+            .dropDuplicates(self.key_cols)
+            .observe(obs, F.count(F.lit(1)).alias("inserts"))
+            .withColumn(BUCKET_COL, self._bucket())
+            .write.partitionBy(BUCKET_COL)
+            .mode("overwrite")
+            .parquet(data_dir)
+        )
+        manifest = {
+            int(d.split("=", 1)[1]): os.path.relpath(os.path.join(data_dir, d), self.path)
+            for d in os.listdir(data_dir)
+            if d.startswith(f"{BUCKET_COL}=")
+        }
+        if self.journal:
+            self._read_buckets(manifest).select(
+                F.lit("INSERT").alias("event_name"), F.lit(v).cast("long").alias("version"), "*"
+            ).write.mode("append").parquet(self.changes_dir)
+        self._write_manifest(v, manifest)
+        self._flip(v)
+        return {"version": v, "inserts": obs.get["inserts"], "modifies": 0}
 
     def _touched_buckets(self, batch: DataFrame) -> list[int]:
         """Distinct bucket ids of a batch — bounded by ``n_buckets``
