@@ -331,3 +331,43 @@ def test_bulk_load_submits_few_jobs(spark, tmp_path, journal):
     assert out == {"version": 0, "inserts": n, "modifies": 0}
     jobs = sc.statusTracker().getJobIdsForGroup(group)
     assert 1 <= len(jobs) <= 4 + journal, len(jobs)
+
+
+@pytest.mark.parametrize("journal", [False, True], ids=["no_journal", "journal"])
+def test_one_user_put_submits_no_jobs(spark, tmp_path, journal):
+    """PUT /preferences for one user is a pyarrow lookup of the user's
+    rows, a set diff and one driver-side MERGE: no Spark job, and one
+    table version for its adds and deletes together (none for a no-op
+    PUT). It ran 6 jobs and wrote two versions as two Spark-planned
+    MERGEs."""
+    from tv_event_streaming_spark.operators.preferences import PREF_KEY, set_user_preferences
+    from tv_event_streaming_spark.schemas import USER_PREF_SCHEMA
+    from tv_event_streaming_spark.streaming.storage import KeyedTable
+
+    table = KeyedTable(spark, str(tmp_path / "prefs"), PREF_KEY, USER_PREF_SCHEMA, journal=journal)
+    table.upsert(
+        spark.createDataFrame(
+            [(str(u), kind, str(p)) for u in range(50) for kind in ("source", "genre") for p in range(3)],
+            USER_PREF_SCHEMA,
+        )
+    )
+    sc = spark.sparkContext
+    outs, jobs = [], []
+    for i, body in enumerate([(["1", "7"], ["2"]), (["1", "7"], ["2"])]):
+        group = f"pin-one-user-put-{journal}-{i}"
+        sc.setJobGroup(group, group)
+        try:
+            outs.append((set_user_preferences(table, "7", *body), table.current_version()))
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        jobs.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+    assert outs == [({"adds": 1, "deletes": 4}, 1), ({"adds": 0, "deletes": 0}, 1)]
+    assert jobs == [0, 0]
+    if journal:
+        assert sorted(map(tuple, table.read_changes().filter("version = 1").collect())) == [
+            ("INSERT", 1, "7", "source", "7"),
+            ("REMOVE", 1, "7", "genre", "0"),
+            ("REMOVE", 1, "7", "genre", "1"),
+            ("REMOVE", 1, "7", "source", "0"),
+            ("REMOVE", 1, "7", "source", "2"),
+        ]

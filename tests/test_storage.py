@@ -11,6 +11,9 @@ from __future__ import annotations
 
 import json
 import os
+import re
+import sys
+import threading
 
 import pytest
 from pyspark.sql import functions as F
@@ -365,10 +368,10 @@ def test_bulk_load_into_empty_table(spark, tmp_path, monkeypatch, journal):
     assert table.upsert(batch) == {"version": 0, "inserts": 8, "modifies": 0}
     assert bulk == [-1, -1] and calls == []
     assert sorted(map(tuple, table.read().collect())) == rows
-    if journal:  # the crashed attempt's journal rows replay to the same state
-        assert {tuple(r) for r in table.read_changes().collect()} == {
+    if journal:  # the replay replaced the crashed attempt's journal rows
+        assert sorted(map(tuple, table.read_changes().collect())) == [
             ("INSERT", 0, k, v) for k, v in rows
-        }
+        ]
 
     monkeypatch.setattr(storage, "LOCAL_MERGE_MAX_ROWS", 50)
     assert table.upsert(_kv(spark, [(1, "y"), (20, "n")])) == {
@@ -392,6 +395,134 @@ def test_bulk_load_into_empty_table(spark, tmp_path, monkeypatch, journal):
     if journal:
         assert ("INSERT", 4, 7, "w") in {tuple(r) for r in table.read_changes().collect()}
 
+
+
+@pytest.mark.parametrize("path", ["local", "spark"])
+def test_replay_after_crash_before_flip_journals_each_change_once(spark, tmp_path, monkeypatch, path):
+    """A MERGE that crashes after its journal write but before the
+    ``_CURRENT`` flip leaves the previous version current; replaying it
+    rewrites that version, and the journal holds each of its change
+    rows once, on the driver-local and on the Spark path."""
+    if path == "spark":
+        monkeypatch.setattr(storage, "LOCAL_MERGE_MAX_ROWS", 0)
+    real_flip = KeyedTable._flip
+
+    def crash(self, v):
+        raise RuntimeError("simulated crash before the flip")
+
+    table = KeyedTable(spark, str(tmp_path / "t"), ["k"], KV_SCHEMA, n_buckets=4)
+    table.upsert(_kv(spark, [(i, "a") for i in range(6)]))
+    for merge, expect in [
+        (lambda: table.upsert(_kv(spark, [(1, "b"), (9, "n")])), {"version": 1, "inserts": 1, "modifies": 1}),
+        (lambda: table.delete(_kv(spark, [(2, None), (3, None)]).select("k")), {"version": 2, "deletes": 2}),
+        (lambda: table.update_fields(_kv(spark, [(4, "u")]), ["v"]), {"version": 3, "modifies": 1}),
+    ]:
+        before = sorted(map(tuple, table.read().collect()))
+        monkeypatch.setattr(KeyedTable, "_flip", crash)
+        for _ in range(2):  # two crashed attempts
+            with pytest.raises(RuntimeError, match="crash before the flip"):
+                merge()
+        assert table.current_version() == expect["version"] - 1
+        assert sorted(map(tuple, table.read().collect())) == before
+        monkeypatch.setattr(KeyedTable, "_flip", real_flip)
+        assert merge() == expect
+    assert sorted(map(tuple, table.read().collect())) == [(0, "a"), (1, "b"), (4, "u"), (5, "a"), (9, "n")]
+    assert sorted(map(tuple, table.read_changes().collect())) == sorted(
+        [("INSERT", 0, i, "a") for i in range(6)]
+        + [("MODIFY", 1, 1, "b"), ("INSERT", 1, 9, "n"), ("REMOVE", 2, 2, "a"), ("REMOVE", 2, 3, "a")]
+        + [("MODIFY", 3, 4, "u")]
+    )
+    assert not [f for f in os.listdir(table.changes_dir) if f.startswith(".")]
+
+
+def test_lookup_at_and_past_the_cap(spark, tmp_path, monkeypatch):
+    """``lookup`` returns the current rows matching a key prefix, each
+    with the bucket id Spark computes for it, with no Spark job; more
+    than ``LOCAL_MERGE_MAX_ROWS`` matches return None."""
+    monkeypatch.setattr(storage, "LOCAL_MERGE_MAX_ROWS", 4)
+    key = ["user_id", "kind", "pref_id"]
+    table = KeyedTable(spark, str(tmp_path / "t"), key, USER_PREF_SCHEMA, n_buckets=4)
+    assert table.lookup(user_id="a").num_rows == 0  # no version yet
+    rows = [("a", "source", str(i)) for i in range(4)] + [("b", "genre", str(i)) for i in range(5)]
+    table.upsert(spark.createDataFrame(rows, USER_PREF_SCHEMA))
+    want = {
+        tuple(r)
+        for r in table.read()
+        .select(*key, F.pmod(F.xxhash64(*key), F.lit(4)).cast("int").alias(BUCKET_COL))
+        .collect()
+    }
+    sc = spark.sparkContext
+    sc.setJobGroup("pin-lookup", "pin-lookup")
+    try:
+        at_cap = table.lookup(user_id="a")
+        past_cap = table.lookup(user_id="b")
+        one = table.lookup(user_id="b", pref_id="3")
+        absent = table.lookup(user_id="c")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("pin-lookup") == []
+    assert at_cap.column_names == [*key, BUCKET_COL]
+    assert {tuple(r.values()) for r in at_cap.to_pylist()} == {w for w in want if w[0] == "a"}
+    assert len({b for *_, b in want}) > 1  # the matches came from several buckets
+    assert past_cap is None
+    assert [tuple(r.values()) for r in one.to_pylist()] == [w for w in want if w[:3] == ("b", "genre", "3")]
+    assert absent.num_rows == 0 and absent.schema == at_cap.schema
+
+
+def test_read_returns_one_frame_per_version(spark, tmp_path):
+    """``read()`` hands back the same DataFrame while the version is
+    current, and a fresh one once a MERGE (from any handle on the
+    table) moves ``_CURRENT``; an empty MERGE keeps it."""
+    table = KeyedTable(spark, str(tmp_path / "t"), ["k"], KV_SCHEMA, n_buckets=4)
+    empty = table.read()
+    assert table.read() is empty and empty.count() == 0
+    table.upsert(_kv(spark, [(1, "a"), (2, "b")]))
+    first = table.read()
+    assert first is not empty and table.read() is first
+    table.upsert(_kv(spark, []))
+    assert table.read() is first
+    KeyedTable(spark, table.path, ["k"], KV_SCHEMA, n_buckets=4).delete(_kv(spark, [(1, None)]).select("k"))
+    assert sorted(map(tuple, table.read().collect())) == [(2, "b")]
+    assert sorted(map(tuple, first.collect())) == [(1, "a"), (2, "b")]
+
+
+def test_read_is_never_older_than_the_pointer_under_threads(spark, tmp_path):
+    """Reader threads share ``read()``'s per-version frame while a writer
+    commits versions: a frame read after ``_CURRENT`` named version N
+    always includes version N's bucket directory, never an older one."""
+    table = KeyedTable(spark, str(tmp_path / "t"), ["k"], KV_SCHEMA, n_buckets=4)
+    table.upsert(_kv(spark, [(0, "a")]))
+    n_writes, stale, done = 12, [], threading.Event()
+
+    def newest(df) -> int:
+        return max(int(re.search(r"/v=(\d+)/", f).group(1)) for f in df.inputFiles())
+
+    def reader():
+        while not done.is_set():
+            before = table.current_version()
+            if newest(table.read()) < before:
+                stale.append(before)
+
+    def writer():
+        try:
+            for i in range(1, n_writes + 1):
+                table.upsert(_kv(spark, [(i, "a")]))
+        finally:
+            done.set()
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        threads = [threading.Thread(target=reader) for _ in range(4)] + [threading.Thread(target=writer)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=300)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert table.current_version() == n_writes and stale == []
+    assert newest(table.read()) == n_writes
 
 def _sample_rows(schema: T.StructType) -> list[tuple]:
     """Rows covering every column's type: NULLs in every nullable
@@ -422,7 +553,7 @@ def test_pyarrow_written_buckets_round_trip(spark, tmp_path, monkeypatch, schema
     """Bucket and journal files written by pyarrow read back through
     Spark with every value intact, and a later Spark-path MERGE over
     those buckets (and a local MERGE over Spark-written ones) keeps
-    them intact too."""
+    them intact too, as read by Spark and by ``lookup``."""
     calls = _local_calls(monkeypatch)
     rows = _sample_rows(schema)
     table = KeyedTable(spark, str(tmp_path / "t"), keys, schema, n_buckets=2)
@@ -440,6 +571,10 @@ def test_pyarrow_written_buckets_round_trip(spark, tmp_path, monkeypatch, schema
     assert table.upsert(spark.createDataFrame(rows[1:2], schema))["modifies"] == 1
     assert calls == ["upsert"]
     assert sorted(map(tuple, table.read().collect()), key=repr) == sorted(rows, key=repr)
+    at = [schema.names.index(k) for k in keys]
+    for row in rows:  # lookup reads both kinds of files with every value intact
+        got = table.lookup(**{k: row[i] for k, i in zip(keys, at)}).drop_columns([BUCKET_COL])
+        assert [tuple(r.values()) for r in got.to_pylist()] == [row]
 
 
 def test_stream_changes_reads_local_journal_files_once(spark, tmp_path):

@@ -20,6 +20,11 @@ and without a journal, and all four tables must agree op by op. With
 the Spark tables' size cap at 0, every upsert into an empty table takes
 the bulk load.
 
+A second sequence test does the same for PUT /preferences
+(``set_user_preferences``: lookup, set diff, one MERGE) against a
+Python set model per user: empty bodies, duplicate ids in a body,
+users with no rows and identical re-PUTs all come up.
+
 Each op runs real Spark jobs, so the tier uses a reduced example count
 like the composition tier.
 """
@@ -35,6 +40,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
+from tv_event_streaming_spark.operators.preferences import PREF_KEY, set_user_preferences
+from tv_event_streaming_spark.schemas import USER_PREF_SCHEMA
 from tv_event_streaming_spark.streaming import storage
 from tv_event_streaming_spark.streaming.storage import KeyedTable
 
@@ -47,6 +54,19 @@ SCHEMA = T.StructType(
         T.StructField("extra", T.StringType(), True),
     ]
 )
+
+
+def _four_tables(spark, root, key, schema):
+    """The driver-local and the Spark MERGE path, each with and without
+    a journal."""
+    return {
+        (path, journal): KeyedTable(
+            spark, str(root / f"{path}{journal}"), key, schema, n_buckets=4, journal=journal
+        )
+        for path in ("local", "spark")
+        for journal in (True, False)
+    }
+
 
 # (kind, keys, tag): tag comes from a tiny space so hypothesis
 # naturally generates REDELIVERIES — the same (kind, keys, tag) batch
@@ -77,14 +97,7 @@ def test_keyed_table_matches_model_on_random_op_sequences(
     Observation riding the data write) and the local path computes them
     in pyarrow; all four must give the same counts and state as the
     model, and both journals must replay to it."""
-    root = tmp_path_factory.mktemp("ktfuzz")
-    tables = {
-        (path, journal): KeyedTable(
-            spark, str(root / f"{path}{journal}"), ["k"], SCHEMA, n_buckets=4, journal=journal
-        )
-        for path in ("local", "spark")
-        for journal in (True, False)
-    }
+    tables = _four_tables(spark, tmp_path_factory.mktemp("ktfuzz"), ["k"], SCHEMA)
     model: dict[int, tuple[str | None, str | None]] = {}
 
     def apply(method, *args):
@@ -154,3 +167,54 @@ def test_keyed_table_matches_model_on_random_op_sequences(
         if journal
     }
     assert journals["local"] == journals["spark"], ops
+
+
+# (user, source ids, genre ids): three users, so some never have rows;
+# ids from a tiny space, so bodies repeat ids and whole PUTs recur
+_put = st.tuples(
+    st.integers(0, 2),
+    st.lists(st.integers(0, 3), max_size=4),
+    st.lists(st.integers(0, 3), max_size=4),
+)
+
+
+@settings(
+    max_examples=max(2, _EXAMPLES // 3),
+    deadline=None,
+    suppress_health_check=[HealthCheck.too_slow, HealthCheck.function_scoped_fixture],
+)
+@given(puts=st.lists(_put, min_size=1, max_size=6))
+@example(puts=[(0, [], []), (1, [2, 2, 0], [1, 1]), (1, [0, 2], [1]), (1, [], [3]), (2, [1], []), (1, [], [])])
+def test_put_matches_set_model_on_random_sequences(spark, tmp_path_factory, puts):
+    """Every PUT runs on the four tables, which must return the same
+    counts — the set diff of the body against the user's model set —
+    and end in the model's rows; each journal holds every change once
+    and replays to the model."""
+    tables = _four_tables(spark, tmp_path_factory.mktemp("putfuzz"), PREF_KEY, USER_PREF_SCHEMA)
+    model: dict[str, set[tuple[str, str]]] = {}
+    for user, sources, genres in puts:
+        uid = str(user)
+        body = [str(x) for x in sources], [str(x) for x in genres]
+        want = {("source", x) for x in body[0]} | {("genre", x) for x in body[1]}
+        have = model.get(uid, set())
+        outs = set()
+        for (path, _), kt in tables.items():
+            cap = 0 if path == "spark" else storage.LOCAL_MERGE_MAX_ROWS
+            with mock.patch.object(storage, "LOCAL_MERGE_MAX_ROWS", cap):
+                outs.add(tuple(sorted(set_user_preferences(kt, uid, *body).items())))
+        assert outs == {(("adds", len(want - have)), ("deletes", len(have - want)))}, (outs, puts)
+        model[uid] = want
+
+    rows = sorted((u, kind, x) for u, prefs in model.items() for kind, x in prefs)
+    journals = []
+    for (path, journal), kt in tables.items():
+        assert sorted(map(tuple, kt.read().collect())) == rows, (path, journal, puts)
+        if journal:
+            changes = sorted(map(tuple, kt.read_changes().collect()), key=lambda r: r[1])
+            replayed: set[tuple] = set()
+            for event, _, *row in changes:  # version order; a PUT's sides share no key
+                (replayed.discard if event == "REMOVE" else replayed.add)(tuple(row))
+            assert sorted(replayed) == rows, (path, puts)
+            journals.append(sorted((r[0], *r[2:]) for r in changes))
+    assert journals[0] == journals[1], puts
+

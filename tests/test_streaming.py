@@ -14,7 +14,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from tv_event_streaming_spark.domain import derive_domain
-from tv_event_streaming_spark.operators.preferences import set_user_preferences
+from tv_event_streaming_spark.operators.preferences import PREF_KEY, set_user_preferences
 from tv_event_streaming_spark.schemas import USER_PREF_SCHEMA
 from tv_event_streaming_spark.sources.events import decode_envelope
 from tv_event_streaming_spark.streaming.consumer import (
@@ -162,10 +162,11 @@ def test_preferences_mutation_roundtrip(spark, tmp_path):
 
 @pytest.mark.parametrize("path", ["local", "spark"])
 def test_preferences_put_counts_come_from_the_merges(spark, tmp_path, monkeypatch, path):
-    """PUT /preferences takes its counts from the upsert and delete
-    MERGEs (no separate count jobs), on either MERGE path and on a
-    journal-free table like the API's; a PUT with only adds or only
-    deletes writes one version, the empty side none."""
+    """PUT /preferences takes its counts from its MERGEs (no separate
+    count jobs), on either MERGE path and on a journal-free table like
+    the API's; a PUT with only adds or only deletes writes one version.
+    A PUT with both writes one version on the driver-local path and one
+    per side on the Spark path."""
     from tv_event_streaming_spark.streaming import storage
 
     if path == "spark":
@@ -180,11 +181,59 @@ def test_preferences_put_counts_come_from_the_merges(spark, tmp_path, monkeypatc
     assert set_user_preferences(table, "u1", ["1"], ["4"]) == {"adds": 0, "deletes": 1}
     assert table.current_version() == 2
     assert set_user_preferences(table, "u1", ["1", "5"], []) == {"adds": 1, "deletes": 1}
-    assert table.current_version() == 4
+    assert table.current_version() == (3 if path == "local" else 4)
     assert sorted(tuple(r) for r in table.read().collect()) == [
         ("u1", "source", "1"), ("u1", "source", "5"), ("u2", "genre", "4"), ("u2", "source", "1")
     ]
 
+
+
+def test_put_preferences_edge_cases(spark, tmp_path):
+    """Empty bodies, duplicate ids in a body, a user with no rows, an
+    identical re-PUT and other users' rows: the counts are the set
+    diff's, the table holds exactly the bodies, a no-op writes no
+    version, and each change is journaled once."""
+    table = KeyedTable(spark, str(tmp_path / "prefs"), PREF_KEY, USER_PREF_SCHEMA)
+    table.upsert(spark.createDataFrame([("u2", "source", "1"), ("u2", "genre", "1")], USER_PREF_SCHEMA))
+    assert set_user_preferences(table, "u1", [], []) == {"adds": 0, "deletes": 0}
+    assert table.current_version() == 0
+    assert set_user_preferences(table, "u1", ["3", "3", "1"], ["1", "1"]) == {"adds": 3, "deletes": 0}
+    v = table.current_version()
+    assert set_user_preferences(table, "u1", ["1", "3"], ["1"]) == {"adds": 0, "deletes": 0}
+    assert table.current_version() == v
+    assert set_user_preferences(table, "u1", ["1"], ["9"]) == {"adds": 1, "deletes": 2}
+    assert set_user_preferences(table, "u3", ["1"], []) == {"adds": 1, "deletes": 0}
+    assert sorted(map(tuple, table.read().collect())) == [
+        ("u1", "genre", "9"), ("u1", "source", "1"), ("u2", "genre", "1"), ("u2", "source", "1"),
+        ("u3", "source", "1"),
+    ]
+    assert set_user_preferences(table, "u1", [], []) == {"adds": 0, "deletes": 2}
+    assert sorted(map(tuple, table.read().collect())) == [
+        ("u2", "genre", "1"), ("u2", "source", "1"), ("u3", "source", "1")
+    ]
+    changes = table.read_changes().filter("version > 0").drop("version").collect()
+    assert sorted(map(tuple, changes)) == [
+        ("INSERT", "u1", "genre", "1"), ("INSERT", "u1", "genre", "9"), ("INSERT", "u1", "source", "1"),
+        ("INSERT", "u1", "source", "3"), ("INSERT", "u3", "source", "1"),
+        ("REMOVE", "u1", "genre", "1"), ("REMOVE", "u1", "genre", "9"), ("REMOVE", "u1", "source", "1"),
+        ("REMOVE", "u1", "source", "3"),
+    ]
+
+
+@pytest.mark.parametrize(
+    "case",
+    [test_preferences_mutation_roundtrip, test_put_preferences_edge_cases],
+    ids=lambda f: f.__name__,
+)
+def test_preferences_spark_path_passes_every_case(spark, tmp_path, monkeypatch, case):
+    """The preferences cases again with the size cap at 0, where every
+    PUT that changes something runs as Spark MERGEs
+    (``test_preferences_put_counts_come_from_the_merges`` takes both
+    paths itself)."""
+    from tv_event_streaming_spark.streaming import storage
+
+    monkeypatch.setattr(storage, "LOCAL_MERGE_MAX_ROWS", 0)
+    case(spark, tmp_path)
 
 def test_quality_gate_runs_on_streams(spark, sf_dir, tmp_path):
     """The curation gate is stream-safe AS-IS: quality_filter is a
