@@ -13,6 +13,7 @@ import pytest
 from tv_event_streaming_spark import domain
 from tv_event_streaming_spark.domain import TABLES, derive_domain, with_domain
 
+from .conftest import SF_SMOKE
 from .oracle import canonicalize, duck_connection
 
 DERIVED = ["sources", "genres", "titles", "title_index", "user_prefs", "details"]
@@ -111,3 +112,16 @@ def test_footer_schema_defers_unmapped_types(tmp_path):
     path = str(tmp_path / "u.parquet")
     pq.write_table(pa.table({"u": pa.array([1], pa.uint32())}), path)
     assert domain.footer_schema(path) is None
+
+
+@pytest.mark.parametrize("sf", ["sf0.001", "sf0.01", "sf0.1"])
+@pytest.mark.parametrize("table,key", [("part", "p_partkey"), ("customer", "c_custkey")])
+def test_derivation_keys_are_primary_keys(sf, table, key):
+    """``title_index`` and ``user_prefs`` deduplicate per source row,
+    which equals the SQL twin's DISTINCT only while ``p_partkey`` and
+    ``c_custkey`` are unique and non-null in every testdata scale."""
+    col = pq.read_table(
+        os.path.join(os.path.dirname(SF_SMOKE), sf, f"{table}.parquet"), columns=[key]
+    ).column(key)
+    assert col.null_count == 0
+    assert len(col.unique()) == len(col) > 0

@@ -19,14 +19,12 @@ import pytest
 from tv_event_streaming_spark.plans import CATALOG
 
 
+def executed_plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
 def plan_of(spark, name: str, sf_dir: str) -> str:
-    return (
-        CATALOG[name]
-        .build(spark, sf_dir)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
+    return executed_plan(CATALOG[name].build(spark, sf_dir))
 
 
 def n_exchanges(plan: str) -> int:
@@ -230,6 +228,88 @@ def test_flagship_join_has_no_cartesian_or_nested_loop(spark, sf_dir):
     plan = plan_of(spark, "titles_for_users", sf_dir)
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
+
+
+def subtrees(plan: str, node: str, stage: bool = False) -> list[list[str]]:
+    """The lines below every ``node`` in a plan's tree string; with
+    ``stage``, cut below the shuffle ``Exchange``s that end the node's
+    stage."""
+    lines = plan.splitlines()
+    depth = [len(re.match(r"[\s:+\-]*", ln).group()) for ln in lines]
+    out = []
+    for i, ln in enumerate(lines):
+        if not ln[depth[i]:].startswith(node):
+            continue
+        below, cut = [], None
+        for j in range(i + 1, len(lines)):
+            if depth[j] <= depth[i]:
+                break
+            if cut is not None and depth[j] > cut:
+                continue
+            if stage and re.match(r"Exchange\b", lines[j][depth[j]:]):
+                cut = depth[j]
+            else:
+                cut = None
+            below.append(lines[j])
+        out.append(below)
+    return out
+
+
+@pytest.mark.parametrize("name", ["title_index", "user_prefs"])
+def test_per_row_derivations_do_not_shuffle(spark, sf_dir, name):
+    """The index and the prefs deduplicate each source row's own array
+    (the keys are primary keys), so deriving them is one scan and one
+    explode: no ``Exchange`` of any kind (the DISTINCT shuffled 80 k
+    exploded rows at sf0.1 on every serving request)."""
+    from tv_event_streaming_spark.domain import derive_domain
+
+    plan = executed_plan(derive_domain(spark, sf_dir)[name])
+    assert "Exchange" not in plan, plan
+
+
+def test_one_user_titles_is_a_flat_broadcast_join(spark, sf_dir, tmp_path):
+    """One user's /titles over the served prefs table: the user's source
+    and genre prefs are broadcast side by side against the index (no
+    broadcast is built by joining another broadcast in its own stage),
+    the per-user ``(user_id, title_id)`` set is broadcast onto the
+    enriched-titles scan (which is never broadcast itself), and the
+    distinct on that set is the one shuffle."""
+    from pyspark.sql import functions as F
+
+    from tv_event_streaming_spark.domain import derive_domain
+    from tv_event_streaming_spark.operators.preferences import PREF_KEY
+    from tv_event_streaming_spark.operators.titles import titles_for_users
+    from tv_event_streaming_spark.schemas import USER_PREF_SCHEMA
+    from tv_event_streaming_spark.streaming.storage import KeyedTable
+
+    d = derive_domain(spark, sf_dir)
+    prefs = KeyedTable(spark, str(tmp_path / "prefs"), PREF_KEY, USER_PREF_SCHEMA)
+    prefs.upsert(d["user_prefs"])
+    plan = executed_plan(
+        titles_for_users(prefs.read(), d["title_index"], d["titles"], F.col("user_id") == "7")
+    )
+    assert n_exchanges(plan) == 1, plan
+    assert re.search(r"Exchange hashpartitioning\(user_id#\d+, title_id#\d+L", plan), plan
+    stages = subtrees(plan, "BroadcastExchange", stage=True)
+    assert len(stages) == 3, plan
+    assert not any("BroadcastExchange" in ln for lines in stages for ln in lines), plan
+    # the enriched-titles scan is the one that reads p_name
+    titles_scan = [ln for ln in plan.splitlines() if "FileScan" in ln and "p_name" in ln]
+    assert len(titles_scan) == 1, plan
+    assert not any(
+        titles_scan[0] in lines for lines in subtrees(plan, "BroadcastExchange")
+    ), plan
+
+
+def test_top_combinations_shuffles_once(spark, sf_dir):
+    """A3 over the per-row index: the one ``Exchange`` is the groupBy's,
+    under the top-k."""
+    from tv_event_streaming_spark.domain import derive_domain
+    from tv_event_streaming_spark.operators.analytics import top_combinations
+
+    plan = executed_plan(top_combinations(derive_domain(spark, sf_dir)["title_index"]))
+    assert n_exchanges(plan) == 1, plan
+    assert plan.index("TakeOrderedAndProject") < plan.index("Exchange hashpartitioning"), plan
 
 
 @pytest.mark.parametrize(

@@ -68,6 +68,36 @@ def test_unenriched_titles_never_served(spark, sf_dir):
     assert unenriched.count() > 0
 
 
+def test_repeated_pairs_give_each_title_once(spark, sf_dir):
+    """A user whose source prefs collide (one listed twice) and whose
+    two sources and two genres all link to the same title reaches that
+    title through repeated index pairs; it is still served once, and
+    the result is exactly the enriched titles of the user's pairs."""
+    d = derive_domain(spark, sf_dir)
+    index = [tuple(r) for r in d["title_index"].collect()]
+    links: dict[int, set] = {}
+    for s, g, t in index:
+        links.setdefault(t, set()).add((s, g))
+    tid = next(t for t, p in sorted(links.items()) if len(p) == 4 and t % 7 > 1 and t % 11)
+    srcs = sorted({s for s, _ in links[tid]})
+    gens = sorted({g for _, g in links[tid]})
+    prefs = spark.createDataFrame(
+        [("u", "source", s) for s in [*srcs, srcs[0]]]
+        + [("u", "genre", g) for g in gens],
+        USER_PREF_SCHEMA,
+    )
+    got = [r.title_id for r in titles_for_users(prefs, d["title_index"], d["titles"]).collect()]
+    enriched = {
+        r.title_id
+        for r in d["titles"].filter(
+            (F.col("poster") != "") & (F.col("plot_overview") != "")
+        ).collect()
+    }
+    want = {t for s, g, t in index if s in srcs and g in gens} & enriched
+    assert tid in want
+    assert sorted(got) == sorted(want)
+
+
 def test_titles_by_ids_returns_each_present_title_once(spark, sf_dir):
     """A repeated id yields its title once and an absent id yields
     nothing (BatchGetItem semantics, web_api.py:177-192)."""

@@ -22,10 +22,10 @@ is the SQL twin of the DataFrame derivations and is prepended to every
 oracle query. Keep the two in lockstep — tests/test_domain.py checks them
 row-for-row.
 
-Scale note: every derivation is a narrow projection (no shuffle except
-the final DISTINCT in index/prefs, which groups on the output key). At
-100 TB the dims (sources/genres) stay broadcast-sized; titles/user_prefs
-scale linearly with part/customer and derive map-side. Deriving the
+Scale note: every derivation is a per-row projection with no shuffle
+(index/prefs deduplicate each key row's own array). At 100 TB the dims
+(sources/genres) stay broadcast-sized; titles/user_prefs scale linearly
+with part/customer and derive map-side. Deriving the
 domain submits no Spark job: table schemas and the dim counts come from
 parquet footers (``footer_schema``, ``table_rows``).
 """
@@ -311,14 +311,14 @@ def titles(part: DataFrame) -> DataFrame:
 def title_index(part: DataFrame, sn: int, gn: int) -> DataFrame:
     """The source×genre inverted index (reference: consumer.py:79-89).
 
-    Each title links to 2 sources and 2 genres; the index is the DISTINCT
-    union of the (source, genre) pairings, exactly what the reference's
-    nested put-loop materializes. The dim counts are literals; the
-    DISTINCT is the only shuffle and groups on the index's natural key.
+    Each title links to 2 sources and 2 genres; the index is each title's
+    distinct (source, genre) pairings, exactly what the reference's
+    nested put-loop materializes. The dim counts are literals. Relies on
+    ``p_partkey`` being a primary key (as :func:`titles` does): every
+    duplicate comes from one part row, so ``array_distinct`` per row
+    equals the SQL twin's DISTINCT, with no shuffle.
     """
     pk = F.col("p_partkey")
-    # each title carries 2 sources × 2 genres; the index is the full cross
-    # product of those arrays, like the reference's nested put-loop.
     # ONE scan + explode(4-struct array) — the UNION-of-4-selects form
     # scans the fact table 4× (visible in .explain as 4 parquet scans).
     s1, s2 = pk % sn, (pk * 7 + 3) % sn
@@ -333,18 +333,18 @@ def title_index(part: DataFrame, sn: int, gn: int) -> DataFrame:
             for g in (g1, g2)
         ]
     )
-    return (
-        part.select(pk.alias("title_id"), F.explode(combos).alias("c"))
-        .select("c.source_id", "c.genre_id", "title_id")
-        .distinct()
-    )
+    return part.select(
+        pk.alias("title_id"), F.explode(F.array_distinct(combos)).alias("c")
+    ).select("c.source_id", "c.genre_id", "title_id")
 
 
 def user_prefs(customer: DataFrame, sn: int, gn: int) -> DataFrame:
     """One row per user selection (reference: preferences.py:153-161):
-    2 source prefs + 2 genre prefs per customer, DISTINCT because the
+    2 source prefs + 2 genre prefs per customer, deduplicated because the
     arithmetic can collide (mirrors the reference's set semantics —
-    (PK, SK) is the primary key, duplicates are impossible)."""
+    (PK, SK) is the primary key, duplicates are impossible). Relies on
+    ``c_custkey`` being a primary key, as :func:`title_index` does on
+    ``p_partkey``."""
     ck = F.col("c_custkey")
     selections = F.array(
         *[
@@ -357,13 +357,10 @@ def user_prefs(customer: DataFrame, sn: int, gn: int) -> DataFrame:
             )
         ]
     )
-    return (
-        customer.select(
-            ck.cast("string").alias("user_id"), F.explode(selections).alias("s")
-        )
-        .select("user_id", "s.kind", "s.pref_id")
-        .distinct()
-    )
+    return customer.select(
+        ck.cast("string").alias("user_id"),
+        F.explode(F.array_distinct(selections)).alias("s"),
+    ).select("user_id", "s.kind", "s.pref_id")
 
 
 def details(part: DataFrame) -> DataFrame:

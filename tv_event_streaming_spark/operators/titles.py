@@ -6,16 +6,10 @@ sources×genres per user, one DynamoDB index query per pair, then a
 chunked BatchGetItem — SURVEY.md §3.1. Here the whole lifecycle is ONE
 declarative plan Catalyst can fuse:
 
-    user_prefs ⋈ user_prefs (per-user source×genre pairs)
-        ⋈ title_index (equi-join on the composite key)
+    title_index ⋈ b(source prefs) on source_id
+        ⋈ b(genre prefs) on (user_id, genre_id)
         → distinct (user_id, title_id)
-        ⋈ titles
-        → enriched-only filter (P6) → API projection (P9)
-
-Scale: the pairs side is |users|×O(prefs²) — tiny relative to the index;
-when querying few users we broadcast it so the big index table never
-shuffles. For the all-users batch shape, AQE picks shuffle strategy and
-the distinct groups on (user_id, title_id), the natural output key.
+    enriched titles (P6) ⋈ b(that set) → API projection (P9)
 """
 
 from __future__ import annotations
@@ -53,13 +47,15 @@ def titles_for_users(
     title_index: DataFrame,
     titles: DataFrame,
     user_filter: Column | None = None,
-    broadcast_pairs: bool = True,
 ) -> DataFrame:
-    """J1 — the flagship semi-join, for one user or a set of users.
+    """J1 — the flagship semi-join, for one user or a few users.
 
-    ``broadcast_pairs=True`` is the point-query shape (few users → the
-    source×genre pair set is tiny → broadcast it against the index so the
-    index never shuffles). Set it False for the all-users batch shape.
+    Scale: the point-query shape. The selected users' source and genre
+    prefs are broadcast side by side against the index, so the index
+    never shuffles and neither broadcast waits on the other; the
+    per-user ``(user_id, title_id)`` set is broadcast onto the enriched
+    titles scan, so no hash table of all titles is built. The one
+    shuffle is the distinct on that output key.
     """
     prefs = user_prefs.filter(user_filter) if user_filter is not None else user_prefs
     ps = prefs.filter(F.col("kind") == "source").select(
@@ -68,16 +64,15 @@ def titles_for_users(
     pg = prefs.filter(F.col("kind") == "genre").select(
         "user_id", F.col("pref_id").alias("genre_id")
     )
-    pairs = ps.join(pg, "user_id")  # per-user source×genre cross product
-    if broadcast_pairs:
-        pairs = F.broadcast(pairs)
     title_ids = (
-        pairs.join(title_index, ["source_id", "genre_id"])
+        title_index.join(F.broadcast(ps), "source_id")
+        .join(F.broadcast(pg), ["user_id", "genre_id"])
         .select("user_id", "title_id")
         .distinct()
     )
     return api_projection(
-        title_ids.join(enriched_filter(titles), "title_id"), extra=["user_id"]
+        enriched_filter(titles).join(F.broadcast(title_ids), "title_id"),
+        extra=["user_id"],
     )
 
 
