@@ -414,6 +414,40 @@ def test_bulk_load_submits_few_jobs(spark, tmp_path, journal):
 
 
 @pytest.mark.parametrize("journal", [False, True], ids=["no_journal", "journal"])
+def test_large_upsert_submits_few_jobs(spark, tmp_path, journal):
+    """An upsert of cap + 1 rows into a non-empty table runs the MERGE
+    kernel in Spark tasks: the bounded probe, then the grouped
+    ``applyInArrow`` (its shuffle and its result stage), whose tasks
+    also write the journal rows: 3 jobs either way. The join-based
+    Spark MERGE it replaced ran 7, and 8 with the journal."""
+    from pyspark.sql import functions as F
+    from pyspark.sql import types as T
+
+    from tv_event_streaming_spark.streaming.storage import (
+        LOCAL_MERGE_MAX_ROWS,
+        KeyedTable,
+    )
+
+    schema = T.StructType(
+        [T.StructField("k", T.LongType(), False), T.StructField("v", T.StringType())]
+    )
+    table = KeyedTable(spark, str(tmp_path / "t"), ["k"], schema, journal=journal)
+    table.upsert(spark.createDataFrame([(k, "a") for k in range(0, 400, 2)], schema))
+    n = LOCAL_MERGE_MAX_ROWS + 1
+    batch = spark.range(n).select(F.col("id").alias("k"), F.lit("b").alias("v"))
+    sc = spark.sparkContext
+    group = f"pin-large-upsert-{journal}"
+    sc.setJobGroup(group, group)
+    try:
+        out = table.upsert(batch)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert out == {"version": 1, "inserts": n - 200, "modifies": 200}
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert 1 <= len(jobs) <= 3, len(jobs)
+
+
+@pytest.mark.parametrize("journal", [False, True], ids=["no_journal", "journal"])
 def test_one_user_put_submits_no_jobs(spark, tmp_path, journal):
     """PUT /preferences for one user is a pyarrow lookup of the user's
     rows, a set diff and one driver-side MERGE: no Spark job, and one

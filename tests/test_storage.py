@@ -1,10 +1,11 @@
 """KeyedTable storage-layer tests: bucket-granular MERGE rewrites and
 crash-restart from a streaming checkpoint (ST9).
 
-Small batches take the driver-local MERGE; every example test also runs
-on the Spark path (``test_spark_path_passes_every_case``, which sets the
-size cap to 0, so each first upsert into an empty table takes the bulk
-load), and the remaining tests pin the size rule, the bulk load and the
+Small batches take the driver path; every example test also runs on
+the task path (``test_spark_path_passes_every_case``, which sets the
+size cap to 0, so each MERGE runs the kernel in Spark tasks and each
+first upsert into an empty table takes the bulk load), and the
+remaining tests pin the size rule, the bulk load, task retries and the
 pyarrow-written files' round trip through Spark."""
 
 from __future__ import annotations
@@ -15,6 +16,8 @@ import re
 import sys
 import threading
 
+import pyarrow as pa
+import pyarrow.compute as pc
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -160,7 +163,7 @@ def test_delete_and_update_of_nonexistent_keys(spark, tmp_path):
     """The reference's preference-removal path tolerates removing a key
     that isn't there (preferences.py:153-161 — DynamoDB DeleteItem is a
     no-op on absent keys). An empty change journal must yield counts of
-    0, not a TypeError from NULL observation sums."""
+    0."""
     root = str(tmp_path / "t")
     table = KeyedTable(spark, root, ["k"], KV_SCHEMA, n_buckets=4)
     table.upsert(_kv(spark, [(1, "a"), (2, "b")]))
@@ -224,12 +227,11 @@ def test_journal_false_twin_equivalence(spark, tmp_path):
 
 
 def test_journal_false_merges_inside_foreachbatch(spark, tmp_path):
-    """Regression for the foreachBatch Observation hang: a
-    CollectMetrics node inside a union child whose sibling is an empty
-    relation (the v=-1 first merge) never delivers its metrics under
-    foreachBatch — Observation.get blocked forever and the cascade
-    fuzz timed out. The no-journal paths observe ABOVE the union now;
-    this pins all three merge kinds driven from a real stream."""
+    """All three merge kinds on a journal-free table, driven from a
+    real stream through foreachBatch, starting from the never-written
+    table, deliver their counts and finish (a counting plan that
+    never delivered its metrics under foreachBatch once hung the
+    cascade fuzz)."""
     import time
 
     root = str(tmp_path / "t")
@@ -270,9 +272,8 @@ def test_journal_false_merges_inside_foreachbatch(spark, tmp_path):
 
 
 def test_journal_false_update_delete_on_empty_table(spark, tmp_path):
-    """journal=False update_fields/delete against a never-written table:
-    the fully-empty observed plan must still deliver counts of 0, not
-    hang or TypeError."""
+    """journal=False update_fields/delete against a never-written table
+    deliver counts of 0."""
     table = KeyedTable(
         spark, str(tmp_path / "t"), ["k"], KV_SCHEMA, n_buckets=4, journal=False
     )
@@ -313,8 +314,9 @@ def _local_calls(monkeypatch) -> list[str]:
 
 def test_size_rule_boundary(spark, tmp_path, monkeypatch):
     """A MERGE whose batch plus touched live rows is exactly the cap runs
-    locally; one row more runs on Spark. Both bounds are checked: the
-    live rows (from footers) and the batch itself (the bounded collect)."""
+    on the driver; one row more runs in Spark tasks. Both bounds are
+    checked: the live rows (from footers) and the batch itself (the
+    bounded collect)."""
     calls = _local_calls(monkeypatch)
     monkeypatch.setattr(storage, "LOCAL_MERGE_MAX_ROWS", 5)
     table = KeyedTable(spark, str(tmp_path / "t"), ["k"], KV_SCHEMA, n_buckets=1)
@@ -402,7 +404,7 @@ def test_replay_after_crash_before_flip_journals_each_change_once(spark, tmp_pat
     """A MERGE that crashes after its journal write but before the
     ``_CURRENT`` flip leaves the previous version current; replaying it
     rewrites that version, and the journal holds each of its change
-    rows once, on the driver-local and on the Spark path."""
+    rows once, on the driver path and on the task path."""
     if path == "spark":
         monkeypatch.setattr(storage, "LOCAL_MERGE_MAX_ROWS", 0)
     real_flip = KeyedTable._flip
@@ -432,6 +434,48 @@ def test_replay_after_crash_before_flip_journals_each_change_once(spark, tmp_pat
         + [("MODIFY", 1, 1, "b"), ("INSERT", 1, 9, "n"), ("REMOVE", 2, 2, "a"), ("REMOVE", 2, 3, "a")]
         + [("MODIFY", 3, 4, "u")]
     )
+    assert not [f for f in os.listdir(table.changes_dir) if f.startswith(".")]
+
+
+def test_retried_merge_task_replaces_its_files(spark, tmp_path, monkeypatch):
+    """A task of the task path that runs twice on the same bucket input,
+    as a retried task does, leaves one data file in the bucket's
+    directory and one staged journal file: it writes both under names
+    fixed by the version and the bucket. A MERGE that then runs the
+    whole job over a crashed attempt's files commits each change once."""
+    table = KeyedTable(spark, str(tmp_path / "t"), ["k"], KV_SCHEMA, n_buckets=4)
+    table.upsert(_kv(spark, [(i, "a") for i in range(12)]))
+    batch = _kv(spark, [(1, "b"), (1, "b"), (3, "c"), (20, "n"), (21, "n")])
+    rows = batch.select("k", "v", F.pmod(F.xxhash64("k"), F.lit(4)).cast("int").alias(BUCKET_COL)).toArrow()
+    b = rows.column(BUCKET_COL)[0].as_py()
+    group = rows.filter(pc.equal(rows.column(BUCKET_COL), b))
+    task = table._merge_task("upsert", 1, table._read_manifest(0))
+    outs = [task((pa.scalar(b, pa.int32()),), group).to_pylist() for _ in range(2)]
+    keys = set(group.column("k").to_pylist())
+    assert outs[0] == outs[1] == [
+        {
+            "bucket": b,
+            "data": os.path.join(table.path, "data", "v=1", f"{BUCKET_COL}={b}", "part-00000.parquet"),
+            "journal": os.path.join(table.changes_dir, ".v=1", f"part-{b:05d}.parquet"),
+            "inserts": len(keys - set(range(12))),
+            "modifies": len(keys & set(range(12))),
+            "deletes": 0,
+        }
+    ]
+    assert os.listdir(os.path.dirname(outs[0][0]["data"])) == ["part-00000.parquet"]
+    assert os.listdir(os.path.join(table.changes_dir, ".v=1")) == [f"part-{b:05d}.parquet"]
+    assert table.current_version() == 0
+
+    monkeypatch.setattr(storage, "LOCAL_MERGE_MAX_ROWS", 0)
+    assert table.upsert(batch) == {"version": 1, "inserts": 2, "modifies": 2}
+    assert sorted(map(tuple, table.read().collect())) == sorted(
+        ({i: "a" for i in range(12)} | {1: "b", 3: "c", 20: "n", 21: "n"}).items()
+    )
+    assert sorted(map(tuple, table.read_changes().filter("version = 1").collect())) == [
+        ("INSERT", 1, 20, "n"), ("INSERT", 1, 21, "n"), ("MODIFY", 1, 1, "b"), ("MODIFY", 1, 3, "c")
+    ]
+    for bdir in _bucket_dirs(table.path, 1):
+        assert os.listdir(os.path.join(table.path, "data", "v=1", bdir)) == ["part-00000.parquet"]
     assert not [f for f in os.listdir(table.changes_dir) if f.startswith(".")]
 
 
@@ -551,9 +595,9 @@ def _sample_rows(schema: T.StructType) -> list[tuple]:
 )
 def test_pyarrow_written_buckets_round_trip(spark, tmp_path, monkeypatch, schema, keys):
     """Bucket and journal files written by pyarrow read back through
-    Spark with every value intact, and a later Spark-path MERGE over
-    those buckets (and a local MERGE over Spark-written ones) keeps
-    them intact too, as read by Spark and by ``lookup``."""
+    Spark with every value intact, and a later task-path MERGE over
+    those buckets and a driver MERGE over its files keep them intact
+    too, as read by Spark and by ``lookup``."""
     calls = _local_calls(monkeypatch)
     rows = _sample_rows(schema)
     table = KeyedTable(spark, str(tmp_path / "t"), keys, schema, n_buckets=2)

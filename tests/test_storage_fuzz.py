@@ -15,10 +15,10 @@ sequence, three invariants must hold exactly:
 3. every op's merge counts (inserts/modifies/deletes) match the
    model's transition counts — the per-batch A7 metrics.
 
-Each sequence runs on both MERGE paths (driver-local and Spark), with
-and without a journal, and all four tables must agree op by op. With
-the Spark tables' size cap at 0, every upsert into an empty table takes
-the bulk load.
+Each sequence runs on both ways the MERGE kernel runs (on the driver
+and in Spark tasks), with and without a journal, and all four tables
+must agree op by op and keep every key unique. With the task tables'
+size cap at 0, every upsert into an empty table takes the bulk load.
 
 A second sequence test does the same for PUT /preferences
 (``set_user_preferences``: lookup, set diff, one MERGE) against a
@@ -57,8 +57,9 @@ SCHEMA = T.StructType(
 
 
 def _four_tables(spark, root, key, schema):
-    """The driver-local and the Spark MERGE path, each with and without
-    a journal."""
+    """The driver path and the task path, each with and without a
+    journal (the task path's tables are keyed ``spark``: the fuzz sets
+    their size cap to 0)."""
     return {
         (path, journal): KeyedTable(
             spark, str(root / f"{path}{journal}"), key, schema, n_buckets=4, journal=journal
@@ -86,17 +87,17 @@ _op = st.tuples(
 )
 @given(ops=st.lists(_op, min_size=1, max_size=7))
 # a first upsert with duplicate keys into the empty table, and another
-# after deletes empty it: on the Spark tables (cap 0) both are bulk loads
+# after deletes empty it: on the task-path tables (cap 0) both are bulk loads
 @example(ops=[("upsert", [1, 1, 2, 5], 0), ("delete", [1, 2, 5], 0), ("upsert", [3, 3], 1)])
+# an update batch repeating a key must set that key's row once
+@example(ops=[("upsert", [1, 2], 0), ("update", [1, 1], 1)])
 def test_keyed_table_matches_model_on_random_op_sequences(
     spark, tmp_path_factory, ops
 ):
-    """Every op sequence runs on four tables: the driver-local and the
-    Spark MERGE path, each with and without a journal. The journal=False
-    merges compute their counts on a different plan (marker-column
-    Observation riding the data write) and the local path computes them
-    in pyarrow; all four must give the same counts and state as the
-    model, and both journals must replay to it."""
+    """Every op sequence runs on four tables: the driver path and the
+    task path, each with and without a journal. All four must give the
+    same counts and state as the model, with every key held once, and
+    both journals must replay to it."""
     tables = _four_tables(spark, tmp_path_factory.mktemp("ktfuzz"), ["k"], SCHEMA)
     model: dict[int, tuple[str | None, str | None]] = {}
 
@@ -138,8 +139,10 @@ def test_keyed_table_matches_model_on_random_op_sequences(
             assert got["deletes"] == expect_del, (got, expect_del, ops)
 
     for (path, journal), kt in tables.items():
-        # 1. table state == model
-        state = {(r.k): (r.val, r.extra) for r in kt.read().collect()}
+        # 1. table state == model, one row per key
+        rows = kt.read().collect()
+        assert len({r.k for r in rows}) == len(rows), (path, journal, rows, ops)
+        state = {(r.k): (r.val, r.extra) for r in rows}
         assert state == model, (path, journal, state, model, ops)
 
         # 2. CDC journal replays to the same state: latest change per key

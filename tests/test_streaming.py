@@ -165,8 +165,8 @@ def test_preferences_put_counts_come_from_the_merges(spark, tmp_path, monkeypatc
     """PUT /preferences takes its counts from its MERGEs (no separate
     count jobs), on either MERGE path and on a journal-free table like
     the API's; a PUT with only adds or only deletes writes one version.
-    A PUT with both writes one version on the driver-local path and one
-    per side on the Spark path."""
+    A PUT with both writes one version on the driver path and one per
+    side when it runs as two DataFrame MERGEs (here on the task path)."""
     from tv_event_streaming_spark.streaming import storage
 
     if path == "spark":

@@ -77,7 +77,7 @@ def set_user_preferences(
     (preferences.py:148-150) and writes no version.
 
     When the user's rows or the touched buckets pass the table's size
-    cap, the PUT runs as Spark MERGEs instead: :func:`prefs_delta` over
+    cap, the PUT runs as DataFrame MERGEs instead: :func:`prefs_delta` over
     the user's rows and the body (an Arrow local relation), then an
     upsert of the adds and a delete of the removals, one version each."""
     want = {("source", s) for s in sources} | {("genre", g) for g in genres}
@@ -97,11 +97,3 @@ def set_user_preferences(
         "deletes": prefs_table.delete(dels)["deletes"],
     }
 
-
-def apply_prefs_delta(old: DataFrame, new: DataFrame) -> DataFrame:
-    """The post-merge state: old minus deletes plus adds ≡ new for the
-    touched users, old elsewhere. Expressed as a single MERGE-shaped plan
-    (SURVEY.md §3.3): rows of ``old`` for untouched users ∪ ``new``."""
-    touched = new.select("user_id").distinct()
-    untouched = old.join(touched, "user_id", "left_anti")
-    return untouched.unionAll(new.select(*untouched.columns))

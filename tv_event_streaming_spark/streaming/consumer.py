@@ -12,8 +12,9 @@ titles KeyedTable + index derivation. Exactly-once = checkpointed source
 offsets + idempotent keyed MERGE (ST3).
 
 Scale: the wire schema is explicit (no inference); per-batch dedup keys
-on title id; the index derivation is two explodes — map-side until the
-MERGE's key join.
+on title id; the index derivation is two explodes — map-side up to the
+MERGE (the driver's bounded collect, or the task kernel's bucket
+shuffle).
 """
 
 from __future__ import annotations

@@ -18,45 +18,64 @@ on plain parquet:
   ``lookup(**values)`` returns the rows matching a key prefix as Arrow,
   read on the driver with no Spark job.
 
-**Four ways in, one commit protocol.** A DataFrame MERGE (``upsert``,
-``update_fields``, ``delete``) starts with one bounded collect: the
-batch, at most ``LOCAL_MERGE_MAX_ROWS + 1`` rows, comes back as Arrow
-with its bucket ids computed by Spark in the same job (an empty batch
-returns here and writes no version). Then the size rule:
+**One MERGE kernel, four ways in, one commit protocol.** Every MERGE
+is :func:`merge_bucket`, a pure pyarrow function of one bucket: its
+live rows, the batch rows that hash to it, optional delete keys and the
+fields an update sets in, its new rows, change rows and counts out.
+Keys that are equal hash to one bucket, so the bucket is the whole
+MERGE's unit: the kernel deduplicates the batch on the key there (each
+key's first row) and matches keys with SQL equality (a NULL key matches
+nothing).
 
-- if the batch plus the live rows of the buckets it touches (summed from
-  parquet footers, no job) number at most ``LOCAL_MERGE_MAX_ROWS``, the
-  driver does the MERGE in pyarrow — dedup the batch on the key, read
-  the touched buckets' files, match keys, write one file per touched
-  bucket and at most one journal file. A Spark MERGE of a 20-row batch
-  is almost all per-action planning, scheduling and commit overhead;
-- a larger upsert into an empty table (seeding, an initial load) is a
-  bulk load: every key is new, so it is one key-dedup and one
-  ``partitionBy`` write counted by ``DataFrame.observe``, and a journaled
-  table copies the written rows into the journal as INSERTs — no
-  persist, touched-bucket collect or join;
-- any other MERGE runs as Spark joins and a ``partitionBy`` write, its
-  counts taken by ``DataFrame.observe`` during the journal write (or
-  the data write, for a ``journal=False`` table) — no extra count jobs.
+A DataFrame MERGE (``upsert``, ``update_fields``, ``delete``) starts
+with one bounded collect: the batch, at most ``LOCAL_MERGE_MAX_ROWS +
+1`` rows, comes back as Arrow with its bucket ids computed by Spark in
+the same job (an empty batch returns here and writes no version). Then
+the size rule picks the way in:
+
+- **the driver kernel**: if the batch plus the live rows of the buckets
+  it touches (summed from parquet footers, no job) number at most
+  ``LOCAL_MERGE_MAX_ROWS``, the driver reads the touched buckets' files
+  and runs the kernel over them (one call serves them all, as equal
+  keys share a bucket), writing one file per touched bucket and at most
+  one journal file. A Spark job for a 20-row batch is almost
+  all planning, scheduling and commit overhead;
+- **the bulk load**: a larger upsert into an empty table (seeding, an
+  initial load) has nothing to read or match, so it is one key-dedup
+  and one ``partitionBy`` write counted by ``DataFrame.observe``, and a
+  journaled table copies the written rows into the journal as INSERTs;
+- **the task kernel**: any other MERGE is one job,
+  ``batch.groupBy(bucket).applyInArrow(task)``. Each task reads its
+  bucket's live files with pyarrow (the version's manifest rides in the
+  closure: at most ``n_buckets`` entries), runs the kernel, writes the
+  bucket's file and its change rows under names fixed by the version
+  and the bucket (a retried task replaces them) and returns one row of
+  file names and counts; the driver collects at most ``n_buckets``
+  rows. One task holds one bucket's live rows plus its batch rows. The
+  bucket count is fixed at construction, so today a bucket grows with
+  the table; bucket splitting (ROADMAP #4, not built) would keep that
+  bound as the table grows. Tasks read and write the table root
+  directly: it must be a filesystem every executor sees.
 
 ``merge_local`` is the fourth way: rows the caller already holds on the
 driver (a PUT /preferences diff), upserted and deleted together by the
-same pyarrow MERGE in one version, under the same size rule, with no
-Spark job at all; past the cap it writes nothing and the caller takes
-the DataFrame MERGEs.
+driver kernel in one version, under the same size rule, with no Spark
+job at all; past the cap it writes nothing and the caller takes the
+DataFrame MERGEs.
 
-All paths return the same counts, leave the same ``read()`` state and
+All ways return the same counts, leave the same ``read()`` state and
 write the same journal rows.
 
-All paths commit the same way: new immutable bucket directories under
-``data/v=N/`` (a crashed attempt's directory is replaced), then the
-journal rows under names derived from N (a crashed attempt's journal
-files are removed first, so a replay journals each change once), then
-a version MANIFEST mapping every bucket to the version directory that
-last wrote it, then an atomic rename of the ``_CURRENT`` pointer.
-Readers always see a consistent snapshot stitched from per-bucket
-paths; a crash before the flip leaves version N-1 current, and the
-replayed batch rewrites version N.
+All ways commit the same way (:meth:`KeyedTable._commit`): new
+immutable bucket directories under ``data/v=N/`` (a crashed attempt's
+directory is removed first), then the journal rows, staged under
+``_changes/.v=N/`` and renamed in under names derived from N (a crashed
+attempt's journal files are removed first, so a replay journals each
+change once), then a version MANIFEST mapping every bucket to the
+version directory that last wrote it, then an atomic rename of the
+``_CURRENT`` pointer. Readers always see a consistent snapshot stitched
+from per-bucket paths; a crash before the flip leaves version N-1
+current, and the replayed batch rewrites version N.
 
 On a real deployment this class is replaced wholesale by Delta/Iceberg
 ``MERGE INTO`` + change data feed; the pipeline code above it doesn't
@@ -84,17 +103,19 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
 
+from tv_event_streaming_spark.deploy import ensure_package_on_workers
+
 BUCKET_COL = "bucket__"
 
-#: A MERGE runs on the driver in pyarrow when its batch plus the live rows
-#: of the buckets it touches number at most this many; larger ones run as
-#: Spark jobs. Measured on 4 cores (local[2], 3-column index rows, 16
-#: buckets, a 200-row batch touching all of them, median of 5), local vs
-#: Spark: 5 k rows 0.25 vs 1.58 s, 20 k 0.27 vs 1.49 s, 50 k 0.28 vs
-#: 1.42 s, 100 k 0.35 vs 1.95 s, 200 k 0.40 vs 2.10 s — no crossover up
-#: to 200 k, so the cap bounds the driver's memory instead: it holds at
-#: most this many rows. A larger upsert into an empty table, such as
-#: seeding the 60 k-row preferences table, is a Spark bulk load.
+#: A MERGE runs on the driver when its batch plus the live rows of the
+#: buckets it touches number at most this many; larger ones run the same
+#: kernel in Spark tasks. Measured on 4 cores (local[2], 3-column index
+#: rows, 16 buckets, a 200-row batch touching all of them, warm, median
+#: of 5), driver vs tasks: 20 k rows 0.10 vs 0.31 s, 50 k 0.07 vs
+#: 0.26 s, 200 k 0.13 vs 0.27 s — no crossover up to 200 k, so the cap
+#: bounds the driver's memory instead: it holds at most this many rows.
+#: A larger upsert into an empty table, such as seeding the 60 k-row
+#: preferences table, is a Spark bulk load.
 LOCAL_MERGE_MAX_ROWS = 50_000
 
 _COUNTS = {
@@ -103,16 +124,124 @@ _COUNTS = {
     "delete": ("deletes",),
 }
 _EVENTS = {"inserts": "INSERT", "modifies": "MODIFY", "deletes": "REMOVE"}
+#: what each task of the task kernel returns: its bucket, the bucket's
+#: new data file (null when the bucket is now empty), its staged journal
+#: file (null without change rows or journal) and its counts
+_TASK_SCHEMA = "bucket int, data string, journal string, inserts long, modifies long, deletes long"
 
 
 def _parquet_files(bucket_dir: str) -> list[str]:
     """A bucket directory's data files (Spark also leaves ``.crc``
-    checksums beside them)."""
+    checksums beside them, and a writer's temp files are hidden)."""
     return sorted(
         os.path.join(bucket_dir, f)
         for f in os.listdir(bucket_dir)
         if f.endswith(".parquet") and not f.startswith((".", "_"))
     )
+
+
+def _read_rows(files: list[str], arrow: pa.Schema) -> pa.Table:
+    """The rows of parquet ``files`` in the table's Arrow schema."""
+    return pa.concat_tables(
+        [arrow.empty_table(), *(pq.read_table(f).select(arrow.names).cast(arrow) for f in files)]
+    )
+
+
+def _write_parquet(rows: pa.Table, path: str) -> str:
+    """Write ``rows`` to ``path`` through a hidden temp file and a
+    rename, so a reader or a retried writer never sees half a file and a
+    second write replaces the first."""
+    os.makedirs(os.path.dirname(path), exist_ok=True)
+    tmp = os.path.join(os.path.dirname(path), f".{uuid.uuid4().hex}.tmp")
+    pq.write_table(rows, tmp)
+    os.replace(tmp, path)
+    return path
+
+
+def _pairs(cur: pa.Table, rows: pa.Table, keys: list[str]) -> tuple[np.ndarray, np.ndarray]:
+    """Row indices of the key-equal (current row, batch row) pairs;
+    SQL equality, so a NULL key matches nothing."""
+    pairs = (
+        cur.select(keys)
+        .append_column("_c", pa.array(np.arange(len(cur))))
+        .join(rows.select(keys).append_column("_h", pa.array(np.arange(len(rows)))), keys, join_type="inner")
+    )
+    return tuple(np.asarray(pairs.column(c), np.int64) for c in ("_c", "_h"))
+
+
+def merge_bucket(
+    cur: pa.Table,
+    rows: pa.Table | None,
+    deletes: pa.Table | None,
+    keys: list[str],
+    fields: list[str] | None = None,
+) -> tuple[pa.Table, dict[str, pa.Table], dict[str, int]]:
+    """One bucket's MERGE, the kernel of every write but the bulk load.
+
+    ``cur`` is the bucket's live rows; the live rows of several whole
+    buckets give the same MERGE, as equal keys share a bucket, and a
+    column the batch also carries (the driver's ``BUCKET_COL``) passes
+    through. ``deletes`` (or None) holds keys
+    to remove. ``rows`` (or None) is the batch: full rows to insert or
+    overwrite, or, with ``fields``, the key plus the fields to set on
+    the rows whose key exists (fetch-then-update: other keys are
+    ignored). The batch is deduplicated on the key, keeping each key's
+    first row. Returns the bucket's new rows, its change rows by event
+    (``REMOVE``, ``INSERT``, ``MODIFY``; full new images) and the
+    counts."""
+    changes = {}
+    if deletes is not None:
+        hit = np.zeros(len(cur), bool)
+        hit[_pairs(cur, deletes.select(keys).cast(cur.select(keys).schema), keys)[0]] = True
+        changes["REMOVE"] = cur.filter(pa.array(hit))
+        cur = cur.filter(pa.array(~hit))
+    if rows is not None:
+        rows = rows.select(cur.column_names if fields is None else [*keys, *fields])
+        rows = rows.cast(pa.schema([cur.schema.field(c) for c in rows.column_names]))
+        first = (
+            rows.select(keys)
+            .append_column("_i", pa.array(np.arange(len(rows))))
+            .group_by(keys)
+            .aggregate([("_i", "min")])
+        )
+        rows = rows.take(np.sort(np.asarray(first.column("_i_min"))))
+        ci, hi = _pairs(cur, rows, keys)
+        if fields is None:
+            new_rows = rows
+            modified = np.zeros(len(rows), bool)
+            modified[hi] = True
+            changes["INSERT"] = rows.filter(pa.array(~modified))
+            changes["MODIFY"] = rows.filter(pa.array(modified))
+        else:  # the matched rows, with the batch's fields set
+            new_rows = cur.take(ci)
+            for f in fields:
+                new_rows = new_rows.set_column(new_rows.schema.get_field_index(f), f, rows.column(f).take(hi))
+            changes["MODIFY"] = new_rows
+        kept = np.ones(len(cur), bool)
+        kept[ci] = False
+        cur = pa.concat_tables([cur.filter(pa.array(kept)), new_rows])
+    return cur, changes, {k: len(changes.get(e, ())) for k, e in _EVENTS.items()}
+
+
+def _write_bucket(rows: pa.Table, data_dir: str, b: int) -> str | None:
+    """Write bucket ``b``'s new rows as its one file under a version's
+    ``data_dir``; an empty bucket writes nothing and returns None."""
+    if not rows.num_rows:
+        return None
+    return _write_parquet(rows, os.path.join(data_dir, f"{BUCKET_COL}={b}", "part-00000.parquet"))
+
+
+def _stage_journal(changes: dict[str, pa.Table], v: int, path: str) -> str | None:
+    """Write kernel change rows to ``path`` as version ``v``'s journal
+    rows; without change rows write nothing and return None."""
+    parts = [
+        t.add_column(0, "event_name", pa.array([e] * len(t), pa.string())).add_column(
+            1, "version", pa.array([v] * len(t), pa.int64())
+        )
+        for e, t in changes.items()
+        if len(t)
+    ]
+    return _write_parquet(pa.concat_tables(parts), path) if parts else None
 
 
 class KeyedTable:
@@ -130,11 +259,11 @@ class KeyedTable:
         INDEX table has no stream_changes reader — only ``titles``
         feeds the enrichment cascade — and at a 50 M-row merge the
         journal's full-image parquet append was ~half the remaining
-        merge wall). On the Spark path, merge counts then ride the DATA
-        write via a marker-column Observation instead of the journal
-        write, so the return contract is unchanged; :meth:`stream_changes` /
-        :meth:`read_changes` raise, keeping a silent no-op journal from
-        masquerading as an empty-but-live one."""
+        merge wall). It means only that no journal files are written:
+        every MERGE computes the same counts either way, and
+        :meth:`stream_changes` / :meth:`read_changes` raise, keeping a
+        silent no-op journal from masquerading as an empty-but-live
+        one."""
         self.spark = spark
         self.path = path
         self.key_cols = list(key_cols)
@@ -309,7 +438,7 @@ class KeyedTable:
         relation, so ``collect()`` runs no Spark job. When the rows plus
         the live rows of the buckets they touch exceed
         ``LOCAL_MERGE_MAX_ROWS``, nothing is written and None returned:
-        the caller runs the Spark MERGEs instead."""
+        the caller runs the DataFrame MERGEs instead."""
         if not upserts.num_rows and not deletes.num_rows:
             return {"version": self.current_version(), "inserts": 0, "modifies": 0, "deletes": 0}
         upserts = upserts.select(self.schema.names).cast(self._arrow_schema())
@@ -327,22 +456,18 @@ class KeyedTable:
         return self._merge_local("upsert", head, manifest, touched, files, deletes)
 
     def _merge(self, kind: str, batch: DataFrame, cols: list[str]) -> dict[str, int]:
-        """Pick the path for one MERGE and run it.
+        """Pick the way in for one MERGE and run it.
 
         The bounded collect reads the batch as given, not deduplicated:
         a key-dedup shuffle would cost the collect a second job, and
         without one the limit stops after the first input partitions
-        that hold enough rows, so a batch too big for the local path
-        costs little more than a probe. The local path dedups on the
-        driver."""
-        head = (
-            batch.select(*cols, self._bucket().alias(BUCKET_COL))
-            .limit(LOCAL_MERGE_MAX_ROWS + 1)
-            .toArrow()
-        )
+        that hold enough rows, so a batch too big for the driver costs
+        little more than a probe. The kernel dedups each bucket's rows
+        wherever it runs."""
+        keyed = batch.select(*cols, self._bucket().alias(BUCKET_COL))
+        head = keyed.limit(LOCAL_MERGE_MAX_ROWS + 1).toArrow()
         if head.num_rows == 0:  # empty micro-batches must not write versions
             return {"version": self.current_version(), **dict.fromkeys(_COUNTS[kind], 0)}
-        touched = None
         manifest = self._read_manifest(self.current_version())
         if head.num_rows <= LOCAL_MERGE_MAX_ROWS:
             touched = sorted(pc.unique(head.column(BUCKET_COL)).to_pylist())
@@ -353,30 +478,10 @@ class KeyedTable:
                 return {"version": out["version"], **{k: out[k] for k in _COUNTS[kind]}}
         elif kind == "upsert" and not manifest:
             return self._bulk_load(batch)
-        # The Spark path persists the batch for the MERGE's duration:
-        # three actions read it (touched-bucket collect, journal write,
-        # data write), and without the barrier each re-ran the batch's
-        # upstream lineage — for the consumer's index leg a double
-        # explode + key-dedup shuffle of the full exploded set, which
-        # dominated the cascade (measured 2.7×: 279 s → 104 s on the
-        # 50 M-row merge, SCALE.md §6e).
-        if kind != "delete":
-            batch = batch.dropDuplicates(self.key_cols)
-        batch = batch.persist()
-        try:
-            if touched is None:
-                touched = self._touched_buckets(batch)
-            if kind == "upsert":
-                out = self._upsert_spark(batch, touched)
-            elif kind == "update":
-                out = self._update_spark(batch, cols[len(self.key_cols) :], touched)
-            else:
-                out = self._delete_spark(batch, touched)
-        finally:
-            batch.unpersist()
+        out = self._merge_tasks(kind, keyed, manifest)
         return {"version": out["version"], **{k: out[k] for k in _COUNTS[kind]}}
 
-    # -- driver-local path ----------------------------------------------------
+    # -- the kernel's two callers ---------------------------------------------
 
     def _arrow_schema(self) -> pa.Schema:
         # every field nullable: Spark reads every parquet column as
@@ -396,20 +501,14 @@ class KeyedTable:
     def _with_bucket(t: pa.Table, b: int) -> pa.Table:
         return t.append_column(pa.field(BUCKET_COL, pa.int32()), pa.array(np.full(len(t), b, np.int32)))
 
-    def _pairs(self, cur: pa.Table, head: pa.Table) -> tuple[np.ndarray, np.ndarray]:
-        """Row indices of the key-equal (current row, batch row) pairs;
-        SQL equality, so a NULL key matches nothing, as in the Spark
-        path's joins."""
-        pairs = (
-            cur.select(self.key_cols)
-            .append_column("_c", pa.array(np.arange(len(cur))))
-            .join(
-                head.select(self.key_cols).append_column("_h", pa.array(np.arange(len(head)))),
-                self.key_cols,
-                join_type="inner",
-            )
-        )
-        return tuple(np.asarray(pairs.column(c), np.int64) for c in ("_c", "_h"))
+    def _data_dir(self, v: int) -> str:
+        return os.path.join(self.path, "data", f"v={v}")
+
+    def _stage_dir(self, v: int) -> str:
+        """Where version ``v``'s journal files are written before
+        :meth:`_commit_journal` renames them in: a hidden directory,
+        which the change stream's file listing skips."""
+        return os.path.join(self.changes_dir, f".v={v}")
 
     def _merge_local(
         self,
@@ -420,112 +519,116 @@ class KeyedTable:
         files: list[tuple[int, str]],
         deletes: pa.Table | None = None,
     ) -> dict[str, int]:
-        """The whole MERGE in pyarrow on the driver. ``head`` is the
-        batch with its bucket ids, ``files`` the (bucket, data file)
-        pairs of the touched buckets. A delete's ``head`` holds the keys
-        to remove; an upsert may remove ``deletes`` in the same version.
-        Returns the version and every count."""
+        """The driver kernel: :func:`merge_bucket` over the touched
+        buckets. ``head`` is the batch with its bucket ids in
+        ``BUCKET_COL`` (a delete's holds the keys to remove), ``files``
+        the (bucket, data file) pairs of the touched buckets; an upsert
+        may remove ``deletes`` (rows with their ``BUCKET_COL``) in the
+        same version. Equal keys share a bucket, so one kernel call over
+        whole buckets, their ids carried along in ``BUCKET_COL``, is one
+        call per bucket, and faster: 26 ms against 38 ms for 16 calls, for
+        a 5.5 k-row upsert into a 20 k-row table of 16 buckets (4-core
+        box, median of 7). Writes one file per touched bucket that
+        keeps rows and at most one journal file. Returns the version and
+        every count."""
+        fields = head.column_names[len(self.key_cols) : -1] if kind == "update" else None
+        rows, deletes = (None, head) if kind == "delete" else (head, deletes)
         arrow = self._arrow_schema()
         cur = pa.concat_tables(
-            [
-                self._with_bucket(arrow.empty_table(), 0),
-                *(self._with_bucket(pq.read_table(f).select(self.schema.names).cast(arrow), b) for b, f in files),
-            ]
+            [self._with_bucket(arrow.empty_table(), 0), *(self._with_bucket(_read_rows([f], arrow), b) for b, f in files)]
         )
-        bucket = pa.field(BUCKET_COL, pa.int32())
-        head = head.cast(pa.schema([*(arrow.field(c) for c in head.column_names[:-1]), bucket]))
-        if kind == "delete":
-            deletes = head
-        changes = {}
-        if deletes is not None:
-            deletes = deletes.select(self.key_cols).cast(pa.schema([arrow.field(k) for k in self.key_cols]))
-            hit = np.zeros(len(cur), bool)
-            hit[self._pairs(cur, deletes)[0]] = True
-            changes["REMOVE"] = cur.filter(pa.array(hit))
-            cur = cur.filter(pa.array(~hit))
-        if kind == "upsert":  # dedup on the key, keeping each key's first row
-            first = (
-                head.select(self.key_cols)
-                .append_column("_i", pa.array(np.arange(len(head))))
-                .group_by(self.key_cols)
-                .aggregate([("_i", "min")])
-            )
-            head = head.take(np.sort(np.asarray(first.column("_i_min"))))
-        state = cur
-        if kind != "delete":
-            ci, hi = self._pairs(cur, head)
-            if kind == "upsert":
-                new_rows = head
-                modified = np.zeros(len(head), bool)
-                modified[hi] = True
-                changes["INSERT"] = head.filter(pa.array(~modified))
-                changes["MODIFY"] = head.filter(pa.array(modified))
-            else:  # the matched rows, with the batch's fields set
-                new_rows = cur.take(ci)
-                for f in head.column_names[len(self.key_cols) : -1]:
-                    new_rows = new_rows.set_column(new_rows.schema.get_field_index(f), f, head.column(f).take(hi))
-                changes["MODIFY"] = new_rows
-            kept = np.ones(len(cur), bool)
-            kept[ci] = False
-            state = pa.concat_tables([cur.filter(pa.array(kept)), new_rows])
-
+        state, changes, counts = merge_bucket(cur, rows, deletes, self.key_cols, fields)
         v = self.current_version() + 1
-        data_dir = os.path.join(self.path, "data", f"v={v}")
-        shutil.rmtree(data_dir, ignore_errors=True)  # a crashed attempt at v
-        buckets = state.column(BUCKET_COL)
+        shutil.rmtree(self._data_dir(v), ignore_errors=True)  # a crashed attempt at v
+        buckets, written = state.column(BUCKET_COL), {}
         for b in touched:
-            rows = state.filter(pc.equal(buckets, b)).drop_columns([BUCKET_COL])
-            if rows.num_rows:
-                bdir = os.path.join(data_dir, f"{BUCKET_COL}={b}")
-                os.makedirs(bdir)
-                pq.write_table(rows, os.path.join(bdir, f"part-{uuid.uuid4()}.parquet"))
-                manifest[b] = os.path.relpath(bdir, self.path)
-            else:
-                manifest.pop(b, None)  # bucket emptied (all rows deleted)
+            data = _write_bucket(state.filter(pc.equal(buckets, b)).drop_columns([BUCKET_COL]), self._data_dir(v), b)
+            written[b] = data and os.path.dirname(data)
+        changes = {e: t.drop_columns([BUCKET_COL]) for e, t in changes.items()}
+        staged = _stage_journal(changes, v, os.path.join(self._stage_dir(v), "part-00000.parquet")) if self.journal else None
+        self._commit(v, manifest, written, [staged] if staged else [])
+        return {"version": v, **counts}
+
+    def _merge_task(self, kind: str, v: int, manifest: dict[int, str]):
+        """The task kernel's function for ``groupBy(BUCKET_COL)
+        .applyInArrow``: ``task(key, rows)`` MERGEs the bucket in
+        ``key`` with the batch ``rows`` that hash to it, writes the
+        bucket's new file and its journal rows under names fixed by
+        ``v`` and the bucket, so a retried task replaces what an earlier
+        attempt wrote, and returns one row in ``_TASK_SCHEMA``. It
+        closes over plain values only, never the table or its session."""
+        keys, arrow, journal = self.key_cols, self._arrow_schema(), self.journal
+        dirs = {b: os.path.join(self.path, p) for b, p in manifest.items()}
+        data_dir, stage = self._data_dir(v), self._stage_dir(v)
+
+        def task(key, rows):
+            b = key[0].as_py()
+            rows = rows.drop_columns([BUCKET_COL])
+            fields = rows.column_names[len(keys) :] if kind == "update" else None
+            cur = _read_rows(_parquet_files(dirs[b]) if b in dirs else [], arrow)
+            state, changes, counts = merge_bucket(
+                cur, *((None, rows) if kind == "delete" else (rows, None)), keys, fields
+            )
+            data = _write_bucket(state, data_dir, b)
+            staged = _stage_journal(changes, v, os.path.join(stage, f"part-{b:05d}.parquet")) if journal else None
+            return pa.table(
+                [pa.array([b], pa.int32()), pa.array([data], pa.string()), pa.array([staged], pa.string())]
+                + [pa.array([n], pa.int64()) for n in counts.values()],
+                names=["bucket", "data", "journal", *counts],
+            )
+
+        return task
+
+    def _merge_tasks(self, kind: str, batch: DataFrame, manifest: dict[int, str]) -> dict[str, int]:
+        """The task kernel: one job runs :meth:`_merge_task` on every
+        bucket the batch (with its ``BUCKET_COL``) touches; the driver
+        collects one row per bucket and commits. Returns the version and
+        every count."""
+        v = self.current_version() + 1
+        shutil.rmtree(self._data_dir(v), ignore_errors=True)  # a crashed attempt at v
+        shutil.rmtree(self._stage_dir(v), ignore_errors=True)
+        ensure_package_on_workers(self.spark)  # the task calls this module's kernel
+        out = batch.groupBy(BUCKET_COL).applyInArrow(self._merge_task(kind, v, manifest), _TASK_SCHEMA).collect()
+        written = {r.bucket: r.data and os.path.dirname(r.data) for r in out}
+        self._commit(v, manifest, written, sorted(r.journal for r in out if r.journal))
+        return {"version": v, **{k: sum(r[k] for r in out) for k in _EVENTS}}
+
+    # -- commit ---------------------------------------------------------------
+
+    def _commit(self, v: int, manifest: dict[int, str], written: dict[int, str | None], staged: list[str]) -> None:
+        """Make version ``v`` current once its bucket directories are
+        written: ``written`` maps each rewritten bucket to its new
+        directory, or to None when the bucket is now empty and drops out
+        of ``manifest`` (the previous version's, updated in place). The
+        ``staged`` journal files go in first, then the manifest, then
+        the ``_CURRENT`` flip."""
         if self.journal:
-            journal = [
-                rows.drop_columns([BUCKET_COL])
-                .add_column(0, "event_name", pa.array([event] * len(rows), pa.string()))
-                .add_column(1, "version", pa.array([v] * len(rows), pa.int64()))
-                for event, rows in changes.items()
-                if len(rows)
-            ]
-            os.makedirs(self.changes_dir, exist_ok=True)
-            staged = []
-            if journal:
-                staged.append(os.path.join(self.changes_dir, f".v={v}.parquet"))
-                pq.write_table(pa.concat_tables(journal), staged[0])
             self._commit_journal(v, staged)
+        for b, d in written.items():
+            if d is None:
+                manifest.pop(b, None)
+            else:
+                manifest[b] = os.path.relpath(d, self.path)
         self._write_manifest(v, manifest)
         self._flip(v)
-        return {"version": v, **{k: len(changes.get(e, ())) for k, e in _EVENTS.items()}}
-
-    # -- change journal -------------------------------------------------------
 
     def _commit_journal(self, v: int, staged: list[str]) -> None:
         """Make the ``staged`` files version ``v``'s journal files: remove
         every file an earlier, crashed attempt at ``v`` left, then rename
-        the staged ones in under names derived from ``v``. A batch
-        replayed after a crash before the ``_CURRENT`` flip so replaces
-        its change rows instead of adding them a second time. Staged
-        files have hidden names, which the change stream's file listing
-        skips, so it never sees a half-written one."""
+        the staged ones in under names derived from ``v``, and drop the
+        staging directory. A batch replayed after a crash before the
+        ``_CURRENT`` flip so replaces its change rows instead of adding
+        them a second time."""
+        os.makedirs(self.changes_dir, exist_ok=True)
         prefix = f"part-v{v:010d}-"
         for f in os.listdir(self.changes_dir):
             if f.startswith(prefix):
                 os.remove(os.path.join(self.changes_dir, f))
         for i, f in enumerate(staged):
             os.replace(f, os.path.join(self.changes_dir, f"{prefix}{i:05d}.parquet"))
+        shutil.rmtree(self._stage_dir(v), ignore_errors=True)
 
-    def _write_journal(self, v: int, changes: DataFrame) -> None:
-        """Write a Spark frame of change rows as version ``v``'s journal:
-        into a hidden staging directory, then :meth:`_commit_journal`."""
-        stage = os.path.join(self.changes_dir, f".v={v}")
-        changes.write.mode("overwrite").parquet(stage)
-        self._commit_journal(v, _parquet_files(stage))
-        shutil.rmtree(stage)
-
-    # -- Spark path -----------------------------------------------------------
+    # -- bulk load ------------------------------------------------------------
 
     def _bulk_load(self, batch: DataFrame) -> dict[str, int]:
         """An upsert into an empty table: every key is new, so there is
@@ -535,7 +638,7 @@ class KeyedTable:
         INSERTs."""
         v = self.current_version() + 1
         obs = Observation()
-        data_dir = os.path.join(self.path, "data", f"v={v}")
+        data_dir = self._data_dir(v)
         (
             batch.select(*self.schema.names)
             .dropDuplicates(self.key_cols)
@@ -545,210 +648,20 @@ class KeyedTable:
             .mode("overwrite")
             .parquet(data_dir)
         )
-        manifest = {
-            int(d.split("=", 1)[1]): os.path.relpath(os.path.join(data_dir, d), self.path)
+        written = {
+            int(d.split("=", 1)[1]): os.path.join(data_dir, d)
             for d in os.listdir(data_dir)
             if d.startswith(f"{BUCKET_COL}=")
         }
+        staged = []
         if self.journal:
-            self._write_journal(
-                v,
-                self._read_buckets(manifest).select(
-                    F.lit("INSERT").alias("event_name"), F.lit(v).cast("long").alias("version"), "*"
-                ),
-            )
-        self._write_manifest(v, manifest)
-        self._flip(v)
+            rows = self._read_buckets({b: os.path.relpath(d, self.path) for b, d in written.items()})
+            rows.select(F.lit("INSERT").alias("event_name"), F.lit(v).cast("long").alias("version"), "*").write.mode(
+                "overwrite"
+            ).parquet(self._stage_dir(v))
+            staged = _parquet_files(self._stage_dir(v))
+        self._commit(v, {}, written, staged)
         return {"version": v, "inserts": obs.get["inserts"], "modifies": 0}
-
-    def _touched_buckets(self, batch: DataFrame) -> list[int]:
-        """Distinct bucket ids of a batch — bounded by ``n_buckets``
-        (it returns at most n_buckets ints)."""
-        rows = batch.select(self._bucket().alias("b")).distinct().collect()
-        return sorted(r.b for r in rows)
-
-    def _publish(
-        self,
-        v: int,
-        new_state: DataFrame,
-        touched: list[int],
-        changes: DataFrame | None,
-        obs: Observation,
-    ) -> dict[str, int]:
-        """Write touched buckets + journal, update the manifest, flip the
-        pointer, and return the observed merge counts. ``changes=None``
-        (a ``journal=False`` table) skips the journal append — the
-        caller attached ``obs`` to the ``new_state`` lineage instead,
-        so the counts ride the data write."""
-        data_dir = os.path.join(self.path, "data", f"v={v}")
-        new_state.withColumn(BUCKET_COL, self._bucket()).write.partitionBy(
-            BUCKET_COL
-        ).mode("overwrite").parquet(data_dir)
-        if changes is not None:
-            self._write_journal(v, changes)
-
-        manifest = self._read_manifest(v - 1)
-        for b in touched:
-            bdir = os.path.join(data_dir, f"{BUCKET_COL}={b}")
-            if os.path.isdir(bdir):
-                manifest[b] = os.path.relpath(bdir, self.path)
-            else:
-                manifest.pop(b, None)  # bucket emptied (all rows deleted)
-        self._write_manifest(v, manifest)
-        self._flip(v)
-        # Observation sums are NULL (None) when the change journal is
-        # empty — e.g. delete() of keys absent from the table, or
-        # update_fields() where no update key exists (the reference's
-        # preference-removal path tolerates removing a non-existent key).
-        got = obs.get
-        return {"version": v, **{k: int(got[k] or 0) for k in got}}
-
-    @staticmethod
-    def _observed(changes: DataFrame, obs: Observation) -> DataFrame:
-        return changes.observe(
-            obs,
-            F.sum(F.when(F.col("event_name") == "INSERT", 1).otherwise(0)).alias("inserts"),
-            F.sum(F.when(F.col("event_name") == "MODIFY", 1).otherwise(0)).alias("modifies"),
-            F.sum(F.when(F.col("event_name") == "REMOVE", 1).otherwise(0)).alias("deletes"),
-        )
-
-    def _upsert_spark(self, batch: DataFrame, touched: list[int]) -> dict[str, int]:
-        current = self._read_buckets(
-            self._read_manifest(self.current_version()), touched
-        )
-        untouched = current.join(batch, self.key_cols, "left_anti")
-        v = self.current_version() + 1
-        obs = Observation()
-        if not self.journal:
-            # counts ride the DATA write: one marker left-join vs
-            # the touched buckets' keys classifies insert/modify
-            # without materializing a change frame at all. The
-            # observe node sits ABOVE the union: a CollectMetrics
-            # inside a union child whose sibling is an empty
-            # relation never delivers its metrics under foreachBatch
-            # (measured: Observation.get blocks forever on the first
-            # micro-batch, when `current` is the empty v=-1 frame).
-            marked = batch.join(
-                current.select(*self.key_cols).withColumn(
-                    "_existing__", F.lit(True)
-                ),
-                self.key_cols,
-                "left",
-            )
-            tagged = untouched.withColumn("_m__", F.lit(1)).unionByName(
-                marked.select(
-                    *batch.columns,
-                    F.when(F.col("_existing__").isNotNull(), F.lit(2))
-                    .otherwise(F.lit(3))
-                    .alias("_m__"),
-                )
-            )
-            new_state = tagged.observe(
-                obs,
-                F.sum(F.when(F.col("_m__") == 3, 1).otherwise(0)).alias(
-                    "inserts"
-                ),
-                F.sum(F.when(F.col("_m__") == 2, 1).otherwise(0)).alias(
-                    "modifies"
-                ),
-            ).drop("_m__")
-            return self._publish(v, new_state, touched, None, obs)
-        new_state = untouched.unionByName(batch)
-        # journal classification: new key -> INSERT, existing -> MODIFY
-        inserts = batch.join(current, self.key_cols, "left_anti")
-        modifies = batch.join(
-            current.select(*self.key_cols), self.key_cols, "left_semi"
-        )
-        changes = inserts.select(
-            F.lit("INSERT").alias("event_name"), F.lit(v).cast("long").alias("version"), "*"
-        ).unionByName(
-            modifies.select(
-                F.lit("MODIFY").alias("event_name"), F.lit(v).cast("long").alias("version"), "*"
-            )
-        )
-        return self._publish(v, new_state, touched, self._observed(changes, obs), obs)
-
-    def _update_spark(
-        self, updates: DataFrame, fields: list[str], touched: list[int]
-    ) -> dict[str, int]:
-        upd = updates.alias("u")
-        current = self._read_buckets(
-            self._read_manifest(self.current_version()), touched
-        )
-        cur = current.alias("c")
-        # one left-outer join + ONE field-merge projection list,
-        # shared by both publish paths (ADVICE r8: the journaled and
-        # no-journal branches carried byte-identical 25-line copies)
-        joined = cur.join(upd, self.key_cols, "left_outer")
-        hit = F.col(f"u.{self.key_cols[0]}").isNotNull()
-        key_sel = [F.col(f"c.{k}").alias(k) for k in self.key_cols]
-        merge_sel = [
-            (
-                F.when(hit, F.col(f"u.{f}")).otherwise(F.col(f"c.{f}")).alias(f)
-                if f in fields
-                else F.col(f"c.{f}").alias(f)
-            )
-            for f in current.columns
-            if f not in self.key_cols
-        ]
-        merged = joined.select(*key_sel, *merge_sel)
-        v = self.current_version() + 1
-        obs = Observation()
-        if not self.journal:
-            # modifies = |cur ∩ upd|, observed on the data write via
-            # a marker column on the same left-outer join
-            marked = joined.select(
-                *key_sel, *merge_sel, hit.alias("_upd__")
-            ).observe(
-                obs,
-                F.sum(F.when(F.col("_upd__"), 1).otherwise(0)).alias(
-                    "modifies"
-                ),
-            )
-            return self._publish(v, marked.drop("_upd__"), touched, None, obs)
-        touched_keys = upd.join(cur, self.key_cols, "left_semi")
-        new_images = merged.join(
-            touched_keys.select(*self.key_cols), self.key_cols, "left_semi"
-        )
-        changes = new_images.select(
-            F.lit("MODIFY").alias("event_name"), F.lit(v).cast("long").alias("version"), "*"
-        )
-        return self._publish(v, merged, touched, self._observed(changes, obs), obs)
-
-    def _delete_spark(self, keys: DataFrame, touched: list[int]) -> dict[str, int]:
-        current = self._read_buckets(
-            self._read_manifest(self.current_version()), touched
-        )
-        v = self.current_version() + 1
-        obs = Observation()
-        if not self.journal:
-            # deletes = |cur ∩ keys|, observed upstream of the
-            # surviving-row filter on one marker left-join
-            marked = current.join(
-                # distinct(): a duplicated delete key must not fan
-                # out current rows through the left join (the
-                # journaled path's semi/anti joins are dupe-safe)
-                keys.select(*self.key_cols)
-                .distinct()
-                .withColumn("_del__", F.lit(True)),
-                self.key_cols,
-                "left",
-            ).observe(
-                obs,
-                F.sum(
-                    F.when(F.col("_del__").isNotNull(), 1).otherwise(0)
-                ).alias("deletes"),
-            )
-            remaining = marked.filter(F.col("_del__").isNull()).drop(
-                "_del__"
-            )
-            return self._publish(v, remaining, touched, None, obs)
-        removed = current.join(keys, self.key_cols, "left_semi")
-        remaining = current.join(keys, self.key_cols, "left_anti")
-        changes = removed.select(
-            F.lit("REMOVE").alias("event_name"), F.lit(v).cast("long").alias("version"), "*"
-        )
-        return self._publish(v, remaining, touched, self._observed(changes, obs), obs)
 
     def _flip(self, v: int) -> None:
         tmp = self._pointer + ".tmp"
