@@ -72,3 +72,9 @@ def test_env_override_wins(tmp_path):
         os.environ, {"SPARK_GRAFT_DRIVER_JAVA_OPTS": "-Xmx1g"}
     ):
         assert S._driver_java_options() == "-Xmx1g"
+
+
+def test_session_fails_on_missing_files(spark):
+    # a KeyedTable frame whose files a later commit reclaimed must raise,
+    # never return the rows of the files that are left
+    assert spark.conf.get("spark.sql.files.ignoreMissingFiles") == "false"

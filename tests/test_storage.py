@@ -49,6 +49,27 @@ def _bucket_dirs(root: str, version: int) -> list[str]:
     return sorted(d for d in os.listdir(vdir) if d.startswith(f"{BUCKET_COL}="))
 
 
+def assert_reclaimed(table: KeyedTable) -> None:
+    """``data/`` holds exactly the bucket directories that the current
+    and the previous manifests name, beside the bulk load's ``_SUCCESS``
+    markers, plus whatever sits above the current version: no other
+    bucket directory, no empty version directory, no hidden leftover."""
+    v = table.current_version()
+    want = {p for k in (v - 1, v) for p in table._read_manifest(k).values()}
+    data = os.path.join(table.path, "data")
+    versions = [n for n in (os.listdir(data) if os.path.isdir(data) else []) if int(n.split("=", 1)[1]) <= v]
+    got, stray = set(), []
+    for name in versions:
+        for d in os.listdir(os.path.join(data, name)):
+            rel = os.path.join("data", name, d)
+            if d.startswith(f"{BUCKET_COL}="):
+                got.add(rel)
+            elif d not in ("_SUCCESS", "._SUCCESS.crc"):
+                stray.append(rel)
+    assert (got, stray) == (want, [])
+    assert {p.split(os.sep)[1] for p in got} == set(versions)
+
+
 def test_single_key_upsert_rewrites_one_bucket(spark, tmp_path):
     root = str(tmp_path / "t")
     table = KeyedTable(spark, root, ["k"], KV_SCHEMA, n_buckets=8)
@@ -402,9 +423,10 @@ def test_bulk_load_into_empty_table(spark, tmp_path, monkeypatch, journal):
 @pytest.mark.parametrize("path", ["local", "spark"])
 def test_replay_after_crash_before_flip_journals_each_change_once(spark, tmp_path, monkeypatch, path):
     """A MERGE that crashes after its journal write but before the
-    ``_CURRENT`` flip leaves the previous version current; replaying it
-    rewrites that version, and the journal holds each of its change
-    rows once, on the driver path and on the task path."""
+    ``_CURRENT`` flip leaves the previous version current and whole (the
+    sweep runs only after a flip); replaying it rewrites that version,
+    and the journal holds each of its change rows once, on the driver
+    path and on the task path."""
     if path == "spark":
         monkeypatch.setattr(storage, "LOCAL_MERGE_MAX_ROWS", 0)
     real_flip = KeyedTable._flip
@@ -426,8 +448,13 @@ def test_replay_after_crash_before_flip_journals_each_change_once(spark, tmp_pat
                 merge()
         assert table.current_version() == expect["version"] - 1
         assert sorted(map(tuple, table.read().collect())) == before
+        # no sweep runs before a flip: version v-1 is whole
+        for p in table._read_manifest(expect["version"] - 1).values():
+            assert storage._parquet_files(os.path.join(table.path, p))
+        assert_reclaimed(table)
         monkeypatch.setattr(KeyedTable, "_flip", real_flip)
         assert merge() == expect
+        assert_reclaimed(table)
     assert sorted(map(tuple, table.read().collect())) == [(0, "a"), (1, "b"), (4, "u"), (5, "a"), (9, "n")]
     assert sorted(map(tuple, table.read_changes().collect())) == sorted(
         [("INSERT", 0, i, "a") for i in range(6)]
@@ -530,27 +557,19 @@ def test_read_returns_one_frame_per_version(spark, tmp_path):
     assert sorted(map(tuple, first.collect())) == [(1, "a"), (2, "b")]
 
 
-def test_read_is_never_older_than_the_pointer_under_threads(spark, tmp_path):
-    """Reader threads share ``read()``'s per-version frame while a writer
-    commits versions: a frame read after ``_CURRENT`` named version N
-    always includes version N's bucket directory, never an older one."""
-    table = KeyedTable(spark, str(tmp_path / "t"), ["k"], KV_SCHEMA, n_buckets=4)
-    table.upsert(_kv(spark, [(0, "a")]))
-    n_writes, stale, done = 12, [], threading.Event()
-
-    def newest(df) -> int:
-        return max(int(re.search(r"/v=(\d+)/", f).group(1)) for f in df.inputFiles())
+def _race(read_once, write) -> None:
+    """Call ``read_once`` over and over in four threads while ``write``
+    runs in a fifth, with the interpreter switching threads every 10 µs,
+    until ``write`` returns."""
+    done = threading.Event()
 
     def reader():
         while not done.is_set():
-            before = table.current_version()
-            if newest(table.read()) < before:
-                stale.append(before)
+            read_once()
 
     def writer():
         try:
-            for i in range(1, n_writes + 1):
-                table.upsert(_kv(spark, [(i, "a")]))
+            write()
         finally:
             done.set()
 
@@ -565,8 +584,201 @@ def test_read_is_never_older_than_the_pointer_under_threads(spark, tmp_path):
     finally:
         sys.setswitchinterval(interval)
     assert not any(t.is_alive() for t in threads)
+
+
+def test_read_is_never_older_than_the_pointer_under_threads(spark, tmp_path):
+    """Reader threads share ``read()``'s per-version frame while a writer
+    commits versions: a frame read after ``_CURRENT`` named version N
+    always includes version N's bucket directory, never an older one."""
+    table = KeyedTable(spark, str(tmp_path / "t"), ["k"], KV_SCHEMA, n_buckets=4)
+    table.upsert(_kv(spark, [(0, "a")]))
+    n_writes, stale = 12, []
+
+    def newest(df) -> int:
+        return max(int(re.search(r"/v=(\d+)/", f).group(1)) for f in df.inputFiles())
+
+    def read_once():
+        before = table.current_version()
+        if newest(table.read()) < before:
+            stale.append(before)
+
+    def write():
+        for i in range(1, n_writes + 1):
+            table.upsert(_kv(spark, [(i, "a")]))
+
+    _race(read_once, write)
     assert table.current_version() == n_writes and stale == []
     assert newest(table.read()) == n_writes
+
+
+UV_SCHEMA = T.StructType(
+    [
+        T.StructField("u", T.StringType(), False),
+        T.StructField("k", T.LongType(), False),
+        T.StructField("v", T.StringType(), True),
+    ]
+)
+
+
+def _uv(spark, i: int, n_keys: int = 8):
+    """Version ``i`` of a table whose every write rewrites every row."""
+    return spark.createDataFrame([("a", k, str(i)) for k in range(n_keys)], UV_SCHEMA)
+
+
+def _rows(df) -> list[tuple]:
+    return sorted(map(tuple, df.collect()))
+
+
+@pytest.mark.parametrize("reader", ["collect", "lookup"])
+def test_readers_get_a_whole_version_or_raise_under_threads(spark, tmp_path, reader):
+    """Reader threads ``collect()`` a ``read()`` frame, or ``lookup``,
+    while a writer commits versions that each set every row's value to
+    the version's number. Each result is exactly one version's rows, or
+    the read raises file-not-found because reclamation overtook it;
+    never a subset of a version's rows."""
+    table = KeyedTable(spark, str(tmp_path / "t"), ["u", "k"], UV_SCHEMA, n_buckets=4)
+    n_writes = 12
+    table.upsert(_uv(spark, 0))
+    versions = {frozenset(_rows(_uv(spark, i))) for i in range(n_writes + 1)}
+    got, wrong = [], []
+
+    def read_rows() -> frozenset:
+        if reader == "collect":
+            return frozenset(_rows(table.read()))
+        return frozenset(tuple(r.values()) for r in table.lookup(u="a").drop_columns([BUCKET_COL]).to_pylist())
+
+    def read_once():
+        try:
+            rows = read_rows()
+        except Exception as e:  # noqa: BLE001 - only a reclaimed file may fail a read
+            if not (isinstance(e, FileNotFoundError) if reader == "lookup" else "FILE_NOT_EXIST" in str(e)):
+                wrong.append(e)
+        else:
+            (got if rows in versions else wrong).append(rows)
+
+    _race(read_once, lambda: [table.upsert(_uv(spark, i)) for i in range(1, n_writes + 1)])
+    assert wrong == [] and got
+    assert read_rows() == frozenset(_rows(_uv(spark, n_writes)))
+    assert_reclaimed(table)
+
+
+@pytest.mark.parametrize("path", ["local", "spark"])
+def test_frame_one_commit_old_reads_whole_two_commits_old_raises(spark, tmp_path, monkeypatch, path):
+    """A ``read()`` frame taken before one commit collects its exact
+    rows: the commit keeps the previous version's directories. After a
+    second commit they are reclaimed and the frame raises on
+    ``collect()``, never returning the rows that are left."""
+    if path == "spark":
+        monkeypatch.setattr(storage, "LOCAL_MERGE_MAX_ROWS", 0)
+    table = KeyedTable(spark, str(tmp_path / "t"), ["k"], KV_SCHEMA, n_buckets=4)
+    rows = [(i, "a") for i in range(8)]
+    table.upsert(_kv(spark, rows))
+    frame = table.read()
+    table.upsert(_kv(spark, [(0, "b")]))
+    assert _rows(frame) == rows
+    table.upsert(_kv(spark, [(0, "c")]))
+    assert_reclaimed(table)
+    with pytest.raises(Exception, match="FILE_NOT_EXIST"):
+        frame.collect()
+    assert _rows(table.read()) == [(0, "c"), *rows[1:]]
+
+
+def _commit_after(monkeypatch, table: KeyedTable, method: str, versions) -> None:
+    """Make the next call of ``KeyedTable.<method>`` commit ``_uv`` of
+    each of ``versions`` to ``table`` just before it returns."""
+    real = getattr(KeyedTable, method)
+
+    def then_commit(self, *args):
+        out = real(self, *args)
+        monkeypatch.setattr(KeyedTable, method, real)
+        for i in versions:
+            table.upsert(_uv(table.spark, i))
+        return out
+
+    monkeypatch.setattr(KeyedTable, method, then_commit)
+
+
+@pytest.mark.parametrize("at", ["_read_manifest", "_read_buckets"])
+def test_read_overtaken_by_two_commits_builds_the_frame_again(spark, tmp_path, monkeypatch, at):
+    """Two commits that land while ``read()`` builds its frame, before
+    Spark checks the bucket directories or after it has listed them,
+    reclaim directories the frame names. ``read()`` then builds the
+    frame again from the newest version rather than keep one that
+    raises, or that misses the rows of a directory which vanished while
+    Spark listed it (Spark skips such a directory)."""
+    table = KeyedTable(spark, str(tmp_path / "t"), ["u", "k"], UV_SCHEMA, n_buckets=4)
+    table.upsert(_uv(spark, 0))
+    _commit_after(monkeypatch, table, at, [1, 2])
+    assert _rows(table.read()) == _rows(_uv(spark, 2))
+
+
+@pytest.mark.parametrize("commits", [1, 2])
+def test_lookup_overtaken_by_commits_returns_its_rows_or_raises(spark, tmp_path, monkeypatch, commits):
+    """Commits that land after ``lookup`` listed its version's files and
+    before it scans them leave it that version's exact rows after one
+    commit, and make it raise ``FileNotFoundError`` after two."""
+    table = KeyedTable(spark, str(tmp_path / "t"), ["u", "k"], UV_SCHEMA, n_buckets=4)
+    table.upsert(_uv(spark, 0))
+    _commit_after(monkeypatch, table, "_files", range(1, commits + 1))
+    if commits == 2:
+        with pytest.raises(FileNotFoundError):
+            table.lookup(u="a")
+        return
+    got = table.lookup(u="a").drop_columns([BUCKET_COL])
+    assert sorted(tuple(r.values()) for r in got.to_pylist()) == _rows(_uv(spark, 0))
+
+
+def test_data_bytes_stay_bounded_over_small_upserts(spark, tmp_path):
+    """Fifty one-row upserts leave ``data/`` holding at most two images
+    of each bucket, the live one and the previous version's: its bytes
+    stay within twice the live snapshot's and its files within twice
+    the bucket count, while the versions written add up to many times
+    that."""
+    table = KeyedTable(spark, str(tmp_path / "t"), ["k"], KV_SCHEMA, n_buckets=4, journal=False)
+    table.upsert(_kv(spark, [(i, "x" * 100) for i in range(40)]))
+    data, written = os.path.join(table.path, "data"), 0
+
+    def tree(path) -> tuple[int, int]:
+        files = [os.path.join(r, f) for r, _, fs in os.walk(path) for f in fs if f.endswith(".parquet")]
+        return sum(map(os.path.getsize, files)), len(files)
+
+    for i in range(50):
+        v = table.upsert(_kv(spark, [(1000 + i, "y" * 100)]))["version"]
+        written += tree(os.path.join(data, f"v={v}"))[0]
+        disk, n_files = tree(data)
+        live = sum(tree(os.path.join(table.path, p))[0] for p in table._read_manifest(v).values())
+        assert disk <= 2 * live and n_files <= 2 * table.n_buckets, (i, disk, live, n_files)
+        assert_reclaimed(table)
+    assert written > 5 * disk
+    assert table.read().count() == 90
+
+
+def test_commit_clears_crashed_sweeps_and_keeps_later_attempts(spark, tmp_path):
+    """A sweep that crashed leaves hidden renamed bucket directories and
+    version directories without buckets; the next commit removes them.
+    A directory above the committed version, another attempt's, stays."""
+    table = KeyedTable(spark, str(tmp_path / "t"), ["u", "k"], UV_SCHEMA, n_buckets=4)
+    for i in range(3):
+        table.upsert(_uv(spark, i))
+    data = os.path.join(table.path, "data")
+    assert sorted(os.listdir(data)) == ["v=1", "v=2"]
+    leftovers = [
+        os.path.join(data, "v=0", ".reclaim-bucket__=1"),
+        os.path.join(data, "v=2", ".reclaim-bucket__=9"),
+    ]
+    for d in leftovers:
+        os.makedirs(d)
+        open(os.path.join(d, "part-00000.parquet"), "w").close()
+    open(os.path.join(data, "v=0", "_SUCCESS"), "w").close()
+    later = os.path.join(data, "v=9", f"{BUCKET_COL}=0")
+    os.makedirs(later)
+    open(os.path.join(later, "part-00000.parquet"), "w").close()
+    table.upsert(_uv(spark, 3))
+    assert sorted(os.listdir(data)) == ["v=2", "v=3", "v=9"]
+    assert os.listdir(later) == ["part-00000.parquet"]
+    assert_reclaimed(table)
+    assert _rows(table.read()) == _rows(_uv(spark, 3))
+
 
 def _sample_rows(schema: T.StructType) -> list[tuple]:
     """Rows covering every column's type: NULLs in every nullable

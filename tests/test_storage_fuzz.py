@@ -15,6 +15,10 @@ sequence, three invariants must hold exactly:
 3. every op's merge counts (inserts/modifies/deletes) match the
    model's transition counts — the per-batch A7 metrics.
 
+After every op, each table's ``data/`` holds exactly the bucket
+directories its current and previous manifests name: the commit
+reclaims every other one.
+
 Each sequence runs on both ways the MERGE kernel runs (on the driver
 and in Spark tasks), with and without a journal, and all four tables
 must agree op by op and keep every key unique. With the task tables'
@@ -44,6 +48,8 @@ from tv_event_streaming_spark.operators.preferences import PREF_KEY, set_user_pr
 from tv_event_streaming_spark.schemas import USER_PREF_SCHEMA
 from tv_event_streaming_spark.streaming import storage
 from tv_event_streaming_spark.streaming.storage import KeyedTable
+
+from .test_storage import assert_reclaimed
 
 _EXAMPLES = int(os.environ.get("FUZZ_EXAMPLES", "4"))
 
@@ -107,6 +113,7 @@ def test_keyed_table_matches_model_on_random_op_sequences(
             cap = 0 if path == "spark" else storage.LOCAL_MERGE_MAX_ROWS
             with mock.patch.object(storage, "LOCAL_MERGE_MAX_ROWS", cap):
                 outs.add(tuple(sorted(getattr(kt, method)(*args).items())))
+            assert_reclaimed(kt)
         assert len(outs) == 1, (outs, ops)
         return dict(outs.pop())
 
@@ -205,6 +212,7 @@ def test_put_matches_set_model_on_random_sequences(spark, tmp_path_factory, puts
             cap = 0 if path == "spark" else storage.LOCAL_MERGE_MAX_ROWS
             with mock.patch.object(storage, "LOCAL_MERGE_MAX_ROWS", cap):
                 outs.add(tuple(sorted(set_user_preferences(kt, uid, *body).items())))
+            assert_reclaimed(kt)
         assert outs == {(("adds", len(want - have)), ("deletes", len(have - want)))}, (outs, puts)
         model[uid] = want
 

@@ -84,9 +84,11 @@ def start_consumer(
     checkpoint_dir: str,
     max_files_per_trigger: int = 32,
 ):
-    """Start the consumer with an availableNow trigger (drain everything
-    pending, then stop — the test/batch form; drop the trigger for a
-    continuous deployment). ``max_files_per_trigger`` bounds micro-batch
+    """Start the consumer with an availableNow trigger: drain everything
+    pending, then stop. A ``KeyedTable`` takes one writer at a time and
+    the enrichment also writes ``titles``, so run the consumer and the
+    enrichment in turn, each with availableNow; run together, the two
+    writers lose rows. ``max_files_per_trigger`` bounds micro-batch
     size (the Kinesis shard-batch knob); the crash-restart fuzz sets it
     to 1 so every bus file is its own micro-batch boundary."""
     wire = (

@@ -77,6 +77,27 @@ version directory that last wrote it, then an atomic rename of the
 from per-bucket paths; a crash before the flip leaves version N-1
 current, and the replayed batch rewrites version N.
 
+After the flip the commit reclaims superseded data, as a DynamoDB put
+overwrites its item in place: it keeps the bucket directories that the
+manifests of N and N-1 name (``RETAINED_VERSIONS``) and removes every
+other ``data/v=K/`` bucket directory with K <= N, each renamed to a
+hidden name inside its version directory and then deleted, so a listing
+sees it whole or not at all. A version directory left without bucket
+directories goes too, as do a crashed sweep's hidden leftovers.
+Directories above N (a crashed or running attempt) are never touched,
+nor are the manifests or the journal. So a reader that took its
+snapshot at N or N-1 reads it whole while the next commit lands, and a
+reader holding an older snapshot fails loudly, never with a subset of
+its rows: Spark raises file-not-found on ``collect()``
+(``spark.sql.files.ignoreMissingFiles`` must stay false) and
+:meth:`KeyedTable.lookup` raises ``FileNotFoundError``.
+
+The table takes ONE writer at a time, and nothing enforces it: two
+unsynchronised writers both commit version N and lose rows, and with
+reclamation one writer's sweep can also delete directories the other's
+manifest names. The protocol relies on a local or shared POSIX
+filesystem's atomic rename; object stores are out of scope.
+
 On a real deployment this class is replaced wholesale by Delta/Iceberg
 ``MERGE INTO`` + change data feed; the pipeline code above it doesn't
 change. The bucket layout is exactly the rewrite-granularity story those
@@ -98,6 +119,7 @@ import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.dataset as ds
 import pyarrow.parquet as pq
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -117,6 +139,11 @@ BUCKET_COL = "bucket__"
 #: A larger upsert into an empty table, such as seeding the 60 k-row
 #: preferences table, is a Spark bulk load.
 LOCAL_MERGE_MAX_ROWS = 50_000
+
+#: A commit keeps the bucket directories of this many versions, the new
+#: one and the one before it: one reader may run while one commit lands
+#: (a /titles request during a PUT) and still read its snapshot whole.
+RETAINED_VERSIONS = 2
 
 _COUNTS = {
     "upsert": ("inserts", "modifies"),
@@ -326,12 +353,28 @@ class KeyedTable:
         """The current version. While ``_CURRENT`` names the same
         version this is the same DataFrame: a version's bucket files
         never change once it is current, and listing them again cost
-        50–80 ms per call."""
-        v = self.current_version()
-        snapshot = self._snapshot
-        if snapshot is None or snapshot[0] != v:
-            snapshot = self._snapshot = (v, self._read_buckets(self._read_manifest(v)))
-        return snapshot[1]
+        50–80 ms per call.
+
+        Spark lists the bucket directories when it builds the frame, and
+        skips a directory that vanishes while it lists. Version ``v``'s
+        directories stay until the commit of ``v + 2`` reclaims them, so
+        a frame is kept only when ``_CURRENT`` still names at most
+        ``v + 1`` after its listing; otherwise it is built again from
+        the newer version."""
+        while True:
+            v = self.current_version()
+            snapshot = self._snapshot
+            if snapshot is not None and snapshot[0] == v:
+                return snapshot[1]
+            try:
+                df = self._read_buckets(self._read_manifest(v))
+            except AnalysisException:  # a directory reclaimed before Spark checked it
+                if self.current_version() < v + RETAINED_VERSIONS:
+                    raise
+                continue
+            if self.current_version() < v + RETAINED_VERSIONS:
+                self._snapshot = (v, df)
+                return df
 
     def lookup(self, **values) -> pa.Table | None:
         """The current version's rows whose columns equal ``values``
@@ -346,7 +389,10 @@ class KeyedTable:
         any bucket and every one is scanned, in one multi-threaded
         pyarrow scan: a one-user lookup took 4–7 ms at 60 k rows and
         12–30 ms at 1 M (16 buckets, 4 cores), where the same read as a
-        Spark ``read().filter(...).collect()`` took 150–190 ms warm."""
+        Spark ``read().filter(...).collect()`` took 150–190 ms warm.
+
+        A lookup overtaken by two commits, whose files were reclaimed
+        while it listed or scanned them, raises ``FileNotFoundError``."""
         where = functools.reduce(operator.and_, (pc.field(c) == x for c, x in values.items()))
         arrow = self._arrow_schema()
         bucket_of = {f: b for b, f in self._files(self._read_manifest(self.current_version()))}
@@ -601,7 +647,11 @@ class KeyedTable:
         directory, or to None when the bucket is now empty and drops out
         of ``manifest`` (the previous version's, updated in place). The
         ``staged`` journal files go in first, then the manifest, then
-        the ``_CURRENT`` flip."""
+        the ``_CURRENT`` flip, then :meth:`_reclaim`, which removes the
+        bucket directories no retained version names. A crash before the
+        flip leaves version ``v - 1`` whole, since nothing is removed
+        before it. One writer at a time: a second, unsynchronised one
+        could have its directories reclaimed under it."""
         if self.journal:
             self._commit_journal(v, staged)
         for b, d in written.items():
@@ -611,6 +661,34 @@ class KeyedTable:
                 manifest[b] = os.path.relpath(d, self.path)
         self._write_manifest(v, manifest)
         self._flip(v)
+        self._reclaim(v)
+
+    def _reclaim(self, v: int) -> None:
+        """Remove what no reader of version ``v`` or of the
+        ``RETAINED_VERSIONS - 1`` before it can read: every bucket
+        directory under ``data/v=K`` with K <= ``v`` that none of their
+        manifests names (renamed to a hidden name, then deleted, so a
+        listing sees it whole or not at all), every version directory
+        left without one, and the hidden leftovers of a crashed sweep.
+        Directories above ``v`` belong to a later attempt and stay."""
+        keep = {p for k in range(v - RETAINED_VERSIONS + 1, v + 1) for p in self._read_manifest(k).values()}
+        data = os.path.join(self.path, "data")
+        for name in os.listdir(data) if os.path.isdir(data) else []:
+            vdir = os.path.join(data, name)
+            if int(name.split("=", 1)[1]) > v:
+                continue
+            kept = False
+            for d in os.listdir(vdir):
+                if os.path.join("data", name, d) in keep:
+                    kept = True
+                elif d.startswith(f"{BUCKET_COL}="):
+                    hidden = os.path.join(vdir, f".reclaim-{d}")
+                    os.rename(os.path.join(vdir, d), hidden)
+                    shutil.rmtree(hidden)
+                elif d.startswith(".reclaim-"):
+                    shutil.rmtree(os.path.join(vdir, d))
+            if not kept:
+                shutil.rmtree(vdir)
 
     def _commit_journal(self, v: int, staged: list[str]) -> None:
         """Make the ``staged`` files version ``v``'s journal files: remove
