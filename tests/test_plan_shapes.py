@@ -380,13 +380,19 @@ def test_small_upsert_submits_at_most_four_jobs(spark, tmp_path):
     assert 1 <= len(jobs) <= 4, len(jobs)
 
 
-@pytest.mark.parametrize("journal", [False, True], ids=["no_journal", "journal"])
-def test_bulk_load_submits_few_jobs(spark, tmp_path, journal):
-    """A first upsert of cap + 1 rows into an empty table (seeding, the
-    initial load) skips the probe-match-classify MERGE: the bounded probe,
-    then one dedup and one bucketed write (two jobs under AQE), plus one
-    copy into the journal when there is one. The Spark MERGE of the same
-    batch ran 9."""
+@pytest.mark.parametrize(
+    "empty, journal",
+    [(False, False), (False, True), (True, False), (True, True)],
+    ids=["no_journal", "journal", "empty-no_journal", "empty-journal"],
+)
+def test_large_upsert_submits_few_jobs(spark, tmp_path, empty, journal):
+    """An upsert of cap + 1 rows runs the MERGE kernel in Spark tasks,
+    into an empty table (seeding, an initial load) as into a non-empty
+    one: the bounded probe, then the grouped ``applyInArrow`` (its
+    shuffle and its result stage), whose tasks also write the journal
+    rows: 3 jobs in every case. The join-based Spark MERGE it replaced
+    ran 7, and 8 with the journal; the Spark bulk load that took the
+    empty case ran 2, and 3 with its copy into the journal."""
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
@@ -399,50 +405,19 @@ def test_bulk_load_submits_few_jobs(spark, tmp_path, journal):
         [T.StructField("k", T.LongType(), False), T.StructField("v", T.StringType())]
     )
     table = KeyedTable(spark, str(tmp_path / "t"), ["k"], schema, journal=journal)
-    n = LOCAL_MERGE_MAX_ROWS + 1
-    batch = spark.range(n).select(F.col("id").alias("k"), F.lit("a").alias("v"))
-    sc = spark.sparkContext
-    group = f"pin-bulk-load-{journal}"
-    sc.setJobGroup(group, group)
-    try:
-        out = table.upsert(batch)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    assert out == {"version": 0, "inserts": n, "modifies": 0}
-    jobs = sc.statusTracker().getJobIdsForGroup(group)
-    assert 1 <= len(jobs) <= 4 + journal, len(jobs)
-
-
-@pytest.mark.parametrize("journal", [False, True], ids=["no_journal", "journal"])
-def test_large_upsert_submits_few_jobs(spark, tmp_path, journal):
-    """An upsert of cap + 1 rows into a non-empty table runs the MERGE
-    kernel in Spark tasks: the bounded probe, then the grouped
-    ``applyInArrow`` (its shuffle and its result stage), whose tasks
-    also write the journal rows: 3 jobs either way. The join-based
-    Spark MERGE it replaced ran 7, and 8 with the journal."""
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
-
-    from tv_event_streaming_spark.streaming.storage import (
-        LOCAL_MERGE_MAX_ROWS,
-        KeyedTable,
-    )
-
-    schema = T.StructType(
-        [T.StructField("k", T.LongType(), False), T.StructField("v", T.StringType())]
-    )
-    table = KeyedTable(spark, str(tmp_path / "t"), ["k"], schema, journal=journal)
-    table.upsert(spark.createDataFrame([(k, "a") for k in range(0, 400, 2)], schema))
+    seeded = 0 if empty else 200
+    if seeded:
+        table.upsert(spark.createDataFrame([(k, "a") for k in range(0, 2 * seeded, 2)], schema))
     n = LOCAL_MERGE_MAX_ROWS + 1
     batch = spark.range(n).select(F.col("id").alias("k"), F.lit("b").alias("v"))
     sc = spark.sparkContext
-    group = f"pin-large-upsert-{journal}"
+    group = f"pin-large-upsert-{empty}-{journal}"
     sc.setJobGroup(group, group)
     try:
         out = table.upsert(batch)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
-    assert out == {"version": 1, "inserts": n - 200, "modifies": 200}
+    assert out == {"version": int(not empty), "inserts": n - seeded, "modifies": seeded}
     jobs = sc.statusTracker().getJobIdsForGroup(group)
     assert 1 <= len(jobs) <= 3, len(jobs)
 

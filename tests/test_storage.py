@@ -3,9 +3,9 @@ crash-restart from a streaming checkpoint (ST9).
 
 Small batches take the driver path; every example test also runs on
 the task path (``test_spark_path_passes_every_case``, which sets the
-size cap to 0, so each MERGE runs the kernel in Spark tasks and each
-first upsert into an empty table takes the bulk load), and the
-remaining tests pin the size rule, the bulk load, task retries and the
+size cap to 0, so each MERGE, a first upsert into an empty table
+included, runs the kernel in Spark tasks), and the remaining tests pin
+the size rule, a large upsert into an empty table, task retries and the
 pyarrow-written files' round trip through Spark."""
 
 from __future__ import annotations
@@ -51,9 +51,9 @@ def _bucket_dirs(root: str, version: int) -> list[str]:
 
 def assert_reclaimed(table: KeyedTable) -> None:
     """``data/`` holds exactly the bucket directories that the current
-    and the previous manifests name, beside the bulk load's ``_SUCCESS``
-    markers, plus whatever sits above the current version: no other
-    bucket directory, no empty version directory, no hidden leftover."""
+    and the previous manifests name, plus whatever sits above the
+    current version: no other bucket directory, no empty version
+    directory, no hidden leftover, no other file."""
     v = table.current_version()
     want = {p for k in (v - 1, v) for p in table._read_manifest(k).values()}
     data = os.path.join(table.path, "data")
@@ -64,7 +64,7 @@ def assert_reclaimed(table: KeyedTable) -> None:
             rel = os.path.join("data", name, d)
             if d.startswith(f"{BUCKET_COL}="):
                 got.add(rel)
-            elif d not in ("_SUCCESS", "._SUCCESS.crc"):
+            else:
                 stray.append(rel)
     assert (got, stray) == (want, [])
     assert {p.split(os.sep)[1] for p in got} == set(versions)
@@ -359,29 +359,32 @@ def test_size_rule_boundary(spark, tmp_path, monkeypatch):
 
 
 @pytest.mark.parametrize("journal", [True, False], ids=["journal", "no_journal"])
-def test_bulk_load_into_empty_table(spark, tmp_path, monkeypatch, journal):
-    """An upsert bigger than the cap into an empty table is a bulk load:
-    duplicate keys collapse, every row is an INSERT at version 0, a crash
-    before the pointer flip leaves the table empty and the replay
-    converges, and later local and Spark MERGEs run over the
-    Spark-written buckets."""
+def test_large_upsert_into_empty_table(spark, tmp_path, monkeypatch, journal):
+    """An upsert bigger than the cap into an empty table runs the kernel
+    in tasks over buckets with no live rows: a key repeated with
+    different payloads leaves one row holding one of them, every row is
+    an INSERT at version 0 whose journal image is the stored row, a
+    crash before the pointer flip leaves the table empty and the replay
+    converges, and later driver and task MERGEs run over the buckets it
+    wrote."""
     calls = _local_calls(monkeypatch)
-    bulk: list[int] = []
-    real_bulk, real_flip = KeyedTable._bulk_load, KeyedTable._flip
+    tasks: list[tuple[str, int, bool]] = []
+    real_tasks, real_flip = KeyedTable._merge_tasks, KeyedTable._flip
 
-    def spy(self, batch):
-        bulk.append(self.current_version())
-        return real_bulk(self, batch)
+    def spy(self, kind, batch, manifest):
+        tasks.append((kind, self.current_version(), bool(manifest)))
+        return real_tasks(self, kind, batch, manifest)
 
     def crash(self, v):
         raise RuntimeError("simulated crash before the flip")
 
-    monkeypatch.setattr(KeyedTable, "_bulk_load", spy)
+    monkeypatch.setattr(KeyedTable, "_merge_tasks", spy)
     monkeypatch.setattr(storage, "LOCAL_MERGE_MAX_ROWS", 4)
     root = str(tmp_path / "t")
     table = KeyedTable(spark, root, ["k"], KV_SCHEMA, n_buckets=4, journal=journal)
     rows = [(i, f"x{i}") for i in range(8)]
-    batch = _kv(spark, rows + rows[2:5])  # 3 keys twice
+    again = [(k, f"y{k}") for k in range(2, 5)]  # 3 keys twice, other payloads
+    batch = _kv(spark, rows + again)
 
     monkeypatch.setattr(KeyedTable, "_flip", crash)
     with pytest.raises(RuntimeError, match="crash before the flip"):
@@ -389,12 +392,14 @@ def test_bulk_load_into_empty_table(spark, tmp_path, monkeypatch, journal):
     assert table.current_version() == -1 and table.read().count() == 0
     monkeypatch.setattr(KeyedTable, "_flip", real_flip)
     assert table.upsert(batch) == {"version": 0, "inserts": 8, "modifies": 0}
-    assert bulk == [-1, -1] and calls == []
-    assert sorted(map(tuple, table.read().collect())) == rows
+    assert tasks == [("upsert", -1, False)] * 2 and calls == []
+    stored = sorted(map(tuple, table.read().collect()))
+    assert [k for k, _ in stored] == list(range(8)) and set(stored) <= set(rows + again)
     if journal:  # the replay replaced the crashed attempt's journal rows
         assert sorted(map(tuple, table.read_changes().collect())) == [
-            ("INSERT", 0, k, v) for k, v in rows
+            ("INSERT", 0, k, v) for k, v in stored
         ]
+    assert_reclaimed(table)
 
     monkeypatch.setattr(storage, "LOCAL_MERGE_MAX_ROWS", 50)
     assert table.upsert(_kv(spark, [(1, "y"), (20, "n")])) == {
@@ -404,20 +409,20 @@ def test_bulk_load_into_empty_table(spark, tmp_path, monkeypatch, journal):
     assert table.upsert(_kv(spark, [(2, "z"), (21, "m")])) == {
         "version": 2, "inserts": 1, "modifies": 1
     }
-    assert calls == ["upsert"] and bulk == [-1, -1]
-    expect = dict(rows) | {1: "y", 20: "n", 2: "z", 21: "m"}
+    assert calls == ["upsert"] and tasks[2:] == [("upsert", 1, True)]
+    expect = dict(stored) | {1: "y", 20: "n", 2: "z", 21: "m"}
     assert {r.k: r.v for r in table.read().collect()} == expect
 
-    # emptied by deletes, the table takes the bulk path again
+    # emptied by deletes, the table takes the task path over empty buckets again
     assert table.delete(_kv(spark, [(k, None) for k in expect]).select("k"))[
         "deletes"
     ] == len(expect)
     assert table.upsert(_kv(spark, [(7, "w")])) == {"version": 4, "inserts": 1, "modifies": 0}
-    assert bulk == [-1, -1, 3]
+    assert tasks[3:] == [("delete", 2, True), ("upsert", 3, False)]
     assert {(r.k, r.v) for r in table.read().collect()} == {(7, "w")}
     if journal:
         assert ("INSERT", 4, 7, "w") in {tuple(r) for r in table.read_changes().collect()}
-
+    assert_reclaimed(table)
 
 
 @pytest.mark.parametrize("path", ["local", "spark"])

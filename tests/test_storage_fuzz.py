@@ -22,7 +22,7 @@ reclaims every other one.
 Each sequence runs on both ways the MERGE kernel runs (on the driver
 and in Spark tasks), with and without a journal, and all four tables
 must agree op by op and keep every key unique. With the task tables'
-size cap at 0, every upsert into an empty table takes the bulk load.
+size cap at 0, every upsert into an empty table runs in tasks too.
 
 A second sequence test does the same for PUT /preferences
 (``set_user_preferences``: lookup, set diff, one MERGE) against a
@@ -93,7 +93,8 @@ _op = st.tuples(
 )
 @given(ops=st.lists(_op, min_size=1, max_size=7))
 # a first upsert with duplicate keys into the empty table, and another
-# after deletes empty it: on the task-path tables (cap 0) both are bulk loads
+# after deletes empty it: on the task-path tables (cap 0) both run the
+# kernel in tasks over empty buckets
 @example(ops=[("upsert", [1, 1, 2, 5], 0), ("delete", [1, 2, 5], 0), ("upsert", [3, 3], 1)])
 # an update batch repeating a key must set that key's row once
 @example(ops=[("upsert", [1, 2], 0), ("update", [1, 1], 1)])

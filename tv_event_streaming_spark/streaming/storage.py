@@ -18,7 +18,7 @@ on plain parquet:
   ``lookup(**values)`` returns the rows matching a key prefix as Arrow,
   read on the driver with no Spark job.
 
-**One MERGE kernel, four ways in, one commit protocol.** Every MERGE
+**One MERGE kernel, three ways in, one commit protocol.** Every MERGE
 is :func:`merge_bucket`, a pure pyarrow function of one bucket: its
 live rows, the batch rows that hash to it, optional delete keys and the
 fields an update sets in, its new rows, change rows and counts out.
@@ -40,10 +40,6 @@ the size rule picks the way in:
   keys share a bucket), writing one file per touched bucket and at most
   one journal file. A Spark job for a 20-row batch is almost
   all planning, scheduling and commit overhead;
-- **the bulk load**: a larger upsert into an empty table (seeding, an
-  initial load) has nothing to read or match, so it is one key-dedup
-  and one ``partitionBy`` write counted by ``DataFrame.observe``, and a
-  journaled table copies the written rows into the journal as INSERTs;
 - **the task kernel**: any other MERGE is one job,
   ``batch.groupBy(bucket).applyInArrow(task)``. Each task reads its
   bucket's live files with pyarrow (the version's manifest rides in the
@@ -51,13 +47,15 @@ the size rule picks the way in:
   bucket's file and its change rows under names fixed by the version
   and the bucket (a retried task replaces them) and returns one row of
   file names and counts; the driver collects at most ``n_buckets``
-  rows. One task holds one bucket's live rows plus its batch rows. The
+  rows. A large upsert into an empty table (seeding, an initial load)
+  is no special case: its buckets have no live rows, so every row is an
+  INSERT. One task holds one bucket's live rows plus its batch rows. The
   bucket count is fixed at construction, so today a bucket grows with
   the table; bucket splitting (ROADMAP #4, not built) would keep that
   bound as the table grows. Tasks read and write the table root
   directly: it must be a filesystem every executor sees.
 
-``merge_local`` is the fourth way: rows the caller already holds on the
+``merge_local`` is the third way: rows the caller already holds on the
 driver (a PUT /preferences diff), upserted and deleted together by the
 driver kernel in one version, under the same size rule, with no Spark
 job at all; past the cap it writes nothing and the caller takes the
@@ -67,10 +65,11 @@ All ways return the same counts, leave the same ``read()`` state and
 write the same journal rows.
 
 All ways commit the same way (:meth:`KeyedTable._commit`): new
-immutable bucket directories under ``data/v=N/`` (a crashed attempt's
-directory is removed first), then the journal rows, staged under
-``_changes/.v=N/`` and renamed in under names derived from N (a crashed
-attempt's journal files are removed first, so a replay journals each
+immutable bucket directories under ``data/v=N/``, each holding one
+pyarrow-written file (a crashed attempt's directory is removed
+first), then the journal rows, staged under ``_changes/.v=N/`` and
+renamed in under names derived from N (a crashed attempt's journal
+files are removed first, so a replay journals each
 change once), then a version MANIFEST mapping every bucket to the
 version directory that last wrote it, then an atomic rename of the
 ``_CURRENT`` pointer. Readers always see a consistent snapshot stitched
@@ -120,7 +119,7 @@ import pyarrow.compute as pc
 import pyarrow.dataset as ds
 import pyarrow.parquet as pq
 from pyspark.errors import AnalysisException
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
@@ -137,7 +136,7 @@ BUCKET_COL = "bucket__"
 #: 0.26 s, 200 k 0.13 vs 0.27 s — no crossover up to 200 k, so the cap
 #: bounds the driver's memory instead: it holds at most this many rows.
 #: A larger upsert into an empty table, such as seeding the 60 k-row
-#: preferences table, is a Spark bulk load.
+#: preferences table, runs in tasks too, over buckets with no live rows.
 LOCAL_MERGE_MAX_ROWS = 50_000
 
 #: A commit keeps the bucket directories of this many versions, the new
@@ -158,8 +157,8 @@ _TASK_SCHEMA = "bucket int, data string, journal string, inserts long, modifies 
 
 
 def _parquet_files(bucket_dir: str) -> list[str]:
-    """A bucket directory's data files (Spark also leaves ``.crc``
-    checksums beside them, and a writer's temp files are hidden)."""
+    """A bucket or journal directory's data files (the temp files of
+    :func:`_write_parquet` are hidden)."""
     return sorted(
         os.path.join(bucket_dir, f)
         for f in os.listdir(bucket_dir)
@@ -203,7 +202,7 @@ def merge_bucket(
     keys: list[str],
     fields: list[str] | None = None,
 ) -> tuple[pa.Table, dict[str, pa.Table], dict[str, int]]:
-    """One bucket's MERGE, the kernel of every write but the bulk load.
+    """One bucket's MERGE, the kernel of every write.
 
     ``cur`` is the bucket's live rows; the live rows of several whole
     buckets give the same MERGE, as equal keys share a bucket, and a
@@ -450,8 +449,11 @@ class KeyedTable:
         """MERGE: insert new keys, overwrite existing ones (the
         reference's idempotent put). Appends the change journal.
 
-        The batch is deduplicated on the key first (last-writer-wins is
-        unnecessary — reference batches carry identical payloads per key,
+        The batch is deduplicated on the key first, keeping one of a
+        key's rows: :func:`merge_bucket` keeps the first its bucket
+        receives, and past the cap the rows reach their bucket through
+        a shuffle, in no fixed order (last-writer-wins is unnecessary —
+        reference batches carry identical payloads per key,
         consumer.py:57). Only the buckets containing batch keys are read
         and rewritten."""
         return self._merge("upsert", batch, self.schema.names)
@@ -494,9 +496,8 @@ class KeyedTable:
             ids = [r[0] for r in keys.select(self._bucket()).collect()]
         manifest = self._read_manifest(self.current_version())
         touched = sorted(set(ids).union(deletes.column(BUCKET_COL).to_pylist()))
-        files = self._files(manifest, touched)
-        live = sum(pq.read_metadata(f).num_rows for _, f in files)
-        if upserts.num_rows + deletes.num_rows + live > LOCAL_MERGE_MAX_ROWS:
+        files = self._local_files(manifest, touched, upserts.num_rows + deletes.num_rows)
+        if files is None:
             return None
         head = upserts.append_column(pa.field(BUCKET_COL, pa.int32()), pa.array(ids, pa.int32()))
         return self._merge_local("upsert", head, manifest, touched, files, deletes)
@@ -515,17 +516,25 @@ class KeyedTable:
         if head.num_rows == 0:  # empty micro-batches must not write versions
             return {"version": self.current_version(), **dict.fromkeys(_COUNTS[kind], 0)}
         manifest = self._read_manifest(self.current_version())
-        if head.num_rows <= LOCAL_MERGE_MAX_ROWS:
-            touched = sorted(pc.unique(head.column(BUCKET_COL)).to_pylist())
-            files = self._files(manifest, touched)
-            live = sum(pq.read_metadata(f).num_rows for _, f in files)
-            if head.num_rows + live <= LOCAL_MERGE_MAX_ROWS:
-                out = self._merge_local(kind, head, manifest, touched, files)
-                return {"version": out["version"], **{k: out[k] for k in _COUNTS[kind]}}
-        elif kind == "upsert" and not manifest:
-            return self._bulk_load(batch)
-        out = self._merge_tasks(kind, keyed, manifest)
+        touched = sorted(pc.unique(head.column(BUCKET_COL)).to_pylist())
+        files = self._local_files(manifest, touched, head.num_rows)
+        if files is None:
+            out = self._merge_tasks(kind, keyed, manifest)
+        else:
+            out = self._merge_local(kind, head, manifest, touched, files)
         return {"version": out["version"], **{k: out[k] for k in _COUNTS[kind]}}
+
+    def _local_files(self, manifest: dict[int, str], touched: list[int], n: int) -> list[tuple[int, str]] | None:
+        """The size rule: the (bucket, data file) pairs of the
+        ``touched`` buckets when ``n`` batch rows plus those buckets'
+        live rows (summed from parquet footers, no job) number at most
+        ``LOCAL_MERGE_MAX_ROWS``, so the driver kernel may run; None
+        when they do not."""
+        if n > LOCAL_MERGE_MAX_ROWS:
+            return None
+        files = self._files(manifest, touched)
+        live = sum(pq.read_metadata(f).num_rows for _, f in files)
+        return files if n + live <= LOCAL_MERGE_MAX_ROWS else None
 
     # -- the kernel's two callers ---------------------------------------------
 
@@ -705,41 +714,6 @@ class KeyedTable:
         for i, f in enumerate(staged):
             os.replace(f, os.path.join(self.changes_dir, f"{prefix}{i:05d}.parquet"))
         shutil.rmtree(self._stage_dir(v), ignore_errors=True)
-
-    # -- bulk load ------------------------------------------------------------
-
-    def _bulk_load(self, batch: DataFrame) -> dict[str, int]:
-        """An upsert into an empty table: every key is new, so there is
-        nothing to read, match or classify. One key-dedup and one
-        bucketed write, counted by an ``Observation`` on that write; a
-        journaled table then copies the written rows into the journal as
-        INSERTs."""
-        v = self.current_version() + 1
-        obs = Observation()
-        data_dir = self._data_dir(v)
-        (
-            batch.select(*self.schema.names)
-            .dropDuplicates(self.key_cols)
-            .observe(obs, F.count(F.lit(1)).alias("inserts"))
-            .withColumn(BUCKET_COL, self._bucket())
-            .write.partitionBy(BUCKET_COL)
-            .mode("overwrite")
-            .parquet(data_dir)
-        )
-        written = {
-            int(d.split("=", 1)[1]): os.path.join(data_dir, d)
-            for d in os.listdir(data_dir)
-            if d.startswith(f"{BUCKET_COL}=")
-        }
-        staged = []
-        if self.journal:
-            rows = self._read_buckets({b: os.path.relpath(d, self.path) for b, d in written.items()})
-            rows.select(F.lit("INSERT").alias("event_name"), F.lit(v).cast("long").alias("version"), "*").write.mode(
-                "overwrite"
-            ).parquet(self._stage_dir(v))
-            staged = _parquet_files(self._stage_dir(v))
-        self._commit(v, {}, written, staged)
-        return {"version": v, "inserts": obs.get["inserts"], "modifies": 0}
 
     def _flip(self, v: int) -> None:
         tmp = self._pointer + ".tmp"
