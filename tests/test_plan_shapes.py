@@ -460,3 +460,59 @@ def test_one_user_put_submits_no_jobs(spark, tmp_path, journal):
             ("REMOVE", 1, "7", "source", "0"),
             ("REMOVE", 1, "7", "source", "2"),
         ]
+
+
+def test_consumer_micro_batch_is_two_jobs_without_exchange(spark, sf_dir, tmp_path):
+    """One consumer micro-batch of a 20-title bus file is its two MERGEs'
+    bounded collects, titles then index, and nothing else: 2 jobs, and
+    neither batch plan shuffles. The MERGE kernel deduplicates each
+    table's rows on the key, so the micro-batch needs no
+    ``dropDuplicates``, no cache and no index ``distinct`` (4 jobs)."""
+    import glob
+
+    from tv_event_streaming_spark.domain import derive_domain
+    from tv_event_streaming_spark.streaming.consumer import index_table, start_consumer, titles_table
+    from tv_event_streaming_spark.streaming.producer import build_title_events, publish
+
+    from .test_streaming import title_lookup
+
+    d = derive_domain(spark, sf_dir)
+    bus = str(tmp_path / "bus")
+    publish(build_title_events(d["user_prefs"], title_lookup(d), fetch_limit=20), bus)
+    assert len(glob.glob(f"{bus}/*.json")) == 1
+    titles = titles_table(spark, str(tmp_path / "titles"))
+    index = index_table(spark, str(tmp_path / "index"))
+    plans = []
+    for table in (titles, index):
+
+        def upsert(batch, table=table):
+            plans.append(executed_plan(batch))
+            return type(table).upsert(table, batch)
+
+        table.upsert = upsert
+    q = start_consumer(spark, bus, titles, index, str(tmp_path / "ckpt"))
+    q.awaitTermination(120)
+    assert titles.read().count() == 20
+    assert len(plans) == 2
+    for plan in plans:
+        assert n_exchanges(plan) == 0, plan
+    # Structured Streaming runs a query's jobs in a job group named by its run id
+    jobs = spark.sparkContext.statusTracker().getJobIdsForGroup(str(q.runId))
+    assert len(jobs) == 2, jobs
+
+
+def test_build_title_events_aggregates_once(spark, sf_dir):
+    """The producer builds both preference arrays in one global
+    aggregate: one ``Exchange``, the aggregate's gather to a single
+    partition, broadcast onto the fetched titles. The distinct and the
+    per-kind aggregates it replaced planned two, and a publish ran 5
+    jobs against 3."""
+    from tv_event_streaming_spark.domain import derive_domain
+    from tv_event_streaming_spark.streaming.producer import build_title_events
+
+    from .test_streaming import title_lookup
+
+    d = derive_domain(spark, sf_dir)
+    plan = executed_plan(build_title_events(d["user_prefs"], title_lookup(d), fetch_limit=20))
+    assert n_exchanges(plan) == 1, plan
+    assert "Exchange SinglePartition" in plan, plan

@@ -30,23 +30,25 @@ from tv_event_streaming_spark.streaming.storage import KeyedTable
 FETCH_LIMIT = 20
 
 
+def title_lookup(d):
+    """The producer's title lookup (S11's mock) over the domain's titles."""
+    return d["titles"].select(
+        F.col("title_id").alias("id"),
+        "title",
+        F.col("year").cast("int").alias("year"),
+        F.concat(F.lit("tt"), F.col("title_id").cast("string")).alias("imdb_id"),
+        (F.col("title_id") * 2).alias("tmdb_id"),
+        F.lit("tv").alias("tmdb_type"),
+        "type",
+    )
+
+
 @pytest.fixture(scope="module")
 def pipeline(spark, sf_dir, tmp_path_factory):
     """Run the full 3-stage cascade once; tests assert on the outcome."""
     root = tmp_path_factory.mktemp("pipeline")
     d = derive_domain(spark, sf_dir)
-    lookup = (
-        d["titles"]
-        .select(
-            F.col("title_id").alias("id"),
-            "title",
-            F.col("year").cast("int").alias("year"),
-            F.concat(F.lit("tt"), F.col("title_id").cast("string")).alias("imdb_id"),
-            (F.col("title_id") * 2).alias("tmdb_id"),
-            F.lit("tv").alias("tmdb_type"),
-            "type",
-        )
-    )
+    lookup = title_lookup(d)
     events_dir = str(root / "events")
     # stage 1 — producer
     events = build_title_events(d["user_prefs"], lookup, fetch_limit=FETCH_LIMIT)
@@ -83,6 +85,63 @@ def test_producer_wire_format(spark, pipeline):
     assert r.publishing_component == "UserPrefsTitleIngestionFunction"
     assert r.publish_timestamp is not None
     assert len(r.source_ids) > 0 and len(r.genre_ids) > 0
+
+
+def _three_aggregate_events(user_prefs, titles_lookup, fetch_limit):
+    """The producer's earlier form, kept here as the reference for the
+    wire format: distinct prefs, one aggregate per kind, two cross
+    joins."""
+    from tv_event_streaming_spark.operators.analytics import distinct_preferences
+    from tv_event_streaming_spark.sources.events import PAYLOAD_COLS, encode_envelope
+
+    prefs = distinct_preferences(user_prefs)
+    arrays = [
+        prefs.filter(F.col("kind") == kind).agg(F.sort_array(F.collect_set("pref_id")).alias(f"{kind}_ids"))
+        for kind in ("source", "genre")
+    ]
+    fetched = titles_lookup.orderBy("id").limit(fetch_limit).crossJoin(arrays[0]).crossJoin(arrays[1])
+    cols = [c for c in PAYLOAD_COLS if c in fetched.columns]
+    return encode_envelope(fetched.select(*cols, F.current_timestamp().alias("publish_ts")), cols, "publish_ts")
+
+
+def _payloads(events) -> list[tuple]:
+    return sorted(
+        tuple(tuple(v) if isinstance(v, list) else v for v in r)
+        for r in decode_envelope(events).drop("publish_timestamp").collect()
+    )
+
+
+def _prefs_cases(spark, user_prefs):
+    return {
+        "domain": user_prefs,
+        "source_only": user_prefs.filter(F.col("kind") == "source"),
+        "genre_only": user_prefs.filter(F.col("kind") == "genre"),
+        "none": spark.createDataFrame([], USER_PREF_SCHEMA),
+    }
+
+
+def test_payload_matches_the_three_aggregate_form(spark, pipeline):
+    """One aggregate builds both preference arrays: the decoded payloads
+    equal those of the distinct + two-aggregate form it replaced, for
+    the domain's prefs, prefs of one kind and no prefs."""
+    lookup = pipeline["lookup"]
+    for name, prefs in _prefs_cases(spark, pipeline["domain"]["user_prefs"]).items():
+        new = _payloads(build_title_events(prefs, lookup, fetch_limit=FETCH_LIMIT))
+        assert len(new) == FETCH_LIMIT, name
+        assert new == _payloads(_three_aggregate_events(prefs, lookup, FETCH_LIMIT)), name
+
+
+def test_payload_arrays_are_empty_not_null(spark, pipeline):
+    """A kind with no prefs publishes [] for its array, never NULL."""
+    cases = _prefs_cases(spark, pipeline["domain"]["user_prefs"])
+    expect = {"source_only": (True, False), "genre_only": (False, True), "none": (False, False)}
+    for name, nonempty in expect.items():
+        events = build_title_events(cases[name], pipeline["lookup"], fetch_limit=FETCH_LIMIT)
+        rows = decode_envelope(events).collect()
+        assert len(rows) == FETCH_LIMIT, name
+        for r in rows:
+            assert r.source_ids is not None and r.genre_ids is not None, name
+            assert (len(r.source_ids) > 0, len(r.genre_ids) > 0) == nonempty, name
 
 
 def test_consumer_canonical_records(pipeline):
@@ -139,6 +198,32 @@ def test_consumer_idempotent_redelivery(spark, pipeline):
     q.awaitTermination(120)
     assert titles.read().count() == before_titles
     assert index.read().count() == before_index
+
+
+@pytest.mark.parametrize("max_files", [1, 32])
+def test_same_title_in_two_files_gives_one_row_and_the_index_union(spark, tmp_path, max_files):
+    """Two bus files publish title 7, first with prefs (1, a), then with
+    (2, b). Whether they land in one micro-batch or in two, the titles
+    table holds one row for 7, one of the two records whole, and the
+    index holds both records' rows. Deduplicating the micro-batch on the
+    title id before deriving the index kept one record's rows only."""
+    lookup = spark.createDataFrame(
+        [(7, "seven", 2007, "tt7", 14, "tv", "tv_series")],
+        "id long, title string, year int, imdb_id string, tmdb_id long, tmdb_type string, type string",
+    )
+    bus = str(tmp_path / "bus")
+    for user, src, gen in [("u1", "1", "a"), ("u2", "2", "b")]:
+        prefs = spark.createDataFrame([(user, "source", src), (user, "genre", gen)], USER_PREF_SCHEMA)
+        publish(build_title_events(prefs, lookup, fetch_limit=1), bus)
+    titles = titles_table(spark, str(tmp_path / "titles"))
+    index = index_table(spark, str(tmp_path / "index"))
+    q = start_consumer(spark, bus, titles, index, str(tmp_path / "ckpt"), max_files_per_trigger=max_files)
+    q.awaitTermination(120)
+    assert len([p for p in q.recentProgress if p.numInputRows]) == (2 if max_files == 1 else 1)
+    rows = titles.read().collect()
+    assert len(rows) == 1 and rows[0].title_id == 7
+    assert (rows[0].source_ids, rows[0].genre_ids) in ((["1"], ["a"]), (["2"], ["b"]))
+    assert sorted(map(tuple, index.read().collect())) == [("1", "a", 7), ("2", "b", 7)]
 
 
 def test_preferences_mutation_roundtrip(spark, tmp_path):

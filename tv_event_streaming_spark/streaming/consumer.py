@@ -11,10 +11,13 @@ are filtered, never failing the batch) → ``foreachBatch`` MERGE into the
 titles KeyedTable + index derivation. Exactly-once = checkpointed source
 offsets + idempotent keyed MERGE (ST3).
 
-Scale: the wire schema is explicit (no inference); per-batch dedup keys
-on title id; the index derivation is two explodes — map-side up to the
-MERGE (the driver's bounded collect, or the task kernel's bucket
-shuffle).
+Scale: the wire schema is explicit (no inference). The batch dedup
+(A2) is the MERGE kernel's: ``KeyedTable.upsert`` keeps one row per key,
+so a title published twice in one micro-batch is one titles row, and
+the index rows of both records land, as they would from two
+micro-batches. A micro-batch is read twice, once per table, each read
+map-side up to the MERGE's bounded collect (the driver kernel's path)
+or the task kernel's bucket shuffle: no dedup shuffle, no cache.
 """
 
 from __future__ import annotations
@@ -23,7 +26,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..operators.titles import index_from_arrays
 from ..schemas import TITLE_RECORD_SCHEMA
 from ..sources.events import decode_envelope
 from .storage import KeyedTable
@@ -76,6 +78,15 @@ def _to_title_records(decoded: DataFrame) -> DataFrame:
     )
 
 
+def _index_rows(decoded: DataFrame) -> DataFrame:
+    """J2 — one index row per (source, genre) pair of each record: the
+    two explodes of ``operators.titles.index_from_arrays`` without its
+    ``distinct``, since the upsert deduplicates on the index key."""
+    return decoded.select(
+        F.col("id").alias("title_id"), F.explode("source_ids").alias("source_id"), "genre_ids"
+    ).select("source_id", F.explode("genre_ids").alias("genre_id"), "title_id")
+
+
 def start_consumer(
     spark: SparkSession,
     events_dir: str,
@@ -90,7 +101,15 @@ def start_consumer(
     enrichment in turn, each with availableNow; run together, the two
     writers lose rows. ``max_files_per_trigger`` bounds micro-batch
     size (the Kinesis shard-batch knob); the crash-restart fuzz sets it
-    to 1 so every bus file is its own micro-batch boundary."""
+    to 1 so every bus file is its own micro-batch boundary. Records that
+    share a title id give one titles row (one of them, whole) and the
+    union of their index rows, whether they arrive in one micro-batch or
+    in several.
+
+    Each micro-batch is two MERGEs, titles then index, and each reads
+    the batch's files itself: a micro-batch of up to
+    ``LOCAL_MERGE_MAX_ROWS`` rows per table is two Spark jobs, the
+    MERGEs' bounded collects, with no shuffle."""
     wire = (
         spark.readStream.schema(WIRE_SCHEMA)
         .option("maxFilesPerTrigger", max_files_per_trigger)
@@ -99,19 +118,12 @@ def start_consumer(
     decoded = decode_envelope(wire)
 
     def process(batch_df: DataFrame, epoch_id: int) -> None:
-        batch = batch_df.dropDuplicates(["id"]).cache()  # A2, reused twice below
-        try:
-            records = _to_title_records(batch)
-            titles.upsert(records)
-            # J2 — the index rows are deliberately insert-only/immutable
-            # (reference consumer.py:70-71); upsert of identical keys is a
-            # no-op MODIFY, preserving that semantics idempotently.
-            idx = index_from_arrays(
-                batch.select(F.col("id").alias("title_id"), "source_ids", "genre_ids")
-            )
-            index.upsert(idx)
-        finally:
-            batch.unpersist()
+        # A2 — each upsert keeps one row per key of the micro-batch
+        titles.upsert(_to_title_records(batch_df))
+        # J2 — the index rows are deliberately insert-only/immutable
+        # (reference consumer.py:70-71); upsert of identical keys is a
+        # no-op MODIFY, preserving that semantics idempotently.
+        index.upsert(_index_rows(batch_df))
 
     return (
         decoded.writeStream.foreachBatch(process)

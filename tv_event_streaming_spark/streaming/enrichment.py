@@ -9,7 +9,8 @@ record skipped, enrichment.py:104-106), then update exactly three fields
 in place with N/A defaults (S7, enrichment.py:114-125).
 
 Here: a stream over the titles table's change journal → INSERT filter →
-broadcast join against the details provider → ``update_fields`` MERGE.
+join of the details provider against the broadcast INSERT ids →
+``update_fields`` MERGE.
 The details provider is pluggable (S11): any DataFrame keyed by
 title_id; production would wrap the HTTP client in ``mapInPandas`` with
 per-batch caching.
@@ -28,19 +29,18 @@ ENRICHED_FIELDS = ["plot_overview", "poster", "user_rating"]
 def enrich_batch(inserts: DataFrame, details: DataFrame) -> DataFrame:
     """J3 + the N/A defaults: inner join (missing details ⇒ skip, like
     the reference's fetch-failure path) with per-field coalesce
-    (enrichment.py:121-122; rating None → 0, enrichment.py:110-111)."""
-    return inserts.select("title_id").join(
-        F.broadcast(
-            details.select(
-                "title_id",
-                F.coalesce(F.col("plot_overview"), F.lit("N/A")).alias("plot_overview"),
-                F.coalesce(F.col("poster"), F.lit("N/A")).alias("poster"),
-                F.coalesce(F.col("user_rating").cast("double"), F.lit(0.0)).alias("user_rating"),
-            )
-        ),
+    (enrichment.py:121-122; rating None → 0, enrichment.py:110-111).
+
+    The micro-batch's ids are the broadcast side: a batch holds at most
+    one INSERT per title and usually a few, the provider a row per
+    title, so ``details`` streams through the join instead of being
+    hashed and broadcast on every micro-batch."""
+    return details.select(
         "title_id",
-        "inner",
-    )
+        F.coalesce(F.col("plot_overview"), F.lit("N/A")).alias("plot_overview"),
+        F.coalesce(F.col("poster"), F.lit("N/A")).alias("poster"),
+        F.coalesce(F.col("user_rating").cast("double"), F.lit(0.0)).alias("user_rating"),
+    ).join(F.broadcast(inserts.select("title_id")), "title_id", "inner")
 
 
 def start_enrichment(

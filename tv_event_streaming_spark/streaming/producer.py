@@ -2,10 +2,10 @@
 
 Reference: src/userprefs_title_ingestion/ingestion.py:181-201 — scan all
 user preferences (S1), distinct-union the preferred source/genre ids
-(A1), fetch up to ``fetch_limit`` titles from the external API (S11,
-replaced here by a deterministic lookup DataFrame), tag each title with
-the full preference arrays (ingestion.py:153-155), wrap in the envelope
-(S8) and publish, partitioned by title id (ST2).
+(A1, one global aggregate), fetch up to ``fetch_limit`` titles from the
+external API (S11, replaced here by a deterministic lookup DataFrame),
+tag each title with the full preference arrays (ingestion.py:153-155),
+wrap in the envelope (S8) and publish, partitioned by title id (ST2).
 
 The "Kinesis" sink is a JSON file directory the consumer stream tails —
 swap ``.write`` for ``.writeStream.format("kafka")`` on a real bus.
@@ -16,7 +16,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..operators.analytics import distinct_preferences
 from ..sources.events import PAYLOAD_COLS, encode_envelope
 
 
@@ -32,19 +31,16 @@ def build_title_events(
     mirrors API_FETCH_LIMIT (ingestion.py:20; default 20) — deterministic
     via ordered limit.
     """
-    prefs = distinct_preferences(user_prefs)
-    source_ids = prefs.filter(F.col("kind") == "source").agg(
-        F.sort_array(F.collect_set("pref_id")).alias("source_ids")
+    # A1 — both arrays from one global aggregate: collect_set drops the
+    # duplicates and the NULLs the other kind's rows leave, and a kind
+    # with no prefs (or no prefs at all) gives [], never NULL
+    arrays = user_prefs.agg(
+        *(
+            F.sort_array(F.collect_set(F.when(F.col("kind") == kind, F.col("pref_id")))).alias(f"{kind}_ids")
+            for kind in ("source", "genre")
+        )
     )
-    genre_ids = prefs.filter(F.col("kind") == "genre").agg(
-        F.sort_array(F.collect_set("pref_id")).alias("genre_ids")
-    )
-    fetched = (
-        titles_lookup.orderBy("id")
-        .limit(fetch_limit)
-        .crossJoin(F.broadcast(source_ids))
-        .crossJoin(F.broadcast(genre_ids))
-    )
+    fetched = titles_lookup.orderBy("id").limit(fetch_limit).crossJoin(F.broadcast(arrays))
     payload = fetched.select(
         *[c for c in PAYLOAD_COLS if c in fetched.columns],
         F.current_timestamp().alias("publish_ts"),

@@ -454,8 +454,10 @@ class KeyedTable:
         receives, and past the cap the rows reach their bucket through
         a shuffle, in no fixed order (last-writer-wins is unnecessary —
         reference batches carry identical payloads per key,
-        consumer.py:57). Only the buckets containing batch keys are read
-        and rewritten."""
+        consumer.py:57). Callers rely on this dedup: the consumer upserts
+        its micro-batch's title records and index rows as they come, with
+        no dedup of its own (the reference's A2). Only the buckets
+        containing batch keys are read and rewritten."""
         return self._merge("upsert", batch, self.schema.names)
 
     def update_fields(self, updates: DataFrame, fields: list[str]) -> dict[str, int]:
