@@ -1,72 +1,11 @@
-"""Physical-layout operators: salted aggregation exactness and the
-Exchange-free co-bucketed join."""
+"""Physical-layout operators: Z-order locality and Bloom-filter
+membership."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
 from tv_event_streaming_spark.domain import load_table
-from tv_event_streaming_spark.operators.layout import (
-    bucketed_join,
-    salted_agg,
-    write_bucketed,
-)
-
-
-def test_salted_agg_exact_on_skew(spark):
-    # 90% of rows share one hot key — the shape that straggles a plain
-    # groupBy reducer at scale
-    df = spark.range(100_000).select(
-        F.when(F.col("id") % 10 != 0, F.lit("HOT"))
-        .otherwise((F.col("id") % 97).cast("string"))
-        .alias("k"),
-        (F.col("id") % 7).cast("double").alias("v"),
-    )
-    got = {
-        r.k: (r.n, r.sv)
-        for r in salted_agg(
-            df, ["k"], {"n": F.count("*"), "sv": F.sum("v")}, n_salts=8
-        ).collect()
-    }
-    want = {
-        r.k: (r.n, r.sv)
-        for r in df.groupBy("k")
-        .agg(F.count("*").alias("n"), F.sum("v").alias("sv"))
-        .collect()
-    }
-    assert got == want
-
-
-def test_bucketed_join_has_no_exchange(spark, sf_dir, tmp_path):
-    orders = load_table(spark, sf_dir, "orders")
-    li = load_table(spark, sf_dir, "lineitem")
-    spark.sql("DROP TABLE IF EXISTS b_orders")
-    spark.sql("DROP TABLE IF EXISTS b_lineitem")
-    write_bucketed(
-        orders.withColumnRenamed("o_orderkey", "orderkey"),
-        "b_orders", ["orderkey"], 8, str(tmp_path / "bo"),
-    )
-    write_bucketed(
-        li.withColumnRenamed("l_orderkey", "orderkey"),
-        "b_lineitem", ["orderkey"], 8, str(tmp_path / "bl"),
-    )
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760b")
-    try:
-        # force the sort-merge path (these test tables are broadcast-sized;
-        # at real scale neither side broadcasts and bucketing is the win)
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        joined = bucketed_join(spark, "b_orders", "b_lineitem", ["orderkey"])
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in plan, plan
-        assert "Bucketed: true" in plan, plan
-        # and it computes the right thing
-        n = joined.count()
-        want = orders.join(li, orders.o_orderkey == li.l_orderkey).count()
-        assert n == want
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-        spark.sql("DROP TABLE IF EXISTS b_orders")
-        spark.sql("DROP TABLE IF EXISTS b_lineitem")
 
 
 def test_zvalue_interleaves_bits(spark):

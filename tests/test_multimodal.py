@@ -1,11 +1,10 @@
-"""Multimodal plumbing: real schema/batching, stubbed codec."""
+"""Multimodal plumbing: real schema/batching, deterministic stand-in codec."""
 
 from __future__ import annotations
 
 import hashlib
 
 import pytest
-from pyspark.sql import functions as F
 
 from tv_event_streaming_spark.domain import load_table
 from tv_event_streaming_spark.operators import multimodal as M
@@ -14,7 +13,7 @@ from tv_event_streaming_spark.operators import multimodal as M
 def test_fake_features_deterministic(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents").limit(20)
     media = M.attach_binary_payload(docs)
-    feats = {r.doc_id: r for r in M.extract_features(media, fake=True).collect()}
+    feats = {r.doc_id: r for r in M.extract_features(media).collect()}
     for r in docs.collect():
         payload = r.text.encode("utf-8")
         f = feats[r.doc_id]
@@ -24,58 +23,11 @@ def test_fake_features_deterministic(spark, sf_dir):
         assert abs(f.fake_mean_byte - sum(payload) / len(payload)) < 1e-9
 
 
-def test_decode_stub_raises(spark, sf_dir):
-    with pytest.raises(NotImplementedError):
-        M.decode_stub(b"bytes", "image")
-    docs = load_table(spark, sf_dir, "documents").limit(2)
-    media = M.attach_binary_payload(docs)
-    from py4j.protocol import Py4JJavaError  # noqa: PLC0415
-
-    with pytest.raises(Exception):  # surfaces through the UDF boundary
-        M.extract_features(media, fake=False).collect()
-
-
 def test_media_type_partitioning(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents")
     meta = M.media_metadata(M.attach_binary_payload(docs))
     counts = {r.media_type: r["count"] for r in meta.groupBy("media_type").count().collect()}
     assert set(counts) == {"image", "audio", "video"}
-
-
-def test_decoder_registry_roundtrip(spark, sf_dir):
-    """A real decoder is one register_decoder call away: inject a toy
-    struct-unpack decoder and round-trip features through the identical
-    Arrow/mapInPandas plumbing the stub documents."""
-
-    def toy_decoder(payload: bytes, media_type: str):
-        # "format": first byte = frame count, mean over remaining bytes
-        if not payload:
-            return 0, 0.0
-        n_frames = payload[0]
-        rest = payload[1:]
-        return n_frames, (sum(rest) / len(rest)) if rest else 0.0
-
-    M.register_decoder("toy", toy_decoder)
-    try:
-        docs = load_table(spark, sf_dir, "documents").limit(20)
-        media = M.attach_binary_payload(docs)
-        feats = {
-            r.doc_id: r
-            for r in M.extract_features(media, fake=False, decoder="toy").collect()
-        }
-        for r in docs.collect():
-            payload = r.text.encode("utf-8")
-            want_frames, want_mean = toy_decoder(payload, "")
-            f = feats[r.doc_id]
-            assert f.fake_frames == want_frames
-            assert abs(f.fake_mean_byte - want_mean) < 1e-9
-            # metadata columns unchanged by the decoder path
-            assert f.byte_size == len(payload)
-    finally:
-        M._DECODERS.pop("toy", None)
-
-    with pytest.raises(KeyError):
-        M.get_decoder("not-registered")
 
 
 def test_sample_frames_partition_payload_at_stride_one(spark, sf_dir):

@@ -56,9 +56,9 @@ def test_pq_encode_is_single_pass_map_side(spark, sf_dir):
 
 
 def test_pq_paths_run_the_pq_kernel(spark, sf_dir):
-    """Every PQ encode, index build and ADC query runs the numpy PQ
-    kernel: no executed plan carries a ``_cb``/``_lut`` row or the
-    ``array_sort`` argmin of the interpreted twins."""
+    """Every PQ encode and ADC query runs the numpy PQ kernel: no
+    executed plan carries a ``_cb``/``_lut`` row or the ``array_sort``
+    argmin of the interpreted twins."""
     from pyspark.sql import functions as F
 
     from tv_event_streaming_spark.domain import load_table
@@ -66,14 +66,12 @@ def test_pq_paths_run_the_pq_kernel(spark, sf_dir):
 
     emb = load_table(spark, sf_dir, "embeddings")
     qf = F.col("vec_id") < 5
-    cb = S.pq_seed_codebook(emb, 8, 16)
-    idx = S.pq_index(emb, codebook=cb)
     frames = {
-        "pq_codes": S.pq_codes(emb),
-        "ivfpq_index": S.ivfpq_index(emb),
-        "ivfpq_residual_index": S.ivfpq_residual_index(emb),
-        "pq_adc(index=)": S.cosine_topk_pq_adc(emb, qf, codebook=cb, index=idx),
-        "ivfpq": S.cosine_topk_ivfpq(emb, qf),
+        "pq_encode": S.pq_encode(emb),
+        "pq_adc": S.cosine_topk_pq_adc(emb, qf),
+        "pq_rerank": S.cosine_topk_pq_rerank(emb, qf),
+        "ivfpq_residual": S.cosine_topk_ivfpq_residual(emb, qf),
+        "pq_opq": S.cosine_topk_pq_opq(emb, qf),
     }
     for name, df in frames.items():
         plan = df._jdf.queryExecution().executedPlan().toString()

@@ -164,94 +164,6 @@ def test_asof_join_matches_bruteforce(spark, lefts, rights):
         assert out[i] == best, (i, k, s, cands)
 
 
-@settings(max_examples=3, deadline=None, suppress_health_check=[HealthCheck.too_slow, HealthCheck.function_scoped_fixture, HealthCheck.data_too_large])
-@given(
-    events=st.lists(
-        st.tuples(
-            st.integers(0, 3),  # user_id
-            st.integers(0, 10_000),  # ts offset seconds
-            # quarters: exactly representable in BOTH float64 and
-            # DECIMAL(18,6), so the stream's float accumulation and the
-            # batch twin's exact decimal accumulation agree bit-for-bit
-            st.one_of(st.none(), st.integers(-4000, 4000).map(lambda i: i / 4)),
-        ),
-        min_size=1,
-        max_size=30,
-    ),
-    n_batches=st.integers(1, 3),
-)
-def test_running_totals_stream_matches_batch_cumsum(
-    spark, tmp_path_factory, events, n_batches
-):
-    """ST7 end-to-end: the applyInPandasWithState stateful operator's
-    CONVERGED state (max-n_events row per user in the sink) equals the
-    last row of the oracle-checked window-cumsum batch twin
-    (plans.catalog running_totals_batch), for random event streams split
-    across real micro-batches — not just the one committed fixture."""
-    import datetime as dt
-
-    from pyspark.sql import Window
-    from tv_event_streaming_spark.streaming.metrics import start_running_totals
-
-    base = dt.datetime(2024, 1, 1)
-    rows = [
-        (eid, u, base + dt.timedelta(seconds=s), v)
-        for eid, (u, s, v) in enumerate(events)
-    ]
-    schema = "event_id bigint, user_id bigint, ts timestamp, value double"
-    d = tmp_path_factory.mktemp("rt_prop")
-    src, sink, ckpt = str(d / "src"), str(d / "sink"), str(d / "ckpt")
-    # one file per micro-batch (maxFilesPerTrigger=1)
-    per = -(-len(rows) // n_batches)
-    for b in range(n_batches):
-        chunk = rows[b * per : (b + 1) * per]
-        if chunk:
-            spark.createDataFrame(chunk, schema).coalesce(1).write.mode(
-                "append"
-            ).parquet(src)
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    q = start_running_totals(stream, sink, ckpt)
-    q.awaitTermination(120)
-
-    got_rows = spark.read.parquet(sink).collect()
-    final = {}
-    for r in got_rows:
-        if r.user_id not in final or r.n_events > final[r.user_id][0]:
-            final[r.user_id] = (r.n_events, r.total_value)
-
-    batch = spark.createDataFrame(rows, schema)
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy("ts", "event_id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    cum = batch.select(
-        "user_id",
-        F.count("*").over(w).alias("n_events"),
-        F.sum(F.coalesce(F.col("value"), F.lit(0.0)).cast("decimal(18,6)"))
-        .over(w)
-        .cast("double")
-        .alias("total_value"),
-    )
-    last = {
-        r.user_id: (r.n_events, r.total_value)
-        for r in cum.withColumn(
-            "_rn",
-            F.row_number().over(
-                Window.partitionBy("user_id").orderBy(F.desc("n_events"))
-            ),
-        )
-        .filter(F.col("_rn") == 1)
-        .collect()
-    }
-    assert final == last
-
-
 def _portable_hash64(s: str) -> int:
     """Python twin of dedup.portable_hash64 (first 15 md5 hex chars)."""
     import hashlib

@@ -91,7 +91,7 @@ def test_lsh_multiprobe_rejects_bad_probe_count(spark, emb_with_twins):
 
 
 def test_near_duplicate_threshold(spark, emb_with_twins):
-    pairs = S.embedding_near_duplicates(emb_with_twins, threshold=0.999)
+    pairs = S.allpairs_cosine_lsh(emb_with_twins, threshold=0.999)
     got = {(r.id_a, r.id_b) for r in pairs.collect()}
     expected = {(i, i + OFFSET) for i in range(50)}
     assert expected <= got
@@ -131,65 +131,6 @@ def test_vectorized_signatures_match_jvm_form(spark, emb_with_twins, tmp_path):
     assert vec_sig == sql_sig
 
 
-def test_ivf_index_partition_pruning(spark, emb_with_twins, tmp_path):
-    """Materialized IVF: the index is written partitioned by cell, and a
-    query's probed-cell predicate reaches the scan as a partition
-    filter — only nprobe of the cell directories are read."""
-    path = str(tmp_path / "ivf")
-    base = emb_with_twins.filter(F.col("vec_id") < 8).collect()
-    cents = [(r.vec_id, [float(x) for x in r.embedding]) for r in base]
-    S.build_ivf_index(emb_with_twins, path, centroids=cents)
-
-    qrows = emb_with_twins.filter(F.col("vec_id") < 5).collect()
-    qs = [(r.vec_id, [float(x) for x in r.embedding]) for r in qrows]
-    topk = S.query_ivf_index(spark, path, qs, cents, k=1, nprobe=4)
-    rows = {r.query_id: r for r in topk.collect()}
-    for q in range(5):
-        assert rows[q].neighbor_id == q + OFFSET  # twin shares its cell
-
-    plan = topk._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan
-    import re
-
-    pf = re.search(r"PartitionFilters: \[([^\]]*)\]", plan)
-    assert pf and "cell" in pf.group(1), f"cell predicate not pushed: {pf}"
-
-    # the index format does not depend on the corpus' column names
-    renamed = str(tmp_path / "ivf_renamed")
-    S.build_ivf_index(
-        emb_with_twins.select(F.col("vec_id").alias("id"), F.col("embedding").alias("v")),
-        renamed,
-        centroids=cents,
-        id_col="id",
-        vec_col="v",
-    )
-    again = S.query_ivf_index(spark, renamed, qs, cents, k=1, nprobe=4)
-    assert sorted(map(tuple, again.collect())) == sorted(map(tuple, topk.collect()))
-
-
-def test_kmeans_refined_ivf_keeps_recall(spark, emb_with_twins):
-    """Lloyd's refinement produces k usable centroids, and IVF with the
-    refined centroids still retrieves the injected twin as top-1 (the
-    twin shares its query's cell: identical direction ⇒ identical
-    cosine-argmax assignment)."""
-    cents = S.kmeans_centroids(emb_with_twins, k=8, iters=2)
-    assert len(cents) == 8
-    assert all(len(vec) == 64 for _, vec in cents)
-    # refinement actually moved the seeds
-    seeds = {r.vec_id: list(r.embedding) for r in emb_with_twins.filter(
-        F.col("vec_id") < 8).collect()}
-    assert any(
-        abs(vec[d] - float(seeds[cid][d])) > 1e-9
-        for cid, vec in cents for d in range(64)
-    )
-    topk = S.cosine_topk_ivf(
-        emb_with_twins, F.col("vec_id") < 5, k=1, nprobe=4, centroids=cents
-    )
-    rows = {r.query_id: r for r in topk.collect()}
-    for q in range(5):
-        assert rows[q].neighbor_id == q + OFFSET
-
-
 def test_hot_bucket_guard_degenerate_corpus(spark):
     """1000 identical vectors all land in ONE (band,bucket) — the guard
     must sub-split so no task scores the full corpus² matmul, and the
@@ -220,66 +161,6 @@ def test_hot_bucket_guard_matches_unguarded(spark, emb_with_twins):
     assert guarded == unguarded
 
 
-def test_exact_allpairs_is_bruteforce_complete(spark, emb_with_twins):
-    """allpairs_cosine_exact = 100% recall baseline: every a<b pair at or
-    above threshold, bit-identical scores to the quantized contract."""
-    thr = 0.99
-    exact = {
-        (r.id_a, r.id_b): r.cos_sim
-        for r in S.allpairs_cosine_exact(
-            emb_with_twins, threshold=thr, max_block_size=16
-        ).collect()
-    }
-    # brute-force oracle via the scored topk path (k = corpus size)
-    nrows = emb_with_twins.count()
-    bf = S.cosine_topk_bruteforce(
-        emb_with_twins, F.lit(True), k=nrows
-    ).filter(F.col("cos_sim") >= thr)
-    want = {
-        (min(r.query_id, r.neighbor_id), max(r.query_id, r.neighbor_id)): r.cos_sim
-        for r in bf.collect()
-    }
-    assert set(exact) == set(want)
-    for k2, v in want.items():
-        assert abs(exact[k2] - v) < 1e-12
-    # the LSH-approximate path is a subset; exact=True recovers everything
-    approx = {
-        (r.id_a, r.id_b)
-        for r in S.embedding_near_duplicates(emb_with_twins, threshold=thr).collect()
-    }
-    assert approx <= set(want)
-    full = {
-        (r.id_a, r.id_b)
-        for r in S.embedding_near_duplicates(
-            emb_with_twins, threshold=thr, exact=True
-        ).collect()
-    }
-    assert full == set(want)
-
-
-def test_kmeans_iterates_kmeans_update(spark, sf_dir):
-    """One refinement step of kmeans_centroids IS kmeans_update_stats:
-    every centroid component equals the entry's mean_c for its (cell,
-    dim), bit for bit. Vector 1 is made a copy of vector 0, so cell 1
-    ties to the lower id and stays empty: it keeps its seed."""
-    base = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    v0 = base.filter(F.col("vec_id") == 0).first().embedding
-    emb = base.select(
-        "vec_id",
-        F.when(
-            F.col("vec_id") == 1, F.array(*[F.lit(x) for x in v0]).cast("array<float>")
-        ).otherwise(F.col("embedding")).alias("embedding"),
-    )
-    seeds = dict(S._seed_rows(emb, 16, "vec_id", "embedding"))
-    stats = {(r.cell, r.dim): r.mean_c for r in S.kmeans_update_stats(emb, 16).collect()}
-    assert not any(cell == 1 for cell, _ in stats)
-    cents = S.kmeans_centroids(emb, k=16, iters=1)
-    assert [c for c, _ in cents] == list(range(16))
-    for cell, vec in cents:
-        for d, x in enumerate(vec):
-            assert x == stats.get((cell, d), float(seeds[cell][d])), (cell, d)
-
-
 def test_query_rows_are_bounded(spark, sf_dir, monkeypatch):
     """The query-side collect is bounded: a query set of exactly the
     cap runs, one row more raises a ValueError naming the cap."""
@@ -289,16 +170,6 @@ def test_query_rows_are_bounded(spark, sf_dir, monkeypatch):
     assert {r.query_id for r in rows} == set(range(5))
     with pytest.raises(ValueError, match="more than 5 query-side rows"):
         S.cosine_topk_bruteforce(emb, F.col("vec_id") < 6, k=2)
-
-
-def test_kmeans_guards(spark, emb_with_twins):
-    """Seeding requires ids 0..k-1; a missing seed raises instead of
-    silently mis-assigning."""
-    import pytest as _pytest
-
-    only_high = emb_with_twins.filter(F.col("vec_id") >= 4)
-    with _pytest.raises(ValueError, match="seed"):
-        S.kmeans_centroids(only_high, k=8, iters=1)
 
 
 def test_semantic_dedup_drops_twins_keeps_bases(spark, emb_with_twins):
@@ -594,16 +465,15 @@ def test_two_level_assignment_cocolates_duplicates_and_ties(spark):
 
 
 def test_pq_encode_empty_codebook_raises_descriptively(spark):
-    """pq_codes/pq_encode against an [] codebook (what allow_missing
-    seeding returns on a seedless corpus) must raise the documented
-    ValueError, not IndexError (ADVICE r7 #3)."""
+    """pq_encode against an [] codebook (what allow_missing seeding
+    returns on a seedless corpus) must raise the documented ValueError,
+    not IndexError (ADVICE r7 #3)."""
     emb = spark.createDataFrame(
         [(0, [float(i) for i in range(64)])],
         "vec_id bigint, embedding array<float>",
     )
-    for fn in (S.pq_codes, S.pq_encode):
-        with pytest.raises(ValueError, match="codebook is empty"):
-            fn(emb, codebook=[])
+    with pytest.raises(ValueError, match="codebook is empty"):
+        S.pq_encode(emb, codebook=[])
 
 
 def test_pq_codes_shape_and_range(spark, sf_dir):
@@ -660,14 +530,6 @@ def test_pq_adc_agrees_with_exact_reconstruction(spark, sf_dir):
     assert [tuple(r) for r in a] == [tuple(r) for r in b]
 
 
-def test_pq_train_shape_and_determinism(spark, sf_dir):
-    emb = load_table(spark, sf_dir, "embeddings")
-    cb1 = S.pq_train(emb, n_sub=8, k_codes=16, iters=2)
-    cb2 = S.pq_train(emb, n_sub=8, k_codes=16, iters=2)
-    assert len(cb1) == 8 and len(cb1[0]) == 16 and len(cb1[0][0]) == 8
-    assert cb1 == cb2  # all-integer Lloyd => bit-identical runs
-
-
 def _recall_vs_exact(spark, emb, adc_df, n_queries=25, k=5):
     exact = S.cosine_topk_bruteforce(
         emb, F.col("vec_id") < n_queries, k=k
@@ -678,23 +540,6 @@ def _recall_vs_exact(spark, emb, adc_df, n_queries=25, k=5):
         "left_semi",
     ).count()
     return hits / (n_queries * k)
-
-
-def test_pq_training_improves_recall(spark, sf_dir):
-    """The point of pq_train: a Lloyd-refined codebook beats raw seed
-    codewords on reconstruction, which shows up as ADC recall
-    (measured 0.15 -> 0.26 on this corpus)."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    trained = S.pq_train(emb, iters=3)
-    r_seed = _recall_vs_exact(
-        spark, emb, S.cosine_topk_pq_adc(emb, F.col("vec_id") < 25, k=5)
-    )
-    r_trained = _recall_vs_exact(
-        spark,
-        emb,
-        S.cosine_topk_pq_adc(emb, F.col("vec_id") < 25, k=5, codebook=trained),
-    )
-    assert r_trained > r_seed, (r_trained, r_seed)
 
 
 def test_pq_rerank_recovers_recall(spark, sf_dir):
@@ -716,49 +561,18 @@ def test_pq_rerank_recovers_recall(spark, sf_dir):
 
 def test_ivfpq_finds_twin_and_prunes(spark, emb_with_twins):
     """The full faiss-IndexIVFPQ composition: near-identical twins land
-    in the same cell with identical codes, so cell-pruned ADC +
-    rerank retrieves them as top-1; and the probed candidate set is a
-    strict subset of the corpus (the pruning that makes the query
-    touch nprobe/n_centroids of a 100 TB index)."""
-    from tv_event_streaming_spark.operators.similarity import (
-        cosine_topk_ivfpq,
-        ivfpq_index,
-    )
-
-    idx = ivfpq_index(emb_with_twins, n_centroids=16)
-    topk = cosine_topk_ivfpq(
-        emb_with_twins, F.col("vec_id") < 5, k=1, nprobe=4, index=idx
+    in the same cell with near-identical residual codes, so cell-pruned
+    ADC + rerank retrieves them as top-1; and the corpus spans more
+    cells than a query probes (the pruning that makes the query touch
+    nprobe/n_centroids of a 100 TB corpus)."""
+    topk = S.cosine_topk_ivfpq_residual(
+        emb_with_twins, F.col("vec_id") < 5, k=1, n_centroids=16, nprobe=4
     )
     rows = {r.query_id: r for r in topk.collect()}
     for q in range(5):
         assert rows[q].neighbor_id == q + OFFSET, rows[q]
-    # pruning: the index rows in probed cells are fewer than the corpus
-    n_corpus = emb_with_twins.count()
-    cells = {r.cell for r in idx.select("cell").distinct().collect()}
+    cells = {r.cell for r in S._seed_cell_assignment(emb_with_twins, 16).collect()}
     assert len(cells) > 4  # multiple cells => probing actually prunes
-    idx.unpersist()
-
-
-def test_ivfpq_recall_close_to_full_pq_rerank(spark, sf_dir):
-    """Cell pruning trades recall for scan cost; with nprobe=all cells
-    the IVF-PQ result must EQUAL the unpruned PQ rerank (same codes,
-    same shortlist, same rerank)."""
-    from tv_event_streaming_spark.operators.similarity import (
-        cosine_topk_ivfpq,
-        cosine_topk_pq_rerank,
-    )
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    full = cosine_topk_ivfpq(
-        emb, F.col("vec_id") < 10, k=5, n_centroids=16, nprobe=16
-    )
-    unpruned = cosine_topk_pq_rerank(
-        emb, F.col("vec_id") < 10, k=5, shortlist=50
-    )
-    a = sorted(tuple(r) for r in full.collect())
-    b = sorted(tuple(r) for r in unpruned.collect())
-    assert a == b
-    spark.catalog.clearCache()
 
 
 def test_pq_rerank_tolerates_zero_norm_seed(spark, sf_dir):
@@ -779,10 +593,6 @@ def test_pq_rerank_tolerates_zero_norm_seed(spark, sf_dir):
     rows = topk.collect()
     assert {r.query_id for r in rows} == {0, 1, 2, 4}
     assert all(r.neighbor_id != 3 for r in rows)
-    # IVF-PQ probing every cell is the same query (the zeroed id also
-    # drops out of its centroids and codebook seeds)
-    ivf = S.cosine_topk_ivfpq(zeroed, F.col("vec_id") < 5, k=3, nprobe=16)
-    assert sorted(map(tuple, ivf.collect())) == sorted(map(tuple, rows))
     spark.catalog.clearCache()
 
 
@@ -802,38 +612,6 @@ def test_pq_rerank_all_seeds_zero_norm_is_empty(spark, sf_dir):
     assert [f.name for f in topk.schema.fields] == [
         "query_id", "neighbor_id", "rank", "cos_sim",
     ]
-    spark.catalog.clearCache()
-
-
-def test_pq_adc_accepts_prebuilt_index(spark, sf_dir):
-    """Passing a prebuilt pq_index WITH its codebook must give the
-    identical result and let looping callers control the persist
-    lifecycle (review finding: every adc call persisted a fresh code
-    table). Passing the index WITHOUT its codebook must raise — the
-    codes are meaningless without the codebook that built them, and
-    silently re-seeding would compute wrong ADC distances (advisor
-    finding r6)."""
-    import pytest  # noqa: PLC0415
-
-    emb = load_table(spark, sf_dir, "embeddings").limit(200)
-    cb = S.pq_seed_codebook(emb, n_sub=8, k_codes=16)
-    idx = S.pq_index(emb, codebook=cb)
-    qf = F.col("vec_id") < 5
-    with_idx = sorted(
-        tuple(r)
-        for r in S.cosine_topk_pq_adc(
-            emb, qf, k=5, codebook=cb, index=idx
-        ).collect()
-    )
-    without = sorted(
-        tuple(r) for r in S.cosine_topk_pq_adc(emb, qf, k=5).collect()
-    )
-    assert with_idx == without
-    with pytest.raises(ValueError, match="requires its codebook"):
-        S.cosine_topk_pq_adc(emb, qf, k=5, index=idx)
-    with pytest.raises(ValueError, match="requires its codebook"):
-        S.cosine_topk_ivfpq_residual(emb, qf, k=5, index=idx)
-    idx.unpersist()
     spark.catalog.clearCache()
 
 
@@ -869,36 +647,6 @@ def test_permutation_preserves_exact_cosine_topk(spark, sf_dir):
     assert a == b
 
 
-def test_opq_improves_trained_pq_recall_at_shortlist50(spark, sf_dir):
-    """The OPQ claim, measured not asserted: with TRAINED codebooks and
-    shortlist=50 on this corpus, recall@5 of the OPQ-composed rerank
-    beats plain PQ (0.80 vs 0.72 measured; pinned as >=). Seed-codebook
-    recall is codebook-dependent and NOT pinned."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    qf = F.col("vec_id") < 25
-    truth = {
-        (r.query_id, r.neighbor_id)
-        for r in S.cosine_topk_bruteforce(emb, qf, k=5).collect()
-    }
-    perm = S.opq_permutation(S.nonzero_norm(emb), n_sub=8)
-    rot = S.apply_permutation(emb, perm)
-    cb_plain = S.pq_train(emb, iters=3)
-    cb_opq = S.pq_train(rot, iters=3)
-    plain = {
-        (r.query_id, r.neighbor_id)
-        for r in S.cosine_topk_pq_rerank(emb, qf, k=5, shortlist=50, codebook=cb_plain).collect()
-    }
-    opq = {
-        (r.query_id, r.neighbor_id)
-        for r in S.cosine_topk_pq_rerank(rot, qf, k=5, shortlist=50, codebook=cb_opq).collect()
-    }
-    r_plain = len(plain & truth) / len(truth)
-    r_opq = len(opq & truth) / len(truth)
-    assert r_opq >= r_plain, (r_opq, r_plain)
-    assert r_opq >= 0.75, r_opq
-    spark.catalog.clearCache()
-
-
 def test_ivfpq_residual_exhaustive_equals_bruteforce(spark, sf_dir):
     """With nprobe=all cells and a shortlist covering the corpus, the
     residual-code path degenerates to an exact scan: the final rerank
@@ -924,7 +672,8 @@ def test_ivfpq_residual_beats_raw_codes_at_full_probe(spark, sf_dir):
     """The by_residual claim, measured: at nprobe=all (cell pruning
     off, code quality isolated) residual codes recall >= raw-vector
     codes with the same seed-codebook budget (0.680 vs 0.656 measured
-    at shortlist=50)."""
+    at shortlist=50). Raw codes with every cell probed are the unpruned
+    PQ rerank."""
     emb = load_table(spark, sf_dir, "embeddings")
     qf = F.col("vec_id") < 25
     truth = {
@@ -933,7 +682,7 @@ def test_ivfpq_residual_beats_raw_codes_at_full_probe(spark, sf_dir):
     }
     plain = {
         (r.query_id, r.neighbor_id)
-        for r in S.cosine_topk_ivfpq(emb, qf, k=5, nprobe=16, shortlist=50).collect()
+        for r in S.cosine_topk_pq_rerank(emb, qf, k=5, shortlist=50).collect()
     }
     res = {
         (r.query_id, r.neighbor_id)
@@ -951,8 +700,8 @@ def test_residual_seeding_tolerates_zero_norm_seed(spark, sf_dir):
     """A zero-norm vector among the residual seed ids 16..31 must
     SHRINK the residual codebook (the ann_ivfpq_residual oracle's
     rcb-CTE-over-nz semantics), not raise; all 16 seeds zero-norm →
-    empty codebook → empty index/result with the contract schemas
-    (advisor finding r6: crash-vs-result cross-engine divergence)."""
+    empty codebook → empty result with the contract schema (advisor
+    finding r6: crash-vs-result cross-engine divergence)."""
     emb = load_table(spark, sf_dir, "embeddings").limit(100)
     one_zero = emb.select(
         "vec_id",
@@ -976,34 +725,11 @@ def test_residual_seeding_tolerates_zero_norm_seed(spark, sf_dir):
         ).otherwise(F.col("embedding")).alias("embedding"),
         "label",
     )
-    assert S.pq_train_residual(all_zero, iters=1) == []
-    idx = S.ivfpq_residual_index(all_zero)
-    assert idx.count() == 0
-    assert [f.name for f in idx.schema.fields] == ["vec_id", "cell", "codes"]
     topk = S.cosine_topk_ivfpq_residual(all_zero, F.col("vec_id") < 5, k=3)
     assert topk.count() == 0
     assert [f.name for f in topk.schema.fields] == [
         "query_id", "neighbor_id", "rank", "cos_sim",
     ]
-    spark.catalog.clearCache()
-
-
-def test_ivfpq_residual_index_shape(spark, sf_dir):
-    """(id, cell, codes): one row per nonzero-norm vector, cells match
-    the shared seed assignment, codes are n_sub ints in [0, k_codes)."""
-    emb = load_table(spark, sf_dir, "embeddings").limit(300)
-    idx = S.ivfpq_residual_index(emb, n_centroids=16, n_sub=8, k_codes=16)
-    rows = idx.collect()
-    assert len(rows) == S.nonzero_norm(emb).count()
-    assign = {
-        r[0]: r[2]
-        for r in S._seed_cell_assignment(emb, 16).collect()
-    }
-    for r in rows:
-        assert r.cell == assign[r.vec_id]
-        assert len(r.codes) == 8
-        assert all(0 <= c < 16 for c in r.codes)
-    idx.unpersist()
     spark.catalog.clearCache()
 
 
@@ -1016,7 +742,8 @@ def test_ivfpq_residual_wins_on_two_level_structure(spark):
     1.0 vs 0.936 recall@5. Also documents the seeding contract: ids
     16..31 (disjoint from centroids; a centroid's own residual is
     zero, and an all-zero codebook silently degenerates ADC to
-    per-cell constants)."""
+    per-cell constants). Raw codes with every cell probed are the
+    unpruned PQ rerank."""
     def center(c, d):
         return float(((c * 37 + d * 11) % 13) - 6)
 
@@ -1047,7 +774,7 @@ def test_ivfpq_residual_wins_on_two_level_structure(spark):
     }
     plain = {
         (r.query_id, r.neighbor_id)
-        for r in S.cosine_topk_ivfpq(emb, qf, k=5, nprobe=16, shortlist=20).collect()
+        for r in S.cosine_topk_pq_rerank(emb, qf, k=5, shortlist=20).collect()
     }
     res = {
         (r.query_id, r.neighbor_id)
@@ -1085,39 +812,6 @@ def test_full_faiss_stack_composes(spark, sf_dir):
         ).collect()
     )
     assert stack == exact
-    spark.catalog.clearCache()
-
-
-def test_residual_training_does_not_hurt_recall(spark, sf_dir):
-    """pq_train_residual: the all-integer Lloyd loop in residual space
-    (faiss trains IVFPQ codebooks on residuals). Pinned: trained
-    codebook recall@5 >= seed codebook recall at full probe
-    (sf0.01 measured 0.760 vs 0.728), and the trainer is deterministic."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    qf = F.col("vec_id") < 25
-    truth = {
-        (r.query_id, r.neighbor_id)
-        for r in S.cosine_topk_bruteforce(emb, qf, k=5).collect()
-    }
-    cb1 = S.pq_train_residual(emb, iters=2)
-    cb2 = S.pq_train_residual(emb, iters=2)
-    assert cb1 == cb2  # deterministic under any partitioning
-    seed = {
-        (r.query_id, r.neighbor_id)
-        for r in S.cosine_topk_ivfpq_residual(
-            emb, qf, k=5, nprobe=16, shortlist=50
-        ).collect()
-    }
-    spark.catalog.clearCache()
-    trained = {
-        (r.query_id, r.neighbor_id)
-        for r in S.cosine_topk_ivfpq_residual(
-            emb, qf, k=5, nprobe=16, shortlist=50, codebook=cb1
-        ).collect()
-    }
-    assert len(trained & truth) >= len(seed & truth), (
-        len(trained & truth), len(seed & truth),
-    )
     spark.catalog.clearCache()
 
 
@@ -1179,23 +873,29 @@ def test_shrunk_codebook_codes_match_reference_argmin(spark, sf_dir):
         "label",
     )
     nz = S.nonzero_norm(one_zero)
-    cb = S.pq_residual_seed_codebook(one_zero, allow_missing=True)
+    kernel, cb = S._ivf_setup(nz, 16, 8, 16, "vec_id", "embedding")
     assert len(cb[0]) == 15  # the shrink actually happened
     sub = len(cb[0][0])
     qcents = _ref_centroids(nz)
     cent_by_id = dict(qcents)
+    # the residual encode of the fused IVF-PQ pass: nearest cell, minus
+    # its centroid, then the PQ kernel
+    rows = nz.select("vec_id", "embedding").collect()
+    ids, qc, quantize, nearest = kernel
+    qv_all = quantize([r[1] for r in rows])
+    best = nearest(qv_all)
+    codes = S._pq_kernel(cb)[0](qv_all - qc[best])[0]
     got = {
-        r.vec_id: (r.cell, list(r.codes))
-        for r in S.ivfpq_residual_index(one_zero).collect()
+        r[0]: (int(ids[b]), c.tolist()) for r, b, c in zip(rows, best, codes)
     }
-    for r in nz.select("vec_id", "embedding").collect():
+    for r in rows:
         qq = _ref_qvec(r[1])
         cell = _ref_nearest_cell(qq, qcents)
         qv = [a - b for a, b in zip(qq, cent_by_id[cell])]
         assert got[r[0]] == (cell, _ref_argmin_codes(qv, cb, sub)), r[0]
     spark.catalog.clearCache()
 
-    # raw-PQ twin: pq_codes over a rerank-style shrunk codebook
+    # raw-PQ twin: pq_encode over a rerank-style shrunk codebook
     zeroed3 = emb.select(
         "vec_id",
         F.when(
@@ -1206,62 +906,12 @@ def test_shrunk_codebook_codes_match_reference_argmin(spark, sf_dir):
     nz3 = S.nonzero_norm(zeroed3)
     cb3 = S.pq_seed_codebook(nz3, 8, 16, "vec_id", "embedding", allow_missing=True)
     assert len(cb3[0]) == 15
-    got3 = {
-        r.vec_id: list(r.codes)
-        for r in S.pq_codes(nz3, codebook=cb3).collect()
-    }
+    got3: dict = {}
+    for r in S.pq_encode(nz3, codebook=cb3).collect():
+        got3.setdefault(r.vec_id, [0] * 8)[r.m] = r.code
     for r in nz3.select("vec_id", "embedding").collect():
         qv = _ref_qvec(r[1])
         assert got3[r[0]] == _ref_argmin_codes(qv, cb3, sub), r[0]
     spark.catalog.clearCache()
 
 
-def test_shrunk_codebook_lloyd_iteration_matches_reference(spark, sf_dir):
-    """One Lloyd iteration over a SHRUNK residual codebook must match
-    the exact-integer reference (assign by true argmin, update each
-    non-empty (m, code, dim) to floor(sum/count)); the stride bug
-    corrupted every trained-from-shrunk codebook silently."""
-    emb = load_table(spark, sf_dir, "embeddings").limit(100)
-    one_zero = emb.select(
-        "vec_id",
-        F.when(
-            F.col("vec_id") == 20, F.transform("embedding", lambda x: x * F.lit(0.0))
-        ).otherwise(F.col("embedding")).alias("embedding"),
-        "label",
-    )
-    nz = S.nonzero_norm(one_zero)
-    cb0 = S.pq_residual_seed_codebook(one_zero, allow_missing=True)
-    sub = len(cb0[0][0])
-    qcents = _ref_centroids(nz)
-    cent_by_id = dict(qcents)
-    # exact-integer reference: one assignment + mean-update pass
-    sums = {}
-    for r in nz.select("vec_id", "embedding").collect():
-        qq = _ref_qvec(r[1])
-        qv = [a - b for a, b in zip(qq, cent_by_id[_ref_nearest_cell(qq, qcents)])]
-        for m, j in enumerate(_ref_argmin_codes(qv, cb0, sub)):
-            for d in range(sub):
-                s, n = sums.get((m, j, d), (0, 0))
-                sums[(m, j, d)] = (s + qv[m * sub + d], n + 1)
-    expect = [[list(w) for w in words] for words in cb0]
-    for (m, j, d), (s, n) in sums.items():
-        expect[m][j][d] = s // n
-    assert S.pq_train_residual(one_zero, iters=1) == expect
-    spark.catalog.clearCache()
-
-
-def test_fused_residual_query_matches_prebuilt_index_path(spark, sf_dir):
-    """r13: the fused Arrow query pass (assignment + residual + encode +
-    probed-ADC + per-batch top-k in ONE mapInPandas) must produce rows
-    identical to the frame-based scan over a prebuilt persisted index —
-    same codebook, same probes, same tie-breaks."""
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    nz = S.nonzero_norm(emb)
-    rcb = S.pq_residual_seed_codebook(nz, 16, 8, 16, allow_missing=True)
-    idx = S.ivfpq_residual_index(nz, 16, 8, 16, codebook=rcb)
-    old = S.cosine_topk_ivfpq_residual(
-        emb, F.col("vec_id") < 5, k=5, index=idx, codebook=rcb
-    ).collect()
-    new = S.cosine_topk_ivfpq_residual(emb, F.col("vec_id") < 5, k=5).collect()
-    assert sorted(map(tuple, old)) == sorted(map(tuple, new))
-    spark.catalog.clearCache()

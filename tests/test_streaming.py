@@ -360,7 +360,7 @@ def test_quality_gate_runs_on_streams(spark, sf_dir, tmp_path):
 
 
 def test_pq_encode_runs_on_streams(spark, sf_dir, tmp_path):
-    """Index-apply-on-stream: with a pretrained codebook passed in, the
+    """Index-apply-on-stream: with a batch-seeded codebook passed in, the
     PQ encode is a stateless map-side Arrow pass (codebook in the task
     closure, no shuffle), so the SAME function that encodes the
     batch corpus encodes a readStream frame — live vectors join the
@@ -405,73 +405,3 @@ def test_pq_encode_runs_on_streams(spark, sf_dir, tmp_path):
     assert got == batch
 
 
-def test_semantic_dedup_stream_drops_code_twins(spark, sf_dir, tmp_path):
-    """Streaming SemDeDup approximation: vectors whose every subspace
-    quantizes to the same codeword deduplicate ACROSS micro-batches
-    (first arrival wins); distinct-code vectors survive. The codebook
-    is pretrained batch-side and rides in the encode pass's task
-    closure — the encode itself is stateless, pinned equal to batch
-    encoding."""
-    import datetime
-
-    from pyspark.sql import functions as F
-
-    from tv_event_streaming_spark.domain import load_table
-    from tv_event_streaming_spark.operators.similarity import pq_seed_codebook
-    from tv_event_streaming_spark.streaming.dedup import semantic_dedup_stream
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    cb = pq_seed_codebook(emb, n_sub=8, k_codes=16)
-    base = emb.limit(40).select(
-        "vec_id",
-        "embedding",
-        F.lit(datetime.datetime(2024, 1, 1)).cast("timestamp").alias("ts"),
-    )
-    # batch 2: exact copies of batch 1 under new ids (same codes) plus
-    # themselves — every copy must be dropped as a cross-batch dup
-    twins = base.select(
-        (F.col("vec_id") + 10_000).alias("vec_id"),
-        "embedding",
-        (F.col("ts") + F.expr("INTERVAL 1 MINUTE")).alias("ts"),
-    )
-    in_dir = tmp_path / "in"
-    in_dir.mkdir()
-    base.coalesce(1).write.mode("append").parquet(str(in_dir))
-    twins.coalesce(1).write.mode("append").parquet(str(in_dir))
-
-    stream = (
-        spark.readStream.schema(spark.read.parquet(str(in_dir)).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(in_dir))
-    )
-    out_dir = str(tmp_path / "out")
-    q = (
-        semantic_dedup_stream(stream, cb)
-        .writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-
-    kept = spark.read.parquet(out_dir)
-    kept_ids = {r.vec_id for r in kept.select("vec_id").collect()}
-    # every surviving row is a distinct code tuple, and no exact twin
-    # pair survives together
-    assert len(kept_ids) > 0
-    for i in kept_ids:
-        assert not (i >= 10_000 and (i - 10_000) in kept_ids), i
-    # batch twin: number of survivors == distinct code tuples over the
-    # whole input
-    from tv_event_streaming_spark.operators.similarity import pq_codes
-
-    all_rows = base.unionByName(twins)
-    n_distinct = (
-        pq_codes(all_rows, codebook=cb)
-        .select(F.array_join(F.transform("codes", lambda c: c.cast("string")), ","))
-        .distinct()
-        .count()
-    )
-    assert kept.count() == n_distinct

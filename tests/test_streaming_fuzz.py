@@ -4,26 +4,24 @@ The events fuzz family checks the stateful operators' BATCH twins
 against the DuckDB oracle; this file drives the actual streaming
 queries — availableNow file streams split into three event-time-ordered
 micro-batches, watermarks advancing between them, the state store
-merging sessions/bursts across batch boundaries — over the same
-adversarial random tables (threshold-exact gaps, same-instant
-duplicates split ACROSS micro-batches, empty batches, empty streams),
-and pins the repo's stream/batch agreement contracts on every example:
+merging sessions across batch boundaries — over the same adversarial
+random tables (threshold-exact gaps, same-instant duplicates split
+ACROSS micro-batches, empty batches, empty streams), and pins the
+repo's stream/batch agreement contracts on every example:
 
-- windowed/sliding metrics: emissions are unique, every emitted row
-  agrees with the batch twin, and every watermark-closed window was
-  emitted (exactly-once materialization);
-- session/burst operators: every closed session/burst the stream emits
-  appears verbatim in the batch gaps-and-islands twin (stream ⊆ batch
-  — the open tail legitimately stays in state);
-- running totals: the final emitted state per user equals the batch
-  aggregate exactly (count) / to float-sum tolerance (value).
+- sliding metrics: emissions are unique, every emitted row agrees with
+  the batch twin, and every watermark-closed window was emitted
+  (exactly-once materialization);
+- sessions: every closed session the stream emits appears verbatim in
+  the batch gaps-and-islands twin (stream ⊆ batch — the open tail
+  legitimately stays in state).
 
 Arrival order tracks event time (rows sorted by ts before chunking), as
 the operators' documented contract requires — late-data DROP behavior
 is covered by the watermark tests in test_streaming_metrics.py.
 
-Each example starts five real streaming queries, so this tier runs at
-a reduced example count like the composition tier.
+Each example starts real streaming queries, so this tier runs at a
+reduced example count like the composition tier.
 """
 
 from __future__ import annotations
@@ -34,7 +32,6 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
-from pyspark.sql import functions as F
 
 from .test_differential_fuzz import _row
 
@@ -99,39 +96,6 @@ def _drain(stream_df, sink, ckpt, timeout=180):
     assert q.awaitTermination(timeout), "stream did not drain in time"
 
 
-def _check_running_totals(spark, sink, batch_events):
-    """The final emitted state per user must equal the batch aggregate:
-    counts exactly, value sums to float-addition-order tolerance.
-    Counts and sums are arrival-order-independent, so this holds for
-    BOTH the event-time-ordered and the reordered arrival tests."""
-    from pyspark.sql import Window
-
-    log = spark.read.schema(
-        "user_id bigint, n_events bigint, total_value double"
-    ).parquet(sink)
-    # n_events strictly increases per emission for a user, so the row
-    # with the max count IS the final state (value may DECREASE when
-    # negative values arrive — max(total_value) would be wrong here)
-    w = Window.partitionBy("user_id").orderBy(F.desc("n_events"))
-    final = (
-        log.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("user_id", "n_events", "total_value")
-    )
-    batch_tot = batch_events.groupBy("user_id").agg(
-        F.count("*").alias("bn"),
-        F.sum(F.coalesce(F.col("value"), F.lit(0.0))).alias("bv"),
-    )
-    joined = final.join(batch_tot, "user_id", "full_outer")
-    bad = joined.filter(
-        F.col("n_events").isNull()
-        | F.col("bn").isNull()
-        | (F.col("n_events") != F.col("bn"))
-        | (F.abs(F.col("total_value") - F.col("bv")) > 1e-6)
-    )
-    assert bad.count() == 0, bad.limit(5).collect()
-
-
 @settings(
     max_examples=max(2, _EXAMPLES // 3),
     deadline=None,
@@ -142,12 +106,8 @@ def _check_running_totals(spark, sink, batch_events):
 def test_streaming_matches_batch_on_random_events(spark, tmp_path_factory, rows):
     from tv_event_streaming_spark.operators.analytics import sessionize
     from tv_event_streaming_spark.streaming.metrics import (
-        error_bursts,
-        error_bursts_batch,
-        running_user_totals,
         session_metrics,
         sliding_metrics,
-        windowed_metrics,
     )
 
     tmpdir = str(tmp_path_factory.mktemp("streamfuzz"))
@@ -164,11 +124,11 @@ def test_streaming_matches_batch_on_random_events(spark, tmp_path_factory, rows)
         "invocations bigint, errors bigint, successes bigint"
     )
 
-    # -- tumbling windows: unique, batch-consistent, closed ⇒ emitted --
-    sink, ckpt = f"{tmpdir}/win_sink", f"{tmpdir}/win_ckpt"
-    _drain(windowed_metrics(_read_stream(spark, src)), sink, ckpt)
+    # -- sliding windows: unique, batch-consistent, closed ⇒ emitted --
+    sink, ckpt = f"{tmpdir}/sli_sink", f"{tmpdir}/sli_ckpt"
+    _drain(sliding_metrics(_read_stream(spark, src)), sink, ckpt)
     emitted = [tuple(r) for r in spark.read.schema(_WIN_SCHEMA).parquet(sink).collect()]
-    batch_all = {tuple(r) for r in windowed_metrics(batch_events).collect()}
+    batch_all = {tuple(r) for r in sliding_metrics(batch_events).collect()}
     assert len(emitted) == len(set(emitted)), "duplicate window emissions"
     assert set(emitted) <= batch_all, sorted(set(emitted) - batch_all)[:3]
     if rows:
@@ -180,13 +140,6 @@ def test_streaming_matches_batch_on_random_events(spark, tmp_path_factory, rows)
         horizon = max_ts - datetime.timedelta(hours=1)
         closed = {t for t in batch_all if t[1] <= horizon}
         assert closed <= set(emitted), "watermark-closed windows missing"
-
-    # -- sliding windows: emitted ⊆ batch --
-    sink, ckpt = f"{tmpdir}/sli_sink", f"{tmpdir}/sli_ckpt"
-    _drain(sliding_metrics(_read_stream(spark, src)), sink, ckpt)
-    got = {tuple(r) for r in spark.read.schema(_WIN_SCHEMA).parquet(sink).collect()}
-    batch = {tuple(r) for r in sliding_metrics(batch_events).collect()}
-    assert got <= batch, sorted(got - batch)[:3]
 
     # -- session windows: closed sessions ⊆ batch sessionization --
     sink, ckpt = f"{tmpdir}/ses_sink", f"{tmpdir}/ses_ckpt"
@@ -204,26 +157,6 @@ def test_streaming_matches_batch_on_random_events(spark, tmp_path_factory, rows)
     }
     assert got <= batch, sorted(got - batch)[:3]
 
-    # -- CEP bursts: closed bursts ⊆ batch gaps-and-islands twin --
-    sink, ckpt = f"{tmpdir}/bur_sink", f"{tmpdir}/bur_ckpt"
-    _drain(error_bursts(_read_stream(spark, src)), sink, ckpt)
-    got = {
-        (r.user_id, r.burst_start, r.burst_end, r.n_errors)
-        for r in spark.read.schema(
-            "user_id bigint, burst_start timestamp, "
-            "burst_end timestamp, n_errors bigint"
-        ).parquet(sink).collect()
-    }
-    batch = {
-        (r.user_id, r.burst_start, r.burst_end, r.n_errors)
-        for r in error_bursts_batch(batch_events).collect()
-    }
-    assert got <= batch, sorted(got - batch)[:3]
-
-    # -- running totals: final per-user state == batch aggregate --
-    sink, ckpt = f"{tmpdir}/tot_sink", f"{tmpdir}/tot_ckpt"
-    _drain(running_user_totals(_read_stream(spark, src)), sink, ckpt)
-    _check_running_totals(spark, sink, batch_events)
 
 @settings(
     max_examples=max(2, _EXAMPLES // 3),
@@ -237,38 +170,28 @@ def test_streaming_survives_out_of_order_arrival(spark, tmp_path_factory, rows):
     watermark. The strong stream==batch claims no longer apply — the
     contracts that DO survive reordering, pinned here on every example:
 
-    - every query drains without crashing (the ADVICE-#5 clamp: an
-      out-of-order error event merges into the open burst without
-      moving burst_end backwards);
+    - every query drains without crashing;
     - window emissions stay exactly-once per (window, event_type) key;
-    - per-user bursts and sessions are well-formed (end ≥ start,
-      count ≥ min) and non-overlapping — a late event can only merge
-      into open state, never conjure an overlapping run;
-    - running totals reach FULL batch equality: counts and sums are
-      arrival-order-independent, so reordering must not change them.
+    - per-user sessions are well-formed (end ≥ start, count ≥ 1) and
+      non-overlapping — a late event can only merge into open state,
+      never conjure an overlapping run.
     """
     from tv_event_streaming_spark.streaming.metrics import (
-        error_bursts,
-        running_user_totals,
         session_metrics,
-        windowed_metrics,
+        sliding_metrics,
     )
 
     tmpdir = str(tmp_path_factory.mktemp("streamfuzz_ooo"))
     src = _write_stream_chunks(rows, tmpdir, sort_by_time=False)
-    batch_events = spark.read.schema(
-        "event_id bigint, ts timestamp, user_id bigint, "
-        "event_type string, value double, props string"
-    ).parquet(src)
 
     _WIN_SCHEMA = (
         "window_start timestamp, window_end timestamp, event_type string, "
         "invocations bigint, errors bigint, successes bigint"
     )
 
-    # -- tumbling windows: drained + exactly-once per window key --
-    sink, ckpt = f"{tmpdir}/win_sink", f"{tmpdir}/win_ckpt"
-    _drain(windowed_metrics(_read_stream(spark, src)), sink, ckpt)
+    # -- sliding windows: drained + exactly-once per window key --
+    sink, ckpt = f"{tmpdir}/sli_sink", f"{tmpdir}/sli_ckpt"
+    _drain(sliding_metrics(_read_stream(spark, src)), sink, ckpt)
     win = spark.read.schema(_WIN_SCHEMA).parquet(sink).collect()
     keys = [(r.window_start, r.event_type) for r in win]
     assert len(keys) == len(set(keys)), "window emitted twice under reordering"
@@ -288,24 +211,3 @@ def test_streaming_survives_out_of_order_arrival(spark, tmp_path_factory, rows):
         spans.sort()
         for (s1, e1), (s2, e2) in zip(spans, spans[1:]):
             assert e1 <= s2, ("overlapping sessions", spans)
-
-    # -- bursts: well-formed, non-overlapping per user --
-    sink, ckpt = f"{tmpdir}/bur_sink", f"{tmpdir}/bur_ckpt"
-    _drain(error_bursts(_read_stream(spark, src)), sink, ckpt)
-    bur = spark.read.schema(
-        "user_id bigint, burst_start timestamp, "
-        "burst_end timestamp, n_errors bigint"
-    ).parquet(sink).collect()
-    by_user = {}
-    for r in bur:
-        assert r.burst_end >= r.burst_start and r.n_errors >= 3, r
-        by_user.setdefault(r.user_id, []).append((r.burst_start, r.burst_end))
-    for spans in by_user.values():
-        spans.sort()
-        for (s1, e1), (s2, e2) in zip(spans, spans[1:]):
-            assert e1 <= s2, ("overlapping bursts", spans)
-
-    # -- running totals: order-independent, so FULL equality holds --
-    sink, ckpt = f"{tmpdir}/tot_sink", f"{tmpdir}/tot_ckpt"
-    _drain(running_user_totals(_read_stream(spark, src)), sink, ckpt)
-    _check_running_totals(spark, sink, batch_events)

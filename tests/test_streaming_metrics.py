@@ -1,7 +1,8 @@
-"""Watermarked windowed aggregation (ST5/ST6) and the custom stateful
-operator (ST7, applyInPandasWithState) — driven with availableNow over a
-file stream split into multiple micro-batches, so cross-batch state and
-watermark-close semantics are actually exercised."""
+"""Watermarked event-time metrics (ST5/ST6): the same DataFrame runs as
+a batch query and, started inline with ``writeStream``, as a stream —
+driven with availableNow over a file stream split into multiple
+micro-batches, so cross-batch state and watermark-close semantics are
+actually exercised."""
 
 from __future__ import annotations
 
@@ -9,11 +10,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from tv_event_streaming_spark.domain import load_table
-from tv_event_streaming_spark.streaming.metrics import (
-    start_running_totals,
-    start_windowed_metrics,
-    windowed_metrics,
-)
 
 
 @pytest.fixture(scope="module")
@@ -47,83 +43,24 @@ def _read_stream(spark, src_dir):
     )
 
 
-def test_windowed_metrics_append(spark, sf_dir, event_stream_dir, tmp_path):
-    sink = str(tmp_path / "sink")
-    ckpt = str(tmp_path / "ckpt")
-    q = start_windowed_metrics(_read_stream(spark, event_stream_dir), sink, ckpt)
-    q.awaitTermination(120)
-
-    got = spark.read.parquet(sink)
-    batch = windowed_metrics(load_table(spark, sf_dir, "events"))
-    max_ts = load_table(spark, sf_dir, "events").agg(F.max("ts")).collect()[0][0]
-
-    # every window the watermark closed must be emitted, exactly once,
-    # with values identical to the batch computation
-    expected = {
-        tuple(r)
-        for r in batch.filter(
-            F.col("window_end") <= F.lit(max_ts) - F.expr("INTERVAL 1 HOUR")
-        ).collect()
-    }
-    emitted = [tuple(r) for r in got.collect()]
-    assert len(emitted) == len(set(emitted)), "duplicate window emissions"
-    assert expected <= set(emitted), "watermark-closed windows missing from sink"
-    # and nothing the stream emitted disagrees with the batch values
-    batch_all = {tuple(r) for r in batch.collect()}
-    assert set(emitted) <= batch_all
-
-
-def test_running_totals_cross_batch_state(spark, sf_dir, event_stream_dir, tmp_path):
-    sink = str(tmp_path / "sink")
-    ckpt = str(tmp_path / "ckpt")
-    q = start_running_totals(_read_stream(spark, event_stream_dir), sink, ckpt)
-    q.awaitTermination(120)
-
-    got = spark.read.parquet(sink)
-    # multiple micro-batches -> at least one user emitted more than once
-    # (state carried across batches produces increasing totals)
-    multi = got.groupBy("user_id").count().filter(F.col("count") > 1)
-    assert multi.count() > 0, "stream ran as a single batch; state never crossed batches"
-
-    # final running total per user == the batch aggregate
-    final = got.groupBy("user_id").agg(
-        F.max("n_events").alias("n_events"),
-        F.max("total_value").alias("total_value"),
-    )
-    batch = (
-        load_table(spark, sf_dir, "events")
-        .groupBy("user_id")
-        .agg(
-            F.count("*").alias("n_events"),
-            F.sum(F.coalesce(F.col("value"), F.lit(0.0))).alias("total_value"),
-        )
-    )
-    joined = final.join(batch, "user_id", "full_outer").select(
-        "user_id",
-        final["n_events"].alias("sn"),
-        batch["n_events"].alias("bn"),
-        final["total_value"].alias("sv"),
-        batch["total_value"].alias("bv"),
-    )
-    bad = joined.filter(
-        F.col("sn").isNull()
-        | F.col("bn").isNull()
-        | (F.col("sn") != F.col("bn"))
-        | (F.abs(F.col("sv") - F.col("bv")) > 1e-6)
-    )
-    assert bad.count() == 0, bad.limit(5).collect()
-
-
 def test_session_window_stream_matches_batch(spark, sf_dir, event_stream_dir, tmp_path):
     """ST6 deepened: streaming session_window sessions (closed by the
     watermark, merged across micro-batches by the state store) agree
     with the batch gap-sessionization on (user, start, end, count)."""
     from tv_event_streaming_spark.operators.analytics import sessionize
-    from tv_event_streaming_spark.streaming.metrics import start_session_metrics
+    from tv_event_streaming_spark.streaming.metrics import session_metrics
 
     sink = str(tmp_path / "sink")
     ckpt = str(tmp_path / "ckpt")
-    q = start_session_metrics(_read_stream(spark, event_stream_dir), sink, ckpt)
+    q = (
+        session_metrics(_read_stream(spark, event_stream_dir))
+        .writeStream.format("parquet")
+        .option("path", sink)
+        .option("checkpointLocation", ckpt)
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
+    )
     q.awaitTermination(180)
 
     got = {
@@ -139,41 +76,6 @@ def test_session_window_stream_matches_batch(spark, sf_dir, event_stream_dir, tm
         f"stream emitted sessions the batch twin disagrees with: "
         f"{sorted(got - batch)[:3]}"
     )
-
-
-def test_dedup_stream_cross_batch(spark, tmp_path):
-    """Cross-micro-batch exact dedup with bounded state
-    (dropDuplicatesWithinWatermark): a key redelivered in a LATER
-    micro-batch within the watermark horizon is dropped."""
-    import json
-
-    from tv_event_streaming_spark.streaming.dedup import start_dedup_stream
-
-    src = tmp_path / "src"
-    src.mkdir()
-    # batch 1: keys 0-4; batch 2: keys 3-7 (3,4 are cross-batch dupes)
-    with open(src / "a.json", "w") as fh:
-        for i in range(5):
-            fh.write(json.dumps({"event_id": i, "ts": f"2025-07-04 10:0{i}:00"}) + "\n")
-    with open(src / "b.json", "w") as fh:
-        for i in range(3, 8):
-            fh.write(json.dumps({"event_id": i, "ts": f"2025-07-04 10:1{i-3}:00"}) + "\n")
-
-    stream = (
-        spark.readStream.schema("event_id bigint, ts timestamp")
-        .option("maxFilesPerTrigger", 1)
-        .json(str(src))
-    )
-    q = start_dedup_stream(
-        stream,
-        str(tmp_path / "sink"),
-        str(tmp_path / "ckpt"),
-        key_cols=["event_id"],
-        watermark="1 hour",
-    )
-    q.awaitTermination(120)
-    got = sorted(r.event_id for r in spark.read.parquet(str(tmp_path / "sink")).collect())
-    assert got == list(range(8)), f"expected each key once, got {got}"
 
 
 def test_sliding_metrics_stream_matches_batch(spark, sf_dir, event_stream_dir, tmp_path):
@@ -217,44 +119,6 @@ def test_sliding_metrics_stream_matches_batch(spark, sf_dir, event_stream_dir, t
         assert min_gap == 900, min_gap
 
 
-def test_error_bursts_cross_batch_state(spark, sf_dir, event_stream_dir, tmp_path):
-    """CEP burst detection: every burst the stream CLOSES (a later
-    error proved the run ended) must appear verbatim in the batch
-    gaps-and-islands twin; a burst spanning micro-batches merges in
-    the state store instead of double-reporting."""
-    from tv_event_streaming_spark.streaming.metrics import (
-        error_bursts,
-        error_bursts_batch,
-    )
-
-    sink = str(tmp_path / "sink")
-    ckpt = str(tmp_path / "ckpt")
-    q = (
-        error_bursts(_read_stream(spark, event_stream_dir))
-        .writeStream.format("parquet")
-        .option("path", sink)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-
-    got = {
-        (r.user_id, r.burst_start, r.burst_end, r.n_errors)
-        for r in spark.read.parquet(sink).collect()
-    }
-    batch = {
-        (r.user_id, r.burst_start, r.burst_end, r.n_errors)
-        for r in error_bursts_batch(
-            load_table(spark, sf_dir, "events")
-        ).collect()
-    }
-    assert len(batch) > 0, "fixture has no bursts at these parameters"
-    assert len(got) > 0, "stream closed no bursts before draining"
-    assert got <= batch, sorted(got - batch)[:3]
-
-
 def test_error_bursts_batch_twin_semantics(spark):
     """Hand-built case: gaps exactly at the threshold stay in-burst
     (the sessionize > convention); short runs are dropped."""
@@ -287,285 +151,3 @@ def test_error_bursts_batch_twin_semantics(spark):
     assert got == {(1, mk(0), mk(15), 3)}
 
 
-def test_error_bursts_out_of_order_never_shrinks_burst_end(spark, tmp_path):
-    """A later micro-batch delivering an event OLDER than the open
-    burst's last timestamp must merge WITHOUT moving the burst anchor
-    backwards (review finding: last_us regressed, corrupting burst_end
-    and subsequent gap checks). Batch 1: errors at t=0,5,8 min (open
-    burst, last=8). Batch 2: t=6 (late) then t=30 (gap 22 > 10 closes
-    the burst). Correct emission: end=8min, n=4 — a regressed anchor
-    would report end=6min."""
-    import datetime
-    import time
-
-    from tv_event_streaming_spark.streaming.metrics import error_bursts
-
-    t0 = datetime.datetime(2024, 1, 1)
-    mk = lambda mins: t0 + datetime.timedelta(minutes=mins)
-    schema = (
-        "event_id bigint, ts timestamp, user_id bigint, event_type string, "
-        "value double, props string"
-    )
-    src = str(tmp_path / "src")
-    batch1 = [(i, mk(m), 1, "error", None, None) for i, m in enumerate([0, 5, 8])]
-    batch2 = [(10, mk(6), 1, "error", None, None), (11, mk(30), 1, "error", None, None)]
-    spark.createDataFrame(batch1, schema).coalesce(1).write.mode("append").parquet(src)
-    time.sleep(1.1)  # file mtime orders the micro-batches
-    spark.createDataFrame(batch2, schema).coalesce(1).write.mode("append").parquet(src)
-
-    stream = (
-        spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(src)
-    )
-    sink = str(tmp_path / "sink")
-    q = (
-        error_bursts(stream, gap_minutes=10, min_count=2)
-        .writeStream.format("parquet")
-        .option("path", sink)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    got = {
-        (r.user_id, r.burst_start, r.burst_end, r.n_errors)
-        for r in spark.read.parquet(sink).collect()
-    }
-    assert got == {(1, mk(0), mk(8), 4)}, got
-
-
-def test_error_bursts_late_events_widen_start_and_drop_stragglers(
-    spark, tmp_path
-):
-    """r6 advisor finding: the out-of-order clamp (a) never lowered
-    burst_start, so a late event slightly before the open burst's
-    start was counted but left outside the reported span, and (b) let
-    ancient stragglers (arbitrarily older than the burst — the
-    negative gap always satisfies <= gap) inflate n_errors. Pinned:
-    batch 1 opens a burst at t=20,25 min (gap 10); batch 2 delivers
-    t=14 (within gap of start → merges AND widens start to 14),
-    t=-500 (ancient → dropped), then t=60 (closes the burst). Correct
-    emission: (14, 25, 3) — the old code emitted (20, 25, 4)."""
-    import datetime
-    import time
-
-    from tv_event_streaming_spark.streaming.metrics import error_bursts
-
-    t0 = datetime.datetime(2024, 1, 1)
-    mk = lambda mins: t0 + datetime.timedelta(minutes=mins)
-    schema = (
-        "event_id bigint, ts timestamp, user_id bigint, event_type string, "
-        "value double, props string"
-    )
-    src = str(tmp_path / "src")
-    batch1 = [(i, mk(m), 1, "error", None, None) for i, m in enumerate([20, 25])]
-    batch2 = [
-        (10, mk(14), 1, "error", None, None),
-        (11, mk(-500), 1, "error", None, None),
-        (12, mk(60), 1, "error", None, None),
-    ]
-    spark.createDataFrame(batch1, schema).coalesce(1).write.mode("append").parquet(src)
-    time.sleep(1.1)  # file mtime orders the micro-batches
-    spark.createDataFrame(batch2, schema).coalesce(1).write.mode("append").parquet(src)
-
-    stream = (
-        spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(src)
-    )
-    sink = str(tmp_path / "sink")
-    q = (
-        error_bursts(stream, gap_minutes=10, min_count=2)
-        .writeStream.format("parquet")
-        .option("path", sink)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    got = {
-        (r.user_id, r.burst_start, r.burst_end, r.n_errors)
-        for r in spark.read.parquet(sink).collect()
-    }
-    assert got == {(1, mk(14), mk(25), 3)}, got
-
-
-def test_error_bursts_batch_chain_bridges_straggler_into_burst(
-    spark, tmp_path
-):
-    """r7 review finding: per-event decisions against the PRE-WIDEN
-    burst_start dropped a straggler that a later same-batch event
-    bridged into the open burst. Batch 1 opens (20, 25); batch 2
-    delivers t=5 and t=14 (gap 9 <= 10 chains them; 14 bridges to 20)
-    then t=60 (closes). {5,14,20,25} is ONE run — the batch twin
-    counts all four — so the emission must be (5, 25, 4); deciding
-    t=5 alone against start=20 dropped it and emitted (14, 25, 3)."""
-    import datetime
-    import time
-
-    from tv_event_streaming_spark.streaming.metrics import error_bursts
-
-    t0 = datetime.datetime(2024, 1, 1)
-    mk = lambda mins: t0 + datetime.timedelta(minutes=mins)
-    schema = (
-        "event_id bigint, ts timestamp, user_id bigint, event_type string, "
-        "value double, props string"
-    )
-    src = str(tmp_path / "src")
-    batch1 = [(i, mk(m), 1, "error", None, None) for i, m in enumerate([20, 25])]
-    batch2 = [
-        (10, mk(5), 1, "error", None, None),
-        (11, mk(14), 1, "error", None, None),
-        (12, mk(60), 1, "error", None, None),
-    ]
-    spark.createDataFrame(batch1, schema).coalesce(1).write.mode("append").parquet(src)
-    time.sleep(1.1)  # file mtime orders the micro-batches
-    spark.createDataFrame(batch2, schema).coalesce(1).write.mode("append").parquet(src)
-
-    stream = (
-        spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(src)
-    )
-    sink = str(tmp_path / "sink")
-    q = (
-        error_bursts(stream, gap_minutes=10, min_count=2)
-        .writeStream.format("parquet")
-        .option("path", sink)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    got = {
-        (r.user_id, r.burst_start, r.burst_end, r.n_errors)
-        for r in spark.read.parquet(sink).collect()
-    }
-    assert got == {(1, mk(5), mk(25), 4)}, got
-
-
-def test_error_bursts_late_complete_chain_emitted(spark, tmp_path):
-    """ADVICE r7 #4: a late-delivered chain lying wholly before the open
-    burst's start-gap boundary, but itself reaching min_count, is a
-    complete burst the batch twin reports — it must be emitted, not
-    silently dropped. Batch 1 opens (100, 105); batch 2 delivers the
-    whole late run {5,10,15} (ancient vs 100-10, count 3 >= 2 → emit)
-    and t=200 (closes the open burst). Expected: (5,15,3) AND
-    (100,105,2)."""
-    import datetime
-    import time
-
-    from tv_event_streaming_spark.streaming.metrics import error_bursts
-
-    t0 = datetime.datetime(2024, 1, 1)
-    mk = lambda mins: t0 + datetime.timedelta(minutes=mins)
-    schema = (
-        "event_id bigint, ts timestamp, user_id bigint, event_type string, "
-        "value double, props string"
-    )
-    src = str(tmp_path / "src")
-    batch1 = [(i, mk(m), 1, "error", None, None) for i, m in enumerate([100, 105])]
-    batch2 = [
-        (10, mk(5), 1, "error", None, None),
-        (11, mk(10), 1, "error", None, None),
-        (12, mk(15), 1, "error", None, None),
-        (13, mk(200), 1, "error", None, None),
-    ]
-    spark.createDataFrame(batch1, schema).coalesce(1).write.mode("append").parquet(src)
-    time.sleep(1.1)  # file mtime orders the micro-batches
-    spark.createDataFrame(batch2, schema).coalesce(1).write.mode("append").parquet(src)
-
-    stream = (
-        spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(src)
-    )
-    sink = str(tmp_path / "sink")
-    q = (
-        error_bursts(stream, gap_minutes=10, min_count=2)
-        .writeStream.format("parquet")
-        .option("path", sink)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    got = {
-        (r.user_id, r.burst_start, r.burst_end, r.n_errors)
-        for r in spark.read.parquet(sink).collect()
-    }
-    assert got == {(1, mk(5), mk(15), 3), (1, mk(100), mk(105), 2)}, got
-
-
-def test_error_bursts_late_chain_touching_emitted_burst_dropped(
-    spark, tmp_path
-):
-    """The no-overlap guard on the late-chain emission: a late chain
-    within gap of an ALREADY-EMITTED burst end may belong to that run
-    (the alert can't be retracted), so it is discarded even at
-    min_count. Batch 1: burst {0,5} closed by t=100 (emits (0,5,2),
-    opens (100)). Batch 2: late chain {12,17} — count 2 >= 2 but
-    12 - 5 = 7 <= gap 10 → dropped; t=200 closes (100) which is
-    sub-min_count alone... so open burst {100,200} merges (gap 100 > 10
-    breaks: t=200 CLOSES (100,100,1) which is sub-min → no emission).
-    Expected: only (0,5,2)."""
-    import datetime
-    import time
-
-    from tv_event_streaming_spark.streaming.metrics import error_bursts
-
-    t0 = datetime.datetime(2024, 1, 1)
-    mk = lambda mins: t0 + datetime.timedelta(minutes=mins)
-    schema = (
-        "event_id bigint, ts timestamp, user_id bigint, event_type string, "
-        "value double, props string"
-    )
-    src = str(tmp_path / "src")
-    batch1 = [
-        (0, mk(0), 1, "error", None, None),
-        (1, mk(5), 1, "error", None, None),
-        (2, mk(100), 1, "error", None, None),
-    ]
-    batch2 = [
-        (10, mk(12), 1, "error", None, None),
-        (11, mk(17), 1, "error", None, None),
-        (12, mk(200), 1, "error", None, None),
-    ]
-    spark.createDataFrame(batch1, schema).coalesce(1).write.mode("append").parquet(src)
-    time.sleep(1.1)
-    spark.createDataFrame(batch2, schema).coalesce(1).write.mode("append").parquet(src)
-
-    stream = (
-        spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(src)
-    )
-    sink = str(tmp_path / "sink")
-    q = (
-        error_bursts(stream, gap_minutes=10, min_count=2)
-        .writeStream.format("parquet")
-        .option("path", sink)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    got = {
-        (r.user_id, r.burst_start, r.burst_end, r.n_errors)
-        for r in spark.read.parquet(sink).collect()
-    }
-    assert got == {(1, mk(0), mk(5), 2)}, got
-
-
-def test_burst_state_schema_is_four_longs():
-    """Pin the widened burst state shape (VERDICT r9 #4): 4 long fields
-    incl. emitted_end_us. Widening this schema again invalidates every
-    live checkpoint (Spark's state-store schema check rejects restart) —
-    whoever changes this must re-document the checkpoint-migration note
-    in error_bursts' docstring and bump it knowingly."""
-    from tv_event_streaming_spark.streaming.metrics import _BURST_STATE_SCHEMA
-
-    fields = [f.strip().split() for f in _BURST_STATE_SCHEMA.split(",")]
-    assert [f[0] for f in fields] == [
-        "start_us",
-        "last_us",
-        "n",
-        "emitted_end_us",
-    ]
-    assert all(f[1] == "bigint" for f in fields)

@@ -8,21 +8,15 @@ Reference semantics:
 - F11b — username masking: first 2 + ``***`` + last 2, or ``***`` when
   ≤ 4 chars (src/add_cognito_user/add_cognito_user.py:9-17).
 
-``random_job_id`` is the production form (true ``F.uuid()``).
 ``deterministic_job_id`` derives a UUIDv4-shaped id from md5 of a key —
-same wire format, but reproducible, so the DuckDB oracle can check it
-value-for-value (the catalog entry uses this form).
+the wire format of ``F.uuid()``, but reproducible, so the DuckDB oracle
+can check it value-for-value.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-
-
-def random_job_id() -> Column:
-    """F10 production form — a fresh UUIDv4 per row."""
-    return F.uuid()
 
 
 def deterministic_job_id(key: Column) -> Column:

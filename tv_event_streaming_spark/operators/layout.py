@@ -1,117 +1,21 @@
-"""Physical-layout operators: skew salting and co-located bucketing.
+"""Physical-layout operators: Z-order clustering and Bloom filters.
 
 The reference never needs these (its biggest aggregation is a 20-way
-count), but at 100 TB they are the difference between a plan that
-finishes and one that sits on a straggler:
+count), but at 100 TB they decide how much of a table a query reads:
 
-- **Salting** — a hot grouping key sends its entire weight to one
-  reducer. Two-phase aggregation over (key, salt) spreads the hot key
-  across ``n_salts`` reducers, then the tiny second phase recombines.
-  AQE's skew-join splitting covers *joins*; salting covers *aggregations*
-  whose skew AQE cannot split (one group = one reducer by definition).
-- **Bucketing** — pre-shuffling a table into N buckets on its join key at
-  WRITE time makes every later equi-join/aggregation on that key
-  shuffle-free (Spark reads co-bucketed sides without an Exchange).
-  This is the "one shuffle, reused forever" trade every serving workload
-  at scale should take; tests/test_layout.py asserts the Exchange-free
-  plan.
+- **Z-order** — a Morton-interleaved key over two dimensions lays a
+  table out so that a predicate on EITHER dimension prunes most files
+  (:func:`zorder_stats` reports the per-file min/max boxes a scan would
+  skip on).
+- **Bloom filters** — a compact membership test built over a small key
+  set prunes a fact table map-side BEFORE its join shuffle (the
+  semi-join reduction, :func:`bloom_might_contain`).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-
-def salted_agg(
-    df: DataFrame,
-    keys: list[str],
-    aggs: dict[str, Column],
-    n_salts: int = 16,
-    unique_key: list[str] | None = None,
-) -> DataFrame:
-    """Two-phase skew-safe aggregation.
-
-    ``aggs`` maps output name → a SUM-decomposable aggregate over input
-    columns (count/sum family — the partial results re-sum exactly).
-    Phase 1 groups on (keys, salt); phase 2 is tiny (≤ n_salts rows per
-    key) and re-sums the partials. Counts stay exact:
-    sum-of-partial-counts ≡ count.
-
-    Salt derivation — determinism matters under stage retries:
-
-    - ``unique_key`` given (PREFERRED at scale): salt =
-      xxhash64(unique_key) % n_salts. Fully deterministic per row, so a
-      partially-recomputed shuffle-map stage (fetch failure on a
-      1000-executor cluster) re-assigns every row the same salt. A
-      unique key also guarantees hot keys with IDENTICAL payloads still
-      spread across reducers.
-    - no ``unique_key``: salt mixes xxhash64(non-key columns) with
-      monotonically_increasing_id() so identical-payload hot rows still
-      spread — but the id is order-dependent (nondeterministic), the
-      SPARK-23207-class indeterminate-shuffle hazard: re-run map tasks
-      can salt rows differently from surviving reducer fetches, losing
-      or double-counting rows. To close that window the salted frame is
-      pinned with ``localCheckpoint`` (retries replay stored partitions
-      instead of recomputing salts). localCheckpoint storage is
-      non-replicated, so a LOST EXECUTOR still fails the job — pass
-      ``unique_key`` when one exists.
-
-    When it matters: aggregates whose phase-1 state doesn't collapse
-    map-side (wide partial state, partial-agg disabled by memory
-    pressure) or a downstream consumer keyed on (key, salt). For plain
-    count/sum with healthy map-side partials, a single-phase groupBy is
-    already skew-bounded by #input-partitions.
-    """
-    if unique_key:
-        salt = F.pmod(
-            F.xxhash64(*[F.col(c) for c in unique_key]), F.lit(n_salts)
-        )
-        salted = df.withColumn("_salt", salt)
-    else:
-        non_key = [c for c in df.columns if c not in keys]
-        salt = F.pmod(
-            F.xxhash64(*non_key, F.monotonically_increasing_id()),
-            F.lit(n_salts),
-        )
-        # Pin the nondeterministic salts so stage retries replay, not
-        # recompute (see docstring).
-        salted = df.withColumn("_salt", salt).localCheckpoint(eager=False)
-    phase1 = salted.groupBy(*keys, "_salt").agg(
-        *[c.alias(f"_p_{name}") for name, c in aggs.items()]
-    )
-    return phase1.groupBy(*keys).agg(
-        *[F.sum(f"_p_{name}").alias(name) for name in aggs]
-    )
-
-
-def write_bucketed(
-    df: DataFrame,
-    table_name: str,
-    bucket_cols: list[str],
-    num_buckets: int,
-    path: str,
-) -> None:
-    """Materialize ``df`` as a bucketed (and bucket-sorted) table.
-
-    Joins/aggregations between tables bucketed identically on the join
-    key read WITHOUT an Exchange — the one-time write shuffle replaces
-    every future one."""
-    (
-        df.write.mode("overwrite")
-        .option("path", path)
-        .bucketBy(num_buckets, *bucket_cols)
-        .sortBy(*bucket_cols)
-        .saveAsTable(table_name)
-    )
-
-
-def bucketed_join(
-    spark: SparkSession, left_table: str, right_table: str, on: list[str]
-) -> DataFrame:
-    """Equi-join two co-bucketed tables; with matching bucketing the plan
-    contains SortMergeJoin with NO Exchange on either side."""
-    return spark.table(left_table).join(spark.table(right_table), on)
 
 
 def zvalue(d1: Column, d2: Column, bits: int = 10) -> Column:

@@ -1,10 +1,10 @@
 """Multimodal columns: image/audio/video as opaque binary + typed metadata.
 
 The Spark-side plumbing is real — binary payload column, metadata struct,
-Arrow-batched ``mapInPandas`` feature extraction with a bounded batch
-size — while the actual codec calls are stubbed (no image/audio libs in
-this container): ``decode_stub`` raises ``NotImplementedError`` and the
-deterministic fake path computes byte-level features instead.
+Arrow-batched ``mapInPandas`` feature extraction — while the codec is a
+deterministic stand-in: features are computed from the payload bytes,
+so every output is oracle-checkable. A real codec (PIL / torchaudio /
+pyav) replaces the loop body of the same ``mapInPandas`` closure.
 
 At 100 TB the pattern is: payloads stay in parquet binary columns
 (or pointers to object storage), metadata prunes partitions, and the
@@ -48,68 +48,19 @@ def attach_binary_payload(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def decode_stub(payload: bytes, media_type: str):
-    """The real-codec boundary. In production this dispatches to PIL /
-    torchaudio / pyav; those libs aren't in this container."""
-    raise NotImplementedError(
-        f"real {media_type} decoding requires codec libraries not present "
-        "in this environment; use extract_features(fake=True)"
-    )
-
-
-# Pluggable decoder registry (same injection pattern as the enrichment
-# DetailsProvider, SURVEY §2.9): a decoder maps (payload: bytes,
-# media_type: str) -> (n_frames: int, mean_value: float). Register a
-# real one (PIL/torchaudio/pyav wrapper) and call
-# extract_features(fake=False, decoder=name) — the Spark-side plumbing
-# (schema, Arrow batching, partitioning) is identical for stub, fake and
-# real decoders.
-_DECODERS: dict[str, object] = {}
-
-
-def register_decoder(name: str, fn) -> None:
-    """Register ``fn(payload: bytes, media_type: str) -> (int, float)``
-    under ``name``. The function must be self-contained (picklable by
-    value): it ships to executors inside the mapInPandas closure."""
-    _DECODERS[name] = fn
-
-
-def get_decoder(name: str):
-    if name not in _DECODERS:
-        raise KeyError(
-            f"no decoder {name!r} registered; known: {sorted(_DECODERS)}"
-        )
-    return _DECODERS[name]
-
-
-def extract_features(
-    media: DataFrame,
-    fake: bool = True,
-    batch_size: int = 1024,
-    decoder: str | None = None,
-) -> DataFrame:
+def extract_features(media: DataFrame) -> DataFrame:
     """Arrow-batched feature extraction over the binary payload.
 
-    ``mapInPandas`` keeps the decode loop per-batch (not per-row). Three
-    paths, identical schema/batching:
-
-    - ``fake=True`` (default here): deterministic byte-level stand-ins —
-      the oracle-checkable path;
-    - ``fake=False, decoder=<name>``: dispatch every payload through the
-      registered decoder (the production path — one ``register_decoder``
-      call away once codec libs exist);
-    - ``fake=False, decoder=None``: raises NotImplementedError (the
-      documented sandbox boundary).
+    ``mapInPandas`` keeps the decode loop per-batch (not per-row); the
+    features are deterministic byte-level stand-ins for decoded frames
+    (``fake_frames = byte_size % 30 + 1`` and the payload's mean byte).
     """
-    # Resolve the decoder only on the path that uses it — fake=True must
-    # not fail on an unregistered (ignored) decoder name.
-    decode = get_decoder(decoder) if (not fake and decoder is not None) else None
 
-    # NOTE: this closure must stay self-contained (stdlib + pandas +
-    # the injected decoder only). Referencing module globals would make
-    # cloudpickle serialize them by reference to this package, which
-    # isn't importable on the driver's Python workers unless shipped
-    # with addPyFile.
+    # NOTE: this closure must stay self-contained (stdlib + pandas
+    # only). Referencing module globals would make cloudpickle
+    # serialize them by reference to this package, which isn't
+    # importable on the driver's Python workers unless shipped with
+    # addPyFile.
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import pandas as _pd  # noqa: PLC0415
 
@@ -122,27 +73,11 @@ def extract_features(
                     "checksum": pdf["checksum"],
                 }
             )
-            if not fake and decode is None:
-                raise NotImplementedError(
-                    "real media decoding requires codec libraries not present "
-                    "in this environment; use extract_features(fake=True) or "
-                    "register_decoder(...) + decoder=<name>"
-                )
-            if fake:
-                out["fake_frames"] = (pdf["byte_size"] % 30 + 1).astype("int32")
-                out["fake_mean_byte"] = [
-                    float(sum(p)) / len(p) if len(p) else 0.0
-                    for p in pdf["payload"]
-                ]
-            else:
-                decoded = [
-                    decode(p, m)
-                    for p, m in zip(pdf["payload"], pdf["media_type"])
-                ]
-                out["fake_frames"] = _pd.Series(
-                    [d[0] for d in decoded], dtype="int32"
-                )
-                out["fake_mean_byte"] = [float(d[1]) for d in decoded]
+            out["fake_frames"] = (pdf["byte_size"] % 30 + 1).astype("int32")
+            out["fake_mean_byte"] = [
+                float(sum(p)) / len(p) if len(p) else 0.0
+                for p in pdf["payload"]
+            ]
             yield out
 
     flat = media.select(
@@ -174,7 +109,7 @@ def sample_frames(media: DataFrame, every_nth: int = 4) -> DataFrame:
     fake path is byte-exact against the SQL oracle while the Spark
     plumbing (Arrow batching, schema, row expansion, downstream
     shuffle shape) is the production one. Swap the loop body for a
-    registered decoder's frame iterator to go real."""
+    real codec's frame iterator to go real."""
     if every_nth < 1:
         raise ValueError("every_nth must be >= 1")
 

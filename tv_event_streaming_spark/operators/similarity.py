@@ -17,11 +17,15 @@ Tiers:
   IVF cell, or a PQ shortlist (the exact re-rank stage).
 - **IVF cells**: nearest-seed-centroid assignment by one exact numpy
   kernel (:func:`_centroid_kernel`), corpus cells in one Arrow pass and
-  query probes on the driver. k-means, semantic dedup and the kNN graph
-  reuse the cells.
-- **Product quantization**: encode, Lloyd training and ADC scans run
-  one exact numpy kernel (:func:`_pq_kernel`), one Arrow pass per
-  corpus scan. IVF-PQ composes cells and codes, raw or residual.
+  query probes on the driver. The k-means update statistics, semantic
+  dedup and the kNN graph reuse the cells.
+- **Product quantization**: encode and ADC scans run one exact numpy
+  kernel (:func:`_pq_kernel`), one Arrow pass per corpus scan. IVF-PQ
+  composes cells and residual codes.
+
+Centroids and codebooks are deterministic seeds (the vectors with the
+lowest ids), never trained, and every query encodes the corpus in the
+same pass that scores it: there is no stored index to build or reuse.
 
 The kernels run inside ``mapInPandas``/``pandas_udf`` closures that
 close over numpy only, so they ship to Python workers by value and the
@@ -336,23 +340,20 @@ def cosine_topk_lsh(
 # ---------------------------------------------------------------------------
 # The exact kernels: every quantized cell assignment and cell probe
 # below (IVF, k-means update, semantic dedup / kNN cells, IVF-PQ) runs
-# the nearest-centroid kernel, and every PQ encode, Lloyd step and ADC
-# scan the PQ kernel — over the corpus in one Arrow pass
+# the nearest-centroid kernel, and every PQ encode and ADC scan the PQ
+# kernel — over the corpus in one Arrow pass
 # (:func:`_kernel_pass`), for queries on the Spark driver.
 # ---------------------------------------------------------------------------
 
 
 def _seed_rows(
-    embeddings: DataFrame, hi: int, id_col: str, vec_col: str, lo: int = 0
+    embeddings: DataFrame, hi: int, id_col: str, vec_col: str
 ) -> list[tuple[int, list[float]]]:
-    """The deterministic seed vectors ``lo <= id < hi`` as (id, vector)
-    pairs sorted by id — the seeding rule the IVF, k-means and PQ tiers
-    share (reproducible in any engine, no RNG), and the one driver
-    collect they all go through."""
-    pred = F.col(id_col) < hi
-    if lo:
-        pred = pred & (F.col(id_col) >= lo)
-    rows = embeddings.filter(pred).select(id_col, vec_col).collect()
+    """The deterministic seed vectors ``id < hi`` as (id, vector) pairs
+    sorted by id — the seeding rule the IVF, k-means and PQ tiers share
+    (reproducible in any engine, no RNG), and the one driver collect
+    they all go through."""
+    rows = embeddings.filter(F.col(id_col) < hi).select(id_col, vec_col).collect()
     return sorted(((int(r[0]), r[1]) for r in rows), key=lambda r: r[0])
 
 
@@ -448,7 +449,7 @@ def _two_level_kernel(cents: list[tuple[int, list[float]]]):
 def _pq_kernel(codebook: list[list[list[int]]]):
     """The exact product-quantization kernel over a quantized
     ``[m][code][dim]`` codebook. Its contract, stated once for every
-    PQ caller (encode, Lloyd training, ADC scans, the stream key):
+    PQ caller (encode and ADC scans):
 
     - squared L2 per subspace in exact int64 (|component| ≤ ~4e6, so
       sums stay far below 2^63);
@@ -520,7 +521,7 @@ def _pq_kernel(codebook: list[list[list[int]]]):
 def _kernel_pass(
     frame: DataFrame,
     id_col: str,
-    vec_col: str | None,
+    vec_col: str,
     schema,
     emit,
     kernel=None,
@@ -531,35 +532,26 @@ def _kernel_pass(
     (fanned-out) scan of ``frame``. Per batch: quantize ``vec_col``;
     with ``kernel`` (:func:`_centroid_kernel`) take each row's nearest
     cell, and with ``residual`` subtract that cell's centroid; with
-    ``pq`` (:func:`_pq_kernel`) encode. ``vec_col=None`` scans a
-    prebuilt code table instead: its ``codes`` (and ``cell``, when
-    present) are read, not computed. Then ``emit(pdf, qv, cells,
+    ``pq`` (:func:`_pq_kernel`) encode. Then ``emit(pdf, qv, cells,
     codes, qdist)`` returns the batch's output frame in ``schema``, or
     None. ``emit`` must close over numpy/pandas only, like the
     kernels, so the pass ships to Python workers by value."""
     quantize = _quantizer()
 
     def run(batches):
-        import numpy as np  # noqa: PLC0415
-
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            qv = cells = codes = qdist = None
-            if vec_col is None:
-                codes = np.stack(pdf["codes"].to_numpy())
-                if "cell" in pdf:
-                    cells = pdf["cell"].to_numpy()
-            else:
-                qv = quantize(pdf[vec_col].to_numpy())
-                if kernel is not None:
-                    ids, qc, _, nearest = kernel
-                    best = nearest(qv)
-                    cells = ids[best]
-                    if residual:
-                        qv = qv - qc[best]
-                if pq is not None:
-                    codes, qdist = pq[0](qv)
+            cells = codes = qdist = None
+            qv = quantize(pdf[vec_col].to_numpy())
+            if kernel is not None:
+                ids, qc, _, nearest = kernel
+                best = nearest(qv)
+                cells = ids[best]
+                if residual:
+                    qv = qv - qc[best]
+            if pq is not None:
+                codes, qdist = pq[0](qv)
             out = emit(pdf, qv, cells, codes, qdist)
             if out is not None:
                 yield out
@@ -601,8 +593,8 @@ def _kmeans_sums(
     """``(cell, dim, n, sum_q)``: each cell's member count and exact
     int64 sum of quantized components per dim under ``kernel``'s
     nearest-cell assignment. ONE :func:`_kernel_pass` whose batches emit
-    their per-(cell, dim) partials (the :func:`_pq_lloyd` pattern), then
-    one groupBy over ≤ #batches·k·dims rows — never the corpus.
+    their per-(cell, dim) partials, then one groupBy over ≤
+    #batches·k·dims rows — never the corpus.
     ``embeddings`` must already be nonzero-norm filtered."""
     import numpy as np  # noqa: PLC0415
     import pandas as pd  # noqa: PLC0415
@@ -630,39 +622,6 @@ def _kmeans_sums(
     )
 
 
-def kmeans_centroids(
-    embeddings: DataFrame,
-    k: int = 16,
-    iters: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> list[tuple[int, list[float]]]:
-    """Distributed spherical-k-means refinement of the IVF seed centroids
-    (Lloyd's iterations, cosine assignment, mean update).
-
-    Each iteration is :func:`kmeans_update_stats`' arithmetic: the
-    exact kernel assigns every vector (one Arrow pass, centroids in the
-    task closure) and the per-(cell, dim) quantized sums
-    (:func:`_kmeans_sums`) set each centroid component to
-    ``sum_q / (n·1e6)``, ONE double division. Only the k·dims sums
-    reach the driver. Deterministic under any partitioning; empty cells
-    keep their previous centroid.
-    """
-    embeddings = nonzero_norm(embeddings, vec_col)
-    seeds = _seed_rows(embeddings, k, id_col, vec_col)
-    if len(seeds) != k:
-        raise ValueError(
-            f"k-means seeding expects ids 0..{k - 1} to exist; "
-            f"found {len(seeds)} seed vectors"
-        )
-    cents = [[float(x) for x in r[1]] for r in seeds]
-    for _ in range(iters):
-        kernel = _centroid_kernel(list(enumerate(cents)))
-        for r in _kmeans_sums(embeddings, kernel, id_col, vec_col).collect():
-            cents[r.cell][r.dim] = float(r.sum_q) / float(r.n * QUANT)
-    return list(enumerate(cents))
-
-
 def kmeans_update_stats(
     embeddings: DataFrame,
     n_centroids: int = 16,
@@ -674,8 +633,7 @@ def kmeans_update_stats(
     exact kernel, :func:`_centroid_kernel`), then emit the per-(cell,
     dim) sufficient statistics of the centroid update — exact int64
     component sums + member counts (:func:`_kmeans_sums`) — and the
-    updated centroid mean as ONE final double division. This is exactly
-    the arithmetic :func:`kmeans_centroids` iterates, in a
+    updated centroid mean as ONE final double division, in a
     cross-engine-deterministic form, so the IVF refinement math carries
     a DuckDB-oracle hash."""
     embeddings = nonzero_norm(embeddings, vec_col)
@@ -702,7 +660,6 @@ def cosine_topk_ivf(
     nprobe: int = 4,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    centroids: list[tuple[int, list[float]]] | None = None,
 ) -> DataFrame:
     """IVF (inverted-file) ANN: partition the corpus into centroid cells,
     probe only the ``nprobe`` nearest cells per query, exact-rank inside.
@@ -714,16 +671,10 @@ def cosine_topk_ivf(
     driver by the exact kernel; the one scan of :func:`_cosine_topk`
     assigns each corpus row its cell with the same kernel and scores it
     only against the queries that probe that cell — NO shuffle and NO
-    ×nprobe row blowup. At scale the one-time ``partitionBy(cell)``
-    write of :func:`build_ivf_index` IS the index build, and queries
-    read only nprobe/n_centroids of the data.
+    ×nprobe row blowup.
     """
     embeddings = nonzero_norm(embeddings, vec_col)
-    kernel = _centroid_kernel(
-        centroids
-        if centroids is not None  # refined centroids, e.g. kmeans_centroids
-        else _seed_rows(embeddings, n_centroids, id_col, vec_col)
-    )
+    kernel = _centroid_kernel(_seed_rows(embeddings, n_centroids, id_col, vec_col))
     q_rows = _query_rows(embeddings.filter(query_filter).select(id_col, vec_col))
     probes = _probe_cells(kernel, [r[1] for r in q_rows], nprobe)
     ids, _, _, nearest = kernel
@@ -734,74 +685,6 @@ def cosine_topk_ivf(
     return _cosine_topk(
         embeddings.select(id_col, vec_col), q_rows, k, id_col, vec_col, (cell, probes)
     )
-
-
-def build_ivf_index(
-    embeddings: DataFrame,
-    path: str,
-    n_centroids: int = 16,
-    centroids: list[tuple[int, list[float]]] | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> None:
-    """Materialize the IVF index: the corpus written ONCE partitioned by
-    its assigned cell (``cell=<id>/`` parquet directories). After it,
-    every query reads ONLY its probed cells via partition pruning (the
-    scan's PartitionFilters, verified in tests/test_similarity.py),
-    i.e. nprobe/n_centroids of the data.
-
-    The index has one format, ``(vec_id, embedding, cell)``, whatever
-    ``id_col``/``vec_col`` name in the input — the columns
-    :func:`query_ivf_index` reads. Cell assignment is the map-side
-    kernel pass (no corpus shuffle besides the partitioned write itself).
-    """
-    embeddings = nonzero_norm(
-        embeddings.select(
-            F.col(id_col).alias("vec_id"), F.col(vec_col).alias("embedding")
-        )
-    )
-    kernel = _centroid_kernel(
-        centroids
-        if centroids is not None
-        else _seed_rows(embeddings, n_centroids, "vec_id", "embedding")
-    )
-    (
-        _assign_cells(embeddings, kernel, "vec_id", "embedding")
-        .write.mode("overwrite")
-        .partitionBy("cell")
-        .parquet(path)
-    )
-
-
-def query_ivf_index(
-    spark,
-    path: str,
-    query_vecs: list[tuple[int, list[float]]],
-    centroids: list[tuple[int, list[float]]],
-    k: int = 5,
-    nprobe: int = 4,
-) -> DataFrame:
-    """Top-k cosine neighbors from a materialized IVF index: probe cells
-    are chosen driver-side from the (small) centroid list by the exact
-    kernel (a zero-norm query scores 0.0 everywhere and so probes the
-    lowest ids), so the cell predicate reaches the scan as a PARTITION
-    FILTER — only nprobe/n_centroids of the index files are read. The
-    scan of :func:`_cosine_topk` scores a row only against the queries
-    that probe its ``cell`` column."""
-    cells = _probe_cells(
-        _centroid_kernel(centroids), [v for _, v in query_vecs], nprobe
-    )
-    index = (
-        spark.read.parquet(path)
-        .filter(F.col("cell").isin(sorted({c for cs in cells for c in cs})))
-        .select("vec_id", "embedding", "cell")
-    )
-
-    def cell(pdf, cv):
-        return pdf["cell"].to_numpy()
-
-    q_rows = [(int(qid), qvec) for qid, qvec in query_vecs]
-    return _cosine_topk(index, q_rows, k, "vec_id", "embedding", (cell, cells))
 
 
 def allpairs_cosine_lsh(
@@ -939,99 +822,6 @@ def _make_block_scorer(idc: str, vecc: str, thr: float | None):
         )
 
     return score_group
-
-
-def allpairs_cosine_exact(
-    embeddings: DataFrame,
-    threshold: float | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    max_block_size: int = 2048,
-) -> DataFrame:
-    """EXACT distributed all-pairs cosine — O(N²) work by construction,
-    but never O(N²) in one task: the corpus is split into
-    ``ceil(N/max_block_size)`` hash blocks and every block PAIR (i ≤ j)
-    is scored as its own bounded int64 matmul group (O(cap²) memory per
-    task, (nb·(nb+1))/2 tasks). Use as the recall baseline for the LSH
-    paths, or when 100% recall is required on a corpus small enough to
-    afford N²."""
-    embeddings = nonzero_norm(embeddings, vec_col)
-    n = embeddings.count()
-    nb = max(1, -(-n // max_block_size))
-    blocked = (
-        embeddings.select(
-            id_col,
-            vec_col,
-            F.pmod(F.xxhash64(F.col(id_col)), F.lit(nb)).cast("int").alias("_blk"),
-        )
-        .select(
-            id_col,
-            vec_col,
-            "_blk",
-            F.explode(
-                F.array_distinct(
-                    F.array(
-                        *[
-                            F.struct(
-                                F.least(F.lit(x), F.col("_blk")).alias("gi"),
-                                F.greatest(F.lit(x), F.col("_blk")).alias("gj"),
-                            )
-                            for x in range(nb)
-                        ]
-                    )
-                )
-            ).alias("_g"),
-        )
-        .select(
-            id_col, vec_col, "_blk",
-            F.col("_g.gi").alias("_gi"), F.col("_g.gj").alias("_gj"),
-        )
-    )
-    n_par = embeddings.sparkSession.sparkContext.defaultParallelism
-    score_group = _make_block_scorer(id_col, vec_col, threshold)
-    return (
-        blocked.repartition(n_par, "_gi", "_gj")
-        .groupBy("_gi", "_gj")
-        .applyInPandas(score_group, schema="id_a bigint, id_b bigint, cos_sim double")
-    )
-
-
-def embedding_near_duplicates(
-    embeddings: DataFrame,
-    threshold: float = 0.9,
-    bands: int = 4,
-    bits_per_band: int = 8,
-    dims: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    exact: bool = False,
-) -> DataFrame:
-    """Embedding-cosine near-dup pairs (cos ≥ threshold, a<b).
-
-    Default path is LSH-APPROXIMATE (the threshold form of
-    :func:`allpairs_cosine_lsh`): a pair is found only if it shares at
-    least one of ``bands`` hyperplane-signature buckets. Recall is
-    probabilistic — for a pair at angle θ the per-plane agreement is
-    1−θ/π, so P(found) = 1−(1−(1−θ/π)^bits_per_band)^bands; borderline
-    pairs (cos near the threshold, some plane dot near zero) CAN be
-    missed. Exactly-identical/scaled copies flip no sign and are always
-    found. Tune bands/bits for the recall you need, or pass
-    ``exact=True`` to delegate to :func:`allpairs_cosine_exact` —
-    100% recall at O(N²) work (still task-bounded), for small corpora
-    or recall audits."""
-    if exact:
-        return allpairs_cosine_exact(
-            embeddings, threshold=threshold, id_col=id_col, vec_col=vec_col
-        )
-    return allpairs_cosine_lsh(
-        embeddings,
-        bands=bands,
-        bits_per_band=bits_per_band,
-        dims=dims,
-        threshold=threshold,
-        id_col=id_col,
-        vec_col=vec_col,
-    )
 
 
 #: Centroid count at which :func:`_seed_cell_assignment` switches from
@@ -1192,8 +982,7 @@ def semantic_dedup(
     linear in candidates. At 100 TB the DEFAULT already keeps cells
     bounded (the auto rule goes C=N/512 above the crossover — SemDeDup
     itself runs k≈10⁴ on web-scale corpora); seeds here are the
-    deterministic id<k convention the IVF entries share (swap in
-    :func:`kmeans_centroids` output for trained cells).
+    deterministic id<k convention the IVF entries share.
 
     Exactness: quantized assignment ties to the lowest centroid id;
     pair cosines are exact int64 dots with one final double division —
@@ -1455,114 +1244,6 @@ def pq_seed_codebook(
     return _subspace_codebook(_quantizer()([r[1] for r in seed_rows]), n_sub)
 
 
-def pq_train(
-    embeddings: DataFrame,
-    n_sub: int = 8,
-    k_codes: int = 16,
-    iters: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> list[list[list[int]]]:
-    """Train the PQ codebook: per-subspace Lloyd iterations from the
-    deterministic seeds, ALL-INTEGER (assignment by the exact argmin
-    :func:`pq_encode` runs, and the mean update as ``floor(sum_q /
-    count)`` per (subspace, code, dim), entirely in quantized space).
-    Deterministic under any partitioning, like
-    :func:`kmeans_update_stats`; empty codes keep their previous
-    codeword.
-
-    Scale shape per iteration: one Arrow pass encodes each batch and
-    emits its per-(subspace, code) partial sums and counts (≤
-    n_sub·k rows per batch); only those reach the driver.
-
-    Returns the trained ``[m][code][dim]`` quantized codebook for
-    :func:`pq_encode` / :func:`cosine_topk_pq_adc`'s ``codebook``
-    parameter. Train on a SAMPLE at 100 TB — codebook quality converges
-    long before the corpus is exhausted (the standard faiss practice)."""
-    codebook = pq_seed_codebook(embeddings, n_sub, k_codes, id_col, vec_col)
-    return _pq_lloyd(embeddings, codebook, iters, id_col, vec_col)
-
-
-def _pq_lloyd(
-    embeddings: DataFrame,
-    codebook: list[list[list[int]]],
-    iters: int,
-    id_col: str,
-    vec_col: str,
-    kernel=None,
-) -> list[list[list[int]]]:
-    """The shared Lloyd loop, over raw vectors (:func:`pq_train`) or,
-    with ``kernel``, over residuals against each vector's nearest
-    centroid (:func:`pq_train_residual`). Each iteration is ONE
-    :func:`_kernel_pass` whose batches emit ``(m, code, Σ, n)``: the
-    component sums and count of the sub-vectors that encode to each
-    code. The driver sets every non-empty code to ``floor(Σ/n)``."""
-    import numpy as np  # noqa: PLC0415
-    import pandas as pd  # noqa: PLC0415
-
-    frame = embeddings.select(id_col, vec_col)
-    schema = "m int, code int, s array<bigint>, n bigint"
-    for _ in range(iters):
-        n_sub, n_words, sub = len(codebook), len(codebook[0]), len(codebook[0][0])
-
-        def emit(pdf, qv, cells, codes, qdist):
-            out = []
-            for m in range(n_sub):
-                n = np.bincount(codes[:, m], minlength=n_words)
-                s = np.zeros((n_words, sub), dtype=np.int64)
-                np.add.at(s, codes[:, m], qv[:, m * sub : (m + 1) * sub])
-                out += [(m, j, s[j], n[j]) for j in np.nonzero(n)[0]]
-            return pd.DataFrame(out, columns=["m", "code", "s", "n"])
-
-        parts = _kernel_pass(
-            frame, id_col, vec_col, schema, emit, kernel, _pq_kernel(codebook),
-            residual=kernel is not None,
-        ).collect()
-        totals: dict[tuple[int, int], tuple[list[int], int]] = {}
-        for r in parts:
-            s, n = totals.get((r.m, r.code), ([0] * sub, 0))
-            totals[(r.m, r.code)] = ([a + b for a, b in zip(s, r.s)], n + r.n)
-        codebook = [[list(w) for w in words] for words in codebook]
-        for (m, j), (s, n) in totals.items():
-            codebook[m][j] = [x // n for x in s]
-    return codebook
-
-
-def _pq_setup(embeddings, n_sub, k_codes, id_col, vec_col, codebook):
-    """``(frame, kernel)`` of the encode entries: the ``(id, vec)``
-    scan and the PQ kernel of ``codebook``, seeded when None."""
-    if codebook is None:
-        codebook = pq_seed_codebook(embeddings, n_sub, k_codes, id_col, vec_col)
-    return embeddings.select(id_col, vec_col), _pq_kernel(codebook)
-
-
-def pq_codes(
-    embeddings: DataFrame,
-    n_sub: int = 8,
-    k_codes: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    codebook: list[list[list[int]]] | None = None,
-) -> DataFrame:
-    """Per-VECTOR code arrays ``(id, codes array<int>)`` in ONE Arrow
-    pass of :func:`_pq_kernel` — no explode, no shuffle beyond the scan
-    fan-out."""
-    import numpy as np  # noqa: PLC0415
-    import pandas as pd  # noqa: PLC0415
-
-    frame, pq = _pq_setup(embeddings, n_sub, k_codes, id_col, vec_col, codebook)
-    schema = T.StructType(
-        [frame.schema[id_col], T.StructField("codes", T.ArrayType(T.IntegerType()))]
-    )
-
-    def emit(pdf, qv, cells, codes, qdist):
-        return pd.DataFrame(
-            {id_col: pdf[id_col].to_numpy(), "codes": list(codes.astype(np.int32))}
-        )
-
-    return _kernel_pass(frame, id_col, vec_col, schema, emit, pq=pq)
-
-
 def pq_encode(
     embeddings: DataFrame,
     n_sub: int = 8,
@@ -1576,7 +1257,7 @@ def pq_encode(
     codeword (exact int64 squared-L2, ties to the lowest code id) —
     the compression that makes billion-vector ANN fit in RAM
     (64 dims × float32 → ``n_sub`` bytes here; the IVF half of IVF-PQ
-    is :func:`cosine_topk_ivf`/:func:`build_ivf_index`).
+    is :func:`cosine_topk_ivf`).
 
     Returns one row per (vector, subspace): ``(id, m, code, qdist)``
     with ``qdist`` the exact quantized squared distance to the chosen
@@ -1589,7 +1270,9 @@ def pq_encode(
     import numpy as np  # noqa: PLC0415
     import pandas as pd  # noqa: PLC0415
 
-    frame, pq = _pq_setup(embeddings, n_sub, k_codes, id_col, vec_col, codebook)
+    if codebook is None:
+        codebook = pq_seed_codebook(embeddings, n_sub, k_codes, id_col, vec_col)
+    frame, pq = embeddings.select(id_col, vec_col), _pq_kernel(codebook)
     schema = T.StructType(
         [
             frame.schema[id_col],
@@ -1613,29 +1296,12 @@ def pq_encode(
     return _kernel_pass(frame, id_col, vec_col, schema, emit, pq=pq)
 
 
-def pq_index(
-    embeddings: DataFrame,
-    n_sub: int = 8,
-    k_codes: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    codebook: list[list[list[int]]] | None = None,
-) -> DataFrame:
-    """The PQ code table ``(id, codes array<int>)`` of :func:`pq_codes`,
-    PERSISTED: building the index once and scanning it on every query
-    after (``cosine_topk_pq_adc(index=…)``) is the point of this
-    function. The caller owns its lifetime (``unpersist``)."""
-    return pq_codes(
-        embeddings, n_sub, k_codes, id_col, vec_col, codebook
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-
-
-def _adc_tables(pq, q_rows, kernel=None, nprobe: int = 1, residual: bool = False):
+def _adc_tables(pq, q_rows, kernel=None, nprobe: int = 1):
     """The ADC tables of the query rows ``(id, vector)``, as ``{cell:
     (query ids, tables)}``. Without ``kernel``: one entry, cell None,
     scored against every corpus row. With it, each query's table sits
-    under each of its ``nprobe`` nearest cells, built on the target
-    q − centroid[cell] when ``residual``."""
+    under each of its ``nprobe`` nearest cells, built on the residual
+    target q − centroid[cell]."""
     import numpy as np  # noqa: PLC0415
 
     if not q_rows:
@@ -1647,9 +1313,7 @@ def _adc_tables(pq, q_rows, kernel=None, nprobe: int = 1, residual: bool = False
     cent_ids, qc, _, nearest = kernel
     best = nearest(qv, nprobe)  # (|Q|, nprobe) centroid rows, best first
     rows = best.reshape(-1)
-    targets = np.repeat(qv, best.shape[1], axis=0)
-    if residual:
-        targets = targets - qc[rows]
+    targets = np.repeat(qv, best.shape[1], axis=0) - qc[rows]
     qids, cells, tables = np.repeat(qids, best.shape[1]), cent_ids[rows], pq[1](targets)
     return {int(c): (qids[cells == c], tables[cells == c]) for c in np.unique(cells)}
 
@@ -1660,15 +1324,13 @@ def _fused_adc_shortlist(
     tables: dict,
     shortlist: int,
     id_col: str,
-    vec_col: str | None,
+    vec_col: str,
     kernel=None,
-    residual: bool = False,
 ) -> DataFrame:
     """ONE Arrow pass over the corpus for every PQ query entry: per
     batch, quantize and encode (with ``kernel``, after assigning each
-    row its cell, and with ``residual`` subtracting that cell's
-    centroid), or read the codes of a prebuilt index
-    (``vec_col=None``); gather each query's ADC distances from its
+    row its cell and subtracting that cell's centroid); gather each
+    query's ADC distances from its
     table (:func:`_adc_tables`; a query scores a row iff it probes the
     row's cell) and emit the batch's top-``shortlist``
     ``(query_id, neighbor_id, adist)`` rows, self-pairs excluded.
@@ -1684,10 +1346,6 @@ def _fused_adc_shortlist(
 
     adc_topk = pq[2]
     id_type = frame.schema[id_col].dataType.simpleString()
-    if vec_col is None:
-        cols = [id_col, "codes", *(["cell"] if "cell" in frame.columns else [])]
-    else:
-        cols = [id_col, vec_col]
 
     def emit(pdf, qv, cells, codes, qdist):
         ids = pdf[id_col].to_numpy()
@@ -1702,9 +1360,9 @@ def _fused_adc_shortlist(
         return None
 
     return _kernel_pass(
-        frame.select(*cols), id_col, vec_col,
+        frame.select(id_col, vec_col), id_col, vec_col,
         f"query_id bigint, neighbor_id {id_type}, adist bigint",
-        emit, kernel, pq, residual,
+        emit, kernel, pq, residual=kernel is not None,
     )
 
 
@@ -1754,43 +1412,26 @@ def cosine_topk_pq_adc(
     k_codes: int = 16,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    codebook: list[list[list[int]]] | None = None,
-    index: DataFrame | None = None,
 ) -> DataFrame:
     """Asymmetric-distance (ADC) top-k scan over PQ codes: each query
     keeps full precision and precomputes a ``n_sub × k_codes`` lookup
     table of partial squared distances to every codeword; a corpus
     vector's approximate distance is then ``n_sub`` table lookups summed
-    — no vector arithmetic touches the corpus at query time, and the
-    scan reads only the (id, codes) index, ~n_sub bytes/vector instead
-    of the embeddings.
+    over its codes.
 
     Exact-integer throughout (LUT entries are int64 partial sums of
     quantized components), so ranking is deterministic and
     oracle-checkable. Ties break on neighbor id.
 
     Scale shape: ONE Arrow pass (:func:`_fused_adc_shortlist`) encodes
-    the corpus, or reads a prebuilt ``index``'s codes, gathers the LUTs
-    and keeps each batch's top-k; the only shuffle besides the scan
-    fan-out is the per-query top-k window over the batch partials.
-
-    Callers that query repeatedly should build :func:`pq_index` once
-    and pass it as ``index``, with its codebook."""
-    if index is not None and codebook is None:
-        # The codes in a prebuilt index are meaningless without the
-        # codebook that built them; silently seeding the query LUTs
-        # here would yield wrong ADC distances with no error.
-        raise ValueError("passing a prebuilt index requires its codebook")
-    if codebook is None:
-        codebook = pq_seed_codebook(embeddings, n_sub, k_codes, id_col, vec_col)
-    if not codebook:  # empty codebook (allow_missing seeding over a filtered
-        # frame found no seeds): no codeword ⇒ no scored pairs, like a
-        # SQL plan whose seed CTE is empty.
-        return _empty_topk(embeddings, id_col, "adist bigint")
-    pq = _pq_kernel(codebook)
+    the corpus, gathers the LUTs and keeps each batch's top-k; the only
+    shuffle besides the scan fan-out is the per-query top-k window over
+    the batch partials."""
+    pq = _pq_kernel(pq_seed_codebook(embeddings, n_sub, k_codes, id_col, vec_col))
     q_rows = _query_rows(embeddings.filter(query_filter).select(id_col, vec_col))
-    source, vcol = (embeddings, vec_col) if index is None else (index, None)
-    cand = _fused_adc_shortlist(source, pq, _adc_tables(pq, q_rows), k, id_col, vcol)
+    cand = _fused_adc_shortlist(
+        embeddings, pq, _adc_tables(pq, q_rows), k, id_col, vec_col
+    )
     return _adc_rank(cand, k)
 
 
@@ -1803,7 +1444,6 @@ def cosine_topk_pq_rerank(
     k_codes: int = 16,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    codebook: list[list[list[int]]] | None = None,
 ) -> DataFrame:
     """The full IVF-PQ query pattern: ADC over the compressed codes
     produces a ``shortlist`` of candidates per query (reading ~n_sub
@@ -1813,14 +1453,13 @@ def cosine_topk_pq_rerank(
     shortlist size, compute by the code scan; the exact tier touches
     |queries|·shortlist vectors regardless of corpus size."""
     embeddings = nonzero_norm(embeddings, vec_col)
-    if codebook is None:
-        # Seed over the nz-filtered frame WITHOUT the all-16-ids
-        # existence demand: a zero-norm seed id just shrinks the
-        # codebook, exactly like a SQL seed CTE over the filtered
-        # table (the ann_pq_rerank oracle's cb-over-nz semantics).
-        codebook = pq_seed_codebook(
-            embeddings, n_sub, k_codes, id_col, vec_col, allow_missing=True
-        )
+    # Seed over the nz-filtered frame WITHOUT the all-16-ids existence
+    # demand: a zero-norm seed id just shrinks the codebook, exactly
+    # like a SQL seed CTE over the filtered table (the ann_pq_rerank
+    # oracle's cb-over-nz semantics).
+    codebook = pq_seed_codebook(
+        embeddings, n_sub, k_codes, id_col, vec_col, allow_missing=True
+    )
     if not codebook:
         return _empty_topk(embeddings, id_col, "cos_sim double")
     pq = _pq_kernel(codebook)
@@ -1834,10 +1473,9 @@ def cosine_topk_pq_rerank(
 
 
 # ---------------------------------------------------------------------------
-# IVF-PQ: the combined production index (cells for pruning, codes for
-# compression) — faiss's IndexIVFPQ shape, composed from the verified
-# tiers above, over the raw vector or (``residual``) over its residual
-# v − centroid[cell], faiss's default (by_residual=true). Residuals are
+# IVF-PQ: cells for pruning, codes for compression — faiss's IndexIVFPQ
+# shape with by_residual=true, composed from the verified tiers above.
+# Each row is encoded as its residual v − centroid[cell]. Residuals are
 # smaller in magnitude than raw vectors, so the same codebook budget
 # quantizes them finer; the ADC table becomes per-(query, probed cell)
 # on the target q − centroid[cell]. Residuals are q(v) − q(c), so the
@@ -1850,186 +1488,31 @@ def _ivf_setup(
     n_centroids: int,
     n_sub: int,
     k_codes: int,
-    codebook: list[list[list[int]]] | None,
-    residual: bool,
     id_col: str,
     vec_col: str,
 ):
-    """``(kernel, codebook)`` of an IVF-PQ tier from ONE seed collect:
-    ids < ``n_centroids`` are the centroids and, when ``codebook`` is
-    None, ``k_codes`` seed ids quantize into it — ids ``[0, k_codes)``
-    raw, or ids ``[n_centroids, n_centroids + k_codes)`` as residuals
-    against their own nearest centroid (see
-    :func:`pq_residual_seed_codebook` for why the range is disjoint). A
-    seed id lost to the nonzero-norm gate shrinks the codebook
-    (positions stay monotone in seed id); none left gives ``(None,
-    [])``. ``embeddings`` must already be nonzero-norm filtered."""
-    lo = n_centroids if residual else 0
-    hi = n_centroids if codebook is not None else max(n_centroids, lo + k_codes)
-    rows = _seed_rows(embeddings, hi, id_col, vec_col)
-    seeds = [r[1] for r in rows if lo <= r[0] < lo + k_codes]
-    if codebook is None and not seeds:
+    """``(kernel, codebook)`` of the IVF-PQ tier from ONE seed collect:
+    ids < ``n_centroids`` are the centroids, and the ids in
+    ``[n_centroids, n_centroids + k_codes)`` quantize, as residuals
+    against their own nearest centroid, into the codebook. A seed id
+    lost to the nonzero-norm gate shrinks the codebook (positions stay
+    monotone in seed id, so argmin ties match the oracle's gapped
+    numbering); none left gives ``(None, [])``. ``embeddings`` must
+    already be nonzero-norm filtered.
+
+    The seed range is deliberately DISJOINT from the centroid ids: a
+    vector that IS a centroid has residual exactly zero (it is its own
+    nearest cell), so seeding from ``id < k_codes`` would build an
+    all-zero codebook — every code ties to 0 and the shortlist
+    degenerates to id order, while still matching its oracle."""
+    rows = _seed_rows(embeddings, n_centroids + k_codes, id_col, vec_col)
+    seeds = [r[1] for r in rows if r[0] >= n_centroids]
+    if not seeds:
         return None, []
     kernel = _centroid_kernel([r for r in rows if r[0] < n_centroids])
-    if codebook is None:
-        _, qc, quantize, nearest = kernel
-        qs = quantize(seeds)
-        codebook = _subspace_codebook(qs - qc[nearest(qs)] if residual else qs, n_sub)
-    return kernel, codebook
-
-
-def _ivfpq_index(
-    embeddings, n_centroids, n_sub, k_codes, codebook, residual, id_col, vec_col
-) -> DataFrame:
-    """``(id, cell, codes)`` of the nonzero-norm corpus in ONE
-    :func:`_kernel_pass`: each vector's nearest cell, then the codes of
-    the vector or, with ``residual``, of its residual against that
-    cell's centroid. No surviving codebook seed ⇒ an empty index, like
-    the oracle's ``renc`` CTE over an empty ``rcb``."""
-    import numpy as np  # noqa: PLC0415
-    import pandas as pd  # noqa: PLC0415
-
-    embeddings = nonzero_norm(embeddings, vec_col)
-    kernel, codebook = _ivf_setup(
-        embeddings, n_centroids, n_sub, k_codes, codebook, residual, id_col, vec_col
-    )
-    schema = T.StructType(
-        [
-            embeddings.schema[id_col],
-            T.StructField("cell", T.IntegerType()),
-            T.StructField("codes", T.ArrayType(T.IntegerType())),
-        ]
-    )
-    if not codebook:
-        return embeddings.sparkSession.createDataFrame([], schema)
-
-    def emit(pdf, qv, cells, codes, qdist):
-        return pd.DataFrame(
-            {
-                id_col: pdf[id_col].to_numpy(),
-                "cell": cells.astype(np.int32),
-                "codes": list(codes.astype(np.int32)),
-            }
-        )
-
-    return _kernel_pass(
-        embeddings.select(id_col, vec_col), id_col, vec_col, schema, emit,
-        kernel, _pq_kernel(codebook), residual,
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-
-
-def ivfpq_index(
-    embeddings: DataFrame,
-    n_centroids: int = 16,
-    n_sub: int = 8,
-    k_codes: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """The combined IVF-PQ index: one row per vector with its coarse
-    CELL (nearest seed centroid — the pruning key a partitioned write
-    turns into PartitionFilters, see :func:`build_ivf_index`) and its
-    PQ CODES (n_sub bytes — the compression that replaces the raw
-    vector at scan time), both from one Arrow pass over the
-    nonzero-norm corpus; the codebook seeds over that frame like
-    :func:`cosine_topk_pq_rerank`'s. PERSISTED: an index is built once
-    and scanned by every query after; the caller owns its lifetime. At
-    100 TB write it ``partitionBy("cell")`` like the IVF index and the
-    index is ~n_sub bytes/vector on disk."""
-    return _ivfpq_index(
-        embeddings, n_centroids, n_sub, k_codes, None, False, id_col, vec_col
-    )
-
-
-def ivfpq_residual_index(
-    embeddings: DataFrame,
-    n_centroids: int = 16,
-    n_sub: int = 8,
-    k_codes: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    codebook: list[list[list[int]]] | None = None,
-) -> DataFrame:
-    """``(id, cell, codes)`` like :func:`ivfpq_index`, with codes of the
-    QUANTIZED RESIDUAL against the cell's centroid, in the same one
-    pass; PERSISTED likewise."""
-    return _ivfpq_index(
-        embeddings, n_centroids, n_sub, k_codes, codebook, True, id_col, vec_col
-    )
-
-
-def _ivfpq_topk(
-    embeddings: DataFrame,
-    query_filter: Column,
-    k: int,
-    n_centroids: int,
-    nprobe: int,
-    n_sub: int,
-    k_codes: int,
-    shortlist: int,
-    id_col: str,
-    vec_col: str,
-    index: DataFrame | None,
-    codebook: list[list[list[int]]] | None,
-    residual: bool,
-) -> DataFrame:
-    """The IVF-PQ query shared by the raw and residual forms: driver
-    probes and ADC tables, ONE fused Arrow pass over the corpus (or
-    the prebuilt ``index``'s codes) that scores only probed cells and
-    keeps per-batch top-``shortlist`` rows, the shortlist window, then
-    :func:`_exact_rerank`."""
-    embeddings = nonzero_norm(embeddings, vec_col)
-    kernel, codebook = _ivf_setup(
-        embeddings, n_centroids, n_sub, k_codes, codebook, residual, id_col, vec_col
-    )
-    if not codebook:
-        return _empty_topk(embeddings, id_col, "cos_sim double")
-    pq = _pq_kernel(codebook)
-    q_rows = _query_rows(embeddings.filter(query_filter).select(id_col, vec_col))
-    tables = _adc_tables(pq, q_rows, kernel, nprobe, residual)
-    source, vcol = (embeddings, vec_col) if index is None else (index, None)
-    cand = _fused_adc_shortlist(
-        source, pq, tables, shortlist, id_col, vcol, kernel, residual
-    )
-    return _exact_rerank(
-        embeddings, q_rows, _adc_rank(cand, shortlist), k, id_col, vec_col
-    )
-
-
-def cosine_topk_ivfpq(
-    embeddings: DataFrame,
-    query_filter: Column,
-    k: int = 5,
-    n_centroids: int = 16,
-    nprobe: int = 4,
-    n_sub: int = 8,
-    k_codes: int = 16,
-    shortlist: int = 50,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    index: DataFrame | None = None,
-) -> DataFrame:
-    """The full production ANN query (faiss IndexIVFPQ): per query,
-    (1) the ``nprobe`` nearest cells are chosen on the Spark driver by the
-    exact kernel — the scan then touches only nprobe/n_centroids of
-    the index; (2) ADC over the PQ codes of the probed cells
-    shortlists candidates reading ~n_sub bytes/vector; (3) only the
-    shortlist's full vectors are fetched and exactly re-ranked by
-    quantized cosine. Compute scales with the probed slice and the
-    shortlist, never the corpus.
-
-    Without ``index`` the corpus is assigned and encoded inside the
-    query's one Arrow pass; nothing is persisted. The seed codebook
-    comes from the nonzero-norm frame (a zero-norm seed shrinks it),
-    so at ``nprobe = n_centroids`` the result equals
-    :func:`cosine_topk_pq_rerank`'s. Deterministic end-to-end
-    (quantized-integer cell choice, integer ADC, quantized-cosine
-    rerank, id tie-breaks); recall vs the exact scan is pinned in
-    tests/test_similarity.py."""
-    return _ivfpq_topk(
-        embeddings, query_filter, k, n_centroids, nprobe, n_sub, k_codes,
-        shortlist, id_col, vec_col, index, None, residual=False,
-    )
+    _, qc, quantize, nearest = kernel
+    qs = quantize(seeds)
+    return kernel, _subspace_codebook(qs - qc[nearest(qs)], n_sub)
 
 
 def cosine_topk_ivfpq_residual(
@@ -2043,94 +1526,32 @@ def cosine_topk_ivfpq_residual(
     shortlist: int = 50,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    index: DataFrame | None = None,
-    codebook: list[list[list[int]]] | None = None,
 ) -> DataFrame:
     """faiss IndexIVFPQ with by_residual=true: probe the nprobe nearest
     cells; ADC over RESIDUAL codes with a per-(query, probed cell)
     lookup table on the target (q - centroid[cell]); exact rerank of
-    the shortlist. Scale shape identical to :func:`cosine_topk_ivfpq`
-    (the |Q|·nprobe tables travel in the scan's task closure; a corpus
-    row is scored only by the queries that probe its cell), with finer
-    quantization because residual magnitudes are small relative to raw
-    vectors."""
-    if index is not None and codebook is None:
-        # The codes in a prebuilt index are meaningless without the
-        # codebook that built them; silently re-seeding here would
-        # produce wrong ADC distances with no error.
-        raise ValueError("passing a prebuilt index requires its codebook")
-    return _ivfpq_topk(
-        embeddings, query_filter, k, n_centroids, nprobe, n_sub, k_codes,
-        shortlist, id_col, vec_col, index, codebook, residual=True,
-    )
+    the shortlist (:func:`_exact_rerank`).
 
-
-def pq_residual_seed_codebook(
-    embeddings: DataFrame,
-    n_centroids: int = 16,
-    n_sub: int = 8,
-    k_codes: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    allow_missing: bool = False,
-) -> list[list[list[int]]]:
-    """Seed codebook in RESIDUAL space: the residuals (against each
-    seed vector's own nearest centroid) of the vectors with id in
-    ``[n_centroids, n_centroids + k_codes)``, sub-sliced per subspace.
-
-    ``allow_missing=True`` builds the codebook from however many seed
-    ids survive the nonzero-norm gate (possibly zero → ``[]``) instead
-    of raising — the semantics of a SQL seed CTE over the filtered
-    frame (the ann_ivfpq_residual oracle's ``rcb`` CTE silently shrinks
-    when a seed id is zero-norm; raising here would be a crash-vs-result
-    cross-engine divergence). Codebook positions stay monotone in seed
-    id, so argmin tie-breaks match a gapped code=id-16 oracle numbering
-    either way — the same argument as :func:`pq_seed_codebook`.
-
-    The seed range is deliberately DISJOINT from the centroid ids: a
-    vector that IS a centroid has residual exactly zero (it is its own
-    nearest cell under cosine, ties to lowest id), so reusing the
-    ``id < k_codes`` rule would build an all-zero codebook — every
-    code ties to 0, ADC distances collapse to the constant
-    ``||q - centroid||²`` per cell, and the shortlist degenerates to
-    id order (found by the two-level synthetic recall probe; the
-    degenerate form even matched its oracle, which is why a hash check
-    alone couldn't catch it)."""
-    embeddings = nonzero_norm(embeddings, vec_col)
-    codebook = _ivf_setup(
-        embeddings, n_centroids, n_sub, k_codes, None, True, id_col, vec_col
-    )[1]
-    found = len(codebook[0]) if codebook else 0
-    if found != k_codes and not allow_missing:
-        raise ValueError(
-            f"residual PQ seeding expects ids {n_centroids}.."
-            f"{n_centroids + k_codes - 1}; found {found}"
-        )
-    return codebook
-
-
-def pq_train_residual(
-    embeddings: DataFrame,
-    n_centroids: int = 16,
-    n_sub: int = 8,
-    k_codes: int = 16,
-    iters: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> list[list[list[int]]]:
-    """Train the RESIDUAL codebook (faiss IndexIVFPQ trains its PQ on
-    residuals): the same all-integer per-subspace Lloyd loop as
-    :func:`pq_train`, run over residuals and seeded like
-    :func:`pq_residual_seed_codebook`. Pass the result as
-    ``codebook`` to :func:`ivfpq_residual_index` /
-    :func:`cosine_topk_ivfpq_residual`."""
+    Scale shape: driver probes and ADC tables, then ONE fused Arrow
+    pass over the corpus (:func:`_fused_adc_shortlist`) that scores a
+    row only against the queries that probe its cell and keeps
+    per-batch top-``shortlist`` rows; the |Q|·nprobe tables travel in
+    the task closure."""
     embeddings = nonzero_norm(embeddings, vec_col)
     kernel, codebook = _ivf_setup(
-        embeddings, n_centroids, n_sub, k_codes, None, True, id_col, vec_col
+        embeddings, n_centroids, n_sub, k_codes, id_col, vec_col
     )
     if not codebook:
-        return []
-    return _pq_lloyd(embeddings, codebook, iters, id_col, vec_col, kernel)
+        return _empty_topk(embeddings, id_col, "cos_sim double")
+    pq = _pq_kernel(codebook)
+    q_rows = _query_rows(embeddings.filter(query_filter).select(id_col, vec_col))
+    tables = _adc_tables(pq, q_rows, kernel, nprobe)
+    cand = _fused_adc_shortlist(
+        embeddings, pq, tables, shortlist, id_col, vec_col, kernel
+    )
+    return _exact_rerank(
+        embeddings, q_rows, _adc_rank(cand, shortlist), k, id_col, vec_col
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -2209,7 +1630,6 @@ def cosine_topk_pq_opq(
     k_codes: int = 16,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    perm: list[int] | None = None,
 ) -> DataFrame:
     """OPQ-composed PQ rerank: permute dimensions to balance subspace
     variance, then run the standard encode → ADC shortlist → exact
@@ -2218,8 +1638,7 @@ def cosine_topk_pq_opq(
     OPQ moves RECALL (better codes → better shortlists) at zero extra
     query cost. The permutation itself is 64 ints; everything else is
     the audited PQ plan."""
-    if perm is None:
-        perm = opq_permutation(nonzero_norm(embeddings, vec_col), n_sub, vec_col)
+    perm = opq_permutation(nonzero_norm(embeddings, vec_col), n_sub, vec_col)
     rotated = apply_permutation(embeddings, perm, vec_col)
     return cosine_topk_pq_rerank(
         rotated, query_filter, k, shortlist, n_sub, k_codes, id_col, vec_col

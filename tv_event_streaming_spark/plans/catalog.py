@@ -508,12 +508,11 @@ FROM events
 WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id
              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
 """,
-    doc="ST7 batch twin — per-user running (event count, value sum) as a "
-    "window cumsum, the batch shape of streaming.metrics."
-    "running_user_totals (applyInPandasWithState): identical count + "
-    "coalesce-to-0 sum arithmetic, exact DECIMAL accumulation, so the "
-    "driver's hash check covers the stateful operator's math; the final "
-    "row per user equals the operator's converged state",
+    doc="ST7 per-user running (event count, value sum) as a window "
+    "cumsum: coalesce-to-0 sum arithmetic with exact DECIMAL "
+    "accumulation, so the driver's hash check covers the math a "
+    "cross-batch stateful total would carry; the final row per user is "
+    "the converged total",
     tags=("window", "cumsum", "streaming-twin"),
 )
 def q_running_totals_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1160,11 +1159,9 @@ SELECT user_id, min(ts) AS burst_start, max(ts) AS burst_end,
 FROM numbered GROUP BY user_id, burst_id
 HAVING count(*) >= 3
 """,
-    doc="CEP batch twin, driver-hashed: error bursts = maximal runs of "
-    "a user's error events with gaps <= 72h, kept at >= 3 errors — the "
-    "exact arithmetic the streaming error_bursts operator (streaming/"
-    "metrics.py, applyInPandasWithState) emits across micro-batches, "
-    "as gaps-and-islands over the error subset (one user_id shuffle; "
+    doc="CEP, driver-hashed: error bursts = maximal runs of a user's "
+    "error events with gaps <= 72h, kept at >= 3 errors, as "
+    "gaps-and-islands over the error subset (one user_id shuffle; "
     "the event_type filter is pushed to the scan)",
     tags=("window", "sessionization", "streaming-twin", "cep"),
 )

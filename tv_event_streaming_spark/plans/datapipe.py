@@ -551,8 +551,7 @@ FROM ex GROUP BY cell, dim
     "centroid id) + per-(cell,dim) exact int64 component sums, counts, "
     "and the mean update as one final double division; one Arrow pass "
     "emits per-batch (cell, dim) partials that one groupBy sums "
-    "(operators/similarity.py:kmeans_update_stats — the same arithmetic "
-    "kmeans_centroids iterates)",
+    "(operators/similarity.py:kmeans_update_stats)",
     tags=("similarity", "index"),
 )
 def q_kmeans_update(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -957,8 +956,7 @@ SELECT id_a, id_b, cos_sim FROM scored ORDER BY cos_sim DESC, id_a, id_b LIMIT 2
 """,
     doc="Embedding-cosine near-dup: top-20 most-similar pairs among LSH "
     "candidates (4 disjoint 8-bit hyperplane bands, OR-construction) — "
-    "fully distributed per-bucket int64 block matmul, no driver collect; "
-    "threshold form in operators.similarity.embedding_near_duplicates",
+    "fully distributed per-bucket int64 block matmul, no driver collect",
     tags=("similarity", "dedup"),
 )
 def q_embedding_neardup_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1787,7 +1785,7 @@ FROM documents
 )
 def q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    return M.extract_features(M.attach_binary_payload(docs), fake=True)
+    return M.extract_features(M.attach_binary_payload(docs))
 
 
 @register(
@@ -1818,7 +1816,7 @@ FROM f
     "n_frames = byte_size %% 30 + 1, frame i = bytes "
     "[i*size/n, (i+1)*size/n)) — the row-EXPANDING Arrow mapInPandas "
     "shape a real video pipeline has, byte-exact against the oracle's "
-    "hex arithmetic; decode swaps in via the decoder registry "
+    "hex arithmetic; a real codec swaps in as the loop body "
     "(operators/multimodal.py:sample_frames)",
     tags=("multimodal",),
 )
@@ -2298,9 +2296,8 @@ SELECT query_id, neighbor_id, CAST(rank AS INTEGER) AS rank, adist FROM (
     doc="Asymmetric-distance (ADC) top-5 over PQ codes: full-precision "
     "queries precompute an 8x16 int64 LUT of partial squared distances "
     "(shipped in the task closure); corpus distance = 8 table lookups "
-    "summed over the codes, encoded in the same Arrow pass (or read "
-    "from a prebuilt pq_index), with a per-batch partial top-k before "
-    "the one window (operators/similarity.py:cosine_topk_pq_adc)",
+    "summed over the codes, encoded in the same Arrow pass, with a "
+    "per-batch partial top-k before the one window (operators/similarity.py:cosine_topk_pq_adc)",
     tags=("similarity",),
 )
 def q_ann_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2594,7 +2591,7 @@ rq AS (
 rcb AS (
   -- codebook seeds DISJOINT from the centroid ids: a centroid's own
   -- residual is exactly zero, so ids 0..15 would build an all-zero
-  -- (degenerate) codebook — see pq_residual_seed_codebook
+  -- (degenerate) codebook — see similarity._ivf_setup
   SELECT m, CAST(r.vec_id - 16 AS INTEGER) AS code,
          list_slice(r.rv, m*8+1, m*8+8) AS qc
   FROM rq r, (SELECT CAST(unnest(range(8)) AS INTEGER) AS m)

@@ -1,60 +1,29 @@
-"""Streaming observability — beyond-parity ST5/ST6/ST7.
+"""Event-time metrics — beyond-parity ST5/ST6.
 
 The reference computes its admin metrics on demand (a trailing-1h
 CloudWatch sum, admin_lambda.py:72-150) and carries an event-time column
 it never uses (``publishTimestamp``, ingestion.py:160; SURVEY.md ST5).
-This module is the continuous form Spark makes natural:
+These operators put that column to work:
 
-- :func:`windowed_metrics` — watermarked tumbling-window invocation/
-  error/success counts (the A6 aggregation as a stream; late events
+- :func:`sliding_metrics` — watermarked sliding-window invocation/
+  error/success counts (the A6 aggregation over event time; late events
   beyond the watermark are dropped instead of silently miscounted).
-- :func:`running_user_totals` — a custom cross-batch stateful operator
-  via ``applyInPandasWithState``: per-user running event count + value
-  sum, state persisted in the checkpoint across micro-batches (what the
-  reference delegates to idempotent DynamoDB writes, ST3/ST7).
+- :func:`session_metrics` — per-user gap sessions via
+  ``session_window``.
+- :func:`error_bursts_batch` — runs of a user's errors, the alerting
+  shape, as gaps-and-islands over the error subset.
 
-Scale: the windowed agg partial-aggregates map-side per micro-batch and
-its state is bounded by (watermark horizon × #groups); the stateful
-operator's state is one 16-byte tuple per user — both stay executor-local
-with state-store checkpointing, no driver accumulation.
+The windowed operators are plain DataFrame plans: the same frame runs
+as a batch query (the watermark is a no-op) or, passed a streaming
+source, as a continuous one that a caller starts with
+``df.writeStream``. Their state stays executor-local, bounded by the
+watermark horizon.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
-from pyspark.sql.streaming.state import GroupStateTimeout
-
-
-def windowed_metrics(
-    events: DataFrame,
-    window_duration: str = "1 hour",
-    watermark: str = "1 hour",
-) -> DataFrame:
-    """A6 as a continuous query: per (tumbling window, event_type) —
-    invocations, errors, successes = max(0, n − errors). Works unchanged
-    on a batch DataFrame (no-op watermark) or a stream (append-mode
-    emission once the watermark passes the window end)."""
-    n = F.count("*")
-    errs = F.sum(F.when(F.col("event_type") == "error", 1).otherwise(0))
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window_duration).alias("win"), "event_type")
-        .agg(
-            n.alias("invocations"),
-            errs.alias("errors"),
-            F.greatest(F.lit(0).cast("long"), (n - errs).cast("long")).alias("successes"),
-        )
-        .select(
-            F.col("win.start").alias("window_start"),
-            F.col("win.end").alias("window_end"),
-            "event_type",
-            "invocations",
-            "errors",
-            "successes",
-        )
-    )
 
 
 def sliding_metrics(
@@ -126,252 +95,13 @@ def session_metrics(
     )
 
 
-def start_session_metrics(
-    events_stream: DataFrame,
-    sink_dir: str,
-    checkpoint_dir: str,
-    gap: str = "30 minutes",
-    watermark: str = "1 hour",
-) -> StreamingQuery:
-    """Append-mode session sink: one row per closed session."""
-    out = session_metrics(events_stream, gap, watermark)
-    return (
-        out.writeStream.format("parquet")
-        .option("path", sink_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def start_windowed_metrics(
-    events_stream: DataFrame,
-    sink_dir: str,
-    checkpoint_dir: str,
-    window_duration: str = "1 hour",
-    watermark: str = "1 hour",
-) -> StreamingQuery:
-    """Append-mode parquet sink: a window row is written exactly once,
-    when the watermark closes it — the idempotent-materialization twin of
-    the reference's on-demand metric query."""
-    out = windowed_metrics(events_stream, window_duration, watermark)
-    return (
-        out.writeStream.format("parquet")
-        .option("path", sink_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-_TOTALS_OUT_SCHEMA = "user_id bigint, n_events bigint, total_value double"
-_TOTALS_STATE_SCHEMA = "n bigint, total double"
-
-
-def running_user_totals(events: DataFrame) -> DataFrame:
-    """Custom stateful operator: per-user running (event count, value sum)
-    across ALL micro-batches, via ``applyInPandasWithState``.
-
-    Emits one row per user per micro-batch that saw that user (update
-    semantics). The state tuple survives in the checkpointed state store,
-    so totals keep accumulating across restarts — deliberately unlike the
-    per-batch A7 counts. The update closure is self-contained
-    (stdlib + pandas only) so cloudpickle ships it by value.
-    """
-
-    def update(key, pdfs, state):
-        import pandas as pd  # local import: keep the closure self-contained
-
-        n, total = state.get if state.exists else (0, 0.0)
-        for pdf in pdfs:
-            n += len(pdf)
-            total += float(pdf["value"].fillna(0.0).sum())
-        state.update((n, float(total)))
-        yield pd.DataFrame(
-            {"user_id": [key[0]], "n_events": [n], "total_value": [float(total)]}
-        )
-
-    return events.groupBy("user_id").applyInPandasWithState(
-        update,
-        outputStructType=_TOTALS_OUT_SCHEMA,
-        stateStructType=_TOTALS_STATE_SCHEMA,
-        outputMode="append",  # emitted rows are final; required by file sinks
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def start_running_totals(
-    events_stream: DataFrame, sink_dir: str, checkpoint_dir: str
-) -> StreamingQuery:
-    """Update-mode totals into a parquet append log; the latest row per
-    user is the current total (readers take max(n_events) per user)."""
-    out = running_user_totals(events_stream)
-    return (
-        out.writeStream.format("parquet")
-        .option("path", sink_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-_BURST_OUT_SCHEMA = (
-    "user_id bigint, burst_start timestamp, burst_end timestamp, n_errors bigint"
-)
-_BURST_STATE_SCHEMA = (
-    "start_us bigint, last_us bigint, n bigint, emitted_end_us bigint"
-)
-
-
-def error_bursts(
-    events: DataFrame, gap_minutes: int = 4320, min_count: int = 3
-) -> DataFrame:
-    """CEP-style stateful pattern detection: a BURST is a maximal run of
-    a user's ``error`` events with consecutive gaps ≤ ``gap_minutes``;
-    bursts with ≥ ``min_count`` errors are emitted when a later error
-    (or a later batch's errors) proves the run ended — the
-    alerting-shaped operator (fraud velocity checks, crash storms)
-    that needs CUSTOM state, not a built-in window: the emission
-    condition depends on the run's own content.
-
-    ``applyInPandasWithState`` keeps (burst start, last error, count)
-    per user across micro-batches, so a burst spanning batches merges
-    instead of double-reporting. The batch twin is
-    ``analytics.sessionize`` over the error subset filtered to
-    ``n_events >= min_count`` (same gap convention: a gap strictly
-    greater than the threshold breaks the run) — tests assert the
-    stream's closed bursts agree with it. Assumes batch-monotonic
-    arrival per user (pair with an upstream watermark for late data);
-    the final open burst stays in state rather than emitting a
-    possibly-incomplete alert.
-
-    Lateness contract beyond that assumption (ADVICE r7 #4): a late
-    chain lying wholly before the open burst's start-gap boundary is
-    emitted as its OWN burst when it alone reaches ``min_count`` AND
-    sits clear (> gap) past the latest already-emitted burst end —
-    matching the batch twin, which would report it. A late chain that
-    might belong to an already-emitted run (the state can't retract an
-    alert) and sub-``min_count`` late fragments are discarded — only
-    those, not whole qualifying bursts.
-
-    Scale: state is 4 longs per user with an open burst (burst start,
-    last error, count, latest EMITTED burst end — the 4th field backs
-    the late-chain contract above); each batch shuffles only that
-    batch's error rows on user_id.
-
-    CHECKPOINT COMPATIBILITY: the state schema widened from 3 longs to
-    4 (``_BURST_STATE_SCHEMA``) when the late-chain emission guard
-    landed. Spark's state-store schema check rejects a restart of this
-    operator from a checkpoint written by the 3-field version
-    (STATE_STORE_* schema-incompatibility error at query start) — such
-    streams need a NEW ``checkpointLocation`` (reprocessing from the
-    source or accepting the alert-history reset); there is no in-place
-    state migration."""
-    errors = events.filter(F.col("event_type") == "error").select(
-        "user_id", "ts"
-    )
-    gap_us = gap_minutes * 60 * 1_000_000
-
-    def detect(key, pdfs, state):
-        import datetime  # noqa: PLC0415
-        import pandas as pd  # noqa: PLC0415
-
-        start_us, last_us, n, emitted_end = (
-            state.get if state.exists else (None, None, 0, None)
-        )
-        out = []
-
-        def close() -> None:
-            nonlocal emitted_end
-            if n >= min_count:
-                out.append((start_us, last_us, n))
-                emitted_end = (
-                    last_us if emitted_end is None else max(emitted_end, last_us)
-                )
-
-        ts_list = []
-        for pdf in pdfs:
-            ts_list.extend(int(t.value) // 1000 for t in pd.to_datetime(pdf["ts"]))
-        # Sessionize THIS batch's events into chains BEFORE touching
-        # state: deciding event-by-event against the pre-widen
-        # burst_start drops a straggler that a later same-batch event
-        # would have bridged into the open burst (t=5 looks ancient
-        # next to [20,25], but {5,14,20,25} is ONE run at gap 10 — the
-        # batch twin counts all four).
-        chains: list[list[int]] = []  # [start, end, count], ascending
-        for t_us in sorted(ts_list):
-            if chains and t_us - chains[-1][1] <= gap_us:
-                chains[-1][1] = max(chains[-1][1], t_us)
-                chains[-1][2] += 1
-            else:
-                chains.append([t_us, t_us, 1])
-        for c_start, c_end, c_n in chains:
-            if last_us is None:
-                start_us, last_us, n = c_start, c_end, c_n
-            elif c_end < start_us - gap_us:
-                # The whole chain is ancient — nothing in it reaches
-                # the open burst. If it alone qualifies AND starts
-                # clear (> gap) past every emitted burst end, it is a
-                # complete late-delivered burst the batch twin would
-                # report: emit it (ADVICE r7 #4). Otherwise it belongs
-                # to an already-elapsed run (possibly one already
-                # emitted — counting it anywhere would conjure an
-                # overlapping run): dropped like a post-watermark
-                # event (the docstring's lateness contract).
-                if c_n >= min_count and (
-                    emitted_end is None or c_start - emitted_end > gap_us
-                ):
-                    out.append((c_start, c_end, c_n))
-                    emitted_end = (
-                        c_end if emitted_end is None else max(emitted_end, c_end)
-                    )
-                continue
-            elif c_start - last_us > gap_us:
-                close()
-                start_us, last_us, n = c_start, c_end, c_n
-            else:
-                # The chain overlaps or bridges the open burst (a
-                # later batch can deliver events OLDER than last_us —
-                # no watermark upstream): widen both ends, never
-                # shrink — a shrunken burst_end corrupts later gap
-                # checks.
-                start_us = min(start_us, c_start)
-                last_us = max(last_us, c_end)
-                n += c_n
-        state.update((start_us, last_us, n, emitted_end))
-        if not out:
-            return
-        yield pd.DataFrame(
-            {
-                "user_id": [key[0]] * len(out),
-                "burst_start": [
-                    datetime.datetime.utcfromtimestamp(s / 1e6) for s, _, _ in out
-                ],
-                "burst_end": [
-                    datetime.datetime.utcfromtimestamp(e / 1e6) for _, e, _ in out
-                ],
-                "n_errors": [c for _, _, c in out],
-            }
-        )
-
-    return errors.groupBy("user_id").applyInPandasWithState(
-        detect,
-        outputStructType=_BURST_OUT_SCHEMA,
-        stateStructType=_BURST_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
 def error_bursts_batch(
     events: DataFrame, gap_minutes: int = 4320, min_count: int = 3
 ) -> DataFrame:
-    """Batch twin of :func:`error_bursts`: gaps-and-islands over the
-    error subset (the exact ``analytics.sessionize`` arithmetic),
-    filtered to runs of ≥ ``min_count``."""
+    """Error bursts: a BURST is a maximal run of a user's ``error``
+    events with consecutive gaps ≤ ``gap_minutes``, reported when it
+    holds ≥ ``min_count`` errors — gaps-and-islands over the error
+    subset (the exact ``analytics.sessionize`` arithmetic)."""
     from ..operators.analytics import sessionize  # noqa: PLC0415
 
     errors = events.filter(F.col("event_type") == "error")
