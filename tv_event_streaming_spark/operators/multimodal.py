@@ -19,10 +19,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-MEDIA_META_SCHEMA = (
-    "doc_id bigint, media_type string, byte_size int, checksum string"
-)
-
 FEATURE_SCHEMA = (
     "doc_id bigint, media_type string, byte_size int, checksum string, "
     "fake_frames int, fake_mean_byte double"

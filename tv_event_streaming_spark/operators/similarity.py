@@ -526,13 +526,12 @@ def _kernel_pass(
     emit,
     kernel=None,
     pq=None,
-    residual: bool = False,
 ) -> DataFrame:
     """ONE Arrow ``mapInPandas`` pass of the kernels over the
     (fanned-out) scan of ``frame``. Per batch: quantize ``vec_col``;
     with ``kernel`` (:func:`_centroid_kernel`) take each row's nearest
-    cell, and with ``residual`` subtract that cell's centroid; with
-    ``pq`` (:func:`_pq_kernel`) encode. Then ``emit(pdf, qv, cells,
+    cell; with ``pq`` (:func:`_pq_kernel`) encode, and with both encode
+    the residual (the vector minus its cell's centroid). Then ``emit(pdf, qv, cells,
     codes, qdist)`` returns the batch's output frame in ``schema``, or
     None. ``emit`` must close over numpy/pandas only, like the
     kernels, so the pass ships to Python workers by value."""
@@ -548,7 +547,7 @@ def _kernel_pass(
                 ids, qc, _, nearest = kernel
                 best = nearest(qv)
                 cells = ids[best]
-                if residual:
+                if pq is not None:
                     qv = qv - qc[best]
             if pq is not None:
                 codes, qdist = pq[0](qv)
@@ -1330,9 +1329,9 @@ def _fused_adc_shortlist(
     """ONE Arrow pass over the corpus for every PQ query entry: per
     batch, quantize and encode (with ``kernel``, after assigning each
     row its cell and subtracting that cell's centroid); gather each
-    query's ADC distances from its
-    table (:func:`_adc_tables`; a query scores a row iff it probes the
-    row's cell) and emit the batch's top-``shortlist``
+    query's ADC distances from its table (:func:`_adc_tables`; a query
+    scores a row iff it probes the row's cell) and emit the batch's
+    top-``shortlist``
     ``(query_id, neighbor_id, adist)`` rows, self-pairs excluded.
 
     Per-batch partial top-k is the "aggregate before you shuffle"
@@ -1362,7 +1361,7 @@ def _fused_adc_shortlist(
     return _kernel_pass(
         frame.select(id_col, vec_col), id_col, vec_col,
         f"query_id bigint, neighbor_id {id_type}, adist bigint",
-        emit, kernel, pq, residual=kernel is not None,
+        emit, kernel, pq,
     )
 
 
